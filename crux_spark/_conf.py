@@ -6,6 +6,7 @@ value (r15 advice — the failure disabled the skip-repartition
 optimization under human-readable configs). ``input_size_bytes`` sizes
 a path through the Hadoop FileSystem API so it works on any Hadoop-
 supported store (HDFS, S3A, local), not just the driver's local disk.
+``_plan_size_estimate`` is the one reader of Catalyst's size estimate.
 """
 
 from __future__ import annotations
@@ -50,3 +51,38 @@ def input_size_bytes(spark, path: str) -> int:
         )
     except OSError:
         return 0
+
+
+def _plan_size_estimate(df) -> int | None:
+    """Catalyst's optimized-plan size estimate in bytes, or None when
+    unknown: plans without stats (RDD-backed frames, some views) report
+    Long.MaxValue, and joins can multiply estimates past it."""
+    from py4j.protocol import Py4JError
+
+    try:
+        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except (AttributeError, Py4JError):  # no JVM plan, or stats failed
+        return None
+    return est if 0 <= est < (1 << 62) else None
+
+
+def _spread(df):
+    """Repartition to the session's parallelism before CPU-heavy per-row
+    expression work. Document corpora often arrive as few large files,
+    and AQE coalesces byte-small shuffles, but shingling/hashing cost is
+    per row, not per byte, so an explicit spread keeps all cores busy.
+
+    The spread is skipped when the scan already fills the cores: a
+    corpus whose size estimate spans >= parallelism scan splits (estimate
+    / maxPartitionBytes) would shuffle its whole text payload only to
+    land at the parallelism the scan provides. An unknown estimate skips
+    it too."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    est = _plan_size_estimate(df)
+    max_pb = parse_byte_size(
+        df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", None),
+        128 << 20,
+    )
+    if est is None or est >= par * max_pb:
+        return df
+    return df.repartition(par)

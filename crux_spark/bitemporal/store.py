@@ -677,46 +677,26 @@ class TxStore:
             ),
             OPS_SCHEMA,
         )
-        has_match = any(r["op"] == "match" for r in self._pending)
-        applied_fast = False
-        if self._commit_fast_path_ok():
-            # FAST PATH (guide §1.2 — the distributed algorithm): a
-            # commit whose batch is all unranged puts with strictly
-            # increasing per-entity (tx, effective-valid-from) has the
-            # same closed form as bulk_ingest's initial load — two
-            # lead() windows + the norm UDF instead of the per-entity
-            # Python splice cogroup (row-identical:
-            # test_commit_fast_path_equivalence /
-            # test_commit_append_splice_equivalence, plus the canonical
-            # splice batteries which ride these paths). The batch shape
-            # is checked driver-side from _pending (the rows are already
-            # on the driver); into a provably-empty store no probe job
-            # runs at all, and into a NON-empty store one aggregate
-            # probe verifies each touched entity's current belief can
-            # only overlap its single open tail row (_append_splice, r16
-            # — the §4 fix for the per-entity Python cogroup on
-            # append-style incremental ingest). Ineligible batches —
-            # matches, deletes, evicts, ranged puts, valid-time ties,
-            # overlap-heavy histories — take the cogroup exactly as
-            # before. The splice stores vf=None puts at
-            # valid_from=tx_time; the coalesce below feeds the closed
-            # form that same effective value.
+        if self._versions_empty and self._commit_fast_path_ok():
+            # Into an empty store, a batch of unranged puts with strictly
+            # increasing per-entity (tx, effective valid-from) has the
+            # same closed form as bulk_ingest's initial load (guide
+            # §1.2): two lead() windows and the norm UDF instead of the
+            # per-entity Python splice cogroup, row-identical to it
+            # (test_commit_fast_path_equivalence). The batch shape is
+            # checked driver-side from _pending, so no probe job runs.
+            # The splice stores vf=None puts at valid_from=tx_time; the
+            # coalesce feeds the closed form that same effective value.
             ops_eff = ops_df.withColumn(
                 "valid_from", F.coalesce("valid_from", "tx_time")
             )
-            if self._versions_empty:
-                self.versions = _bulk_put_versions(ops_eff).localCheckpoint()
-                applied_fast = True
-            elif self._append_splice_worthwhile():
-                spliced = self._append_splice(ops_eff)
-                if spliced is not None:
-                    self.versions = spliced.localCheckpoint()
-                    applied_fast = True
-            if applied_fast:
-                aborted = set()
-                self._versions_empty = False
-        if not applied_fast:
-            aborted = self.apply_ops_df(ops_df, has_match=has_match)
+            self.versions = _bulk_put_versions(ops_eff).localCheckpoint()
+            self._versions_empty = False
+            aborted: set[int] = set()
+        else:
+            aborted = self.apply_ops_df(
+                ops_df, has_match=any(r["op"] == "match" for r in self._pending)
+            )
         # fully-observed batch: restore the registry side-set (the fast
         # path never nulled it — the same assignment is a no-op + adds)
         if prev_schema is not None:
@@ -813,134 +793,6 @@ class TxStore:
                 return False
             last[r["eid"]] = (int(r["tx_id"]), vf)
         return True
-
-    def _append_splice_worthwhile(self) -> bool:
-        """Size-aware routing for the append splice (guide §1.2: measure
-        first). The cogroup ships the WHOLE store through Arrow+Python
-        per commit — O(store bytes) — while the append splice pays a
-        fixed probe job + an ops-side window; measured at sf0.1
-        (25k-entity store, ~2.5 MB) the cogroup wins by ~1.7s because
-        the Python splice over tiny histories is cheaper than the probe
-        + window overhead, and the trade inverts once the store's
-        Python-shipping cost exceeds those ~2 fixed seconds. Threshold
-        on the store's Catalyst size estimate (localCheckpoint preserves
-        real stats through LogicalRDD), default 64 MB, env-overridable:
-        CRUX_SPARK_APPEND_SPLICE=always|never|auto and
-        CRUX_SPARK_APPEND_SPLICE_MIN_BYTES (Spark size forms)."""
-        import os
-
-        from crux_spark._conf import parse_byte_size
-
-        mode = os.environ.get("CRUX_SPARK_APPEND_SPLICE", "auto")
-        if mode == "always":
-            return True
-        if mode == "never":
-            return False
-        try:
-            est = int(
-                self.versions._jdf.queryExecution()
-                .optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            return False  # unknown size -> the status-quo cogroup
-        thr = parse_byte_size(
-            os.environ.get("CRUX_SPARK_APPEND_SPLICE_MIN_BYTES"), 64 << 20
-        )
-        return est >= thr
-
-    def _append_splice(self, ops_eff: DataFrame) -> DataFrame | None:
-        """Closed-form splice of a shape-eligible batch (all unranged
-        puts, strictly increasing per entity — _commit_fast_path_ok)
-        onto a NON-empty store, for the append-style ingest shape where
-        each touched entity's first new put (t1, v1) can only overlap
-        its single open tail row. Per the per-op splice (_splice), a put
-        at (t1, v1) against such a history does exactly: close the tail
-        row at tx t1, keep its [tail_vf, v1) remainder unasserted, and
-        assert [v1, inf) — after which ops 2..n of the same entity see
-        the bulk closed form (_bulk_put_versions). Every other existing
-        row passes through the JVM UNTOUCHED — previously the whole
-        store crossed the Arrow/Python boundary per commit.
-
-        Per-entity eligibility (ONE aggregate probe over the
-        checkpointed store joined to the driver-built firsts frame):
-        among the entity's current rows (tx_to = END_OF_TX), at most ONE
-        may overlap [v1, inf) in valid time, and that row must be the
-        open tail: valid_to = END_OF_TIME, valid_from < v1, tx_from <
-        t1. With NO overlapping row (e.g. history ends in a ranged put
-        before v1) the splice appends [v1, inf) with no close/remainder
-        — also closed-form. Any ineligible touched entity returns None
-        and the whole batch takes the cogroup exactly as before
-        (row-identical either way:
-        test_commit_append_splice_equivalence)."""
-        firsts_by: dict[str, tuple[int, int]] = {}
-        for r in sorted(
-            self._pending,
-            key=lambda r: (int(r["tx_id"]), int(r.get("seq") or 0)),
-        ):
-            e = r["eid"]
-            if e not in firsts_by:
-                vf = r.get("valid_from")
-                firsts_by[e] = (
-                    int(r["tx_id"]),
-                    int(vf) if vf is not None else int(r["tx_time"]),
-                )
-        firsts = self.spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "eid": list(firsts_by),
-                    "__t1": [t for t, _ in firsts_by.values()],
-                    "__v1": [v for _, v in firsts_by.values()],
-                }
-            ),
-            "eid string, __t1 long, __v1 long",
-        )
-        v = self.versions.join(F.broadcast(firsts), "eid", "left")
-        cur = F.col("tx_to") == END_OF_TX
-        overlap = (
-            F.col("__t1").isNotNull() & cur & (F.col("valid_to") > F.col("__v1"))
-        )
-        open_ok = (
-            (F.col("valid_to") == END_OF_TIME)
-            & (F.col("valid_from") < F.col("__v1"))
-            & (F.col("tx_from") < F.col("__t1"))
-        )
-        stats = v.agg(
-            F.count(F.when(overlap & ~open_ok, 1)).alias("bad"),
-            F.count(F.when(overlap, 1)).alias("n_ov"),
-            F.count_distinct(F.when(overlap, F.col("eid"))).alias("n_ov_e"),
-        ).first()
-        if int(stats["bad"] or 0) or (
-            int(stats["n_ov"] or 0) != int(stats["n_ov_e"] or 0)
-        ):
-            return None
-        ver_cols = [f.name for f in VERSIONS_SCHEMA.fields if f.name != "eid"]
-
-        def _row(**over):
-            return F.struct(
-                *[
-                    (over[c] if c in over else F.col(c)).alias(c)
-                    for c in ver_cols
-                ]
-            )
-
-        existing = v.select(
-            "eid",
-            F.explode(
-                F.when(
-                    overlap,
-                    F.array(
-                        _row(tx_to=F.col("__t1")),
-                        _row(
-                            valid_to=F.col("__v1"),
-                            tx_from=F.col("__t1"),
-                            tx_to=F.lit(END_OF_TX),
-                            asserted=F.lit(False),
-                        ),
-                    ),
-                ).otherwise(F.array(_row()))
-            ).alias("__v"),
-        ).select("eid", "__v.*")
-        return existing.unionByName(_bulk_put_versions(ops_eff))
 
     def apply_ops_df(self, ops_df: DataFrame, has_match: bool | None = None) -> set[int]:
         """Apply a whole ops DataFrame (OPS_SCHEMA) through the cogrouped

@@ -259,40 +259,9 @@ def build_av_text_index(
     ).filter(F.length("term") > 0)
     postings = toks.groupBy("term", "eid", "v").agg(F.count("*").alias("tf"))
     doc_freq = postings.groupBy("term").agg(F.count_distinct("eid").alias("df"))
-    # Size-aware materialization (guide §5): per-consumer lazy recompute
-    # measured FASTER cold at bench scale (r15 examined checkpoint AND
-    # persist — both net-worse: the synchronous planning/cache-build
-    # cost exceeded the recompute saved), but each search_av consumer
-    # re-runs tokenize+groupBy over the source, which at 100 TB re-reads
-    # the corpus per field term. Above a source-size threshold, persist
-    # the postings (MEMORY_AND_DISK: the index is smaller than the
-    # corpus but may not fit in memory) so every consumer shares one
-    # tokenize pass. CRUX_SPARK_TEXT_INDEX_PERSIST_MIN_BYTES (Spark size
-    # forms) tunes it; default 256m keeps bench-scale inputs (sf0.1
-    # documents ~15 MB) on the measured-faster lazy path.
-    import os
-
-    from crux_spark._conf import parse_byte_size
-
-    thr = parse_byte_size(
-        os.environ.get("CRUX_SPARK_TEXT_INDEX_PERSIST_MIN_BYTES"), 256 << 20
-    )
-    try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        est = 0
-    # a no-stats plan (plain createDataFrame/RDD sources) reports
-    # defaultSizeInBytes = Long.MaxValue — treat unknown as small so the
-    # measured-faster lazy path stays the default
-    if est >= (1 << 62):
-        est = 0
-    if est >= thr:
-        from pyspark import StorageLevel
-
-        postings = postings.persist(StorageLevel.MEMORY_AND_DISK)
-        doc_freq = doc_freq.persist(StorageLevel.MEMORY_AND_DISK)
+    # Lazy on purpose: r15 measured both checkpoint and persist of the
+    # postings net-slower (the synchronous cache build cost more than
+    # the per-consumer recompute it saved).
     return postings, doc_freq, df.count()
 
 

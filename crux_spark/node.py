@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import datetime as dt
 import json
-from collections import OrderedDict
 from typing import Any, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,8 +30,6 @@ from crux_spark.bitemporal.store import TxStore
 from crux_spark.catalog import Catalog
 from crux_spark.datalog import compile_query
 from crux_spark.datalog.pull import pull as _pull
-
-_PLAN_CACHE_SIZE = 256
 
 
 def _clean_completed(queries: list, max_age: float, max_count: int) -> list:
@@ -91,7 +88,13 @@ class Db:
 
     def __init__(self, node: "Node", valid_time: dt.datetime | None, tx: int | None):
         self.node = node
-        self.valid_time = valid_time
+        # no valid time means "now", resolved once here: the value must
+        # not drift with the wall clock while it is being read
+        self._given_valid_time = valid_time
+        self.valid_time = (
+            valid_time if valid_time is not None
+            else dt.datetime.now(dt.timezone.utc)
+        )
         self.tx = tx
         self._catalog: Catalog | None = None
 
@@ -114,22 +117,8 @@ class Db:
     # -- query surface ----------------------------------------------------
 
     def q(self, query: dict, *args: Any) -> DataFrame:
-        """Datalog query against this snapshot (plan-cached per query text,
-        the analogue of the reference's query-cache, query.clj:1996)."""
-        # keyed on the snapshot COORDINATES, not the Db object: id() can
-        # be reused after GC (two Dbs at different valid times sharing an
-        # address returned stale plans), and equal coordinates should
-        # share plans anyway. await_tx clears the cache on commit.
-        key = (self.valid_time, self.tx, repr(query), repr(args))
-        cached = self.node._plan_cache.get(key)
-        if cached is not None:
-            self.node._plan_cache.move_to_end(key)
-            return cached
-        df = compile_query(self.catalog(), query, *args)
-        self.node._plan_cache[key] = df
-        if len(self.node._plan_cache) > _PLAN_CACHE_SIZE:
-            self.node._plan_cache.popitem(last=False)
-        return df
+        """Datalog query against this snapshot (lazy result frame)."""
+        return compile_query(self.catalog(), query, *args)
 
     def open_q(self, query: dict, *args: Any):
         """Lazy cursor over results (api.clj open-q): partitions stream
@@ -200,16 +189,18 @@ class Db:
     def with_tx(self, ops: Iterable, tx_time: dt.datetime | None = None) -> "Db | None":
         """Speculative fork FROM THIS SNAPSHOT (fork.clj, api.clj
         with-tx on a db value): txs after this db's basis are invisible
-        in the fork; unranged ops default their valid time to this db's
-        valid time; returns None when the speculative tx aborts (failed
-        match — fork_test.clj 'returns nil on failed match')."""
+        in the fork; unranged ops default their valid time to the valid
+        time this db was asked for, or to the fork's tx time (now) when
+        it was taken at "now"; returns None when the speculative tx
+        aborts (failed match — fork_test.clj 'returns nil on failed
+        match')."""
         fork_store = self.node.store.fork_at(self.tx)
-        fork_store.submit_tx(ops, tx_time or self.valid_time)
+        fork_store.submit_tx(ops, tx_time or self._given_valid_time)
         if fork_store.commit():
             return None
         fork = Node(self.node.spark, self.node.schema, self.node.collection)
         fork.store = fork_store
-        return Db(fork, self.valid_time, None)
+        return Db(fork, self._given_valid_time, None)
 
     def q_collect(self, query: dict, *args: Any) -> list:
         """Eager collection with timeout-interrupt semantics AND query
@@ -355,7 +346,6 @@ class Node:
         self.store = TxStore(spark)
         self.schema = schema
         self.collection = collection
-        self._plan_cache: OrderedDict = OrderedDict()
         self._tx_listeners: list = []
         self._pending_listener_txs: list = []
         # name -> secondary index registered via register_index(); pass
@@ -455,7 +445,6 @@ class Node:
         synchronous commit model makes delivery deterministic rather
         than Thread/sleep-racy)."""
         aborted = self.store.commit()
-        self._plan_cache.clear()
         pending, self._pending_listener_txs = self._pending_listener_txs, []
         for tx_id, ops, submitted_at in pending:
             event = {

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from crux_spark._conf import _spread
+
 # deterministic affine hash parameters for MinHash (public textbook
 # construction: h_i(x) = (a_i * x + b_i) mod p). p = 2^31-1 keeps
 # a*h + b inside int64 under ANSI arithmetic.
@@ -53,44 +55,6 @@ def _expr_cached(tag: str, params: tuple, build):
 
 def _norm_text(col):
     return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition to the session's parallelism before CPU-heavy per-row
-    expression work. Document corpora often arrive as few large files, and
-    AQE coalesces byte-small shuffles — but shingling/hashing cost is per
-    ROW, not per byte, so an explicit spread keeps all cores busy.
-
-    Conditional (r15 optimization, guide §2.4): the spread only pays off
-    when the source scan CANNOT fill the session's cores on its own. A
-    corpus whose Catalyst size estimate already spans >= parallelism scan
-    splits (estimate / maxPartitionBytes) gains nothing from the
-    repartition — it would shuffle the full text payload just to land at
-    the same parallelism the scan provides, which at 100 TB is a
-    pointless full-corpus exchange. Small inputs (the few-large-files
-    case this helper exists for) keep the spread."""
-    from crux_spark._conf import parse_byte_size
-
-    sc = df.sparkSession.sparkContext
-    par = sc.defaultParallelism
-    try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        # unit-suffixed values ("128m", "64MB") parse correctly (r15
-        # advice: the rstrip('b')+int form raised and silently disabled
-        # the skip under any human-readable config)
-        max_pb = parse_byte_size(
-            df.sparkSession.conf.get(
-                "spark.sql.files.maxPartitionBytes", None
-            ),
-            128 << 20,
-        )
-        if est >= par * max_pb:
-            return df
-    except Exception:
-        pass
-    return df.repartition(par)
 
 
 def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -225,34 +189,15 @@ def ngram_jaccard_pairs(
             F.transform("shc", lambda st: st["h"]).alias("sh"),
             F.size("shc").alias("n_sh"),
         )
-        # Size-aware pin (guide §5). base feeds THREE consumers (the
-        # prefix explode + both verify sides). Below the threshold it
-        # stays lazy: the AQE stage cache already shares the shuffle map
-        # outputs, and an interleaved warm-codegen A/B at sf0.1 is a
-        # wash (4.3-5.3s lazy vs 4.8-5.4s pinned), so the small-corpus
-        # case keeps the cheaper no-checkpoint plan. Above it, the pin
-        # is decisive: at 10x (sf1, 1.2M candidates) the verify stage
-        # over the UNPINNED lineage burns 257-333s CPU (21-22s gate
-        # wall) where the pinned form's verify runs in 48-62s CPU
-        # (5.0-5.9s wall, interleaved fresh-JVM A/B, identical 2560
-        # pairs) — the join's build sides and the jaccard condition
-        # evaluate far cheaper over a materialized scan than over the
-        # recomputed aggregate lineage, and the gap grows with the
-        # candidate count.
+        # base feeds three consumers (the prefix explode and both verify
+        # sides): the join's build sides and the jaccard condition run
+        # far cheaper over a materialized scan than over the recomputed
+        # aggregate lineage (sf1, 1.2M candidates: verify 257-333s ->
+        # 48-62s CPU, identical pairs). Lazy like minhash_lsh_pairs':
+        # no result stage runs here (under AQE Spark still runs the
+        # shuffle stages below the pin to plan it).
+        .localCheckpoint(eager=False)
     )
-    import os
-
-    from crux_spark._conf import parse_byte_size
-
-    thr = parse_byte_size(
-        os.environ.get("CRUX_SPARK_PAIRGEN_PIN_MIN_BYTES"), 4 << 20
-    )
-    try:
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        est = 0
-    if 0 < est < (1 << 62) and est >= thr:
-        base = base.localCheckpoint()
     prefix_len = F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
     prefixes = base.select(
         "id", F.explode(F.slice("sh", 1, prefix_len.cast("int"))).alias("s")

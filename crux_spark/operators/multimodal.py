@@ -785,7 +785,7 @@ def decode_verification_media(docs: DataFrame) -> DataFrame:
     task (the four-pass form at least overlapped four 1-task stages).
     `_spread` skips the exchange whenever the scan already fills the
     cores, so at scale this is a no-op."""
-    from crux_spark.operators.dedup import _spread
+    from crux_spark._conf import _spread
     schema = (
         "media_id long, width long, height long, f0 double, f1 double, "
         "f2 double, sample_rate long, rms double, peak double"

@@ -184,7 +184,7 @@ def repetition_metrics(df: DataFrame, doc_id_col: str = "doc_id",
     Σ len over occurrences − Σ len over distinct) at O(tokens) map work
     plus the partial-agg shuffle the top-gram stat already paid for —
     and both families ride the SAME explode pass."""
-    from crux_spark.operators.dedup import _spread
+    from crux_spark._conf import _spread
 
     t = F.col(text_col)
     # r16: both scans below do heavy per-row text work (line stats,
@@ -511,7 +511,7 @@ def hashed_classifier_score(df: DataFrame, doc_id_col: str = "doc_id",
     the array order, so scores are bit-deterministic and
     oracle-checkable. Returns (doc_id, n_tokens, raw, score); docs with
     no tokens are dropped (nothing to average)."""
-    from crux_spark.operators.dedup import _spread
+    from crux_spark._conf import _spread
 
     # r16: one heavy per-row md5-per-token pass, single consumer —
     # same single-task-scan fix as c4_quality_flags (0.80s one-task
@@ -554,7 +554,7 @@ def c4_quality_flags(df: DataFrame, doc_id_col: str = "doc_id",
 
     All per-row Catalyst expressions over one split — zero shuffle; at
     100 TB this is a map-only pass like the Gopher filter."""
-    from crux_spark.operators.dedup import _spread
+    from crux_spark._conf import _spread
 
     # r16: the rules below are one heavy per-row regex/array pass; a
     # single-split corpus file otherwise runs it in ONE task (measured

@@ -123,12 +123,26 @@ def test_tx_committed_and_documents(node):
     assert node.document("nope") is None
 
 
-def test_plan_cache_reuse(node):
-    db = node.db(valid_time=t(2))
-    query = {"find": ["?n"], "where": [["?u", ":name", "?n"]]}
-    d1 = db.q(query)
-    d2 = db.q(query)
-    assert d1 is d2  # cached plan object
+def test_db_without_valid_time_is_pinned_when_taken(spark):
+    """A db taken without a valid time reads at the instant it was
+    taken, so a db taken later sees a version whose valid time began in
+    between, and the earlier db value never changes its answer."""
+    import time
+
+    node = Node(spark, schema="id string, name string")
+    node.submit_tx([("put", {"id": "a", "name": "A"})])
+    node.await_tx()
+    start = dt.datetime.now(dt.timezone.utc) + dt.timedelta(seconds=6)
+    node.submit_tx([("put", {"id": "f", "name": "F"}, start)])
+    node.await_tx()
+    query = {"find": ["?n"], "where": [["?e", ":name", "?n"]]}
+    assert dt.datetime.now(dt.timezone.utc) < start, "commit outlasted the lead"
+    before = node.db()
+    assert sorted(r.n for r in before.q(query).collect()) == ["A"]
+    wait = (start - dt.datetime.now(dt.timezone.utc)).total_seconds()
+    time.sleep(max(0.0, wait) + 0.2)
+    assert sorted(r.n for r in node.db().q(query).collect()) == ["A", "F"]
+    assert sorted(r.n for r in before.q(query).collect()) == ["A"]
 
 
 # ---------------------------------------------------------------- hypothesis

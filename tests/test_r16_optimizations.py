@@ -115,145 +115,6 @@ def test_txstore_constructor_seeds_tx_id_lazily(spark):
     assert st._tx_id >= tx_id
 
 
-# ---------------------------------------------------------------------------
-# r16: append-splice closed form — commits of all-unranged-put batches
-# into a NON-empty store route through _append_splice (JVM-only) when
-# every touched entity's current belief can only overlap its open tail
-# row; everything else falls back to the cogroup. Row-identity matrix
-# mirrors test_commit_fast_path_equivalence (940ad54).
-# ---------------------------------------------------------------------------
-
-def _mk_pair(spark):
-    """(fast, slow) stores with identical state; slow is pinned to the
-    cogroup by disabling the shape check on the instance."""
-    from crux_spark.bitemporal.store import TxStore
-
-    fast, slow = TxStore(spark), TxStore(spark)
-    # force the splice on `fast` regardless of store size (the size
-    # router keeps small stores on the cogroup); pin `slow` to the
-    # cogroup by disabling the shape check on the instance.
-    fast._append_splice_worthwhile = lambda: True
-    slow._commit_fast_path_ok = lambda: False
-    return fast, slow
-
-
-def _versions_set(store):
-    from crux_spark.bitemporal.store import VERSIONS_SCHEMA
-
-    cols = [f.name for f in VERSIONS_SCHEMA.fields]
-    return sorted(tuple(r) for r in store.versions.select(*cols).collect())
-
-
-def _spy_append(store, calls):
-    orig = store._append_splice
-
-    def spy(ops_eff):
-        out = orig(ops_eff)
-        calls.append(out is not None)
-        return out
-
-    store._append_splice = spy
-
-
-def test_commit_append_splice_equivalence(spark):
-    import datetime as dt
-
-    ts = lambda s: dt.datetime(2024, 5, 1, 0, 0, s, tzinfo=dt.timezone.utc)
-    fast, slow = _mk_pair(spark)
-    calls: list[bool] = []
-    _spy_append(fast, calls)
-
-    # round 1: fresh store (empty-store closed form on fast)
-    for st in (fast, slow):
-        for j in range(4):
-            st.submit_tx([("put", {"id": f"e{j}", "v": j})], tx_time=ts(1 + j))
-        assert st.commit() == set()
-    assert calls == []  # empty-store path, not the append splice
-
-    # round 2: re-put every existing entity later (sorted_maps shape),
-    # plus brand-new entities in the same batch (mixed fresh+append)
-    for st in (fast, slow):
-        for j in range(4):
-            st.submit_tx([("put", {"id": f"e{j}", "v": 100 + j})],
-                         tx_time=ts(20 + j))
-        st.submit_tx([("put", {"id": "n1", "v": -1})], tx_time=ts(25))
-        assert st.commit() == set()
-    assert calls == [True]
-    assert _versions_set(fast) == _versions_set(slow)
-
-    # round 3: multiple appends per entity in ONE batch (explicit vfs,
-    # strictly increasing)
-    for st in (fast, slow):
-        for k in range(3):
-            st.submit_tx(
-                [("put", {"id": "e0", "v": 200 + k}, ts(40 + k))],
-                tx_time=ts(30 + k),
-            )
-        assert st.commit() == set()
-    assert calls == [True, True]
-    assert _versions_set(fast) == _versions_set(slow)
-
-
-def test_commit_append_splice_tombstone_and_ranged_history(spark):
-    import datetime as dt
-
-    ts = lambda s: dt.datetime(2024, 6, 1, 0, 0, s, tzinfo=dt.timezone.utc)
-    fast, slow = _mk_pair(spark)
-    calls: list[bool] = []
-    _spy_append(fast, calls)
-
-    for st in (fast, slow):
-        # a: open tombstone tail (put then delete)
-        st.submit_tx([("put", {"id": "a", "v": 1})], tx_time=ts(1))
-        st.submit_tx([("delete", "a")], tx_time=ts(2))
-        # b: history ends in a RANGED put — no open row at all
-        st.submit_tx(
-            [("put", {"id": "b", "v": 1}, ts(3), ts(5))], tx_time=ts(3)
-        )
-        st.commit()  # delete/ranged -> cogroup on both stores
-
-        # append past both histories: a's tombstone tail gets clipped,
-        # b has no overlapping current row (pure append)
-        st.submit_tx([("put", {"id": "a", "v": 2})], tx_time=ts(10))
-        st.submit_tx([("put", {"id": "b", "v": 2})], tx_time=ts(11))
-        assert st.commit() == set()
-    assert calls == [True]
-    assert _versions_set(fast) == _versions_set(slow)
-
-    # reads agree end-to-end too
-    for vt in (ts(1), ts(4), ts(12)):
-        fa = sorted(tuple(r) for r in fast.db(vt).collect())
-        sl = sorted(tuple(r) for r in slow.db(vt).collect())
-        assert fa == sl
-
-
-def test_commit_append_splice_ineligible_overlaps(spark):
-    """Batches whose first new put lands INSIDE an entity's existing
-    belief (not past the open tail) must fail the probe and take the
-    cogroup — results identical."""
-    import datetime as dt
-
-    ts = lambda s: dt.datetime(2024, 7, 1, 0, 0, s, tzinfo=dt.timezone.utc)
-    fast, slow = _mk_pair(spark)
-    calls: list[bool] = []
-    _spy_append(fast, calls)
-
-    for st in (fast, slow):
-        st.submit_tx([("put", {"id": "x", "v": 1}, ts(10))], tx_time=ts(1))
-        st.submit_tx([("put", {"id": "x", "v": 2}, ts(20))], tx_time=ts(2))
-        st.commit()
-        # put BEFORE the open tail's valid_from (20): overlaps the tail
-        # remainder AND the open row -> ineligible
-        st.submit_tx([("put", {"id": "x", "v": 3}, ts(15))], tx_time=ts(3))
-        st.commit()
-        # put exactly AT the open tail's valid_from: vf == tail vf is
-        # ineligible (no remainder form)
-        st.submit_tx([("put", {"id": "x", "v": 4}, ts(20))], tx_time=ts(4))
-        st.commit()
-    assert calls == [False, False]
-    assert _versions_set(fast) == _versions_set(slow)
-
-
 def test_txlog_listener_state_survives_log_pruning(spark, tmp_path):
     """r15 advice (re-readability): listener state chains lazy
     localCheckpoints, so TxLogStream must pin each micro-batch to
@@ -292,32 +153,10 @@ def test_txlog_listener_state_survives_log_pruning(spark, tmp_path):
     assert idx.last_tx_id == 2
 
 
-def test_append_splice_size_router(spark, monkeypatch):
-    """auto mode routes small stores to the cogroup and large estimates
-    to the splice; always/never override; failure -> cogroup."""
-    from crux_spark.bitemporal.store import TxStore
-
-    st = TxStore(spark)
-    st.submit_tx([("put", {"id": "e", "v": 1})])
-    st.commit()
-    assert not st._append_splice_worthwhile()  # tiny store -> cogroup
-    monkeypatch.setenv("CRUX_SPARK_APPEND_SPLICE", "always")
-    assert st._append_splice_worthwhile()
-    monkeypatch.setenv("CRUX_SPARK_APPEND_SPLICE", "never")
-    assert not st._append_splice_worthwhile()
-    monkeypatch.setenv("CRUX_SPARK_APPEND_SPLICE", "auto")
-    monkeypatch.setenv("CRUX_SPARK_APPEND_SPLICE_MIN_BYTES", "16b")
-    assert st._append_splice_worthwhile()  # threshold below the estimate
-    monkeypatch.setenv("CRUX_SPARK_APPEND_SPLICE_MIN_BYTES", "1g")
-    assert not st._append_splice_worthwhile()
-
-
-def test_av_text_index_size_aware_persist(spark, monkeypatch, tmp_path):
-    """Below the source-size threshold — and for size-less plans
-    (plain createDataFrame reports Long.MaxValue = unknown) — the
-    postings stay lazy (measured faster cold at bench scale); above it
-    they persist so every search_av consumer shares one tokenize pass —
-    identical results."""
+def test_av_text_index_size_aware_persist(spark, tmp_path):
+    """The A/V postings stay lazy for every source (no size-gated
+    persist), and file-backed and local sources give identical search
+    results."""
     from crux_spark.functions.text_search import build_av_text_index, search_av
 
     local = spark.createDataFrame(
@@ -329,18 +168,12 @@ def test_av_text_index_size_aware_persist(spark, monkeypatch, tmp_path):
     df = spark.read.parquet(pq)  # real size stats from the files
 
     p1, d1, n1 = build_av_text_index(df, "id", "body")
-    assert p1.storageLevel.useMemory is False  # lazy below threshold
-
-    monkeypatch.setenv("CRUX_SPARK_TEXT_INDEX_PERSIST_MIN_BYTES", "1b")
-    # unknown-size plans must STAY lazy even below any threshold
-    pl, _, _ = build_av_text_index(local, "id", "body")
-    assert pl.storageLevel.useMemory is False
-    p2, d2, n2 = build_av_text_index(df, "id", "body")
-    assert p2.storageLevel.useMemory and p2.storageLevel.useDisk
+    p2, d2, n2 = build_av_text_index(local, "id", "body")
+    assert p1.storageLevel.useMemory is False
+    assert p2.storageLevel.useMemory is False
     r1 = sorted(map(tuple, search_av(p1, d1, n1, "sorted").collect()))
     r2 = sorted(map(tuple, search_av(p2, d2, n2, "sorted").collect()))
     assert r1 == r2 and r1
-    p2.unpersist(); d2.unpersist()
 
 
 def test_ngram_jaccard_window_dfreq_matches_brute_force(spark):
@@ -489,11 +322,11 @@ def test_decode_verification_media_matches_operator_composition(spark):
         assert f["peak"] == feat_wav[d]["features"][3]
 
 
-def test_ngram_pairgen_size_aware_pin(spark, monkeypatch, tmp_path):
-    """ngram_jaccard_pairs pins its per-doc base (localCheckpoint) only
-    when the input's size estimate crosses the threshold; unknown-size
-    plans (plain createDataFrame reports Long.MaxValue) stay lazy; the
-    pinned and lazy forms return identical pairs."""
+def test_ngram_pairgen_size_aware_pin(spark, tmp_path):
+    """ngram_jaccard_pairs pins its per-doc base with a lazy
+    localCheckpoint for every input, with or without a size estimate,
+    and the pairs equal the brute-force all-pairs result for both
+    file-backed and local (unknown-size) sources."""
     from crux_spark.operators.dedup import ngram_jaccard_pairs
 
     rows = [
@@ -505,23 +338,27 @@ def test_ngram_pairgen_size_aware_pin(spark, monkeypatch, tmp_path):
     local.write.parquet(pq)
     df = spark.read.parquet(pq)  # real size stats from the files
 
+    def grams(text):
+        toks = text.split()
+        return {tuple(toks[k:k + 3]) for k in range(len(toks) - 2)}
+
+    want = []
+    for i, ti in rows:
+        for j, tj in rows:
+            if i < j:
+                a, b = grams(ti), grams(tj)
+                jac = round(len(a & b) / len(a | b), 6)
+                if jac >= 0.4:
+                    want.append((i, j, jac))
+    want.sort()
+
     def pinned(pairs):
-        # pinned = the base (window + collect_list lineage) was replaced
-        # by a checkpoint scan, so collect_list no longer appears in the
-        # pair plan (a LogicalRDD scan test would false-positive on
-        # createDataFrame sources, which are LogicalRDD-backed)
+        # the base (window + collect_list lineage) is replaced by a
+        # checkpoint scan, so collect_list leaves the pair plan
         plan = pairs._jdf.queryExecution().optimizedPlan().toString()
         return "collect_list" not in plan
 
-    lazy = ngram_jaccard_pairs(df, threshold=0.4)
-    assert not pinned(lazy)  # tiny corpus below the default threshold
-
-    monkeypatch.setenv("CRUX_SPARK_PAIRGEN_PIN_MIN_BYTES", "1b")
-    # unknown-size plans must STAY lazy even below any threshold
-    assert not pinned(ngram_jaccard_pairs(local, threshold=0.4))
-    hard = ngram_jaccard_pairs(df, threshold=0.4)
-    assert pinned(hard)
-
-    r_lazy = sorted(map(tuple, lazy.collect()))
-    r_hard = sorted(map(tuple, hard.collect()))
-    assert r_lazy == r_hard and r_lazy
+    for src in (df, local):
+        pairs = ngram_jaccard_pairs(src, threshold=0.4)
+        assert pinned(pairs)
+        assert sorted(map(tuple, pairs.collect())) == want and want

@@ -1308,3 +1308,164 @@ def test_bulk_ingest_fast_path_equivalence(spark):
     st.bulk_ingest(df2, id_expr="dev", doc_cols=["v"], valid_from_col="ts")
     assert st.entity("d1")["v"] == 4.0
     assert [h["doc"]["v"] for h in st.entity_history("d1")] == [1.0, 2.0, 3.0, 4.0]
+
+
+def test_commit_paths_match_pure_python_splice_op_soup(spark):
+    """Row identity of both commit paths (the empty-store closed form
+    and the bucketed cogroup) against a pure-Python reference that
+    applies each tx in order with splice.py and drops a tx whose match
+    fails. A seeded soup of 1-20-op txs (appends, back-dated puts,
+    ranged puts, deletes, evicts, match+put, some designed to abort)
+    runs over a bulk-loaded store; fixed cases then cover an open
+    tombstone tail, a history ending in a ranged put, and puts inside
+    an open tail and exactly at its start."""
+    import hashlib
+    import random
+
+    from crux_spark.bitemporal import splice
+    from crux_spark.bitemporal.docjson import doc_dumps
+    from crux_spark.bitemporal.store import VERSIONS_SCHEMA
+
+    cols = [f.name for f in VERSIONS_SCHEMA.fields]
+    utc = dt.timezone.utc
+
+    def ts(day, minute=0):
+        return dt.datetime(2021, 1, 1, tzinfo=utc) + dt.timedelta(
+            days=day, minutes=minute
+        )
+
+    def chash(doc):
+        return hashlib.sha1(doc_dumps(doc).encode()).hexdigest()
+
+    def ref_apply(ref, tx_id, tx_time, ops):
+        """One tx on the reference; returns False (ref untouched) when a
+        match fails."""
+        work = dict(ref)
+        for op in ops:
+            kind, eid = op[0], (op[1]["id"] if op[0] == "put" else op[1])
+            h = work.get(eid, [])
+            if kind == "put":
+                h = splice.put(h, op[1], tx_id, tx_time, *op[2:],
+                               chash=chash(op[1]))
+            elif kind == "delete":
+                h = splice.delete(h, tx_id, tx_time, *op[2:])
+            elif kind == "evict":
+                h = splice.evict(h)
+            else:
+                at = op[3] if len(op) > 3 else tx_time
+                if not splice.matches(h, op[2], at, tx=tx_id):
+                    return False
+            work[eid] = h
+        ref.clear()
+        ref.update(work)
+        return True
+
+    def rows_of(ref):
+        return sorted(
+            (e, *(getattr(v, c) for c in cols[1:]))
+            for e, h in ref.items() for v in h
+        )
+
+    def commit_and_check(store, ref, txs):
+        want_aborted = set()
+        for ops, tx_time in txs:
+            tx_id = store.submit_tx(ops, tx_time=tx_time)
+            if not ref_apply(ref, tx_id, tx_time, ops):
+                want_aborted.add(tx_id)
+        assert store.commit() == want_aborted
+        got = sorted(tuple(r) for r in store.versions.select(*cols).collect())
+        assert got == rows_of(ref)
+        return want_aborted
+
+    # --- seeded soup over a bulk-loaded store --------------------------
+    rng = random.Random(20261017)
+    eids = [f"e{i}" for i in range(12)]
+    bulk = [
+        (e, rng.randint(0, 99), ts(d))
+        for e in eids for d in sorted(rng.sample(range(30), 3))
+    ]
+    store = TxStore(spark)
+    store.bulk_ingest(
+        spark.createDataFrame(bulk, "eid string, v long, vf timestamp"),
+        id_expr="eid", doc_cols=["v"], valid_from_col="vf",
+    )
+    ref: dict = {}
+    for r in store.versions.select(*cols).collect():
+        ref.setdefault(r.eid, []).append(
+            splice.Version(**{c: r[c] for c in cols[1:]})
+        )
+
+    def current_doc(eid, at):
+        v = splice.as_of(ref.get(eid, []), at)
+        return None if v is None else json.loads(v.doc_json)
+
+    n = 0
+    aborted: set = set()
+    for c in range(5):
+        txs = []
+        for k in range(rng.randint(2, 4)):
+            tx_time = ts(60 + c, 10 * k)
+            ops = []
+            for _ in range(rng.randint(1, 20)):
+                n += 1
+                eid = rng.choice(eids + ["fresh%d" % c])
+                doc = {"id": eid, "v": n}
+                kind = rng.choices(
+                    ["append", "back", "ranged", "delete", "evict", "match"],
+                    [50, 20, 10, 8, 2, 10],
+                )[0]
+                vf = ts(rng.randint(0, 58), rng.randint(0, 59))
+                if kind == "append":
+                    ops.append(("put", doc))
+                elif kind == "back":
+                    ops.append(("put", doc, vf))
+                elif kind == "ranged":
+                    ops.append(("put", doc, vf, vf + dt.timedelta(days=rng.randint(1, 9))))
+                elif kind == "delete":
+                    ops.append(("delete", eid, vf) if rng.random() < 0.5 else
+                               ("delete", eid, vf, vf + dt.timedelta(days=2)))
+                elif kind == "evict":
+                    ops.append(("evict", eid))
+                else:
+                    # match+put: half expect the committed doc (pass
+                    # unless an earlier op in the batch moved it), half a
+                    # doc that was never stored (designed to abort)
+                    expected = (
+                        current_doc(eid, vf) if rng.random() < 0.5
+                        else {"id": eid, "v": -1}
+                    )
+                    ops += [("match", eid, expected, vf), ("put", doc, vf)]
+            txs.append((ops, tx_time))
+        aborted |= commit_and_check(store, ref, txs)
+    assert aborted  # the designed aborts happened
+
+    # --- fixed cases: first commit into an empty store, then splices ---
+    store, ref = TxStore(spark), {}
+    commit_and_check(store, ref, [
+        ([("put", {"id": "a", "v": 1})], ts(1)),
+        ([("put", {"id": "x", "v": 1}, ts(10))], ts(2)),
+        ([("put", {"id": "x", "v": 2}, ts(20))], ts(3)),
+    ] + [([("put", {"id": f"p{j}", "v": j})], ts(4 + j)) for j in range(4)])
+    # an open tombstone tail (put then delete) and a history that ends
+    # in a ranged put (no open row)
+    commit_and_check(store, ref, [
+        ([("delete", "a")], ts(30)),
+        ([("put", {"id": "b", "v": 1}, ts(31), ts(33))], ts(31)),
+    ])
+    commit_and_check(store, ref, [
+        # appends past the tombstone tail and past the ranged history
+        ([("put", {"id": "a", "v": 2})], ts(40)),
+        ([("put", {"id": "b", "v": 2})], ts(41)),
+        # re-put every entity inside its open tail, plus a new entity
+        ([("put", {"id": f"p{j}", "v": 100 + j}) for j in range(4)], ts(42)),
+        ([("put", {"id": "n1", "v": -1})], ts(42, 1)),
+        # several appends per entity in one batch
+        ([("put", {"id": "p0", "v": 200}, ts(50))], ts(43)),
+        ([("put", {"id": "p0", "v": 201}, ts(51))], ts(44)),
+        # before the open tail's valid_from: overlaps the remainder
+        ([("put", {"id": "x", "v": 3}, ts(15))], ts(45)),
+    ])
+    # exactly at the open tail's start
+    commit_and_check(store, ref, [
+        ([("put", {"id": "x", "v": 4}, ts(20))], ts(46)),
+    ])
