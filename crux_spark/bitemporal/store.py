@@ -3,20 +3,31 @@
 The reference's write path (SURVEY.md §3.4): submit-tx appends events to a
 totally-ordered log; every node's ingester indexes each tx serially
 (tx.clj:424-479). The Spark recast keeps the *serial-per-entity* part —
-which is all the splice algebra needs — and distributes across entities:
+which is all the splice algebra needs. Where the ops live decides how:
 
-    tx batch (ordered ops)  ──┐
+    commit() — ops already on the driver (submit_tx, recover):
+    versions ── eid IN (touched) ─ collect ─┐
+    pending ops ───────────────────────────┴─ splice.py, tx by tx ─ new histories
+    versions ── eid NOT IN (touched) ∪ new histories ─ coalesce ─ localCheckpoint
+
+    apply_ops_df() — a distributed op frame (streaming micro-batches):
+    ops frame               ──┐
     versions table (by eid) ──┴─ cogroup on eid ─ applyInPandas(splice) ─ new versions
 
-Per-entity histories are small; entities shard across executors. At 100 TB
-the versions table is partitioned/bucketed by eid so the cogroup is a
-single co-located shuffle, and a tx batch touches only the entities it
-writes (join-pruned).
+A commit's cost follows the entities it touches: one job collects their
+histories, the driver applies the batch tx by tx (a tx whose match fails
+is dropped whole — serial abort semantics by construction), and one job
+writes the untouched rows back with the new histories, holding the
+table's partition count so reads do not slow down as commits pile up.
 
-Match/CAS atomicity across entities is two-phase: a distributed evaluation
-pass computes per-tx match verdicts (only tx_ids come back to the driver),
-aborted txs are excluded, then the apply pass runs. Iterated to fixpoint
-because an abort can change a later tx's match input (rare; capped).
+The cogroup path is for op frames that never reach the driver. Per-entity
+histories are small; entities shard across executors. At 100 TB the
+versions table is partitioned/bucketed by eid so the cogroup is a single
+co-located shuffle. Match/CAS atomicity across entities is two-phase
+there: a distributed evaluation pass computes per-tx match verdicts (only
+tx_ids come back to the driver), aborted txs are excluded, then the apply
+pass runs. Iterated to fixpoint because an abort can change a later tx's
+match input (rare; capped).
 
 Transaction functions (tx.clj:178-227) run on the driver at submit time via
 a registered deterministic Python fn that returns ops — the analogue of the
@@ -25,6 +36,7 @@ serial tx-fn evaluation in the reference's single-threaded ingester.
 
 from __future__ import annotations
 
+import collections
 import datetime as dt
 import functools
 import hashlib
@@ -124,6 +136,10 @@ MATCH_SCHEMA = T.StructType(
         T.StructField("ok", T.BooleanType(), False),
     ]
 )
+
+# One driver-side op row in _apply_ops' attribute form. Built with
+# r.get() so raw WAL dicts that omit optional keys read as null.
+_OpRow = collections.namedtuple("_OpRow", [f.name for f in OPS_SCHEMA.fields])
 
 
 def _row_to_version(r) -> Version:
@@ -651,56 +667,34 @@ class TxStore:
         fn_aborted, self._pending_aborted = self._pending_aborted, set()
         if not self._pending:
             return fn_aborted
-        # SQL registry docs are visible driver-side here (cheap string
-        # check per pending op) — track them so apply_ops_df's blanket
-        # invalidation can be undone for this fully-observed batch.
-        # This also covers recover(), which splices WAL rows straight
-        # into _pending. Superset on purpose: an aborted tx's eid in
-        # the side-set just means one extra pruned-read candidate.
-        schema_adds = {
-            r["eid"] for r in self._pending
-            if r.get("doc_json") and _SCHEMA_NEEDLE in r["doc_json"]
-        }
-        prev_schema = self._schema_eids
-        # Arrow path (r15 optimization, guide §4/§6): a pandas frame
-        # crosses the Python->JVM boundary as Arrow batches; the
-        # list-of-tuples form pickles row by row (measured 2-5x slower
-        # for a 25k-op commit). Column-wise dict avoids a per-row tuple
-        # pass; object dtype keeps None as a real null for Arrow.
-        ops_df = self.spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    f.name: [r.get(f.name) for r in self._pending]
-                    for f in OPS_SCHEMA.fields
-                },
-                dtype=object,
-            ),
-            OPS_SCHEMA,
-        )
         if self._versions_empty and self._commit_fast_path_ok():
             # Into an empty store, a batch of unranged puts with strictly
             # increasing per-entity (tx, effective valid-from) has the
             # same closed form as bulk_ingest's initial load (guide
             # §1.2): two lead() windows and the norm UDF instead of the
-            # per-entity Python splice cogroup, row-identical to it
+            # per-op Python splice, row-identical to it
             # (test_commit_fast_path_equivalence). The batch shape is
             # checked driver-side from _pending, so no probe job runs.
             # The splice stores vf=None puts at valid_from=tx_time; the
             # coalesce feeds the closed form that same effective value.
-            ops_eff = ops_df.withColumn(
+            ops_eff = self._ops_frame(self._pending).withColumn(
                 "valid_from", F.coalesce("valid_from", "tx_time")
             )
             self.versions = _bulk_put_versions(ops_eff).localCheckpoint()
-            self._versions_empty = False
             aborted: set[int] = set()
         else:
-            aborted = self.apply_ops_df(
-                ops_df, has_match=any(r["op"] == "match" for r in self._pending)
-            )
-        # fully-observed batch: restore the registry side-set (the fast
-        # path never nulled it — the same assignment is a no-op + adds)
-        if prev_schema is not None:
-            self._schema_eids = prev_schema | schema_adds
+            aborted = self._splice_touched(self._pending)
+        self._versions_empty = False
+        # SQL registry docs are visible driver-side here (cheap string
+        # check per pending op), so the side-set stays incremental. This
+        # also covers recover(), which splices WAL rows straight into
+        # _pending. Superset on purpose: an aborted tx's eid in the
+        # side-set just means one extra pruned-read candidate.
+        if self._schema_eids is not None:
+            self._schema_eids = self._schema_eids | {
+                r["eid"] for r in self._pending
+                if r.get("doc_json") and _SCHEMA_NEEDLE in r["doc_json"]
+            }
         if self._docs is not None:
             # COMMITTED evicts tombstone the entity's docs in the doc
             # store (an evict inside an aborted tx never happened). Docs
@@ -737,26 +731,92 @@ class TxStore:
         # contract as TxLogStream, so IncrementalTextIndex /
         # IncrementalVectorIndex plug into either path unchanged.
         if self.index_listeners:
-            committed = ops_df
-            if aborted:
-                committed = ops_df.filter(
-                    ~F.col("tx_id").isin(sorted(int(a) for a in aborted))
-                )
+            committed_rows = [
+                r for r in pending_rows if int(r["tx_id"]) not in aborted
+            ]
+            committed = self._ops_frame(committed_rows)
             # the committed batch's max tx id is known DRIVER-side here —
             # handing it down saves every watermark-keeping listener a
             # full extra pass over the batch (listeners that don't take
             # the kwarg keep the old two-arg call)
             mx_committed = max(
-                (
-                    int(r["tx_id"]) for r in pending_rows
-                    if r["tx_id"] is not None and int(r["tx_id"]) not in aborted
-                ),
-                default=None,
+                (int(r["tx_id"]) for r in committed_rows), default=None
             )
             self._index_epoch += 1
             for fn in list(self.index_listeners):
                 _call_listener(fn, self._index_epoch, committed, mx_committed)
         return all_aborted
+
+    def _ops_frame(self, rows: list[dict]) -> DataFrame:
+        """Driver-side op rows as an OPS_SCHEMA frame. Arrow path (r15
+        optimization, guide §4/§6): a pandas frame crosses the
+        Python->JVM boundary as Arrow batches; the list-of-tuples form
+        pickles row by row (measured 2-5x slower for a 25k-op commit).
+        Column-wise dict avoids a per-row tuple pass; object dtype keeps
+        None as a real null for Arrow."""
+        return self.spark.createDataFrame(
+            pd.DataFrame(
+                {f.name: [r.get(f.name) for r in rows] for f in OPS_SCHEMA.fields},
+                dtype=object,
+            ),
+            OPS_SCHEMA,
+        )
+
+    def _splice_touched(self, rows: list[dict]) -> set[int]:
+        """Apply driver-side op rows by splicing only the histories they
+        touch; returns the match-aborted tx ids.
+
+        One job collects the touched entities' version rows (a pushed-
+        down eid IN filter); the driver applies the batch tx by tx with
+        _apply_ops, keeping a tx's splices only when every one of its
+        matches holds — the reference's serial ingest (tx.clj:424-479),
+        so an abort is final the moment it is seen and no verdict
+        fixpoint is needed. One more job writes the untouched rows back
+        with the new histories. The driver holds only the touched
+        histories, which apply_ops_df's cogroup would load into one
+        Python worker per bucket anyway."""
+        eids = sorted({r["eid"] for r in rows})
+        hist_by: dict[str, list[Version]] = {}
+        if not self._versions_empty:
+            for r in self.versions.filter(F.col("eid").isin(eids)).collect():
+                hist_by.setdefault(r.eid, []).append(_row_to_version(r))
+        by_tx: dict[int, dict[str, list]] = {}
+        for r in sorted(
+            rows, key=lambda r: (int(r["tx_id"]), int(r.get("seq") or 0))
+        ):
+            op = _OpRow(*(r.get(f) for f in _OpRow._fields))
+            by_tx.setdefault(int(r["tx_id"]), {}).setdefault(
+                r["eid"], []
+            ).append(op)
+        aborted: set[int] = set()
+        for tx_id, ops_by_eid in by_tx.items():
+            spliced = {}
+            for eid, op_rows in ops_by_eid.items():
+                hist, verdicts = _apply_ops(hist_by.get(eid, []), op_rows, set())
+                if not all(ok for _, ok in verdicts):
+                    aborted.add(tx_id)
+                    break
+                spliced[eid] = hist
+            else:
+                hist_by.update(spliced)
+        cols: dict[str, list] = {f.name: [] for f in VERSIONS_SCHEMA.fields}
+        for eid, hist in hist_by.items():
+            for k, v in _history_cols(eid, hist).items():
+                cols[k].extend(v)
+        new = self.spark.createDataFrame(pd.DataFrame(cols), VERSIONS_SCHEMA)
+        if not self._versions_empty:
+            # createDataFrame adds its own partitions; without the
+            # coalesce every commit would grow the table by that many,
+            # and each point read pays per partition
+            n_parts = self.versions.rdd.getNumPartitions()
+            new = (
+                self.versions.filter(~F.col("eid").isin(eids))
+                .unionByName(new)
+                .coalesce(n_parts)
+            )
+        self.versions = new.localCheckpoint()
+        self.aborted_txs |= aborted
+        return aborted
 
     def _commit_fast_path_ok(self) -> bool:
         """Driver-side eligibility of the pending batch for the closed-
@@ -773,7 +833,7 @@ class TxStore:
                 key=lambda r: (int(r["tx_id"]), int(r.get("seq") or 0)),
             )
         except (KeyError, TypeError, ValueError):
-            return False  # malformed/legacy rows -> cogroup handles them
+            return False  # malformed/legacy rows -> _splice_touched handles them
         for r in rows:
             # .get() throughout: recover() splices raw WAL dicts into
             # _pending, which may omit optional keys entirely
@@ -796,10 +856,13 @@ class TxStore:
 
     def apply_ops_df(self, ops_df: DataFrame, has_match: bool | None = None) -> set[int]:
         """Apply a whole ops DataFrame (OPS_SCHEMA) through the cogrouped
-        splice — the distributed write path. Nothing but per-tx match
-        verdicts (tx_ids) ever reaches the driver, so a 10^8-op batch is
-        fine; this is what the streaming ingester feeds micro-batches into
-        (tx.clj:424-479's serial ingest, distributed across entities)."""
+        splice — the write path for op frames that are not on the driver.
+        Nothing but per-tx match verdicts (tx_ids) ever reaches the
+        driver, so a 10^8-op batch is fine; this is what the streaming
+        ingester feeds micro-batches into (tx.clj:424-479's serial
+        ingest, distributed across entities). commit(), whose ops are
+        already driver-side, splices only the touched histories instead
+        (_splice_touched)."""
         if has_match is None:
             has_match = bool(ops_df.filter(F.col("op") == "match").head(1))
         aborted: set[int] = set()
@@ -907,8 +970,8 @@ class TxStore:
         self._versions_empty = False
         self.aborted_txs |= aborted
         # a distributed ops frame may carry registry docs this driver
-        # never saw — invalidate the side-set (commit(), which DOES see
-        # its ops, restores it); schema_doc_eids() re-seeds on demand
+        # never saw — invalidate the side-set; schema_doc_eids() re-seeds
+        # on demand
         self._schema_eids = None
         return aborted
 

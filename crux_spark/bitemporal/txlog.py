@@ -42,6 +42,36 @@ def _empty_log_df(spark):
     return spark.createDataFrame([], WAL_DF_SCHEMA)
 
 
+def _mend_tail(f) -> None:
+    """Make a JSONL file (opened 'a+b') end at a line boundary. A crash in
+    mid-append leaves a last line with no newline: a record that does not
+    parse is cut off (entries() ignores it too); one that parses only lost
+    its newline, which is put back. Otherwise the next append would glue
+    its record onto the torn one and lose both."""
+    end = f.seek(0, os.SEEK_END)
+    if end == 0:
+        return
+    f.seek(end - 1)
+    if f.read(1) == b"\n":
+        return
+    start = end
+    while start > 0:
+        step = min(start, 1 << 16)
+        f.seek(start - step)
+        i = f.read(step).rfind(b"\n")
+        if i >= 0:
+            start += i + 1 - step
+            break
+        start -= step
+    f.seek(start)
+    try:
+        json.loads(f.read())
+    except ValueError:
+        f.truncate(start)
+    else:
+        f.write(b"\n")
+
+
 class JsonlTxLog:
     """Append-only JSON-lines file: the durable WAL used since r2."""
 
@@ -49,8 +79,9 @@ class JsonlTxLog:
         self.path = path
 
     def append(self, entry: dict) -> None:
-        with open(self.path, "a") as f:
-            f.write(json.dumps(entry) + "\n")
+        with open(self.path, "a+b") as f:
+            _mend_tail(f)
+            f.write((json.dumps(entry) + "\n").encode())
 
     def entries(self) -> Iterator[dict]:
         if not os.path.exists(self.path):
@@ -58,7 +89,13 @@ class JsonlTxLog:
         with open(self.path) as f:
             for line in f:
                 if line.strip():
-                    yield json.loads(line)
+                    try:
+                        entry = json.loads(line)
+                    except ValueError:
+                        if line.endswith("\n"):
+                            raise
+                        return  # torn tail of a crashed append
+                    yield entry
 
     def rewrite(self, entries: Iterable[dict]) -> None:
         """Atomic full rewrite (compact_wal's evict redaction)."""

@@ -164,10 +164,10 @@ def test_commit_fast_path_equivalence(spark):
     """r15 session 2: the first commit into a provably-empty store whose
     batch is all unranged puts routes through the closed-form bulk
     splice (no probe job). The version rows must be IDENTICAL to the
-    per-op cogroup splice, for vf=None (tx-time-valid) and explicit-vf
-    puts alike; ineligible batches (matches, deletes, ranged puts,
-    second commits) must still take the cogroup and agree with the
-    serial semantics."""
+    per-op splice, for vf=None (tx-time-valid) and explicit-vf puts
+    alike; ineligible batches (matches, deletes, ranged puts, second
+    commits) must still take the touched-entity splice and agree with
+    the serial semantics."""
     import datetime as dt
 
     from crux_spark.bitemporal.store import VERSIONS_SCHEMA, TxStore
@@ -198,7 +198,7 @@ def test_commit_fast_path_equivalence(spark):
     slow = TxStore(spark)
     for ops, t in mk_ops():
         slow.submit_tx(ops, tx_time=t)
-    slow._versions_empty = False  # force the cogroup path
+    slow._versions_empty = False  # force the touched-entity splice
     assert slow.commit() == set()
 
     a = sorted(tuple(r) for r in fast.versions.select(*cols).collect())
@@ -206,7 +206,8 @@ def test_commit_fast_path_equivalence(spark):
     assert a == b
 
     # second round over the SAME entities must route through the
-    # cogroup on both stores (flag cleared) and stay identical —
+    # touched-entity splice on both stores (flag cleared) and stay
+    # identical —
     # including a match abort, which is fast-path-ineligible anyway
     def round2(store):
         t = dt.datetime(2024, 1, 2, tzinfo=dt.timezone.utc)
@@ -230,7 +231,7 @@ def test_commit_fast_path_equivalence(spark):
 
 def test_commit_fast_path_ineligible_batches(spark):
     """Deletes, ranged puts, valid-time ties and matches must NOT take
-    the closed form — and produce correct results via the cogroup."""
+    the closed form — and produce correct results via the splice."""
     import datetime as dt
 
     from crux_spark.bitemporal.store import TxStore

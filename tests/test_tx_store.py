@@ -220,6 +220,27 @@ def test_wal_recover(spark, tmp_path):
     assert rec2.entity("w3") == {"id": "w3", "v": 3}
 
 
+def test_wal_recover_ignores_torn_tail(spark, tmp_path):
+    """A crash in mid-append leaves a last JSONL line with no newline.
+    recover() must return the acknowledged prefix, and the next append
+    must replace the torn tail instead of gluing onto it."""
+    wal = tmp_path / "tx.wal"
+    store = TxStore(spark, wal_path=str(wal))
+    store.submit_tx([("put", {"id": "a", "v": 1})], tx_time=t(1))
+    store.submit_tx([("put", {"id": "b", "v": 1})], tx_time=t(2))
+    line = json.dumps({"tx_id": 3, "rows": [{"tx_id": 3, "seq": 0}]})
+    with open(wal, "a") as f:
+        f.write(line[: len(line) // 2])
+    rec = TxStore.recover(spark, str(wal))
+    assert rec._tx_id == 2
+    assert rec.entity("a", valid_time=t(3)) == {"id": "a", "v": 1}
+    assert rec.entity("b", valid_time=t(3)) == {"id": "b", "v": 1}
+    rec.submit_tx([("put", {"id": "c", "v": 1})], tx_time=t(3))
+    rec2 = TxStore.recover(spark, str(wal))
+    assert rec2._tx_id == 3
+    assert [rec2.entity(e, valid_time=t(4))["v"] for e in "abc"] == [1, 1, 1]
+
+
 def test_bucketed_table_join_is_shuffle_free(spark, tmp_path):
     from crux_spark.sources.layout import (
         bucketed_join_is_shuffle_free,
@@ -1118,11 +1139,23 @@ def test_compact_wal_redacts_doc_containing_evicted_key(spark, tmp_path):
     assert store.compact_wal() == 0
 
 
+def _ops_frame(spark, txs, after_tx):
+    """OPS_SCHEMA frame of [(ops, tx_time)] with tx ids after_tx+1, ...:
+    the rows submit_tx builds, fed to apply_ops_df instead of commit()."""
+    src = TxStore(spark)
+    src._tx_id = after_tx
+    for ops, tx_time in txs:
+        src.submit_tx(ops, tx_time=tx_time)
+    return src._ops_frame(src._pending)
+
+
 def test_independent_match_aborts_finalize_in_parallel(spark, monkeypatch):
-    """Match-abort finalization is entity-group-parallel: failing txs on
-    DISJOINT entities can't influence each other (abort influence only
-    travels through shared eids), so they all finalize in the same round
-    — 2 eval rounds + 1 apply = 3 cogroups, not #aborts+2."""
+    """Match-abort finalization in apply_ops_df (the distributed op-frame
+    path, which still owns the verdict fixpoint) is entity-group-
+    parallel: failing txs on DISJOINT entities can't influence each
+    other (abort influence only travels through shared eids), so they
+    all finalize in the same round — 2 eval rounds + 1 apply = 3
+    cogroups, not #aborts+2."""
     import crux_spark.bitemporal.store as st
 
     calls = {"n": 0}
@@ -1139,17 +1172,57 @@ def test_independent_match_aborts_finalize_in_parallel(spark, monkeypatch):
     store.commit()
 
     calls["n"] = 0
-    ids = [
-        store.submit_tx(
-            [("match", e, {"id": e, "v": 999}), ("put", {"id": e, "v": 2})],
-            tx_time=t(2),
-        )
+    ops = _ops_frame(spark, [
+        ([("match", e, {"id": e, "v": 999}), ("put", {"id": e, "v": 2})], t(2))
         for e in "abc"
-    ]
-    assert store.commit() == set(ids)
+    ], after_tx=3)
+    assert store.apply_ops_df(ops) == {4, 5, 6}
     assert calls["n"] == 3  # 2 eval rounds + 1 final apply
     for e in "abc":
         assert store.entity(e, valid_time=t(3))["v"] == 1
+
+
+def test_commit_splices_touched_entities_without_cogroup(spark, monkeypatch):
+    """On a bulk-loaded store, commit() splices only the touched
+    histories on the driver: a 20-op batch with a failing match runs at
+    most 2 Spark jobs (collect the touched histories, write the table
+    back) and never reaches the cogroup."""
+    import crux_spark.bitemporal.store as st
+
+    store = st.TxStore(spark)
+    store.bulk_ingest(
+        spark.createDataFrame(
+            [(f"e{i}", i * 10 + d, t(1 + d)) for i in range(50) for d in range(3)],
+            "eid string, v long, vf timestamp",
+        ),
+        id_expr="eid", doc_cols=["v"], valid_from_col="vf",
+    )
+    calls = []
+    orig = st._bucketed_cogroup
+    monkeypatch.setattr(
+        st, "_bucketed_cogroup",
+        lambda *a, **k: calls.append(1) or orig(*a, **k),
+    )
+    ids = [
+        store.submit_tx([("put", {"id": f"e{i}", "v": 100 + i})
+                         for i in range(k, k + 6)], tx_time=t(10 + k))
+        for k in (0, 6, 12)
+    ]
+    bad = store.submit_tx(
+        [("match", "e0", {"id": "e0", "v": -1}), ("put", {"id": "e0", "v": -2})],
+        tx_time=t(24),
+    )
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = int(sched.nextJobId())
+    assert store.commit() == {bad}
+    jobs = int(sched.nextJobId()) - j0
+    assert calls == []
+    assert jobs <= 2, jobs
+    assert all(store.tx_committed(i) for i in ids)
+    assert store.entity("e0", valid_time=t(25))["v"] == 100
+    assert store.entity("e17", valid_time=t(25))["v"] == 117
+    assert store.entity("e18", valid_time=t(25))["v"] == 182
+    assert [h["doc"]["v"] for h in store.entity_history("e5")] == [50, 51, 52, 105]
 
 
 def test_dependent_match_aborts_stay_serial(spark):
@@ -1189,22 +1262,17 @@ def test_match_finalization_cap_boundary(spark, caplog, monkeypatch,
 
     monkeypatch.setattr(store_mod, "_MAX_TX_EID_PAIRS", cap)
     store = TxStore(spark)
-    store.submit_tx(
-        [("put", {"id": "a", "v": 1}), ("put", {"id": "b", "v": 1}),
-         ("put", {"id": "c", "v": 1})],
-        tx_time=t(1),
-    )  # 3 pairs
-    store.submit_tx(
-        [("match", "a", {"id": "a", "v": 999}), ("put", {"id": "a", "v": 2})],
-        tx_time=t(2),
-    )  # +1 pair, fails
-    store.submit_tx(
-        [("match", "b", {"id": "b", "v": 1}), ("put", {"id": "b", "v": 2})],
-        tx_time=t(3),
-    )  # +1 pair, passes -> 5 distinct (tx, eid) pairs total
+    ops = _ops_frame(spark, [
+        ([("put", {"id": "a", "v": 1}), ("put", {"id": "b", "v": 1}),
+          ("put", {"id": "c", "v": 1})], t(1)),  # 3 pairs
+        ([("match", "a", {"id": "a", "v": 999}),
+          ("put", {"id": "a", "v": 2})], t(2)),  # +1 pair, fails
+        ([("match", "b", {"id": "b", "v": 1}),
+          ("put", {"id": "b", "v": 2})], t(3)),
+    ], after_tx=0)  # +1 pair, passes -> 5 distinct (tx, eid) pairs total
     with caplog.at_level(logging.WARNING,
                          logger="crux_spark.bitemporal.store"):
-        aborted = store.commit()
+        aborted = store.apply_ops_df(ops)
     assert aborted == {2}
     assert store.entity("a", valid_time=t(4))["v"] == 1
     assert store.entity("b", valid_time=t(4))["v"] == 2
@@ -1312,13 +1380,15 @@ def test_bulk_ingest_fast_path_equivalence(spark):
 
 def test_commit_paths_match_pure_python_splice_op_soup(spark):
     """Row identity of both commit paths (the empty-store closed form
-    and the bucketed cogroup) against a pure-Python reference that
+    and the touched-entity splice) against a pure-Python reference that
     applies each tx in order with splice.py and drops a tx whose match
     fails. A seeded soup of 1-20-op txs (appends, back-dated puts,
     ranged puts, deletes, evicts, match+put, some designed to abort)
-    runs over a bulk-loaded store; fixed cases then cover an open
-    tombstone tail, a history ending in a ranged put, and puts inside
-    an open tail and exactly at its start."""
+    runs over a bulk-loaded store; the same soup also goes through
+    apply_ops_df's bucketed cogroup on a second copy of that store. No
+    commit may grow the versions table's partition count. Fixed cases
+    then cover an open tombstone tail, a history ending in a ranged
+    put, and puts inside an open tail and exactly at its start."""
     import hashlib
     import random
 
@@ -1366,15 +1436,25 @@ def test_commit_paths_match_pure_python_splice_op_soup(spark):
             for e, h in ref.items() for v in h
         )
 
-    def commit_and_check(store, ref, txs):
+    def check_rows(store, ref):
+        got = sorted(tuple(r) for r in store.versions.select(*cols).collect())
+        assert got == rows_of(ref)
+
+    def commit_and_check(store, ref, txs, max_parts=None, cogroup_store=None):
         want_aborted = set()
         for ops, tx_time in txs:
             tx_id = store.submit_tx(ops, tx_time=tx_time)
             if not ref_apply(ref, tx_id, tx_time, ops):
                 want_aborted.add(tx_id)
+        rows = list(store._pending)
         assert store.commit() == want_aborted
-        got = sorted(tuple(r) for r in store.versions.select(*cols).collect())
-        assert got == rows_of(ref)
+        check_rows(store, ref)
+        if max_parts is not None:
+            assert store.versions.rdd.getNumPartitions() <= max_parts
+        if cogroup_store is not None:
+            ops_df = store._ops_frame(rows)
+            assert cogroup_store.apply_ops_df(ops_df) == want_aborted
+            check_rows(cogroup_store, ref)
         return want_aborted
 
     # --- seeded soup over a bulk-loaded store --------------------------
@@ -1389,6 +1469,8 @@ def test_commit_paths_match_pure_python_splice_op_soup(spark):
         spark.createDataFrame(bulk, "eid string, v long, vf timestamp"),
         id_expr="eid", doc_cols=["v"], valid_from_col="vf",
     )
+    bulk_parts = store.versions.rdd.getNumPartitions()
+    cogroup_store = TxStore(spark, store.versions)
     ref: dict = {}
     for r in store.versions.select(*cols).collect():
         ref.setdefault(r.eid, []).append(
@@ -1436,7 +1518,9 @@ def test_commit_paths_match_pure_python_splice_op_soup(spark):
                     )
                     ops += [("match", eid, expected, vf), ("put", doc, vf)]
             txs.append((ops, tx_time))
-        aborted |= commit_and_check(store, ref, txs)
+        aborted |= commit_and_check(
+            store, ref, txs, bulk_parts, cogroup_store
+        )
     assert aborted  # the designed aborts happened
 
     # --- fixed cases: first commit into an empty store, then splices ---
@@ -1446,12 +1530,13 @@ def test_commit_paths_match_pure_python_splice_op_soup(spark):
         ([("put", {"id": "x", "v": 1}, ts(10))], ts(2)),
         ([("put", {"id": "x", "v": 2}, ts(20))], ts(3)),
     ] + [([("put", {"id": f"p{j}", "v": j})], ts(4 + j)) for j in range(4)])
+    first_parts = store.versions.rdd.getNumPartitions()
     # an open tombstone tail (put then delete) and a history that ends
     # in a ranged put (no open row)
     commit_and_check(store, ref, [
         ([("delete", "a")], ts(30)),
         ([("put", {"id": "b", "v": 1}, ts(31), ts(33))], ts(31)),
-    ])
+    ], first_parts)
     commit_and_check(store, ref, [
         # appends past the tombstone tail and past the ranged history
         ([("put", {"id": "a", "v": 2})], ts(40)),
@@ -1464,8 +1549,8 @@ def test_commit_paths_match_pure_python_splice_op_soup(spark):
         ([("put", {"id": "p0", "v": 201}, ts(51))], ts(44)),
         # before the open tail's valid_from: overlaps the remainder
         ([("put", {"id": "x", "v": 3}, ts(15))], ts(45)),
-    ])
+    ], first_parts)
     # exactly at the open tail's start
     commit_and_check(store, ref, [
         ([("put", {"id": "x", "v": 4}, ts(20))], ts(46)),
-    ])
+    ], first_parts)
