@@ -270,6 +270,18 @@ def as_of(
     return None
 
 
+def as_of_tx(history: list[Version], tx: int) -> list[Version]:
+    """The history as believed at ``tx``: rows written by later txs are
+    dropped and rows they closed are reopened, which is the history the
+    store held right after ``tx`` committed (TxStore.fork_at's filter
+    over one entity)."""
+    return [
+        r if r.tx_to <= tx else replace(r, tx_to=END_OF_TX)
+        for r in history
+        if r.tx_from <= tx
+    ]
+
+
 def matches(
     history: list[Version],
     expected: dict | None,

@@ -20,6 +20,19 @@ is dropped whole — serial abort semantics by construction), and one job
 writes the untouched rows back with the new histories, holding the
 table's partition count so reads do not slow down as commits pile up.
 
+Reads of single entities go through an entity-history cache on the
+driver (the reference's 32K-entry entity LRU, query.clj:1546-1552):
+
+    entity / entity_tx / entity_history / db_of(eids) — point reads:
+    eid ─ cache hit ──────────────────────────┐
+        ─ miss: versions ── eid IN (misses) ─ collect ─┴─ splice.py visibility
+
+A hit runs no Spark job; all misses of one read are fetched in one job.
+commit() takes its touched histories from the same cache and writes the
+new ones back (untouched entries stay valid), so a read of a just-
+written entity always hits. Any other assignment of ``versions`` clears
+the cache.
+
 The cogroup path is for op frames that never reach the driver. Per-entity
 histories are small; entities shard across executors. At 100 TB the
 versions table is partitioned/bucketed by eid so the cogroup is a single
@@ -363,6 +376,12 @@ def _apply_ops(history: list[Version], op_rows: list, aborted: set[int]):
 
 
 
+# Bounds of the entity-history cache (TxStore._histories): the
+# reference's entity cache holds 32K entries (query.clj:1546-1552); the
+# byte cap is on the summed doc_json length of the cached histories.
+ENTITY_CACHE_MAX_ENTRIES = 32_768
+ENTITY_CACHE_MAX_BYTES = 64 << 20
+
 # Bound on the driver-side tx→eid map used to parallelize match-abort
 # finalization across independent entity groups (collected once per
 # match-carrying batch; ~50 B/pair → a few MB at the cap).
@@ -400,6 +419,23 @@ def _locked(fn):
     return wrapper
 
 
+# db()'s columns; db_of builds the same rows on the driver
+_DB_COLS = ("eid", "doc_json", "valid_from", "valid_to", "tx_from", "content_hash")
+_DB_SCHEMA = T.StructType([VERSIONS_SCHEMA[c] for c in _DB_COLS])
+
+
+def _vt_us(valid_time: dt.datetime | None) -> int:
+    """A read's valid time in micros; none means now."""
+    return to_us(valid_time) if valid_time else to_us(
+        dt.datetime.now(dt.timezone.utc)
+    )
+
+
+def _tx_basis(tx: int | None) -> int:
+    """A read's tx basis; none means every committed tx."""
+    return tx if tx is not None else END_OF_TX - 1
+
+
 def canon_eid(x) -> str:
     """Canonical string form of an entity id. Map (and collection) ids
     hash by VALUE, independent of key order (tx_test.clj
@@ -424,12 +460,23 @@ class TxStore:
         doc_store=None,
     ):
         self.spark = spark
+        # eid -> (history, summed doc_json length), least recently used
+        # first; see _histories. _cache_gen counts versions assignments,
+        # so a fill that raced one is dropped.
+        self._cache_lock = threading.Lock()
+        self._cache: collections.OrderedDict[
+            str, tuple[tuple[Version, ...], int]
+        ] = collections.OrderedDict()
+        self._cache_bytes = 0
+        self._cache_gen = 0
+        self._cache_counts = {"hits": 0, "misses": 0, "evictions": 0}
         self.versions = versions or spark.createDataFrame([], VERSIONS_SCHEMA)
         # True only while the store PROVABLY holds zero version rows: set
-        # at construction-without-versions, cleared on every write path.
-        # Lets commit() route an all-fresh all-put first batch through the
-        # closed-form bulk splice with NO probe job (the driver can verify
-        # every other precondition from _pending itself).
+        # at construction-without-versions, cleared by every versions
+        # assignment. Lets commit() route an all-fresh all-put first
+        # batch through the closed-form bulk splice with NO probe job
+        # (the driver can verify every other precondition from _pending
+        # itself).
         self._versions_empty = versions is None
         self._mutex = threading.RLock()  # see _locked / snapshot()
         # tx-id counter. A versions frame passed WHOLESALE to the public
@@ -471,6 +518,102 @@ class TxStore:
         # persisted there at submit time (the reference writes docs to
         # the doc store BEFORE the tx log) and `documents()` reads it.
         self.doc_store = doc_store
+
+    @property
+    def versions(self) -> DataFrame:
+        return self._versions
+
+    @versions.setter
+    def versions(self, df: DataFrame) -> None:
+        self._set_versions(df)
+
+    def _set_versions(
+        self, df: DataFrame, spliced: dict[str, list[Version]] | None = None
+    ) -> None:
+        """Replace the versions table. A plain assignment clears the
+        entity cache. ``spliced`` (eid -> its full history in ``df``)
+        says ``df`` differs from the old table only in those eids' rows:
+        the other entries stay valid and these are written over. One
+        step under the cache lock, so no reader pairs the new table with
+        an old cache generation."""
+        with self._cache_lock:
+            self._versions = df
+            self._versions_empty = False
+            self._cache_gen += 1
+            if spliced is None:
+                self._cache.clear()
+                self._cache_bytes = 0
+            for eid, hist in (spliced or {}).items():
+                self._cache_put(eid, tuple(hist))
+
+    def _cache_put(self, eid: str, hist: tuple[Version, ...]) -> None:
+        """Insert as most recently used, evicting from the other end
+        past either bound (caller holds _cache_lock). A history larger
+        than the byte cap is not cached."""
+        size = sum(len(v.doc_json or "") for v in hist)
+        old = self._cache.pop(eid, None)
+        if old is not None:
+            self._cache_bytes -= old[1]
+        if size > ENTITY_CACHE_MAX_BYTES:
+            return
+        self._cache[eid] = (hist, size)
+        self._cache_bytes += size
+        while (
+            len(self._cache) > ENTITY_CACHE_MAX_ENTRIES
+            or self._cache_bytes > ENTITY_CACHE_MAX_BYTES
+        ):
+            _, (_, dropped) = self._cache.popitem(last=False)
+            self._cache_bytes -= dropped
+            self._cache_counts["evictions"] += 1
+
+    def _histories(self, eids: Iterable[str]) -> dict[str, tuple[Version, ...]]:
+        """Full version history of each eid (empty for an eid with no
+        rows) — the rows ``versions`` holds for it. Hits come from the
+        cache; all misses are fetched in ONE job (a pushed-down eid IN
+        filter) and cached, unless ``versions`` was reassigned while
+        that job ran (the read holds no store mutex)."""
+        out: dict[str, tuple[Version, ...]] = {}
+        misses: list[str] = []
+        with self._cache_lock:
+            for eid in dict.fromkeys(eids):
+                hit = self._cache.get(eid)
+                if hit is None:
+                    misses.append(eid)
+                else:
+                    self._cache.move_to_end(eid)
+                    out[eid] = hit[0]
+            self._cache_counts["hits"] += len(out)
+            self._cache_counts["misses"] += len(misses)
+            gen, versions = self._cache_gen, self._versions
+            empty = self._versions_empty
+        if not misses:
+            return out
+        fetched: dict[str, list[Version]] = {e: [] for e in misses}
+        if not empty:
+            for r in self._fetch_histories(versions, misses):
+                fetched[r.eid].append(_row_to_version(r))
+        with self._cache_lock:
+            keep = self._cache_gen == gen
+            for eid, hist in fetched.items():
+                out[eid] = tuple(hist)
+                if keep:
+                    self._cache_put(eid, out[eid])
+        return out
+
+    @staticmethod
+    def _fetch_histories(versions: DataFrame, eids: list[str]) -> list:
+        return versions.filter(F.col("eid").isin(eids)).collect()
+
+    def entity_cache_stats(self) -> dict[str, int]:
+        """Entity-history cache counters: hits and misses (per eid
+        looked up), evictions, and the current entries and bytes
+        (summed doc_json length)."""
+        with self._cache_lock:
+            return {
+                **self._cache_counts,
+                "entries": len(self._cache),
+                "bytes": self._cache_bytes,
+            }
 
     @property
     def _tx_id(self) -> int:
@@ -684,7 +827,6 @@ class TxStore:
             aborted: set[int] = set()
         else:
             aborted = self._splice_touched(self._pending)
-        self._versions_empty = False
         # SQL registry docs are visible driver-side here (cheap string
         # check per pending op), so the side-set stays incremental. This
         # also covers recover(), which splices WAL rows straight into
@@ -766,20 +908,20 @@ class TxStore:
         """Apply driver-side op rows by splicing only the histories they
         touch; returns the match-aborted tx ids.
 
-        One job collects the touched entities' version rows (a pushed-
-        down eid IN filter); the driver applies the batch tx by tx with
-        _apply_ops, keeping a tx's splices only when every one of its
-        matches holds — the reference's serial ingest (tx.clj:424-479),
-        so an abort is final the moment it is seen and no verdict
-        fixpoint is needed. One more job writes the untouched rows back
-        with the new histories. The driver holds only the touched
-        histories, which apply_ops_df's cogroup would load into one
-        Python worker per bucket anyway."""
+        The touched entities' histories come from _histories (one job
+        collects the uncached ones through a pushed-down eid IN filter;
+        none runs when all are cached); the driver applies the batch tx
+        by tx with _apply_ops, keeping a tx's splices only when every
+        one of its matches holds — the reference's serial ingest
+        (tx.clj:424-479), so an abort is final the moment it is seen
+        and no verdict fixpoint is needed. One more job writes the
+        untouched rows back with the new histories, which then replace
+        the touched entries of the entity cache (the untouched ones stay
+        valid). The driver holds only the touched histories,
+        which apply_ops_df's cogroup would load into one Python worker
+        per bucket anyway."""
         eids = sorted({r["eid"] for r in rows})
-        hist_by: dict[str, list[Version]] = {}
-        if not self._versions_empty:
-            for r in self.versions.filter(F.col("eid").isin(eids)).collect():
-                hist_by.setdefault(r.eid, []).append(_row_to_version(r))
+        hist_by = {e: list(h) for e, h in self._histories(eids).items()}
         by_tx: dict[int, dict[str, list]] = {}
         for r in sorted(
             rows, key=lambda r: (int(r["tx_id"]), int(r.get("seq") or 0))
@@ -792,7 +934,7 @@ class TxStore:
         for tx_id, ops_by_eid in by_tx.items():
             spliced = {}
             for eid, op_rows in ops_by_eid.items():
-                hist, verdicts = _apply_ops(hist_by.get(eid, []), op_rows, set())
+                hist, verdicts = _apply_ops(hist_by[eid], op_rows, set())
                 if not all(ok for _, ok in verdicts):
                     aborted.add(tx_id)
                     break
@@ -814,7 +956,7 @@ class TxStore:
                 .unionByName(new)
                 .coalesce(n_parts)
             )
-        self.versions = new.localCheckpoint()
+        self._set_versions(new.localCheckpoint(), hist_by)
         self.aborted_txs |= aborted
         return aborted
 
@@ -967,7 +1109,6 @@ class TxStore:
         self.versions = _bucketed_cogroup(
             self.versions, ops_df, apply_fn, VERSIONS_SCHEMA, self._nbuckets()
         ).localCheckpoint()
-        self._versions_empty = False
         self.aborted_txs |= aborted
         # a distributed ops frame may carry registry docs this driver
         # never saw — invalidate the side-set; schema_doc_eids() re-seeds
@@ -1154,7 +1295,6 @@ class TxStore:
         for p in parts[1:]:
             out = out.unionByName(p)
         self.versions = out.localCheckpoint()
-        self._versions_empty = False
         # post-merge max(tx_from) == max(existing max, ops max): new
         # version rows only carry tx ids from the ops stream, and every
         # construction/load/restore path seeds _tx_id to >= the existing
@@ -1170,17 +1310,14 @@ class TxStore:
         """Snapshot DataFrame (eid, doc_json, interval cols) visible at
         (valid-time, tx) — the reference's `db` value (SURVEY.md §3.1).
         Pure partition-prunable filters, no window needed."""
-        vt = to_us(valid_time) if valid_time else to_us(
-            dt.datetime.now(dt.timezone.utc)
-        )
-        tx = tx if tx is not None else END_OF_TX - 1
+        vt, tx = _vt_us(valid_time), _tx_basis(tx)
         return self.versions.filter(
             (F.col("valid_from") <= vt)
             & (F.col("valid_to") > vt)
             & (F.col("tx_from") <= tx)
             & (F.col("tx_to") > tx)
             & (~F.col("deleted"))
-        ).select("eid", "doc_json", "valid_from", "valid_to", "tx_from", "content_hash")
+        ).select(*_DB_COLS)
 
     def schema_doc_eids(self) -> list[str]:
         """Sorted eids of SQL table-registry docs (docs whose json carries
@@ -1208,29 +1345,59 @@ class TxStore:
         }
         return sorted(self._schema_eids | pending)
 
+    def _visible(
+        self, eid, valid_time: dt.datetime | None, tx: int | None
+    ) -> Version | None:
+        """The version db(valid_time, tx) holds for eid, from the entity
+        cache (splice.as_of is db()'s filter over one history)."""
+        e = canon_eid(eid)
+        return splice.as_of(
+            self._histories([e])[e], _vt_us(valid_time), _tx_basis(tx)
+        )
+
+    def db_of(
+        self, eids: Iterable[str], valid_time: dt.datetime | None = None,
+        tx: int | None = None,
+    ) -> DataFrame:
+        """The rows of db(valid_time, tx) for ``eids`` (canonical ids),
+        built on the driver from the entity cache as a local Arrow-backed
+        frame: a projection of it collects without a Spark job, and only
+        the cache misses cost one."""
+        vt, basis = _vt_us(valid_time), _tx_basis(tx)
+        vis = [
+            (e, v) for e, h in self._histories(eids).items()
+            if (v := splice.as_of(h, vt, basis)) is not None
+        ]
+        return self.spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "eid": [e for e, _ in vis],
+                    **{c: [getattr(v, c) for _, v in vis]
+                       for c in _DB_COLS[1:]},
+                },
+                dtype=object,
+            ),
+            _DB_SCHEMA,
+        )
+
     def entity(self, eid: str, valid_time: dt.datetime | None = None, tx: int | None = None) -> dict | None:
-        rows = self.db(valid_time, tx).filter(F.col("eid") == canon_eid(eid)).collect()
-        if not rows:
-            return None
-        return _docjson.doc_loads(rows[0].doc_json)
+        v = self._visible(eid, valid_time, tx)
+        return None if v is None else _docjson.doc_loads(v.doc_json)
 
     def entity_tx(
         self, eid: str, valid_time: dt.datetime | None = None, tx: int | None = None
     ) -> dict | None:
         """Transaction metadata of the visible version — the reference's
         `entity-tx` (api.clj entity-tx; index_store.clj:774-795 seek)."""
-        rows = (
-            self.db(valid_time, tx).filter(F.col("eid") == canon_eid(eid)).collect()
-        )
-        if not rows:
+        v = self._visible(eid, valid_time, tx)
+        if v is None:
             return None
-        r = rows[0]
         return {
-            "eid": r.eid,
-            "tx_id": r.tx_from,
-            "valid_from": r.valid_from,
-            "valid_to": r.valid_to,
-            "content_hash": r.content_hash,
+            "eid": canon_eid(eid),
+            "tx_id": v.tx_from,
+            "valid_from": v.valid_from,
+            "valid_to": v.valid_to,
+            "content_hash": v.content_hash,
         }
 
     def tx_at(self, tx_time: dt.datetime) -> int:
@@ -1408,48 +1575,25 @@ class TxStore:
         end_valid_time: dt.datetime | None = None,
         start_tx_id: int | None = None,
         end_tx_id: int | None = None,
+        tx: int | None = None,
     ) -> list[dict]:
-        """Bounded history scan (index_store.clj:524-554 opts;
+        """Bounded history of one entity (index_store.clj:524-554 opts;
         query.clj:1740-1758 bound clamping is the caller's concern via a
-        snapshot store). Bounds are pushed into the versions scan — at
-        scale these are partition-prunable predicates, so a narrow vt/tx
-        window reads a sliver of the table, not the entity's whole history.
-        `start` = iteration origin (low end asc, high end desc, inclusive);
-        `end` exclusive; vt bounds compare valid_from, tx bounds tx_from."""
-        scan = self.versions.filter(F.col("eid") == canon_eid(eid))
-        svt, evt = to_us(start_valid_time), to_us(end_valid_time)
-        if ascending:
-            if svt is not None:
-                scan = scan.filter(F.col("valid_from") >= svt)
-            if evt is not None:
-                scan = scan.filter(F.col("valid_from") < evt)
-            if start_tx_id is not None:
-                scan = scan.filter(F.col("tx_from") >= start_tx_id)
-            if end_tx_id is not None:
-                scan = scan.filter(F.col("tx_from") < end_tx_id)
-        else:
-            if svt is not None:
-                scan = scan.filter(F.col("valid_from") <= svt)
-            if evt is not None:
-                scan = scan.filter(F.col("valid_from") > evt)
-            if start_tx_id is not None:
-                scan = scan.filter(F.col("tx_from") <= start_tx_id)
-            if end_tx_id is not None:
-                scan = scan.filter(F.col("tx_from") > end_tx_id)
-        rows = scan.collect()
-        hist = [
-            Version(
-                r.valid_from, r.valid_to, r.tx_from, r.tx_to, r.tx_time,
-                r.doc_json, r.deleted, r.content_hash, r.asserted,
-            )
-            for r in rows
-        ]
+        snapshot store), from the entity cache. `start` = iteration
+        origin (low end asc, high end desc, inclusive); `end` exclusive;
+        vt bounds compare valid_from, tx bounds tx_from. ``tx`` is the
+        reading db's basis: the history as it was believed at that tx
+        (splice.as_of_tx), so later commits never show through."""
+        e = canon_eid(eid)
+        hist = self._histories([e])[e]
+        if tx is not None:
+            hist = splice.as_of_tx(hist, tx)
         out = splice.entity_history(
-            hist,
+            list(hist),
             ascending,
             with_corrections,
-            start_valid_time=svt,
-            end_valid_time=evt,
+            start_valid_time=to_us(start_valid_time),
+            end_valid_time=to_us(end_valid_time),
             start_tx_id=start_tx_id,
             end_tx_id=end_tx_id,
         )

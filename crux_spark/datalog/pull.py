@@ -240,25 +240,13 @@ def _recursive_pull(
     )
 
 
-def pull(
-    catalog: Catalog,
-    df: DataFrame,
-    entity_col: str,
-    table: str,
-    spec: list,
-    joins: dict[str, str] | None = None,
-    out_col: str = "pull",
-    _depth: int = 0,
-) -> DataFrame:
-    """Attach a struct column `out_col` with the pulled projection for each
-    entity id in `df[entity_col]`."""
-    joins = joins or {}
-    if _depth > 16:
-        raise ValueError("pull spec nesting too deep")
-
+def _split_spec(spec: list):
+    """(plain, nested, unions, wildcard) of a spec: plain [(attr,
+    params)], nested [(attr, sub-spec, params)] for joins and
+    recursion, unions [(dispatch attr, {value: [attrs]})]."""
     plain: list[tuple[str, dict]] = []
-    nested: list[tuple[str, Any, dict]] = []  # (attr, sub-spec, params)
-    unions: list[tuple[str, dict]] = []  # (dispatch attr, {value: [attrs]})
+    nested: list[tuple[str, Any, dict]] = []
+    unions: list[tuple[str, dict]] = []
     wildcard = False
     for el in spec:
         if el == "*":
@@ -277,6 +265,20 @@ def pull(
                     nested.append((k, v, {}))
         else:
             plain.append(_norm_plain(el))
+    return plain, nested, unions, wildcard
+
+
+def is_flat(spec: list) -> bool:
+    """True for a spec with no forward or reverse join and no
+    recursion: plain attributes (with params), wildcards and unions
+    only — every output field reads the entity's own row."""
+    return not _split_spec(spec)[1]
+
+
+def _parse_spec(catalog: Catalog, table: str, spec: list):
+    """(plain, nested, unions) with a wildcard expanded to the table's
+    attributes not already named."""
+    plain, nested, unions, wildcard = _split_spec(spec)
     if wildcard:
         nested_fwd = {a for a, _, _ in nested if not a.startswith(":_")}
         have = {a for a, _ in plain}
@@ -285,6 +287,82 @@ def pull(
             for a in _table_attrs(catalog, table)
             if a not in have and a not in nested_fwd
         ]
+    return plain, nested, unions
+
+
+def _root_columns(
+    catalog: Catalog, plain: list[tuple[str, dict]], unions: list[tuple[str, dict]]
+) -> tuple[list[Column], list[Column]]:
+    """The columns a pull reads off the entity's own row: hidden
+    ``__p_<name>`` columns (params and union guards applied) for the
+    table select, and the struct fields that rename them."""
+    cols: list[Column] = []
+    fields: list[Column] = []
+    for a, params in plain:
+        ref = catalog.resolve_attr(a)
+        name = _field_name(a, params)
+        cols.append(
+            _apply_plain_params(F.col(ref.column), ref, params).alias(f"__p_{name}")
+        )
+        fields.append(F.col(f"__p_{name}").alias(name))
+    for key_attr, branches in unions:
+        key_col = F.col(catalog.resolve_attr(key_attr).column)
+        # same attr may appear in several branches: OR the branch guards
+        guarded: dict[str, Column] = {}
+        for val, battrs in branches.items():
+            for a in battrs:
+                if not isinstance(a, str) or a == "*":
+                    raise NotImplementedError(
+                        "union branches support plain attributes only"
+                    )
+                ref = catalog.resolve_attr(a)
+                case = F.when(key_col == F.lit(val), F.col(ref.column))
+                name = _field_name(a, {})
+                guarded[name] = (
+                    F.coalesce(guarded[name], case) if name in guarded else case
+                )
+        for name, col in guarded.items():
+            cols.append(col.alias(f"__p_{name}"))
+            fields.append(F.col(f"__p_{name}").alias(name))
+    return cols, fields
+
+
+def pull_flat(
+    catalog: Catalog, table: str, spec: list, out_col: str = "pull"
+) -> DataFrame:
+    """(__pe, out_col) for EVERY entity of ``table`` under a flat spec
+    (is_flat): the root columns of :func:`pull` projected straight off
+    the table, with no driving-set join — over a local table (the
+    caller's catalog holds just the requested entities) this collects
+    without a Spark job."""
+    plain, nested, unions = _parse_spec(catalog, table, spec)
+    if nested:
+        raise ValueError("pull_flat needs a spec without joins or recursion")
+    cols, fields = _root_columns(catalog, plain, unions)
+    return (
+        catalog.table(table)
+        .select(F.col(ID_COL).alias("__pe"), *cols)
+        .select("__pe", F.struct(*fields).alias(out_col))
+    )
+
+
+def pull(
+    catalog: Catalog,
+    df: DataFrame,
+    entity_col: str,
+    table: str,
+    spec: list,
+    joins: dict[str, str] | None = None,
+    out_col: str = "pull",
+    _depth: int = 0,
+) -> DataFrame:
+    """Attach a struct column `out_col` with the pulled projection for each
+    entity id in `df[entity_col]`."""
+    joins = joins or {}
+    if _depth > 16:
+        raise ValueError("pull spec nesting too deep")
+
+    plain, nested, unions = _parse_spec(catalog, table, spec)
 
     recursions = [
         (a, sub, p) for a, sub, p in nested if isinstance(sub, int) or sub == "..."
@@ -331,34 +409,8 @@ def pull(
         if _ref.table == table:
             fk_cols[_attr] = f"__fk_{_attr}"
             base_cols.append(F.col(_ref.column).alias(fk_cols[_attr]))
-    struct_fields: list[Column] = []
-    for a, params in plain:
-        ref = catalog.resolve_attr(a)
-        name = _field_name(a, params)
-        base_cols.append(
-            _apply_plain_params(F.col(ref.column), ref, params).alias(f"__p_{name}")
-        )
-        struct_fields.append(F.col(f"__p_{name}").alias(name))
-    for key_attr, branches in unions:
-        key_col = F.col(catalog.resolve_attr(key_attr).column)
-        # same attr may appear in several branches: OR the branch guards
-        guarded: dict[str, Column] = {}
-        for val, battrs in branches.items():
-            for a in battrs:
-                if not isinstance(a, str) or a == "*":
-                    raise NotImplementedError(
-                        "union branches support plain attributes only"
-                    )
-                ref = catalog.resolve_attr(a)
-                case = F.when(key_col == F.lit(val), F.col(ref.column))
-                name = _field_name(a, {})
-                guarded[name] = (
-                    F.coalesce(guarded[name], case) if name in guarded else case
-                )
-        for name, col in guarded.items():
-            base_cols.append(col.alias(f"__p_{name}"))
-            struct_fields.append(F.col(f"__p_{name}").alias(name))
-    base = catalog.table(table).select(*base_cols).join(
+    root_cols, struct_fields = _root_columns(catalog, plain, unions)
+    base = catalog.table(table).select(*base_cols, *root_cols).join(
         driving, "__pe", "left_semi"
     )
 

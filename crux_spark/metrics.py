@@ -178,7 +178,8 @@ class MetricsRegistry:
 def assign_index_store_listeners(registry: MetricsRegistry, node) -> dict:
     """index_store.clj assign-listeners: tx-id-lag / tx-latency gauges,
     indexed-docs / indexed-avs meters, indexed-txs meter — driven by the
-    node's indexed-tx events."""
+    node's indexed-tx events — plus entity-cache hits / misses /
+    evictions / entries / bytes gauges."""
     docs_m = registry.meter(["index-store", "indexed-docs"])
     avs_m = registry.meter(["index-store", "indexed-avs"])
     txs_m = registry.meter(["index-store", "indexed-txs"])
@@ -210,6 +211,13 @@ def assign_index_store_listeners(registry: MetricsRegistry, node) -> dict:
         return round(v, 6)
 
     registry.gauge(["index-store", "tx-latency"], tx_latency)
+    # the store's entity-history cache (TxStore.entity_cache_stats),
+    # read through node.store at evaluation time
+    for stat in ("hits", "misses", "evictions", "entries", "bytes"):
+        registry.gauge(
+            ["index-store", "entity-cache", stat],
+            lambda stat=stat: node.store.entity_cache_stats()[stat],
+        )
     return {
         "docs_ingested_meter": docs_m,
         "avs_ingested_meter": avs_m,

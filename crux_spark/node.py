@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from crux_spark.bitemporal.store import TxStore
 from crux_spark.catalog import Catalog
 from crux_spark.datalog import compile_query
+from crux_spark.datalog.pull import is_flat, pull_flat
 from crux_spark.datalog.pull import pull as _pull
 
 
@@ -102,17 +103,23 @@ class Db:
 
     def catalog(self) -> Catalog:
         if self._catalog is None:
-            snap = self.node.store.db(self.valid_time, self.tx)
-            cat = Catalog(self.node.spark)
-            if self.node.schema:
-                docs = snap.select(
-                    "eid", F.from_json("doc_json", self.node.schema).alias("d")
-                ).select("eid", "d.*")
-            else:
-                docs = snap.select("eid", "doc_json")
-            cat.add_documents(self.node.collection, docs, id_col="eid")
-            self._catalog = cat
+            self._catalog = self._catalog_of(
+                self.node.store.db(self.valid_time, self.tx)
+            )
         return self._catalog
+
+    def _catalog_of(self, snap: DataFrame) -> Catalog:
+        """A catalog holding ``snap``'s (eid, doc_json) rows as the
+        node's collection, typed by the node schema when it has one."""
+        if self.node.schema:
+            docs = snap.select(
+                "eid", F.from_json("doc_json", self.node.schema).alias("d")
+            ).select("eid", "d.*")
+        else:
+            docs = snap.select("eid", "doc_json")
+        cat = Catalog(self.node.spark)
+        cat.add_documents(self.node.collection, docs, id_col="eid")
+        return cat
 
     # -- query surface ----------------------------------------------------
 
@@ -149,32 +156,38 @@ class Db:
     def entity_history(
         self, eid: str, ascending: bool = True, with_corrections: bool = False
     ) -> list[dict]:
-        return self.node.store.entity_history(eid, ascending, with_corrections)
+        return self.node.store.entity_history(
+            eid, ascending, with_corrections, tx=self.tx
+        )
 
     def pull(self, eid: str, spec: list, joins: dict | None = None) -> dict | None:
-        cat = self.catalog()
-        base = self.node.spark.createDataFrame([(str(eid),)], ["e"])
-        rows = _pull(cat, base, "e", self.node.collection, spec, joins=joins).collect()
-        if not rows or rows[0].pull is None:
-            return None
-        return rows[0].pull.asDict(recursive=True)
+        return self.pull_many([eid], spec, joins)[0]
 
     def pull_many(
         self, eids: list, spec: list, joins: dict | None = None
     ) -> list[dict | None]:
         """Batch pull (api.clj pull-many, pull_test.clj:117-133): ONE
-        distributed pull over all requested ids — never a per-id loop —
-        returned in the order given (None for unknown ids)."""
+        pull over all requested ids — never a per-id loop — returned in
+        the order given (None for unknown ids). A spec without joins or
+        recursion reads the ids' docs from the store's entity cache into
+        a local frame (no Spark job when all hit, one for the misses);
+        any other spec runs the distributed pull over the snapshot."""
         ordered = [str(e) for e in eids]
-        cat = self.catalog()
-        base = self.node.spark.createDataFrame(
-            [(e,) for e in dict.fromkeys(ordered)], ["e"]
-        )
-        rows = _pull(
-            cat, base, "e", self.node.collection, spec, joins=joins
-        ).collect()
+        ids = list(dict.fromkeys(ordered))
+        if is_flat(spec):
+            cat = self._catalog_of(
+                self.node.store.db_of(ids, self.valid_time, self.tx)
+            )
+            rows = pull_flat(cat, self.node.collection, spec).collect()
+        else:
+            base = self.node.spark.createDataFrame([(e,) for e in ids], ["e"])
+            rows = _pull(
+                self.catalog(), base, "e", self.node.collection, spec,
+                joins=joins,
+            ).collect()
+        # both paths return (id, pull) rows
         by_id = {
-            r.e: (None if r.pull is None else r.pull.asDict(recursive=True))
+            r[0]: (None if r.pull is None else r.pull.asDict(recursive=True))
             for r in rows
         }
         return [by_id.get(e) for e in ordered]

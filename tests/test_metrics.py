@@ -43,6 +43,33 @@ def test_index_store_metrics(node):
     assert reg.gauges["index-store.tx-latency"]() == 0  # reset-on-read
 
 
+def test_entity_cache_gauges(node):
+    """The store's entity-cache counters are index-store gauges: the
+    registry snapshot and the Prometheus text both read
+    TxStore.entity_cache_stats() at evaluation time."""
+    from crux_spark.metrics import prometheus_text
+
+    reg = MetricsRegistry()
+    assign_node_metrics(reg, node)
+    node.submit_tx([("put", {"id": "t1", "name": "Ivan", "score": 1})])
+    node.await_tx()
+    db = node.db()
+    assert db.entity("t1")["name"] == "Ivan"  # miss
+    assert db.entity("t1")["name"] == "Ivan"  # hit
+    assert db.entity("nope") is None  # miss, then cached as empty
+    stats = node.store.entity_cache_stats()
+    assert stats == {"hits": 1, "misses": 2, "evictions": 0,
+                     "entries": 2, "bytes": stats["bytes"]}
+    assert stats["bytes"] > 0
+    snap = reg.snapshot()
+    for k, v in stats.items():
+        assert snap[f"index-store.entity-cache.{k}"] == v
+    lines = prometheus_text(reg).splitlines()
+    assert "# TYPE crux_index_store_entity_cache_hits gauge" in lines
+    assert "crux_index_store_entity_cache_misses 2" in lines
+    assert "crux_index_store_entity_cache_entries 2" in lines
+
+
 def test_query_metrics(node):
     """metrics_test.clj test-query-metrics: the query timer counts both
     completed and failed queries; currently-running drains to zero."""

@@ -145,6 +145,24 @@ def test_db_without_valid_time_is_pinned_when_taken(spark):
     assert sorted(r.n for r in before.q(query).collect()) == ["A"]
 
 
+def test_db_entity_history_keeps_its_tx_basis(node):
+    """A db value pinned at a tx reads entity_history as believed at that
+    tx: a later commit neither adds its versions nor closes the ones the
+    db saw, the same basis db.entity applies."""
+    db = node.db(valid_time=t(5))
+    before = db.entity_history("u1")
+    node.submit_tx([("put", {"id": "u1", "name": "ann", "score": 11}, t(3))],
+                   tx_time=t(4))
+    node.await_tx()
+    assert db.entity("u1")["score"] == 10
+    assert db.entity_history("u1") == before
+    assert [h["doc"]["score"] for h in before] == [10]
+    assert [h["doc"]["score"] for h in
+            db.entity_history("u1", with_corrections=True)] == [10]
+    assert [h["doc"]["score"] for h in
+            node.db().entity_history("u1")] == [10, 11]
+
+
 # ---------------------------------------------------------------- hypothesis
 
 _times = st.integers(min_value=0, max_value=20)

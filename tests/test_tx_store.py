@@ -241,6 +241,27 @@ def test_wal_recover_ignores_torn_tail(spark, tmp_path):
     assert [rec2.entity(e, valid_time=t(4))["v"] for e in "abc"] == [1, 1, 1]
 
 
+def test_wal_tx_log_with_ops_ignores_torn_tail(spark, tmp_path):
+    """tx_log(with_ops=True) reads the WAL through Spark's JSON reader,
+    not entries(): a torn last line must still yield the acknowledged
+    prefix only."""
+    wal = tmp_path / "tx.wal"
+    store = TxStore(spark, wal_path=str(wal))
+    store.submit_tx([("put", {"id": "a", "v": 1})], tx_time=t(1))
+    store.submit_tx([("put", {"id": "b", "v": 1}), ("delete", "a")],
+                    tx_time=t(2))
+    store.commit()
+    line = json.dumps({"tx_id": 3, "rows": [{"tx_id": 3, "seq": 0}]})
+    with open(wal, "a") as f:
+        f.write(line[: len(line) // 2])
+    rows = store.tx_log(with_ops=True).collect()
+    assert [(r.tx_id, r.op, r.eid) for r in rows] == [
+        (1, "put", "a"), (2, "put", "b"), (2, "delete", "a")
+    ]
+    rec = TxStore.recover(spark, str(wal))
+    assert [r.tx_id for r in rec.tx_log(with_ops=True).collect()] == [1, 2, 2]
+
+
 def test_bucketed_table_join_is_shuffle_free(spark, tmp_path):
     from crux_spark.sources.layout import (
         bucketed_join_is_shuffle_free,
@@ -1378,6 +1399,16 @@ def test_bulk_ingest_fast_path_equivalence(spark):
     assert [h["doc"]["v"] for h in st.entity_history("d1")] == [1.0, 2.0, 3.0, 4.0]
 
 
+# flat pull specs (no join, no recursion) for the cache-vs-scan parity
+# below: a wildcard; plain attrs with :as/:default and :limit on an
+# array attr, and a union dispatched on :kind
+PULL_SPECS = [
+    ["*"],
+    [":v", [":v", {"as": "val", "default": -1}], [":tags", {"limit": 2}],
+     {":kind": {"a": [":id"], "b": [":eid"]}}],
+]
+
+
 def test_commit_paths_match_pure_python_splice_op_soup(spark):
     """Row identity of both commit paths (the empty-store closed form
     and the touched-entity splice) against a pure-Python reference that
@@ -1388,13 +1419,21 @@ def test_commit_paths_match_pure_python_splice_op_soup(spark):
     apply_ops_df's bucketed cogroup on a second copy of that store. No
     commit may grow the versions table's partition count. Fixed cases
     then cover an open tombstone tail, a history ending in a ranged
-    put, and puts inside an open tail and exactly at its start."""
+    put, and puts inside an open tail and exactly at its start.
+
+    After every touched-entity commit, the entity cache holds the
+    touched entities and the ones read before the commit, and reads
+    served from it (entity, entity_tx, entity_history at sampled vt and
+    tx, before and after the commit) equal the same reads computed from
+    a Spark scan; a flat pull_many equals _pull over Db.catalog()."""
     import hashlib
     import random
 
     from crux_spark.bitemporal import splice
-    from crux_spark.bitemporal.docjson import doc_dumps
+    from crux_spark.bitemporal.docjson import doc_dumps, doc_loads
     from crux_spark.bitemporal.store import VERSIONS_SCHEMA
+    from crux_spark.datalog.pull import pull
+    from crux_spark.node import Node
 
     cols = [f.name for f in VERSIONS_SCHEMA.fields]
     utc = dt.timezone.utc
@@ -1440,15 +1479,104 @@ def test_commit_paths_match_pure_python_splice_op_soup(spark):
         got = sorted(tuple(r) for r in store.versions.select(*cols).collect())
         assert got == rows_of(ref)
 
+    def scan_history(store, eid, tx):
+        """The entity's rows by a Spark scan, as believed at tx."""
+        vs = store.fork_at(tx).versions.filter(F.col("eid") == eid)
+        return [splice.Version(**{c: r[c] for c in cols[1:]})
+                for r in vs.select(*cols).collect()]
+
+    def fmt(vs):
+        return [(splice.from_us(v.valid_from),
+                 None if v.valid_to == splice.END_OF_TIME
+                 else splice.from_us(v.valid_to),
+                 v.tx_from,
+                 None if v.doc_json is None else doc_loads(v.doc_json),
+                 v.deleted) for v in vs]
+
+    def check_cached_reads(store, eids, tx_before):
+        """entity / entity_tx / entity_history served from the cache at
+        sampled (eid, vt, tx) — tx before and after the commit, vt in
+        the past — equal the same reads computed from a Spark scan; a
+        flat pull_many over the same basis equals _pull over
+        Db.catalog()."""
+        tx_after = store.completed_watermark()
+        assert all(e in store._cache for e in eids)
+        before = store.entity_cache_stats()
+        sample = rng.sample(eids, min(3, len(eids)))
+        for eid in sample:
+            tx = rng.choice([tx_before, tx_after])
+            vt = ts(rng.randint(0, 62), rng.randint(0, 59))
+            snap = store.db(vt, tx).filter(F.col("eid") == eid).collect()
+            want = snap[0] if snap else None
+            got = store.entity(eid, vt, tx)
+            assert got == (None if want is None else doc_loads(want.doc_json))
+            etx = store.entity_tx(eid, vt, tx)
+            assert etx == (None if want is None else {
+                "eid": eid, "tx_id": want.tx_from,
+                "valid_from": want.valid_from, "valid_to": want.valid_to,
+                "content_hash": want.content_hash,
+            })
+            hist = scan_history(store, eid, tx)
+            lo, hi = sorted(ts(rng.randint(0, 62)) for _ in range(2))
+            txs = sorted(rng.randint(0, tx_after + 1) for _ in range(2))
+            for asc in (True, False):
+                bounds = rng.choice([
+                    {},
+                    {"start_valid_time": lo if asc else hi,
+                     "end_valid_time": hi if asc else lo},
+                    {"start_tx_id": txs[0] if asc else txs[1],
+                     "end_tx_id": txs[1] if asc else txs[0]},
+                ])
+                for corr in (False, True):
+                    got = store.entity_history(eid, asc, corr, tx=tx, **bounds)
+                    want = splice.entity_history(
+                        hist, asc, corr,
+                        **{k: v if "tx" in k else splice.to_us(v)
+                           for k, v in bounds.items()},
+                    )
+                    assert [tuple(h.values()) for h in got] == fmt(want)
+        # every read above was a hit: 6 per sampled eid
+        after = store.entity_cache_stats()
+        assert after["hits"] - before["hits"] == 6 * len(sample)
+        assert after["misses"] == before["misses"]
+        check_pull(store, eids[:6] + ["nope", eids[0]],
+                   ts(rng.randint(0, 62)), rng.choice([tx_before, tx_after]))
+
+    def check_pull(store, ids, vt, tx):
+        node = Node(spark, schema="id string, v bigint, kind string, "
+                                  "tags array<bigint>")
+        node.store = store
+        db = node.db(valid_time=vt, tx=tx)
+        out = []
+        for spec in PULL_SPECS:
+            got = db.pull_many(ids, spec)
+            base = spark.createDataFrame([(e,) for e in dict.fromkeys(ids)], ["e"])
+            rows = pull(db.catalog(), base, "e", "docs", spec).collect()
+            by_id = {r.e: None if r.pull is None else r.pull.asDict(True)
+                     for r in rows}
+            assert got == [by_id.get(e) for e in ids]
+            out.append(got)
+        return out
+
     def commit_and_check(store, ref, txs, max_parts=None, cogroup_store=None):
         want_aborted = set()
+        # an entity read before the commit and not touched by it must
+        # stay a (valid) cache hit afterwards
+        tx_before = store.completed_watermark()
+        warm = sorted(ref)[:2]
+        for e in warm:
+            store.entity(e)
         for ops, tx_time in txs:
             tx_id = store.submit_tx(ops, tx_time=tx_time)
             if not ref_apply(ref, tx_id, tx_time, ops):
                 want_aborted.add(tx_id)
         rows = list(store._pending)
+        closed_form = store._versions_empty and store._commit_fast_path_ok()
         assert store.commit() == want_aborted
         check_rows(store, ref)
+        if not closed_form:  # which assigns versions and clears the cache
+            touched = sorted({r["eid"] for r in rows})
+            check_cached_reads(store, warm + touched, tx_before)
         if max_parts is not None:
             assert store.versions.rdd.getNumPartitions() <= max_parts
         if cogroup_store is not None:
@@ -1491,7 +1619,8 @@ def test_commit_paths_match_pure_python_splice_op_soup(spark):
             for _ in range(rng.randint(1, 20)):
                 n += 1
                 eid = rng.choice(eids + ["fresh%d" % c])
-                doc = {"id": eid, "v": n}
+                doc = {"id": eid, "v": n, "kind": "ab"[n % 2],
+                       "tags": list(range(n % 4))}
                 kind = rng.choices(
                     ["append", "back", "ranged", "delete", "evict", "match"],
                     [50, 20, 10, 8, 2, 10],
@@ -1537,6 +1666,9 @@ def test_commit_paths_match_pure_python_splice_op_soup(spark):
         ([("delete", "a")], ts(30)),
         ([("put", {"id": "b", "v": 1}, ts(31), ts(33))], ts(31)),
     ], first_parts)
+    # a deleted, a visible, an unknown and a duplicate eid in one pull
+    for got in check_pull(store, ["a", "b", "nope", "a"], ts(32), None):
+        assert got[0] is None and got[1] is not None and got[2:] == [None, None]
     commit_and_check(store, ref, [
         # appends past the tombstone tail and past the ranged history
         ([("put", {"id": "a", "v": 2})], ts(40)),
@@ -1554,3 +1686,185 @@ def test_commit_paths_match_pure_python_splice_op_soup(spark):
     commit_and_check(store, ref, [
         ([("put", {"id": "x", "v": 4}, ts(20))], ts(46)),
     ], first_parts)
+
+
+# ------------------------------------------------------ entity cache
+
+
+def _jobs(spark):
+    """Spark jobs launched since the call, by the nextJobId() delta."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = int(sched.nextJobId())
+    return lambda: int(sched.nextJobId()) - j0
+
+
+def _scan_doc(store, eid, valid_time=None, tx=None):
+    rows = store.db(valid_time, tx).filter(F.col("eid") == eid).collect()
+    return json.loads(rows[0].doc_json) if rows else None
+
+
+@pytest.mark.parametrize(
+    "writer", ["closed_form", "bulk_ingest", "apply_ops_df", "compact"]
+)
+def test_entity_cache_sees_every_versions_writer(spark, writer):
+    """Every path that assigns ``versions`` invalidates the entity
+    cache: an entity read (and cached) before the write reads the new
+    state after it, equal to a Spark scan of the new table."""
+    store = TxStore(spark)
+    if writer == "closed_form":
+        # an empty store: "a" is cached as absent, then the first
+        # commit takes the closed form
+        assert store.entity("a", valid_time=t(3)) is None
+        store.submit_tx([("put", {"id": "a", "v": 1})], tx_time=t(1))
+        assert store._versions_empty and store._commit_fast_path_ok()
+        store.commit()
+        want = {"id": "a", "v": 1}
+    else:
+        store.submit_tx([("put", {"id": "a", "v": 1})], tx_time=t(1))
+        store.submit_tx([("put", {"id": "a", "v": 2})], tx_time=t(2))
+        store.commit()
+        assert store.entity("a", valid_time=t(3), tx=1) == {"id": "a", "v": 1}
+        assert store.entity("a", valid_time=t(3))["v"] == 2
+        assert "a" in store._cache
+        if writer == "bulk_ingest":
+            store.bulk_ingest(
+                spark.createDataFrame([("a", 3, t(2))],
+                                      "eid string, v long, vf timestamp"),
+                id_expr="eid", doc_cols=["v"], valid_from_col="vf",
+                tx_id_expr="3",
+            )
+            want = {"v": 3}
+        elif writer == "apply_ops_df":
+            store.apply_ops_df(_ops_frame(
+                spark, [([("put", {"id": "a", "v": 3}, t(2))], t(3))],
+                after_tx=2,
+            ))
+            want = {"id": "a", "v": 3}
+        else:
+            # the tx-1 version was closed by tx 2: gone below the horizon
+            assert store.compact(before_tx=2) == 1
+            assert store.entity("a", valid_time=t(3), tx=1) is None
+            assert _scan_doc(store, "a", t(3), 1) is None
+            assert store.entity_history("a", with_corrections=True) == \
+                store.entity_history("a", with_corrections=True, tx=2)
+            want = {"id": "a", "v": 2}
+    assert store.entity("a", valid_time=t(3)) == want
+    assert _scan_doc(store, "a", t(3)) == want
+
+
+def test_entity_cache_drops_a_fill_that_raced_a_commit(spark, monkeypatch):
+    """A read holds no store mutex: a fill whose collect ran against
+    the table a commit then replaced must not be cached, or the read
+    after it would serve the pre-commit history."""
+    base = TxStore(spark)
+    base.submit_tx([("put", {"id": "a", "v": 1})], tx_time=t(1))
+    base.submit_tx([("put", {"id": "b", "v": 1})], tx_time=t(1))
+    base.commit()
+    store = TxStore(spark, base.versions)  # nothing cached yet
+    store._tx_id = base._tx_id
+    orig = store._fetch_histories
+    raced = []
+
+    def fetch_then_commit(versions, eids):
+        rows = orig(versions, eids)
+        if not raced:  # the commit lands after the collect ran
+            raced.append(eids)
+            store.submit_tx([("put", {"id": "a", "v": 2})], tx_time=t(2))
+            store.commit()
+        return rows
+
+    monkeypatch.setattr(store, "_fetch_histories", fetch_then_commit)
+    # the racing read returns the state its collect saw ...
+    assert store.entity("a", valid_time=t(3)) == {"id": "a", "v": 1}
+    assert raced == [["a"]]
+    # ... but the cache holds the commit's history, not that fill
+    done = _jobs(spark)
+    assert store.entity("a", valid_time=t(3)) == {"id": "a", "v": 2}
+    assert done() == 0
+    assert [h["doc"]["v"] for h in store.entity_history("a")] == [1, 2]
+    assert _scan_doc(store, "a", t(3)) == {"id": "a", "v": 2}
+    # a fill that no commit raced is kept
+    assert store.entity("b", valid_time=t(3)) == {"id": "b", "v": 1}
+    assert "b" in store._cache
+
+
+def test_entity_cache_job_counts(spark):
+    """Warm point reads and flat pulls run no Spark job; a pull_many
+    with misses runs exactly one, and a commit whose touched entities
+    are all cached runs one (the table write)."""
+    from crux_spark.node import Node
+
+    node = Node(spark, schema="id string, v bigint")
+    node.store.bulk_ingest(
+        spark.createDataFrame(
+            [(f"e{i}", i * 10 + d, t(1 + d)) for i in range(20) for d in range(3)],
+            "id string, v long, vf timestamp",
+        ),
+        id_expr="id", doc_cols=["id", "v"], valid_from_col="vf",
+    )
+    db = node.db()
+    past = node.db(valid_time=t(2))
+    reads = {
+        "entity": lambda: db.entity("e1"),
+        "entity_tx": lambda: db.entity_tx("e1"),
+        "asof": lambda: past.entity("e1"),
+        "history": lambda: db.entity_history("e1"),
+    }
+    first = _jobs(spark)
+    assert db.entity("e1") == {"id": "e1", "v": 12}
+    assert first() == 1  # the one miss
+    for name, read in reads.items():
+        done = _jobs(spark)
+        read()
+        assert done() == 0, name
+    assert past.entity("e1") == {"id": "e1", "v": 11}
+
+    spec = [":v"]
+    done = _jobs(spark)
+    got = db.pull_many(["e1", "e2", "e3", "nope", "e2"], spec)
+    assert done() == 1  # e2, e3 and nope missed: one job
+    assert got == [{"v": 12}, {"v": 22}, {"v": 32}, None, {"v": 22}]
+    done = _jobs(spark)
+    assert db.pull_many(["e3", "nope", "e1"], spec) == [{"v": 32}, None, {"v": 12}]
+    assert db.pull("e2", ["*"]) == {"eid": "e2", "id": "e2", "v": 22}
+    assert done() == 0
+
+    node.submit_tx([("put", {"id": e, "v": -1}) for e in ("e1", "e2")])
+    done = _jobs(spark)
+    node.await_tx()
+    assert done() == 1
+    done = _jobs(spark)
+    assert node.db().entity("e2") == {"id": "e2", "v": -1}  # read-your-write
+    assert done() == 0
+
+
+def test_entity_cache_is_a_bounded_lru(spark, monkeypatch):
+    """Past the entry bound the least recently used entry is evicted
+    and counted; past the byte bound (summed doc_json length) too, and
+    a history larger than the byte bound is not cached at all."""
+    import crux_spark.bitemporal.store as st
+
+    store = TxStore(spark)
+    store.submit_tx([("put", {"id": e, "v": 1}) for e in "abcde"], tx_time=t(1))
+    store.submit_tx([("put", {"id": "big", "pad": "x" * 500})], tx_time=t(1))
+    store.commit()  # closed form: nothing cached
+    monkeypatch.setattr(st, "ENTITY_CACHE_MAX_ENTRIES", 3)
+    for e in "abc":
+        store.entity(e)
+    store.entity("a")  # a is now the most recently used
+    store.entity("d")  # evicts b
+    assert list(store._cache) == ["c", "a", "d"]
+    stats = store.entity_cache_stats()
+    assert (stats["evictions"], stats["entries"]) == (1, 3)
+    assert stats["bytes"] == sum(
+        len(v.doc_json) for e in "cad" for v in store._cache[e][0]
+    )
+
+    one = stats["bytes"] // 3  # one single-version "v": 1 doc
+    monkeypatch.setattr(st, "ENTITY_CACHE_MAX_BYTES", 2 * one)
+    store.entity("e")  # over the byte bound: evicts c and a
+    assert list(store._cache) == ["d", "e"]
+    assert store.entity_cache_stats()["evictions"] == 3
+    assert store.entity("big")["pad"] == "x" * 500
+    assert "big" not in store._cache
+    assert store.entity_cache_stats()["bytes"] == 2 * one
