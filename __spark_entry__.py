@@ -1,20 +1,29 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract (PySpark target).
 
 ``entry(spark)`` runs the flagship query (TPC-H Q1 pricing summary,
 expressed in the engine's Datalog surface and compiled to a Catalyst plan)
-on sf0.001. ``queries()`` / ``oracle_sql()`` enumerate the implemented
-operator inventory per SURVEY.md §2 with DuckDB-checkable oracles.
+on sf0.001. ``queries()`` / ``oracle_sql()`` enumerate the gate corpus in
+``tests/gates.py``: one Spark query per implemented operator (SURVEY.md
+§2), each with a DuckDB oracle.
 """
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
 from crux_spark import Catalog
 from crux_spark.datalog import q
-import crux_spark.queries as Q
+
+# the corpus lives with the tests; load it as the top-level module
+# ``gates``, the name pytest imports it under, so both share one registry
+_TESTS = str(Path(__file__).resolve().parent / "tests")
+if _TESTS not in sys.path:
+    sys.path.append(_TESTS)
+import gates  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -52,9 +61,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return Q.QUERIES
+    return gates.QUERIES
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL for each queries() entry."""
-    return Q.ORACLES
+    return gates.ORACLES

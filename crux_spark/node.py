@@ -139,9 +139,9 @@ class Db:
 
     def explain(self, query: dict, *args: Any) -> dict:
         """Physical-plan facts for a query WITHOUT running it: scans with
-        pruned columns, pushed filters, join strategies, shuffle count,
-        codegen coverage — the 100x-scale-up audit surface (the same
-        facts tools/plan_report.py records in PLANS.md)."""
+        pruned columns, pushed filters, join strategies, shuffle count
+        and checkpointed-subtree reads (``crux_spark.plans.plan_facts``)
+        — the scale-up audit surface."""
         from crux_spark.plans import plan_facts
 
         return plan_facts(self.q(query, *args))

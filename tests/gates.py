@@ -1,26 +1,27 @@
-"""Registered queries for the driver correctness gate + bench.
+"""The Spark-vs-DuckDB gate corpus.
 
 Each entry: name -> fn(spark, sf_dir) -> DataFrame, with a DuckDB oracle in
-ORACLES. The TPC-H shapes mirror the reference's Datalog TPC-H suite
+ORACLES; ``tests/test_gates.py`` runs every pair, and
+``__spark_entry__.queries()`` / ``oracle_sql()`` expose them. The TPC-H
+shapes mirror the reference's Datalog TPC-H suite
 (crux-test/src/crux/fixtures/tpch.clj:116-621), adapted to the columns the
-driver's synthetic tables carry (FIXTURES.md vs TESTDATA.md). Most run
+synthetic test tables carry (FIXTURES.md vs TESTDATA.md). Most run
 through the Datalog -> DataFrame compiler to exercise the engine's query
 surface; a few use the SQL/DataFrame surface directly (the reference's
 Calcite path, SURVEY.md §3.3, which we replace with spark.sql).
 
 Float discipline: every float aggregate is rounded identically on both
-sides (Spark + oracle) so the driver's value-hash comparison is stable.
+sides (Spark + oracle) so the value comparison is stable.
 Integer discipline: DuckDB sum() over integers returns HUGEINT (-> float
 in pandas) while Spark returns bigint — wrap every integer-sum oracle in
 CAST(... AS BIGINT). count(*) is already BIGINT in both. Array results:
-encode as deterministic comma-joined strings on BOTH sides — the driver's
-canonicalizer cannot sort/hash array cells.
+encode as deterministic comma-joined strings on BOTH sides — the
+comparison rejects array, map and struct columns.
 """
 
 from __future__ import annotations
 
 import contextlib
-import re
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -43,11 +44,10 @@ def catalog_for(spark: SparkSession, sf_dir: str) -> Catalog:
     return _CATALOGS[key]
 
 
-def register(name: str, oracle: str | None = None):
+def register(name: str, oracle: str):
     def deco(fn):
         QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
+        ORACLES[name] = oracle
         return fn
 
     return deco
@@ -57,37 +57,6 @@ def _round(df: DataFrame, spec: dict[str, int]) -> DataFrame:
     for c, n in spec.items():
         df = df.withColumn(c, F.round(F.col(c), n))
     return df
-
-
-# Bench-only cross-gate reuse: dedup_ngram_jaccard, dedup_clusters and
-# dedup_canonical all start from the SAME exact-similarity pair set
-# (threshold 0.5 over documents) — recomputing it three times is ~10s of
-# duplicated pair-generation per bench run. When bench.py opts in via
-# CRUX_SPARK_BENCH_SHARE=1 the pairs are localCheckpoint'ed once per
-# (session, sf_dir, threshold) and reused; the correctness mirror and the
-# driver gate never set the flag, so each gate stays fully independent
-# there. Identical rows either way — the memo is the same function's
-# output, checkpointed.
-_SHARED_PAIRS: dict[tuple[int, str, float], DataFrame] = {}
-# pre-checkpoint lineage per memo key: the checkpointed frame's executed
-# plan is just the checkpoint scan, so bench.py fingerprints THIS frame
-# (static plan — join strategies/reuse/shuffle count) for the pairgen
-_SHARED_PAIRS_RAW: dict[tuple[int, str, float], DataFrame] = {}
-
-
-def _ngram_pairs_for(cat: Catalog, sf_dir: str, threshold: float = 0.5) -> DataFrame:
-    import os as _os
-
-    from crux_spark.operators import dedup as _dd
-
-    if _os.environ.get("CRUX_SPARK_BENCH_SHARE") != "1":
-        return _dd.ngram_jaccard_pairs(cat.table("documents"), threshold=threshold)
-    key = (id(cat.spark), sf_dir, threshold)
-    if key not in _SHARED_PAIRS:
-        raw = _dd.ngram_jaccard_pairs(cat.table("documents"), threshold=threshold)
-        _SHARED_PAIRS_RAW[key] = raw
-        _SHARED_PAIRS[key] = raw.localCheckpoint(eager=False)
-    return _SHARED_PAIRS[key]
 
 
 # ---------------------------------------------------------------------------
@@ -1014,7 +983,7 @@ def dedup_exact(spark, sf_dir):
         ).alias("text"),
     )
     out = _dedup.exact_duplicates(docs.unionByName(planted))
-    # array column -> comma-joined string for the driver canonicalizer
+    # array column -> comma-joined string for the gate comparison
     # (module docstring discipline; the operator itself keeps the array)
     return out.withColumn(
         "dup_ids",
@@ -1052,7 +1021,7 @@ def dedup_exact(spark, sf_dir):
 )
 def dedup_ngram_jaccard(spark, sf_dir):
     cat = catalog_for(spark, sf_dir)
-    return _ngram_pairs_for(cat, sf_dir, threshold=0.5)
+    return _dedup.ngram_jaccard_pairs(cat.table("documents"), threshold=0.5)
 
 
 @register(
@@ -1380,8 +1349,8 @@ def agg_min_max_n(spark, sf_dir):
     """min-N / max-N aggregates (query.clj:379-408).
 
     The array results are encoded as comma-joined strings on BOTH sides
-    (Spark + oracle): the driver's canonicalizer sorts/hashes result
-    cells and can't hash numpy arrays. l_quantity is integral, so the
+    (Spark + oracle): the gate comparison rejects array result
+    columns. l_quantity is integral, so the
     elements cast to BIGINT losslessly."""
     cat = catalog_for(spark, sf_dir)
     df = q(
@@ -2160,8 +2129,8 @@ def datalog_pull(spark, sf_dir):
         F.col("pull.c_name").alias("name"),
         F.col("pull.c_nationkey")[0]["n_name"].alias("nation"),
         # Array results: comma-joined string on BOTH sides (module
-        # docstring discipline — the driver's canonicalizer cannot
-        # sort/hash array cells; see agg_min_max_n for the precedent).
+        # docstring discipline — the gate comparison rejects array
+        # cells; see agg_min_max_n for the precedent).
         F.concat_ws(
             ",",
             F.transform(
@@ -2393,7 +2362,7 @@ def dedup_clusters(spark, sf_dir):
     survivor. The oracle recomputes the same pairs in DuckDB and closes
     them with a recursive CTE — transitive A~B~C clustering included."""
     cat = catalog_for(spark, sf_dir)
-    pairs = _ngram_pairs_for(cat, sf_dir, threshold=0.5)
+    pairs = _dedup.ngram_jaccard_pairs(cat.table("documents"), threshold=0.5)
     return _graph.dedup_keep_list(pairs)
 
 
@@ -2653,66 +2622,6 @@ def pack_sequences(spark, sf_dir):
     return out.withColumn("n_tokens", F.col("n_tokens").cast("long"))
 
 
-# ---------------------------------------------------------------------------
-# Driver-window ordering: the round driver records correctness for the FIRST
-# 50 queries() entries only. Keep every unique-operator gate inside that
-# window by moving near-duplicate TPC-H shapes (their operators are covered
-# by other gates: anti-join by q21/q22, conditional agg by q12, scalar-agg
-# subquery by q11, semi-join by q18/q20, join+topk by q3) to the tail. They
-# still run in bench AND in the local mirror at two SFs
-# (tools/check_oracles.py).
-#
-# ROTATION POLICY (one swap-set per round, so every registered shape
-# eventually earns a driver-recorded green row): each round, 2-3 shapes
-# that have never had a driver row rotate INTO the window, displacing
-# in-window gates whose operator surface is duplicated by another
-# in-window gate.
-#   r4: IN  tpch_q19 (3-branch or-join), tpch_q4 (theta+semi),
-#           tpch_q16 (not + count-distinct)
-#       OUT bitemporal_history_bounded (history scan covered by
-#           bitemporal_store_history), events_rollup (grouping covered by
-#           events_sessionize + sql_rollup), window_lag_delta (window fns
-#           covered by window_topk).
-#   r5: IN  pack_sequences (distributed prefix-sum vs global-window
-#           oracle), unigram_lm_quality (freq pass + broadcast vocab
-#           join-back), text_repetition (Gopher filters)
-#       OUT dedup_chunks (exact-hash dedup covered by dedup_exact),
-#           sample_hash_deterministic (hash-bucket selection covered by
-#           mix_corpora_weighted — same bucket space),
-#           tpch_q19 (or-join covered by datalog_or_join + tpch_q7;
-#           earned its driver row in r4).
-#   r6 queue (never driver-verified, most distinctive first):
-#       stratified_sample, contamination_scores, text_pii_scrub, then
-#       the overflow TPC-H shapes.
-# ---------------------------------------------------------------------------
-
-_OVERFLOW = [
-    "bitemporal_history_bounded", "events_rollup", "window_lag_delta",
-    "tpch_q21_anti", "tpch_q14", "tpch_q8", "tpch_q10", "tpch_q17",
-    "tpch_q15", "tpch_q7", "tpch_q20",
-]
-for _n in _OVERFLOW:
-    QUERIES[_n] = QUERIES.pop(_n)  # re-insert at the tail
-
-_R5_IN = ["pack_sequences", "unigram_lm_quality", "text_repetition"]
-_R5_OUT = ["dedup_chunks", "sample_hash_deterministic", "tpch_q19"]
-_order = [n for n in QUERIES if n not in _R5_IN and n not in _R5_OUT]
-# the 3 rotated-out gates all sat inside the old first-50 window, so the
-# first 47 retained names ARE the remaining window; splice the rotated-in
-# gates right after them and push the rotated-out gates to the tail
-_order = _order[:47] + _R5_IN + _order[47:] + _R5_OUT
-_reordered = {n: QUERIES[n] for n in _order}
-QUERIES.clear()
-QUERIES.update(_reordered)
-
-
-# ---------------------------------------------------------------------------
-# r5 additions — registered AFTER the window reorder above, so they land in
-# the overflow tail (mirror-checked at two SFs now; driver rows via the
-# rotation policy in a future round).
-# ---------------------------------------------------------------------------
-
-
 @register(
     "text_gopher_filter",
     r"""
@@ -2814,18 +2723,16 @@ def dedup_canonical(spark, sf_dir):
     broadcast winners join-back."""
     cat = catalog_for(spark, sf_dir)
     docs = cat.table("documents").withColumn("quality", F.length("text"))
-    # pair-gen reads only (doc_id, text), so the shared memo's pairs are
-    # identical to ngram_jaccard_pairs(docs) — quality is a local column
-    pairs = _ngram_pairs_for(cat, sf_dir, threshold=0.5)
+    pairs = _dedup.ngram_jaccard_pairs(cat.table("documents"), threshold=0.5)
     out = _graph.canonical_by_quality(docs, pairs)
     return out.withColumn("is_canonical", F.col("is_canonical").cast("int"))
 
 
 # ---------------------------------------------------------------------------
-# r6 additions — SPARQL driver gates. The WatDiv-style breadth suite
+# SPARQL gates. The WatDiv-style breadth suite
 # (tests/test_watdiv.py) proves compiler agreement at pytest level; these
 # three gates put the SPARQL->Datalog->DataFrame path (sparql.clj,
-# watdiv_crux.clj:22-27) under the DRIVER's DuckDB oracle too, one per
+# watdiv_crux.clj:22-27) under a DuckDB oracle too, one per
 # WatDiv template family: star (S), snowflake+UNION (F/C), property-path
 # closure (P). The graph is the sf_dir catalog itself (predicates map to
 # catalog attributes by IRI local name, pivot_triples convention), so the
@@ -2957,59 +2864,6 @@ def sparql_path_closure(spark, sf_dir):
             "SELECT ?x ?y WHERE { ?x <http://tpch/next>+ ?y }"
         ),
     )
-
-
-# ---------------------------------------------------------------------------
-# r6 WINDOW ROTATION (policy block above, queries.py ~2590): the driver
-# records correctness for the FIRST 50 entries only.
-#   r6: IN  the 5 never-driver-verified shapes queued in r5 —
-#           stratified_sample, contamination_scores, text_pii_scrub,
-#           text_gopher_filter, dedup_canonical — plus the 3 new SPARQL
-#           gates (sparql_star_filter, sparql_snowflake_union,
-#           sparql_path_closure) so SPARQL correctness earns driver rows,
-#           not just pytest agreement.
-#       OUT 8 gates whose operator surface stays covered by another
-#           in-window gate and which already hold driver-green rows:
-#           tpch_q2 (scalar-agg subquery -> tpch_q11), tpch_q5 (equi-join
-#           chain -> q3/q9/q21), tpch_q12 (conditional agg -> q1),
-#           tpch_q13 (or-join -> datalog_or_join), tpch_q18 (semi-join +
-#           top-k -> tpch_q4/q21), tpch_q22 (anti+or-join -> q21),
-#           datalog_subquery (q-pred subquery -> tpch_q11),
-#           window_topk (window fns -> events_sessionize).
-#   r7 queue (never driver-verified after this round): the r6 late
-#   additions in the overflow tail — epoch_shard_shuffle,
-#   dedup_substring_spans, dedup_span_trim, select_token_budget,
-#   dedup_line_trim, source_cap_topn, bigram_lm_quality, text_clf_score;
-#   every other registered gate will hold at
-#   least one driver row once r6 records.
-# ---------------------------------------------------------------------------
-
-_R6_IN = [
-    "stratified_sample", "contamination_scores", "text_pii_scrub",
-    "text_gopher_filter", "dedup_canonical",
-    "sparql_star_filter", "sparql_snowflake_union", "sparql_path_closure",
-]
-_R6_OUT = [
-    "tpch_q2", "tpch_q5", "tpch_q12", "tpch_q13", "tpch_q18", "tpch_q22",
-    "datalog_subquery", "window_topk",
-]
-_r6_order = [n for n in QUERIES if n not in _R6_IN and n not in _R6_OUT]
-# all 8 rotated-out gates sat inside the old first-50 window, so the first
-# 42 retained names ARE the remaining window; splice the rotated-in gates
-# right after them and push the rotated-out gates to the tail
-_r6_order = _r6_order[:42] + _R6_IN + _r6_order[42:] + _R6_OUT
-_r6_reordered = {n: QUERIES[n] for n in _r6_order}
-QUERIES.clear()
-QUERIES.update(_r6_reordered)
-
-
-# ---------------------------------------------------------------------------
-# r6 late additions — registered AFTER the window reorder, so they land in
-# the overflow tail (mirror-checked at two SFs; driver rows via rotation —
-# r7 queue: epoch_shard_shuffle, dedup_substring_spans,
-# dedup_span_trim, select_token_budget, dedup_line_trim,
-# source_cap_topn, bigram_lm_quality, text_clf_score).
-# ---------------------------------------------------------------------------
 
 
 @register(
@@ -3351,75 +3205,6 @@ def text_clf_score(spark, sf_dir):
     return _text.hashed_classifier_score(cat.table("documents"))
 
 
-# ---------------------------------------------------------------------------
-# r8 WINDOW ROTATION (policy block above, queries.py ~2590): the driver
-# records correctness for the FIRST 50 entries only.
-#   r8: IN  (a) the 8 r7 additions that have never held a driver row —
-#           dedup_substring_spans, dedup_span_trim, dedup_line_trim,
-#           select_token_budget, source_cap_topn, epoch_shard_shuffle,
-#           bigram_lm_quality, text_clf_score — and (b) the 8 TPC-H gates
-#           whose last driver row predates five rounds of compiler change
-#           (or-branch literal merge, plan cache + epoch invalidation, EAV
-#           materialization): tpch_q7, tpch_q8, tpch_q10, tpch_q14,
-#           tpch_q15, tpch_q17, tpch_q20, tpch_q21_anti (stale since r2).
-#       OUT 16 gates, each holding a fresh r7 driver-green row AND whose
-#           operator surface stays covered by an in-window gate:
-#           tpch_q3 (join+topk -> tpch_q10 rotating in), tpch_q6
-#           (filter+agg pushdown -> tpch_q1/q14/q15), tpch_q9 (join chain
-#           -> tpch_q7/q8/q10), tpch_q16 (anti + count-distinct ->
-#           tpch_q21 + agg_stats), events_asof (as-of -> asof_join_events
-#           + bitemporal_store_asof + sql_temporal), events_json (JSON
-#           scalars -> sql_surface battery), text_analysis (token/quality
-#           -> unigram_lm_quality + text_repetition + text_gopher_filter),
-#           dedup_exact (0-row/vacuous at sf0.01; hash-group surface ->
-#           dedup_canonical + mirror-checked dedup_chunks),
-#           ann_brute_force + ann_ivf (exact cosine + bucketed probe ->
-#           ann_pq's IVF probe + exact re-rank), embedding_threshold_pairs
-#           (cosine pairs -> embedding_near_dup_lsh, recall-1.0-proved),
-#           contamination_scores (graded decontam -> decontaminate_ngram),
-#           mix_corpora_weighted (hash-bucket selection ->
-#           stratified_sample + epoch_shard_shuffle rotating in),
-#           datalog_or_join (or-join -> tpch_q7's or-of-and-pairs +
-#           sparql_snowflake_union's UNION), text_pii_scrub (zero-shuffle
-#           regexp chain -> text_gopher_filter per-row expressions),
-#           sparql_star_filter (SPARQL parse+compile ->
-#           sparql_snowflake_union + sparql_path_closure).
-#   All 16 rotated-out gates keep running in bench and in the two-SF
-#   local mirror (tools/check_oracles.py).
-# ---------------------------------------------------------------------------
-
-_R8_IN = [
-    "tpch_q7", "tpch_q8", "tpch_q10", "tpch_q14", "tpch_q15", "tpch_q17",
-    "tpch_q20", "tpch_q21_anti",
-    "dedup_substring_spans", "dedup_span_trim", "dedup_line_trim",
-    "select_token_budget", "source_cap_topn", "epoch_shard_shuffle",
-    "bigram_lm_quality", "text_clf_score",
-]
-_R8_OUT = [
-    "tpch_q3", "tpch_q6", "tpch_q9", "tpch_q16", "events_asof",
-    "events_json", "text_analysis", "dedup_exact", "ann_brute_force",
-    "ann_ivf", "embedding_threshold_pairs", "contamination_scores",
-    "mix_corpora_weighted", "datalog_or_join", "text_pii_scrub",
-    "sparql_star_filter",
-]
-_r8_order = [n for n in QUERIES if n not in _R8_IN and n not in _R8_OUT]
-# all 16 rotated-out gates sat inside the old first-50 window, so the first
-# 34 retained names ARE the remaining window; splice the rotated-in gates
-# right after them and push the rotated-out gates to the tail
-_r8_order = _r8_order[:34] + _R8_IN + _r8_order[34:] + _R8_OUT
-_r8_reordered = {n: QUERIES[n] for n in _r8_order}
-QUERIES.clear()
-QUERIES.update(_r8_reordered)
-
-
-# ---------------------------------------------------------------------------
-# r8 additions — registered AFTER the r8 window reorder, so they land in
-# the overflow tail (mirror-checked at two SFs; driver rows via rotation —
-# r9 queue: bloom_decontaminate, kmeans_embeddings, ann_sq8,
-# semantic_dedup, text_c4_filter, dsir_weights).
-# ---------------------------------------------------------------------------
-
-
 @register(
     "bloom_decontaminate",
     r"""
@@ -3736,70 +3521,6 @@ def dsir_weights(spark, sf_dir):
     return _text.dsir_log_ratios(raw, target)
 
 
-# ---------------------------------------------------------------------------
-# r9 WINDOW ROTATION (policy block above, queries.py ~2650): the driver
-# records correctness for the FIRST 50 entries only.
-#   r9: IN  (a) the 6 r8 additions that have never held a driver row —
-#           bloom_decontaminate, kmeans_embeddings, ann_sq8,
-#           semantic_dedup, text_c4_filter, dsir_weights — and (b) the 6
-#           gates whose newest driver row is the stalest in the registry
-#           (r3: bitemporal_history_bounded, events_rollup,
-#           window_lag_delta; r4: dedup_chunks, sample_hash_deterministic,
-#           tpch_q19), now 4-6 rounds of planner change old.
-#       OUT 12 gates, each holding a fresh r8 driver-green row AND whose
-#           operator surface stays covered by an in-window gate:
-#           tpch_q8 (join chain + or-branch merge -> tpch_q7 stays),
-#           tpch_q10 (join+group+topk -> tpch_q7/q15 stay + tpch_q19
-#           rotating in), tpch_q14 (conditional agg over join -> tpch_q19
-#           rotating in + sql_surface CASE battery), tpch_q17 (scalar-agg
-#           subquery -> tpch_q11 stays), tpch_q20 (nested semi-join ->
-#           tpch_q4 stays), tpch_q21_anti (anti-join -> tpch_q21 stays),
-#           dedup_span_trim (span machinery -> dedup_substring_spans +
-#           dedup_line_trim stay), select_token_budget (two-pass
-#           prefix-sum -> pack_sequences stays), epoch_shard_shuffle
-#           (hash-bucket selection -> stratified_sample stays +
-#           sample_hash_deterministic rotating in, same bucket space),
-#           source_cap_topn (per-group top-N -> agg_min_max_n +
-#           events_sessionize stay), text_clf_score (zero-shuffle per-row
-#           text expr -> text_gopher_filter stays + text_c4_filter
-#           rotating in), bigram_lm_quality (n-gram freq + context join ->
-#           unigram_lm_quality stays + dsir_weights rotating in).
-#   All 12 rotated-out gates keep running in bench and in the per-round
-#   86-gate mirror (tools/check_oracles.py -> MIRROR_r{N}.json).
-# ---------------------------------------------------------------------------
-
-_R9_IN = [
-    "bloom_decontaminate", "kmeans_embeddings", "ann_sq8",
-    "semantic_dedup", "text_c4_filter", "dsir_weights",
-    "bitemporal_history_bounded", "events_rollup", "window_lag_delta",
-    "dedup_chunks", "sample_hash_deterministic", "tpch_q19",
-]
-_R9_OUT = [
-    "tpch_q8", "tpch_q10", "tpch_q14", "tpch_q17", "tpch_q20",
-    "tpch_q21_anti", "dedup_span_trim", "select_token_budget",
-    "epoch_shard_shuffle", "source_cap_topn", "text_clf_score",
-    "bigram_lm_quality",
-]
-_r9_order = [n for n in QUERIES if n not in _R9_IN and n not in _R9_OUT]
-# all 12 rotated-out gates sat inside the old first-50 window, so the first
-# 38 retained names ARE the remaining window; splice the rotated-in gates
-# right after them and push the rotated-out gates to the tail
-_r9_order = _r9_order[:38] + _R9_IN + _r9_order[38:] + _R9_OUT
-_r9_reordered = {n: QUERIES[n] for n in _r9_order}
-QUERIES.clear()
-QUERIES.update(_r9_reordered)
-
-
-# ---------------------------------------------------------------------------
-# r9 additions — registered AFTER the r9 window reorder, so they land in
-# the overflow tail (mirror-checked per round via MIRROR_r{N}.json;
-# driver rows via rotation — r10 queue: lucene_multi_field,
-# mix_temperature, streaming_rollup_oracle, streaming_dedup_oracle,
-# plus the r5-stale tpch_q2/q5/q12/q13/q18/q22, datalog_subquery,
-# window_topk).
-# ---------------------------------------------------------------------------
-
-
 @register(
     "lucene_multi_field",
     r"""
@@ -3914,37 +3635,26 @@ def _stream_state_shuffle(spark, input_dir: str, n_source_splits: int):
     split count (shrinking below the scan's parallelism would serialize
     the per-trigger map work), and never above the session parallelism.
     Identical results by construction — state partitioning only shards
-    the exchange. Override with CRUX_SPARK_STREAM_SHUFFLE (a large-state
-    cluster deployment sizes this like batch shuffle.partitions).
+    the exchange.
     Measured (sf0.1, local[32]): 32 state partitions -> 7-9s per
     streaming gate, 4 -> ~2.4s, identical rows.
 
     NOTE: mutates the session-global shuffle.partitions for the
-    stream's duration (restored on exit). The bench runs gates
-    single-threaded, so no concurrent query observes the window; a
-    multi-tenant deployment should set CRUX_SPARK_STREAM_SHUFFLE or
-    plan streams on a dedicated session (spark.newSession())."""
+    stream's duration (restored on exit). Gates run one at a time, so
+    no concurrent query observes the window."""
     import math as _math
-    import os as _os
 
     from crux_spark._conf import input_size_bytes, parse_byte_size
 
-    env = _os.environ.get("CRUX_SPARK_STREAM_SHUFFLE")
-    if env:
-        parts = int(env)
-    else:
-        # Hadoop FS content summary (r15 advice): works for any input
-        # scheme the cluster can read (hdfs://, s3a://), not only paths
-        # on the driver's local disk like the old os.walk form.
-        nbytes = input_size_bytes(spark, input_dir)
-        adv = parse_byte_size(
-            spark.conf.get(
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes", None
-            ),
-            64 << 20,  # AQE advisoryPartitionSizeInBytes default
-        )
-        parts = max(n_source_splits, _math.ceil(nbytes / max(adv, 1)))
-        parts = max(1, min(parts, spark.sparkContext.defaultParallelism))
+    # Hadoop FS content summary: works for any input scheme the cluster
+    # can read (hdfs://, s3a://), not only paths on the driver's disk.
+    nbytes = input_size_bytes(spark, input_dir)
+    adv = parse_byte_size(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", None),
+        64 << 20,  # AQE advisoryPartitionSizeInBytes default
+    )
+    parts = max(n_source_splits, _math.ceil(nbytes / max(adv, 1)))
+    parts = max(1, min(parts, spark.sparkContext.defaultParallelism))
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     try:
@@ -4063,84 +3773,6 @@ def streaming_dedup_oracle(spark, sf_dir):
         )
         sq.awaitTermination()
     return spark.table(name).select("event_type", "n", "total_cents")
-
-
-# ---------------------------------------------------------------------------
-# r10 WINDOW ROTATION (policy block above, queries.py ~2650): the driver
-# records correctness for the FIRST 50 entries only.
-#   r10: IN (a) the 4 r9 additions that have never held a driver row —
-#           lucene_multi_field, mix_temperature, streaming_rollup_oracle,
-#           streaming_dedup_oracle — and (b) the 8 gates whose newest
-#           driver row is the stalest in the registry (all r5):
-#           tpch_q2/q5/q12/q13/q18/q22, datalog_subquery, window_topk.
-#       OUT 12 gates, each holding a fresh r9 driver-green row AND whose
-#           operator surface stays covered by an in-window gate:
-#           bloom_decontaminate (Bloom prefilter proven bit-identical to
-#           the exact join -> decontaminate_ngram stays), ann_sq8
-#           (partial-top-k ANN shortlist -> ann_pq stays, same exchange
-#           shape), semantic_dedup (within-cluster pruning ->
-#           kmeans_embeddings stays for the clustering surface +
-#           embedding_near_dup_lsh stays for near-dup), text_c4_filter
-#           (per-row text heuristics -> text_gopher_filter +
-#           text_repetition stay), dsir_weights (hashed-ngram freq +
-#           join-back -> unigram_lm_quality stays), bitemporal_history_
-#           bounded (bounded history scan -> bitemporal_store_history
-#           stays), events_rollup (time-bucket grouping ->
-#           events_sessionize + sql_rollup stay), window_lag_delta
-#           (lag/lead -> window_topk rotating in + events_sessionize
-#           stays), dedup_chunks (exact-hash grouping -> dedup_canonical
-#           + dedup_clusters stay), sample_hash_deterministic
-#           (hash-bucket selection -> stratified_sample stays, same
-#           bucket space), tpch_q19 (disjunctive join -> tpch_q7 stays +
-#           datalog-side or covered in the 208-case battery),
-#           dedup_line_trim (span machinery -> dedup_substring_spans
-#           stays, same window_hashes/gaps-and-islands core).
-#   All 12 rotated-out gates keep running in bench and in the per-round
-#   90-gate mirror (tools/check_oracles.py -> MIRROR_r{N}.json).
-# ---------------------------------------------------------------------------
-
-_R10_IN = [
-    "lucene_multi_field", "mix_temperature", "streaming_rollup_oracle",
-    "streaming_dedup_oracle", "tpch_q2", "tpch_q5", "tpch_q12",
-    "tpch_q13", "tpch_q18", "tpch_q22", "datalog_subquery", "window_topk",
-]
-_R10_OUT = [
-    "bloom_decontaminate", "ann_sq8", "semantic_dedup", "text_c4_filter",
-    "dsir_weights", "bitemporal_history_bounded", "events_rollup",
-    "window_lag_delta", "dedup_chunks", "sample_hash_deterministic",
-    "tpch_q19", "dedup_line_trim",
-]
-_WINDOW = 50
-# Preconditions (r9 advice): the splice below is only correct when every
-# rotated name exists, every OUT name sits inside the current first-50
-# window, every IN name sits outside it, and the retained prefix is
-# exactly WINDOW - len(OUT). Fail loudly at import if the registry drifts.
-_r10_names = list(QUERIES)
-for _n in _R10_IN + _R10_OUT:
-    assert _n in QUERIES, f"r10 rotation references unknown gate {_n!r}"
-for _n in _R10_OUT:
-    assert _r10_names.index(_n) < _WINDOW, (
-        f"r10 OUT gate {_n!r} is not inside the first-{_WINDOW} window")
-for _n in _R10_IN:
-    assert _r10_names.index(_n) >= _WINDOW, (
-        f"r10 IN gate {_n!r} already sits inside the first-{_WINDOW} window")
-_r10_keep = _WINDOW - len(_R10_OUT)
-_r10_order = [n for n in QUERIES if n not in _R10_IN and n not in _R10_OUT]
-assert sum(1 for n in _r10_order[:_r10_keep]
-           if _r10_names.index(n) < _WINDOW) == _r10_keep, (
-    "r10 retained prefix does not equal the surviving window gates")
-_r10_order = (_r10_order[:_r10_keep] + _R10_IN
-              + _r10_order[_r10_keep:] + _R10_OUT)
-assert sorted(_r10_order) == sorted(_r10_names), "r10 rotation lost gates"
-_r10_reordered = {n: QUERIES[n] for n in _r10_order}
-QUERIES.clear()
-QUERIES.update(_r10_reordered)
-
-
-# ---------------------------------------------------------------------------
-# r10 additions — registered AFTER the r10 window reorder, so they land in
-# the overflow tail (mirror-checked per round; driver rows via rotation).
-# ---------------------------------------------------------------------------
 
 
 @register(
@@ -4278,7 +3910,7 @@ def datalog_mixed_type_order(spark, sf_dir):
     instant(17) — and order-by ?v must sort them by the reference
     codec's type-tag-then-value order (codec.clj:81-99 tag ids; value
     encodings :189-207 BCD bigint, :258-263 char, :312-347 the
-    java.time classes). The driver's value-hash compare is
+    java.time classes). The gate comparison is
     order-insensitive, so the ORDER is verified through window
     MEMBERSHIP: limit/offset cuts land across tag boundaries (w2 pins
     string<char<decimal, w5 decimal<bigint + numeric bigint order incl.
@@ -4382,99 +4014,6 @@ def datalog_mixed_type_order(spark, sf_dir):
     )
 
 
-# ---------------------------------------------------------------------------
-# r11 WINDOW ROTATION (policy block above, queries.py ~2650): the driver
-# records correctness for the FIRST 50 entries only.
-#   r11: IN (a) multimodal_decode — the registry's only gate that has
-#           NEVER held a driver row (r10 verdict #1 names it first) —
-#           plus datalog_mixed_type_order, this round's new gate, spliced
-#           straight into the window so it earns its driver row the round
-#           it ships; and (b) the 16 gates whose newest driver row is the
-#           stalest in the registry (all r7): tpch_q3/q6/q9/q16,
-#           events_asof, events_json, text_analysis, dedup_exact,
-#           ann_brute_force, ann_ivf, embedding_threshold_pairs,
-#           contamination_scores, mix_corpora_weighted, datalog_or_join,
-#           text_pii_scrub, sparql_star_filter.
-#       OUT 18 gates, each holding a fresh r10 driver-green row AND whose
-#           operator surface stays covered by an in-window gate:
-#           tpch_q2 (min-cost scalar-agg subquery -> tpch_q11 stays +
-#           datalog-side q-pred in tpch_q22... covered by q11), tpch_q5
-#           (multi-way join+agg -> tpch_q9 rotating in, 9-way), tpch_q7
-#           (or-join pairs -> datalog_or_join rotating in + the 208-case
-#           battery), tpch_q12 (conditional agg -> tpch_q1 stays,
-#           sql_surface stays), tpch_q13 (outer-join count -> datalog_pull
-#           stays for the left-join surface), tpch_q15 (view + max
-#           subquery -> tpch_q11 stays), tpch_q18 (semi-join havingK ->
-#           tpch_q4 stays), tpch_q22 (anti + scalar subquery -> tpch_q21
-#           + tpch_q11 stay; tpch_q16 rotating in carries not+count-
-#           distinct), datalog_subquery (q-pred -> tpch_q11 stays, same
-#           compile path), window_topk (rank windows -> events_sessionize
-#           stays), lucene_multi_field (scored text relations ->
-#           text_search_docs stays), mix_temperature (corpus mixing ->
-#           mix_corpora_weighted rotating in, same op family),
-#           streaming_dedup_oracle (cross-trigger dedup ->
-#           streaming_rollup_oracle stays for the streaming-replay
-#           surface + dedup_exact rotating in for the dedup surface),
-#           stratified_sample (hash-bucket selection ->
-#           mix_corpora_weighted rotating in, same bucket space),
-#           text_repetition (per-row text heuristics -> text_gopher_filter
-#           stays), dedup_canonical (CC canonical pick -> dedup_clusters
-#           stays, same pointer-jumping core), decontaminate_ngram
-#           (ngram-join decontamination -> contamination_scores rotating
-#           in, same shuffle shape), sparql_snowflake_union (SPARQL
-#           union/filter -> sparql_star_filter rotating in +
-#           sparql_path_closure stays).
-#   All 18 rotated-out gates keep running in bench and in the per-round
-#   mirror (tools/check_oracles.py -> MIRROR_r{N}.json). After this
-#   splice no gate's newest driver row is older than r8 (3 rounds).
-#   r12 queue: the 12 r8-stale gates (tpch_q8/q10/q14/q17/q20/q21_anti,
-#   dedup_span_trim, select_token_budget, epoch_shard_shuffle,
-#   source_cap_topn, text_clf_score, bigram_lm_quality).
-# ---------------------------------------------------------------------------
-
-_R11_IN = [
-    "multimodal_decode", "datalog_mixed_type_order",
-    "tpch_q3", "tpch_q6", "tpch_q9", "tpch_q16", "events_asof",
-    "events_json", "text_analysis", "dedup_exact", "ann_brute_force",
-    "ann_ivf", "embedding_threshold_pairs", "contamination_scores",
-    "mix_corpora_weighted", "datalog_or_join", "text_pii_scrub",
-    "sparql_star_filter",
-]
-_R11_OUT = [
-    "tpch_q2", "tpch_q5", "tpch_q7", "tpch_q12", "tpch_q13", "tpch_q15",
-    "tpch_q18", "tpch_q22", "datalog_subquery", "window_topk",
-    "lucene_multi_field", "mix_temperature", "streaming_dedup_oracle",
-    "stratified_sample", "text_repetition", "dedup_canonical",
-    "decontaminate_ngram", "sparql_snowflake_union",
-]
-_r11_names = list(QUERIES)
-for _n in _R11_IN + _R11_OUT:
-    assert _n in QUERIES, f"r11 rotation references unknown gate {_n!r}"
-for _n in _R11_OUT:
-    assert _r11_names.index(_n) < _WINDOW, (
-        f"r11 OUT gate {_n!r} is not inside the first-{_WINDOW} window")
-for _n in _R11_IN:
-    assert _r11_names.index(_n) >= _WINDOW, (
-        f"r11 IN gate {_n!r} already sits inside the first-{_WINDOW} window")
-_r11_keep = _WINDOW - len(_R11_OUT)
-_r11_order = [n for n in QUERIES if n not in _R11_IN and n not in _R11_OUT]
-assert sum(1 for n in _r11_order[:_r11_keep]
-           if _r11_names.index(n) < _WINDOW) == _r11_keep, (
-    "r11 retained prefix does not equal the surviving window gates")
-_r11_order = (_r11_order[:_r11_keep] + _R11_IN
-              + _r11_order[_r11_keep:] + _R11_OUT)
-assert sorted(_r11_order) == sorted(_r11_names), "r11 rotation lost gates"
-_r11_reordered = {n: QUERIES[n] for n in _r11_order}
-QUERIES.clear()
-QUERIES.update(_r11_reordered)
-
-
-# ---------------------------------------------------------------------------
-# r11 additions — registered AFTER the r11 window reorder, so they land in
-# the overflow tail (mirror-checked per round; driver rows via rotation).
-# ---------------------------------------------------------------------------
-
-
 @register(
     "incremental_vector_index",
     """
@@ -4559,213 +4098,8 @@ def incremental_vector_index(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# r12 WINDOW ROTATION (policy block at the r11 rotation, ~4290): the
-# driver records correctness for the FIRST 50 entries only.
-#   r12: IN (a) incremental_vector_index — the only registry gate that
-#           has NEVER held a driver row (shipped r11, mirror-green at
-#           both SFs; r11 verdict "missing" #2 names it first); (b) the
-#           12 gates whose newest driver row is r8 (the queue the r11
-#           block promised): tpch_q8/q10/q14/q17/q20, tpch_q21_anti,
-#           dedup_span_trim, select_token_budget, epoch_shard_shuffle,
-#           source_cap_topn, text_clf_score, bigram_lm_quality; and
-#           (c) the 5 stalest r9 gates: bloom_decontaminate, ann_sq8,
-#           semantic_dedup, text_c4_filter, tpch_q19 (q19 chosen over
-#           its r9 peers because datalog_or_join rotates out and q19's
-#           disjunctive-join shape keeps the or-surface in-window).
-#       OUT 18 gates, all holding fresh r11 driver-green rows AND whose
-#           operator surface stays covered in-window:
-#           multimodal_decode (mapInPandas codec path ->
-#           multimodal_features stays), tpch_q3 (join+agg+topn ->
-#           tpch_q10 rotating in, same shape + tpch_q4 stays), tpch_q6
-#           (scan+filter agg -> tpch_q14 rotating in + tpch_q1 stays),
-#           tpch_q9 (multi-way join tree -> tpch_q8 rotating in, 8-way),
-#           tpch_q16 (not + count-distinct -> tpch_q21_anti rotating in
-#           carries anti-join; agg_stats stays for count-distinct),
-#           events_asof (as-of lookup -> asof_join_events +
-#           bitemporal_store_asof stay), events_json (JSON extraction ->
-#           sql_surface stays on the scalar surface; events_sessionize
-#           stays on the events table), text_analysis (textops battery
-#           -> text_clf_score + bigram_lm_quality rotating in +
-#           text_gopher_filter stays), dedup_exact (hash-groupBy ->
-#           dedup_span_trim rotating in + dedup_ngram_jaccard stays),
-#           ann_brute_force (exact cosine top-k -> ann_sq8 rotating in
-#           scores the same oracle shape; ann_pq stays), ann_ivf (cell-
-#           pruned search -> incremental_vector_index rotating in IS the
-#           IVF search path fed incrementally), embedding_threshold_pairs
-#           (cosine tile matmul -> semantic_dedup rotating in, same
-#           cogroup matmul + embedding_near_dup_lsh stays),
-#           contamination_scores (benchmark ngram join ->
-#           bloom_decontaminate rotating in, same family),
-#           mix_corpora_weighted (weighted sampling ->
-#           select_token_budget + epoch_shard_shuffle rotating in),
-#           datalog_or_join (or/or-join compile -> tpch_q19 rotating in,
-#           disjunctive join + the 208-case builtin battery),
-#           text_pii_scrub (regexp_replace chain -> text_c4_filter
-#           rotating in, same textops family), sparql_path_closure
-#           (property paths -> sparql_star_filter STAYS in-window for
-#           the SPARQL surface), kmeans_embeddings (broadcast-centroid
-#           assign -> incremental_vector_index + semantic_dedup rotating
-#           in cover the centroid/cell assignment path).
-#   All 18 rotated-out gates keep running in bench and in the per-round
-#   mirror (tools/check_oracles.py -> MIRROR_r{N}.json). After this
-#   splice no gate's newest driver row is older than r9 (3 rounds), and
-#   every gate in the registry has held at least one driver row.
-#   r13 queue: the 7 remaining r9 gates (dsir_weights,
-#   bitemporal_history_bounded, events_rollup, window_lag_delta,
-#   dedup_chunks, sample_hash_deterministic, dedup_line_trim) + the
-#   stalest r10s.
-# ---------------------------------------------------------------------------
-
-_R12_IN = [
-    "incremental_vector_index",
-    "tpch_q8", "tpch_q10", "tpch_q14", "tpch_q17", "tpch_q20",
-    "tpch_q21_anti", "dedup_span_trim", "select_token_budget",
-    "epoch_shard_shuffle", "source_cap_topn", "text_clf_score",
-    "bigram_lm_quality",
-    "bloom_decontaminate", "ann_sq8", "semantic_dedup", "text_c4_filter",
-    "tpch_q19",
-]
-_R12_OUT = [
-    "multimodal_decode", "tpch_q3", "tpch_q6", "tpch_q9", "tpch_q16",
-    "events_asof", "events_json", "text_analysis", "dedup_exact",
-    "ann_brute_force", "ann_ivf", "embedding_threshold_pairs",
-    "contamination_scores", "mix_corpora_weighted", "datalog_or_join",
-    "text_pii_scrub", "sparql_path_closure", "kmeans_embeddings",
-]
-_r12_names = list(QUERIES)
-for _n in _R12_IN + _R12_OUT:
-    assert _n in QUERIES, f"r12 rotation references unknown gate {_n!r}"
-for _n in _R12_OUT:
-    assert _r12_names.index(_n) < _WINDOW, (
-        f"r12 OUT gate {_n!r} is not inside the first-{_WINDOW} window")
-for _n in _R12_IN:
-    assert _r12_names.index(_n) >= _WINDOW, (
-        f"r12 IN gate {_n!r} already sits inside the first-{_WINDOW} window")
-_r12_keep = _WINDOW - len(_R12_OUT)
-_r12_order = [n for n in QUERIES if n not in _R12_IN and n not in _R12_OUT]
-assert sum(1 for n in _r12_order[:_r12_keep]
-           if _r12_names.index(n) < _WINDOW) == _r12_keep, (
-    "r12 retained prefix does not equal the surviving window gates")
-_r12_order = (_r12_order[:_r12_keep] + _R12_IN
-              + _r12_order[_r12_keep:] + _R12_OUT)
-assert sorted(_r12_order) == sorted(_r12_names), "r12 rotation lost gates"
-_r12_reordered = {n: QUERIES[n] for n in _r12_order}
-QUERIES.clear()
-QUERIES.update(_r12_reordered)
-
-
-# ---------------------------------------------------------------------------
-# r13 WINDOW ROTATION (policy block at the r11 rotation, ~4290): the
-# driver records correctness for the FIRST 50 entries only.
-#   r13: IN the full stale tail — (a) the 7 gates whose newest driver
-#        row is r9 (the r12 block's promised queue): dsir_weights,
-#        bitemporal_history_bounded, events_rollup, window_lag_delta,
-#        dedup_chunks, sample_hash_deterministic, dedup_line_trim; and
-#        (b) all 18 r10-era gates: datalog_subquery, decontaminate_ngram,
-#        dedup_canonical, lucene_multi_field, mix_temperature,
-#        sparql_snowflake_union, stratified_sample,
-#        streaming_dedup_oracle, text_repetition, tpch_q2/q5/q7/q12/
-#        q13/q15/q18/q22, window_topk. After this splice no gate's
-#        newest driver row is older than r11.
-#   OUT 25 gates, all holding fresh r12 driver-green rows AND whose
-#        operator surface stays covered in-window:
-#        tpch_q8 (8-way join tree -> tpch_q5/q7 rotating in, 6-way +
-#        nation-pair disjunction), tpch_q10 (join+agg+topn -> tpch_q18
-#        rotating in; tpch_q21 stays for top-k order/limit), tpch_q14
-#        (conditional scan agg -> tpch_q12 rotating in, CASE agg +
-#        tpch_q1 stays), tpch_q17 (scalar avg subquery -> tpch_q2
-#        rotating in, correlated min subquery; tpch_q11 stays), tpch_q19
-#        (3-branch or -> tpch_q7 rotating in carries the disjunctive
-#        join; 208-case builtin battery in tests), tpch_q20 (nested
-#        semi -> tpch_q18 in-subquery semi; tpch_q4 stays for exists),
-#        tpch_q21_anti (anti-join -> tpch_q22 rotating in, not-exists
-#        anti; tpch_q21 stays), select_token_budget (budget sampling ->
-#        mix_temperature rotating in, same sampling.py family),
-#        epoch_shard_shuffle (hash-deterministic shuffle ->
-#        sample_hash_deterministic rotating in), source_cap_topn
-#        (per-source cap -> window_topk + stratified_sample rotating
-#        in), text_clf_score (textops fold -> text_repetition rotating
-#        in + text_gopher_filter stays), bigram_lm_quality
-#        (conditional NLL -> unigram_lm_quality stays),
-#        bloom_decontaminate (benchmark bitset -> decontaminate_ngram
-#        rotating in, same shingle equi-join family), ann_sq8
-#        (quantized ANN -> ann_pq stays), semantic_dedup (cell-bucketed
-#        cosine -> embedding_near_dup_lsh + incremental_vector_index
-#        stay), text_c4_filter (heuristic filter -> text_gopher_filter
-#        stays + text_repetition rotating in), dedup_span_trim
-#        (span trim -> dedup_line_trim + dedup_chunks rotating in +
-#        dedup_substring_spans stays), events_sessionize (session
-#        windows -> events_rollup + window_lag_delta rotating in),
-#        agg_min_max_n (min-N/max-N -> window_topk rotating in, same
-#        per-group top-n; agg_stats stays), bitemporal_store_history
-#        (history scan -> bitemporal_history_bounded rotating in;
-#        bitemporal_store_asof stays), sparql_star_filter (SPARQL
-#        FILTER -> sparql_snowflake_union rotating in),
-#        streaming_rollup_oracle (multi-trigger stream vs batch ->
-#        streaming_dedup_oracle rotating in), text_search_docs
-#        (text-search -> lucene_multi_field rotating in, QueryParser
-#        superset of the single-field surface), dedup_ngram_jaccard
-#        (prefix-filtered similarity join -> dedup_minhash_lsh stays +
-#        dedup_canonical rotating in), datalog_relation_in (:in
-#        binding forms -> datalog_subquery rotating in, q-pred env
-#        substitution; datalog_pull stays).
-#   All 25 rotated-out gates keep running in bench and in the per-round
-#   mirror (tools/check_oracles.py -> MIRROR_r{N}.json). r14 queue: the
-#   18 r11-era gates (ann_brute_force, ann_ivf, contamination_scores,
-#   datalog_or_join, dedup_exact, embedding_threshold_pairs,
-#   events_asof, events_json, kmeans_embeddings, mix_corpora_weighted,
-#   multimodal_decode, sparql_path_closure, text_analysis,
-#   text_pii_scrub, tpch_q3/q6/q9/q16) become the stalest.
-# ---------------------------------------------------------------------------
-
-_R13_IN = [
-    "dsir_weights", "bitemporal_history_bounded", "events_rollup",
-    "window_lag_delta", "dedup_chunks", "sample_hash_deterministic",
-    "dedup_line_trim",
-    "datalog_subquery", "decontaminate_ngram", "dedup_canonical",
-    "lucene_multi_field", "mix_temperature", "sparql_snowflake_union",
-    "stratified_sample", "streaming_dedup_oracle", "text_repetition",
-    "tpch_q2", "tpch_q5", "tpch_q7", "tpch_q12", "tpch_q13", "tpch_q15",
-    "tpch_q18", "tpch_q22", "window_topk",
-]
-_R13_OUT = [
-    "tpch_q8", "tpch_q10", "tpch_q14", "tpch_q17", "tpch_q19",
-    "tpch_q20", "tpch_q21_anti", "select_token_budget",
-    "epoch_shard_shuffle", "source_cap_topn", "text_clf_score",
-    "bigram_lm_quality", "bloom_decontaminate", "ann_sq8",
-    "semantic_dedup", "text_c4_filter", "dedup_span_trim",
-    "events_sessionize", "agg_min_max_n", "bitemporal_store_history",
-    "sparql_star_filter", "streaming_rollup_oracle", "text_search_docs",
-    "dedup_ngram_jaccard", "datalog_relation_in",
-]
-_r13_names = list(QUERIES)
-for _n in _R13_IN + _R13_OUT:
-    assert _n in QUERIES, f"r13 rotation references unknown gate {_n!r}"
-for _n in _R13_OUT:
-    assert _r13_names.index(_n) < _WINDOW, (
-        f"r13 OUT gate {_n!r} is not inside the first-{_WINDOW} window")
-for _n in _R13_IN:
-    assert _r13_names.index(_n) >= _WINDOW, (
-        f"r13 IN gate {_n!r} already sits inside the first-{_WINDOW} window")
-assert len(_R13_IN) == len(_R13_OUT), "r13 rotation must preserve window size"
-_r13_keep = _WINDOW - len(_R13_OUT)
-_r13_order = [n for n in QUERIES if n not in _R13_IN and n not in _R13_OUT]
-assert sum(1 for n in _r13_order[:_r13_keep]
-           if _r13_names.index(n) < _WINDOW) == _r13_keep, (
-    "r13 retained prefix does not equal the surviving window gates")
-_r13_order = (_r13_order[:_r13_keep] + _R13_IN
-              + _r13_order[_r13_keep:] + _R13_OUT)
-assert sorted(_r13_order) == sorted(_r13_names), "r13 rotation lost gates"
-_r13_reordered = {n: QUERIES[n] for n in _r13_order}
-QUERIES.clear()
-QUERIES.update(_r13_reordered)
-
-
-# ---------------------------------------------------------------------------
 # Streaming incremental MinHash-LSH dedup (r13): the near-dup sibling of
-# the exact streaming dedup. Registered AFTER the r13 rotation splice so
-# it lands in the overflow tail (mirror-checked per round; driver row via
-# the r14 rotation, the same path incremental_vector_index took in r12).
+# the exact streaming dedup.
 # ---------------------------------------------------------------------------
 
 
@@ -4867,124 +4201,13 @@ def sparql_group_agg(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# r14 WINDOW ROTATION (policy block at the r11 rotation, ~4290): the
-# driver records correctness for the FIRST 50 entries only.
-#   r14: IN the ENTIRE stale queue promised by the r13 block + VERDICT
-#        r13 item 1 — (a) the 2 gates born in r13 at the registry tail
-#        that have NEVER had a driver row: streaming_minhash_dedup,
-#        sparql_group_agg; and (b) all 18 gates whose newest driver row
-#        is r11: ann_brute_force, ann_ivf, contamination_scores,
-#        datalog_or_join, dedup_exact, embedding_threshold_pairs,
-#        events_asof, events_json, kmeans_embeddings,
-#        mix_corpora_weighted, multimodal_decode, sparql_path_closure,
-#        text_analysis, text_pii_scrub, tpch_q3, tpch_q6, tpch_q9,
-#        tpch_q16. After this splice the stale queue is EMPTY: no gate's
-#        newest driver row is older than r12.
-#   OUT 20 gates, all holding fresh r13 driver-green rows AND whose
-#        operator surface stays covered in-window:
-#        asof_join_events (DuckDB-ASOF-oracled as-of join ->
-#        events_asof rotating in, same asof_join operator on the events
-#        table; bitemporal_store_asof stays for the store-level as-of),
-#        multimodal_features (mapInPandas feature extraction ->
-#        multimodal_decode rotating in, same real-codec mapInPandas
-#        family), embedding_near_dup_lsh (tiled cosine near-dup ->
-#        embedding_threshold_pairs rotating in, same threshold-cosine
-#        pair surface; incremental_vector_index stays),
-#        decontaminate_ngram (shingle equi-join decontamination ->
-#        contamination_scores rotating in, same shingle-join family),
-#        mix_temperature (temperature mixing -> mix_corpora_weighted
-#        rotating in, same sampling.py corpus-mixing family),
-#        sparql_snowflake_union (SPARQL UNION/joins ->
-#        sparql_path_closure + sparql_group_agg rotating in),
-#        streaming_dedup_oracle (streaming exact dedup ->
-#        streaming_minhash_dedup rotating in carries the incremental
-#        streaming-dedup surface; dedup_exact rotating in carries exact
-#        hash dedup), text_repetition (repetition scores ->
-#        text_analysis rotating in, textops composite),
-#        text_gopher_filter (gopher heuristics -> text_analysis +
-#        text_pii_scrub rotating in; unigram_lm_quality stays),
-#        dedup_canonical (canonical-form dedup -> dedup_exact rotating
-#        in), dedup_chunks + dedup_line_trim (chunk/line dedup ->
-#        dedup_substring_spans stays for span/shingle trimming;
-#        dedup_exact rotating in), tpch_q2 (correlated min subquery +
-#        multi-key sort -> tpch_q11 stays scalar subquery,
-#        datalog_subquery stays q-pred, datalog_mixed_type_order stays
-#        multi-key order/limit), tpch_q5 (6-way join tree -> tpch_q9
-#        rotating in, 6-way join + agg; tpch_q7 stays), tpch_q15
-#        (max-over-view subquery -> tpch_q11 stays scalar-subquery
-#        surface), tpch_q22 (not-exists anti + substring -> tpch_q16
-#        rotating in, anti-join + count-distinct; tpch_q4 stays exists/
-#        not-exists), window_topk (per-group top-n -> tpch_q3 rotating
-#        in top-n, window_lag_delta stays window functions, tpch_q21
-#        stays top-k limit), sample_hash_deterministic
-#        (hash-deterministic sampling -> stratified_sample stays, same
-#        family), dsir_weights (DSIR importance NLL ->
-#        unigram_lm_quality stays, same textops NLL surface),
-#        events_rollup (time-bucket rollup -> sql_rollup stays rollup/
-#        cube; events_asof + events_json rotating in carry the events
-#        table).
-#   All 20 rotated-out gates keep running in bench and in the per-round
-#   mirror (tools/check_oracles.py -> MIRROR_r{N}.json). r15 queue: the
-#   stale set becomes the 25 r12-verified gates rotated out in r13
-#   (tpch_q8/q10/q14/q17/q19/q20/q21_anti, select_token_budget,
-#   epoch_shard_shuffle, source_cap_topn, text_clf_score,
-#   bigram_lm_quality, bloom_decontaminate, ann_sq8, semantic_dedup,
-#   text_c4_filter, dedup_span_trim, events_sessionize, agg_min_max_n,
-#   bitemporal_store_history, sparql_star_filter,
-#   streaming_rollup_oracle, text_search_docs, dedup_ngram_jaccard,
-#   datalog_relation_in) — from here the cadence is self-sustaining.
-# ---------------------------------------------------------------------------
-
-_R14_IN = [
-    "streaming_minhash_dedup", "sparql_group_agg",
-    "ann_brute_force", "ann_ivf", "contamination_scores",
-    "datalog_or_join", "dedup_exact", "embedding_threshold_pairs",
-    "events_asof", "events_json", "kmeans_embeddings",
-    "mix_corpora_weighted", "multimodal_decode", "sparql_path_closure",
-    "text_analysis", "text_pii_scrub", "tpch_q3", "tpch_q6", "tpch_q9",
-    "tpch_q16",
-]
-_R14_OUT = [
-    "asof_join_events", "multimodal_features", "embedding_near_dup_lsh",
-    "decontaminate_ngram", "mix_temperature", "sparql_snowflake_union",
-    "streaming_dedup_oracle", "text_repetition", "text_gopher_filter",
-    "dedup_canonical", "dedup_chunks", "dedup_line_trim",
-    "tpch_q2", "tpch_q5", "tpch_q15", "tpch_q22", "window_topk",
-    "sample_hash_deterministic", "dsir_weights", "events_rollup",
-]
-_r14_names = list(QUERIES)
-for _n in _R14_IN + _R14_OUT:
-    assert _n in QUERIES, f"r14 rotation references unknown gate {_n!r}"
-for _n in _R14_OUT:
-    assert _r14_names.index(_n) < _WINDOW, (
-        f"r14 OUT gate {_n!r} is not inside the first-{_WINDOW} window")
-for _n in _R14_IN:
-    assert _r14_names.index(_n) >= _WINDOW, (
-        f"r14 IN gate {_n!r} already sits inside the first-{_WINDOW} window")
-assert len(_R14_IN) == len(_R14_OUT), "r14 rotation must preserve window size"
-_r14_keep = _WINDOW - len(_R14_OUT)
-_r14_order = [n for n in QUERIES if n not in _R14_IN and n not in _R14_OUT]
-assert sum(1 for n in _r14_order[:_r14_keep]
-           if _r14_names.index(n) < _WINDOW) == _r14_keep, (
-    "r14 retained prefix does not equal the surviving window gates")
-_r14_order = (_r14_order[:_r14_keep] + _R14_IN
-              + _r14_order[_r14_keep:] + _R14_OUT)
-assert sorted(_r14_order) == sorted(_r14_names), "r14 rotation lost gates"
-_r14_reordered = {n: QUERIES[n] for n in _r14_order}
-QUERIES.clear()
-QUERIES.update(_r14_reordered)
-
-
-# ---------------------------------------------------------------------------
 # Streaming MinHash est-mode (r14): the signature-agreement estimator
 # path of IncrementalMinHashIndex (verify="est", dedup.py) was
 # pytest-only — VERDICT r13 item 3 asks for a full oracle. The shingle
 # hash is parameterized to an md5-prefix integer (dedup.md5_prefix_hash)
 # that DuckDB reproduces bit-exactly, so the oracle recomputes the SAME
 # 32 affine-permutation minima, bands them, and derives the identical
-# (candidate, est_jaccard) relation in pure SQL. Registered AFTER the
-# r14 rotation splice -> overflow tail (mirror-gated now, driver row via
-# the r15 rotation, the streaming_minhash_dedup path).
+# (candidate, est_jaccard) relation in pure SQL.
 # ---------------------------------------------------------------------------
 
 
@@ -5061,8 +4284,7 @@ def streaming_minhash_est(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # SPARQL 1.1 subquery gate (r14): { SELECT ... GROUP BY } nested inside
 # WHERE — the per-group-max join shape (tpch_q15's correlated-max class,
-# here expressed in SPARQL). Registered after the r14 rotation splice ->
-# overflow tail (mirror-gated now; driver row via the r15 rotation).
+# here expressed in SPARQL).
 # ---------------------------------------------------------------------------
 
 
@@ -5111,137 +4333,6 @@ def sparql_subquery(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Round-15 driver-window rotation (VERDICT r14 item 1).
-#
-# The driver grades the FIRST 50 registry entries. r14 verified all 50
-# in-window gates (CORRECTNESS_r14: 50/50 rows+schema+hash). The r15 IN
-# set is the full 27-gate stale queue named by the r14 verdict:
-#   * streaming_minhash_est + sparql_subquery — born r14 at the registry
-#     tail, mirror-green at both SFs but NEVER driver-verified; they
-#     lead the rotation exactly as their r13-born siblings led r14.
-#   * the 25 r13-OUT gates whose newest driver rows are r12 (stalest).
-# The OUT set is 27 gates that all hold fresh r14 driver rows: 19 of
-# the 20 r14-IN gates (multimodal_decode stays — the sole in-window
-# multimodal representative) plus 8 long-resident window gates whose
-# surfaces the incoming set covers.
-#
-# Per-gate surface coverage for the 27 OUT gates (each maps to a gate
-# that sits in the post-splice window):
-#   streaming_minhash_dedup (incremental LSH index, foreachBatch) ->
-#     streaming_minhash_est IN (same IncrementalMinHashIndex/add_batch
-#     path, est-verify mode); streaming_rollup_oracle IN carries the
-#     watermarked foreachBatch streaming surface.
-#   sparql_group_agg (SPARQL aggregates + HAVING) -> sparql_subquery IN
-#     (grouped subquery + MAX rides the same aggregate seam);
-#     sparql_star_filter IN keeps the SELECT*/FILTER surface.
-#   sparql_path_closure (p+/p* fixpoint paths) -> sparql_star_filter +
-#     sparql_subquery IN keep SPARQL; datalog_recursive_reach stays for
-#     the fixpoint-closure operator itself.
-#   ann_brute_force (exact cosine top-k) -> ann_sq8 IN (same top-k
-#     ranking, SQ8-quantized scan); semantic_dedup IN carries cosine.
-#   ann_ivf (cell-pruned ANN) -> ann_sq8 IN (quantized ANN family;
-#     incremental_vector_index stays for the IVF cell-partitioned
-#     index).
-#   ann_pq (PQ-codebook ANN) -> ann_sq8 IN (quantization family).
-#   kmeans_embeddings (broadcast-centroid assignment) -> semantic_dedup
-#     IN (cell/centroid bucketing); ann_sq8 IN (centroid codebooks).
-#   embedding_threshold_pairs (cosine threshold pairs) -> semantic_dedup
-#     IN (same tiled cosine-pair surface, cell-bucketed).
-#   contamination_scores (shingle-overlap scoring) ->
-#     bloom_decontaminate IN (same decontamination surface) +
-#     dedup_ngram_jaccard IN (shingle equi-join).
-#   dedup_exact (md5 groupBy dedup) -> dedup_ngram_jaccard IN (dedup
-#     family); dedup_minhash_lsh stays for hash-bucketed dedup.
-#   dedup_substring_spans (span/shingle trimming) -> dedup_span_trim IN
-#     (same span-trim surface).
-#   datalog_or_join (or-join branches) -> tpch_q7 stays (or-join over
-#     nation pairs); tpch_q13 stays (count over or-join).
-#   datalog_subquery (q-pred scalar subquery) -> sparql_subquery IN
-#     (the same compile.py q-pred relation-binding seam) +
-#     datalog_relation_in IN (:in relation binding); tpch_q11 stays
-#     scalar-subquery.
-#   events_asof (as-of join on events) -> bitemporal_store_asof stays
-#     (as-of semantics); events_sessionize IN carries the events table.
-#   events_json (JSON extraction on events) -> events_sessionize IN
-#     (events table); sql_surface stays (scalar/JSON fn surface).
-#   mix_corpora_weighted (weighted corpus mixing) -> source_cap_topn +
-#     epoch_shard_shuffle IN (same sampling/mixing family).
-#   stratified_sample (per-stratum hash sampling) -> source_cap_topn IN
-#     (per-source capping) + epoch_shard_shuffle IN (hash-deterministic
-#     shuffling).
-#   pack_sequences (greedy token packing) -> select_token_budget IN
-#     (same token-accounting cumsum surface).
-#   unigram_lm_quality (unigram NLL scoring) -> bigram_lm_quality IN
-#     (same textops LM-NLL surface, higher order).
-#   text_analysis (language-id/quality composite) -> text_c4_filter +
-#     text_clf_score IN (same textops column-expression family).
-#   text_pii_scrub (regexp_replace chain) -> text_c4_filter IN (regex
-#     textops); text_clf_score IN.
-#   sql_rollup (ROLLUP/CUBE/grouping sets) -> streaming_rollup_oracle
-#     IN (time-bucket rollup); agg_stats stays for the aggregate
-#     registry surface.
-#   bitemporal_history_bounded (bounded history scan) ->
-#     bitemporal_store_history IN (same store.history path, full-range
-#     variant); bitemporal_store_asof stays.
-#   tpch_q3 (top-n over 3-way join) -> tpch_q10 IN (same
-#     top-n-over-join shape); tpch_q21 stays top-k.
-#   tpch_q6 (range-pushdown scan agg) -> tpch_q14 + tpch_q19 IN (range
-#     + predicate pushdown scans).
-#   tpch_q9 (6-way join + agg) -> tpch_q8 IN (8-way join tree, the
-#     widest TPC-H join surface).
-#   tpch_q16 (anti-join + count-distinct) -> tpch_q21_anti IN
-#     (exists/not-exists anti-join); agg_stats stays count-distinct.
-# All 27 rotated-out gates keep running in bench and in the per-round
-# mirror (tools/check_oracles.py -> MIRROR_r{N}.json). r16 queue: the
-# 20 gates rotated out in r14 (newest rows r13) re-enter — from here
-# the cadence remains self-sustaining.
-# ---------------------------------------------------------------------------
-
-_R15_IN = [
-    "streaming_minhash_est", "sparql_subquery",
-    "tpch_q8", "tpch_q10", "tpch_q14", "tpch_q17", "tpch_q19",
-    "tpch_q20", "tpch_q21_anti", "select_token_budget",
-    "epoch_shard_shuffle", "source_cap_topn", "text_clf_score",
-    "bigram_lm_quality", "bloom_decontaminate", "ann_sq8",
-    "semantic_dedup", "text_c4_filter", "dedup_span_trim",
-    "events_sessionize", "agg_min_max_n", "bitemporal_store_history",
-    "sparql_star_filter", "streaming_rollup_oracle", "text_search_docs",
-    "dedup_ngram_jaccard", "datalog_relation_in",
-]
-_R15_OUT = [
-    "streaming_minhash_dedup", "sparql_group_agg", "ann_brute_force",
-    "ann_ivf", "contamination_scores", "datalog_or_join", "dedup_exact",
-    "embedding_threshold_pairs", "events_asof", "events_json",
-    "kmeans_embeddings", "mix_corpora_weighted", "sparql_path_closure",
-    "text_analysis", "text_pii_scrub", "tpch_q3", "tpch_q6", "tpch_q9",
-    "tpch_q16", "dedup_substring_spans", "bitemporal_history_bounded",
-    "sql_rollup", "unigram_lm_quality", "stratified_sample",
-    "pack_sequences", "ann_pq", "datalog_subquery",
-]
-_r15_names = list(QUERIES)
-for _n in _R15_IN + _R15_OUT:
-    assert _n in QUERIES, f"r15 rotation references unknown gate {_n!r}"
-for _n in _R15_OUT:
-    assert _r15_names.index(_n) < _WINDOW, (
-        f"r15 OUT gate {_n!r} is not inside the first-{_WINDOW} window")
-for _n in _R15_IN:
-    assert _r15_names.index(_n) >= _WINDOW, (
-        f"r15 IN gate {_n!r} already sits inside the first-{_WINDOW} window")
-assert len(_R15_IN) == len(_R15_OUT), "r15 rotation must preserve window size"
-_r15_keep = _WINDOW - len(_R15_OUT)
-_r15_order = [n for n in QUERIES if n not in _R15_IN and n not in _R15_OUT]
-assert sum(1 for n in _r15_order[:_r15_keep]
-           if _r15_names.index(n) < _WINDOW) == _r15_keep, (
-    "r15 retained prefix does not equal the surviving window gates")
-_r15_order = (_r15_order[:_r15_keep] + _R15_IN
-              + _r15_order[_r15_keep:] + _R15_OUT)
-assert sorted(_r15_order) == sorted(_r15_names), "r15 rotation lost gates"
-_r15_reordered = {n: QUERIES[n] for n in _r15_order}
-QUERIES.clear()
-QUERIES.update(_r15_reordered)
-
-
-# ---------------------------------------------------------------------------
 # SPARQL CONSTRUCT oracle gate (r15, VERDICT r14 item 3): CONSTRUCT
 # (sparql.py sparql_construct) was pytest-only — template instantiation
 # per solution, union + distinct, all cells stringified, and (r15) the
@@ -5250,8 +4341,7 @@ QUERIES.update(_r15_reordered)
 # (s, p, o) union in pure SQL — entity subjects stringify as the
 # catalog's _id (concat of the pkey, catalog.py PKEYS), template
 # predicates as the ':'-prefixed attr local names, objects via the same
-# string cast. Registered AFTER the r15 rotation splice -> registry
-# tail (mirror-gated now, driver row via the r16 rotation). The §16.2
+# string cast. The §16.2
 # NULL-omission branch is pinned by pytest (vcard OPTIONAL test) —
 # TPC-H columns are NULL-free, so this gate pins instantiation/union/
 # distinct/stringification.
@@ -5310,9 +4400,7 @@ def sparql_construct(spark, sf_dir):
 # (catalog.py PKEYS), which no other table's _id space can collide
 # with, so the description is exactly the lineitem attribute pivot —
 # the oracle rebuilds it as an 11-way UNION ALL with the same
-# stringification (doubles/timestamps cast to VARCHAR). Registered at
-# the registry tail (mirror-gated now, driver row via the r16
-# rotation).
+# stringification (doubles/timestamps cast to VARCHAR).
 # ---------------------------------------------------------------------------
 
 
@@ -5352,109 +4440,3 @@ def sparql_describe(spark, sf_dir):
         PREFIX t: <http://tpch/>
         DESCRIBE ?l WHERE { ?l t:l_orderkey ?k . FILTER (?k <= 32) }
     """)
-
-
-# ---------------------------------------------------------------------------
-# Round-16 driver-window rotation (VERDICT r15 "Next round" item 3 — the
-# standing cadence). The driver grades the FIRST 50 registry entries;
-# r15 verified all 50 in-window gates (CORRECTNESS_r15: 50/50
-# rows+schema+hash), so every current window gate holds a fresh r15 row.
-# The r16 IN set is exactly the queue the r14/r15 blocks promised: the
-# 20 gates rotated out in r14, whose newest driver rows are r13 — after
-# this splice no gate's newest driver row is older than r14.
-# The OUT set is 20 of the 27 r15-IN gates (all holding fresh r15 rows);
-# the 7 r15-IN gates staying keep their families' only in-window
-# representative (streaming_minhash_est, sparql_subquery,
-# select_token_budget, ann_sq8, semantic_dedup, dedup_ngram_jaccard,
-# datalog_relation_in).
-#
-# Per-gate surface coverage for the 20 OUT gates (each maps to gates
-# that sit in the post-splice window):
-#   tpch_q8 (8-way join tree) -> tpch_q5 IN (6-way join tree);
-#     tpch_q7 stays (multi-join or-join).
-#   tpch_q10 (top-n over join) -> window_topk IN (per-group top-n);
-#     tpch_q21 stays top-k limit.
-#   tpch_q14 (range-pushdown scan agg) -> tpch_q1 stays (range filter
-#     agg); tpch_q12 stays (range + IN predicates).
-#   tpch_q17 (avg scalar subquery) -> tpch_q2 IN (correlated min
-#     subquery); tpch_q11 stays scalar-subquery.
-#   tpch_q19 (multi-branch predicate pushdown) -> tpch_q12 stays;
-#     tpch_q22 IN (substring + anti predicates).
-#   tpch_q20 (nested exists subqueries) -> tpch_q2 IN (nested
-#     correlated subquery); tpch_q4 stays exists.
-#   tpch_q21_anti (not-exists anti-join) -> tpch_q22 IN (not-exists
-#     anti + substring); tpch_q4 stays exists/not-exists.
-#   select_token_budget STAYS; pack_sequences remains tail-resident —
-#     no OUT here (listed for the r17 queue note below).
-#   epoch_shard_shuffle (hash-deterministic shuffling) ->
-#     sample_hash_deterministic IN (same deterministic-hash sampling).
-#   source_cap_topn (per-source capping) -> mix_temperature IN
-#     (sampling.py corpus-mixing family); sample_hash_deterministic IN.
-#   text_clf_score (classifier textops) -> text_gopher_filter IN
-#     (heuristic textops composite); text_repetition IN.
-#   bigram_lm_quality (LM-NLL textops) -> dsir_weights IN (DSIR
-#     importance NLL, same textops NLL surface).
-#   bloom_decontaminate (bloom-bitset decontamination) ->
-#     decontaminate_ngram IN (same decontamination surface,
-#     shingle equi-join form).
-#   text_c4_filter (regex/heuristic filters) -> text_gopher_filter IN
-#     (same textops filter family); text_repetition IN.
-#   dedup_span_trim (span/shingle trimming) -> dedup_line_trim +
-#     dedup_chunks IN (same trim family); dedup_canonical IN.
-#   events_sessionize (events sessionization) -> events_rollup IN +
-#     asof_join_events IN (events table, window + as-of surfaces).
-#   agg_min_max_n (min/max/n aggregate registry) -> agg_stats stays
-#     (same aggregate registry surface).
-#   bitemporal_store_history (store.history full range) ->
-#     bitemporal_store_asof stays (store-level as-of); sql_temporal
-#     stays (temporal SQL surface).
-#   sparql_star_filter (SELECT*/FILTER) -> sparql_snowflake_union IN
-#     (SPARQL star joins + UNION); sparql_subquery stays.
-#   streaming_rollup_oracle (stateful streaming rollup) ->
-#     streaming_dedup_oracle IN (same stateful foreachBatch streaming
-#     oracle family); events_rollup IN (time-bucket rollup).
-#   text_search_docs (text search scoring) -> lucene_multi_field stays
-#     (inverted-index multi-field search).
-# All 20 rotated-out gates keep running in bench and in the per-round
-# mirror (tools/check_oracles.py -> MIRROR_r{N}.json). r17 queue: the
-# 27 gates rotated out in r15 (newest driver rows r14) re-enter —
-# the cadence remains self-sustaining.
-# ---------------------------------------------------------------------------
-
-_R16_IN = [
-    "asof_join_events", "multimodal_features", "embedding_near_dup_lsh",
-    "decontaminate_ngram", "mix_temperature", "sparql_snowflake_union",
-    "streaming_dedup_oracle", "text_repetition", "text_gopher_filter",
-    "dedup_canonical", "dedup_chunks", "dedup_line_trim",
-    "tpch_q2", "tpch_q5", "tpch_q15", "tpch_q22", "window_topk",
-    "sample_hash_deterministic", "dsir_weights", "events_rollup",
-]
-_R16_OUT = [
-    "tpch_q8", "tpch_q10", "tpch_q14", "tpch_q17", "tpch_q19",
-    "tpch_q20", "tpch_q21_anti", "epoch_shard_shuffle",
-    "source_cap_topn", "text_clf_score", "bigram_lm_quality",
-    "bloom_decontaminate", "text_c4_filter", "dedup_span_trim",
-    "events_sessionize", "agg_min_max_n", "bitemporal_store_history",
-    "sparql_star_filter", "streaming_rollup_oracle", "text_search_docs",
-]
-_r16_names = list(QUERIES)
-for _n in _R16_IN + _R16_OUT:
-    assert _n in QUERIES, f"r16 rotation references unknown gate {_n!r}"
-for _n in _R16_OUT:
-    assert _r16_names.index(_n) < _WINDOW, (
-        f"r16 OUT gate {_n!r} is not inside the first-{_WINDOW} window")
-for _n in _R16_IN:
-    assert _r16_names.index(_n) >= _WINDOW, (
-        f"r16 IN gate {_n!r} already sits inside the first-{_WINDOW} window")
-assert len(_R16_IN) == len(_R16_OUT), "r16 rotation must preserve window size"
-_r16_keep = _WINDOW - len(_R16_OUT)
-_r16_order = [n for n in QUERIES if n not in _R16_IN and n not in _R16_OUT]
-assert sum(1 for n in _r16_order[:_r16_keep]
-           if _r16_names.index(n) < _WINDOW) == _r16_keep, (
-    "r16 retained prefix does not equal the surviving window gates")
-_r16_order = (_r16_order[:_r16_keep] + _R16_IN
-              + _r16_order[_r16_keep:] + _R16_OUT)
-assert sorted(_r16_order) == sorted(_r16_names), "r16 rotation lost gates"
-_r16_reordered = {n: QUERIES[n] for n in _r16_order}
-QUERIES.clear()
-QUERIES.update(_r16_reordered)

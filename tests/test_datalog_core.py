@@ -465,7 +465,7 @@ def test_q21_plan_shape_locked(spark):
     re-read as cached in-memory scans — never the 19-scan plan where
     every or-join/not-join branch recompiled the base join."""
     from crux_spark.plans import plan_facts
-    from crux_spark.queries import QUERIES
+    from gates import QUERIES
 
     df = QUERIES["tpch_q21"](spark, "/root/testdata/sf0.001")
     facts = plan_facts(df)

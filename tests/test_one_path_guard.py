@@ -1,8 +1,7 @@
 """Source guards for the library's single-path design:
 
 - no ``CRUX_SPARK_*`` environment switch changes library behaviour; the
-  only name read is the deployment path ``CRUX_SPARK_BLOB_DIR``
-  (``queries.py``, the legacy gate registry, is exempt);
+  only name read is the deployment path ``CRUX_SPARK_BLOB_DIR``;
 - Catalyst's size estimate is read in one place, ``_conf.py``.
 """
 
@@ -21,8 +20,6 @@ def _sources():
 def test_no_crux_spark_behaviour_switches():
     found = {}
     for path in _sources():
-        if path.relative_to(PKG).as_posix() == "queries.py":
-            continue
         names = set(re.findall(r"CRUX_SPARK_[A-Z0-9_]+", path.read_text()))
         if names - ALLOWED_ENV:
             found[path.relative_to(PKG).as_posix()] = sorted(names - ALLOWED_ENV)

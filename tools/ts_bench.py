@@ -25,7 +25,7 @@ over all rows for history rollups), so the suite is a correctness gate
 as well as a timing.
 
 Usage: python tools/ts_bench.py            (standalone, prints JSON)
-       run_ts_suites(spark, tmpdir)        (from bench.py)
+       run_ts_suites(spark, tmpdir)        (from Python)
 """
 
 from __future__ import annotations
@@ -148,8 +148,8 @@ def _rows(df):
 
 
 def _timed_rows(df):
-    """(rows, seconds): min-of-2 wall, same policy as bench.py's gate
-    loop — one contended sample shouldn't misprice a sub-second query."""
+    """(rows, seconds): min-of-2 wall — one contended sample shouldn't
+    misprice a sub-second query."""
     t0 = time.perf_counter()
     rows = _rows(df)
     dt = time.perf_counter() - t0
@@ -383,7 +383,7 @@ def run_devices_suite(spark, datadir: str) -> dict[str, float]:
     )
     assert got_rows == exp, (got_rows[:3], exp[:3])
     # release the store's pinned localCheckpoint blocks — they are dead
-    # after the suite and would squeeze later bench sections
+    # after the suite and would squeeze whatever runs next
     store.versions.unpersist(blocking=False)
     return timings
 

@@ -38,26 +38,11 @@ def main() -> None:
     n_users = int(sys.argv[1]) if len(sys.argv) > 1 else 32000
     mode = sys.argv[2] if len(sys.argv) > 2 else "rows"
 
-    # environment fingerprint recorded in the artifact (round-process
-    # rule: every standing scale record carries its box_probe)
-    import importlib.util as _ilu
-
-    _spec = _ilu.spec_from_file_location(
-        "bench",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "bench.py",
-        ),
-    )
-    _bench = _ilu.module_from_spec(_spec)
-    _spec.loader.exec_module(_bench)
-    global _probe
-    _probe = _bench._box_probe()
-
     from test_watdiv import _IDS, PREFIXES, TEMPLATES  # noqa: E402
 
     from crux_spark import Catalog, get_spark
     from crux_spark.datalog import q
+    from crux_spark.plans import plan_facts
     from crux_spark.sources.loaders import pivot_triples
     from crux_spark.sources.sparql import sparql_to_datalog
     from crux_spark.sources.watdiv import watdiv_df
@@ -77,16 +62,12 @@ def main() -> None:
         file=sys.stderr,
     )
 
-    # bench.py's plan fingerprinter, so a future round can decide
-    # plan-change vs environment-noise for WatDiv from the artifact
-    # alone — the r9 lesson: a 3x in-suite wall swing on C1-0's hand
-    # twin was only attributable to driver-collect variance after
-    # ad-hoc isolated reruns, because no fingerprint was on record
-    import importlib.util as _ilu
-
-    _spec = _ilu.spec_from_file_location("bench", "/root/repo/bench.py")
-    _bench = _ilu.module_from_spec(_spec)
-    _spec.loader.exec_module(_bench)
+    def plan_of(df):
+        """Join and shuffle counts of the executed plan, so a wall-clock
+        swing can be told apart from a plan change in the record."""
+        facts = plan_facts(df)
+        return {k: facts[k] for k in
+                ("broadcast_joins", "sort_merge_joins", "shuffle_exchanges")}
 
     results = {}
     disagreements = []
@@ -140,18 +121,18 @@ def main() -> None:
             "agree": agree,
             "sparql_s": round(dt_sparql, 2),
             "hand_s": round(dt_hand, 2),
-            "sparql_plan": _bench._fingerprint(sdf),
-            "hand_plan": _bench._fingerprint(hdf),
+            "sparql_plan": plan_of(sdf),
+            "hand_plan": plan_of(hdf),
         }
         print(
             f"# {qid}: rows={n_rows} agree={agree} "
             f"sparql={dt_sparql:.2f}s hand={dt_hand:.2f}s",
             file=sys.stderr,
         )
-        # unpin dead per-query checkpoint blocks between instances
-        # (bench.py's cleanup): without this, closure checkpoints
-        # accumulate across 59 instances and the heavyweights at the
-        # tail run under memory pressure — observed as a 6x wall blowup
+        # unpin dead per-query checkpoint blocks between instances:
+        # without this, closure checkpoints accumulate across 59
+        # instances and the heavyweights at the tail run under memory
+        # pressure — observed as a 6x wall blowup
         # on a re-execution of the IDENTICAL plan
         del sdf, hdf
         import gc
@@ -172,7 +153,6 @@ def main() -> None:
         "disagreements": disagreements,
         "over_30s": over_bar,
         "total_sparql_s": round(sum(r["sparql_s"] for r in results.values()), 1),
-        "box_probe": _probe,
         "results": results,
     }
     path = os.path.join(
