@@ -193,12 +193,8 @@ class Catalog:
         # a new table invalidates any cached/materialized EAV view — the
         # union no longer covers the catalog (re-materialize to opt back
         # into the single-scan path) — and the compiled-plan cache.
-        # An AUTO-materialized location is ours to reclaim: without this,
-        # every registration past the threshold would leave the previous
-        # full EAV rewrite stranded on disk.
         self._eav = None
         self._eav_path = None
-        self._drop_auto_eav()
         self._plan_cache = {}
         self._table_attrs[name] = []
         for field in df.schema.fields:
@@ -399,111 +395,28 @@ class Catalog:
                 f"unknown attribute {attr!r}; known: {sorted(self._attrs)[:20]}..."
             ) from None
 
-    # above this many registered tables, eav_view() materializes itself
-    # to one attribute-partitioned parquet table instead of handing every
-    # var-attr clause an N-way union (a silent N-fold scan); set to None
-    # on an instance to opt out, or call materialize_eav() explicitly for
-    # full control of the path
-    EAV_AUTO_MATERIALIZE_TABLES = 8
-
     def eav_view(self) -> DataFrame:
         """Union of the typed EAV triples views of every registered table
         (SURVEY.md §1.5's `triples` view) — the fallback scan for
         variable-attribute Datalog patterns ``[?e ?a ?v]``. Values bind in
         stringified form; typed comparisons should use fixed attributes.
 
-        Catalogs with more than EAV_AUTO_MATERIALIZE_TABLES tables
-        auto-materialize (see :meth:`materialize_eav`): the per-clause
-        N-table union is fine for a handful of tables but is N full scans
-        per clause on a wide catalog."""
+        The union is lazy and writes nothing: each var-attr clause scans
+        every table. After :meth:`materialize_eav` it is the one
+        attribute-partitioned parquet table instead."""
         if getattr(self, "_eav", None) is None:
-            from crux_spark.sources.loaders import triples_view
-
-            self._materialize_all()
-            thresh = getattr(self, "EAV_AUTO_MATERIALIZE_TABLES", None)
-            if (
-                thresh is not None
-                and len(self._dfs) > thresh
-                and getattr(self, "_eav_path", None) is None
-            ):
-                # two-phase deferral: dirs already queued at the PREVIOUS
-                # materialization are reclaimed now; dirs retired since
-                # then graduate to the reclaim queue and survive until
-                # the next materialization (frames returned to callers
-                # get a full invalidation cycle to be consumed).
-                self.reclaim_stale_eav(getattr(self, "_reclaimable", []))
-                self._reclaimable = getattr(self, "_stale_eav_dirs", [])
-                self._stale_eav_dirs = []
-                self.materialize_eav(self._auto_eav_path())
-                return self._eav
-            views = [triples_view(self._dfs[t]) for t in self._dfs]
-            out = views[0]
-            for v in views[1:]:
-                out = out.unionByName(v)
-            self._eav = out
+            self._eav = self._eav_union()
         return self._eav
 
-    def _auto_eav_path(self) -> str:
-        """Location for the AUTOMATIC EAV materialization (unique per
-        catalog — two catalogs sharing one path would clobber each
-        other). Local-mode sessions may use a driver-local tempdir; on a
-        cluster, executors writing file:/tmp/... would scatter
-        partitions across their own local disks and the driver-side
-        read-back would be silently partial — there the shared
-        spark.sql.warehouse.dir (HDFS/object store in any real
-        deployment) hosts it instead. The dir is tracked and reclaimed
-        on invalidation (see :meth:`_drop_auto_eav`)."""
-        master = self.spark.conf.get("spark.master", "local")
-        if master.startswith("local"):
-            import tempfile
+    def _eav_union(self) -> DataFrame:
+        from crux_spark.sources.loaders import triples_view
 
-            d = tempfile.mkdtemp(prefix="crux_eav_auto_")
-        else:
-            import uuid
-
-            wh = self.spark.conf.get(
-                "spark.sql.warehouse.dir", "spark-warehouse"
-            )
-            d = wh.rstrip("/") + f"/crux_eav_auto_{uuid.uuid4().hex}"
-        self._eav_auto_dir = d
-        return d
-
-    def _drop_auto_eav(self) -> None:
-        """Retire a superseded auto-materialization. The dir is NOT
-        deleted immediately: lazy DataFrames already returned to callers
-        may still hold the path in their lineage, and deleting under
-        them turns a late .collect() into FileNotFoundException. Instead
-        it joins a deferred list reclaimed one generation later — when
-        the NEXT auto-materialization is written (by which point frames
-        built against the previous-previous dir are a full invalidation
-        cycle old) or explicitly via :meth:`reclaim_stale_eav`. Only
-        dirs WE created are tracked — a user-chosen
-        materialize_eav(path) is never deleted."""
-        d = getattr(self, "_eav_auto_dir", None)
-        if not d:
-            return
-        self._eav_auto_dir = None
-        self._stale_eav_dirs = getattr(self, "_stale_eav_dirs", [])
-        self._stale_eav_dirs.append(d)
-
-    def reclaim_stale_eav(self, dirs: list | None = None) -> None:
-        """Best-effort delete of retired auto-EAV dirs via the Hadoop
-        FileSystem API (handles file:, hdfs:, s3a: alike). With no
-        argument, reclaims EVERYTHING retired so far — call it when all
-        previously returned query results have been consumed."""
-        if dirs is None:
-            dirs = (getattr(self, "_stale_eav_dirs", [])
-                    + getattr(self, "_reclaimable", []))
-            self._stale_eav_dirs = []
-            self._reclaimable = []
-        for d in dirs:
-            try:
-                jvm = self.spark._jvm
-                p = jvm.org.apache.hadoop.fs.Path(d)
-                fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
-                fs.delete(p, True)
-            except Exception:  # pragma: no cover - cleanup is best-effort
-                pass
+        self._materialize_all()
+        views = [triples_view(self._dfs[t]) for t in self._dfs]
+        out = views[0]
+        for v in views[1:]:
+            out = out.unionByName(v)
+        return out
 
     def materialize_eav(self, path: str | None = None) -> str:
         """Write the catalog-wide EAV view ONCE to parquet, partitioned
@@ -518,7 +431,9 @@ class Catalog:
         attribute-partition pruning (a fixed-``a`` filter prunes to one
         partition directory) and N full scans. The reference stores EAV
         natively in its index (index_store.clj AVE/AEV), so var-attr is
-        free there; this is the opt-in Spark equivalent.
+        free there; this is the Spark equivalent. It is never taken
+        implicitly: the caller owns the path and its lifetime, and a
+        table registered later drops the catalog back to the union.
 
         Schema note: the EAV view gained typed slots in r12 (v_char /
         v_bigint / v_time / v_ldt / v_inst); a parquet table written by
@@ -535,13 +450,7 @@ class Catalog:
         path = path or _os.path.join("spark-warehouse", "crux_eav")
         # build the union fresh (not the cached self._eav, which may
         # already BE a materialized read from a prior catalog)
-        from crux_spark.sources.loaders import triples_view
-
-        self._materialize_all()
-        views = [triples_view(self._dfs[t]) for t in self._dfs]
-        out = views[0]
-        for v in views[1:]:
-            out = out.unionByName(v)
+        out = self._eav_union()
         # REBALANCE on the partition column before the partitionBy write
         # (r15 optimization, guide §6 small-files): without it every
         # union branch's tasks each open a file per attribute they
@@ -550,24 +459,9 @@ class Catalog:
         # split a skewed attribute across several writers, so output
         # file count tracks data size instead of plan width. Measured
         # 8.2s -> 3.6s on a 10-table catalog union at sf0.1.
-        # r16: size-aware — a catalog whose whole EAV union fits in ONE
-        # scan split gains nothing from the AQE rebalance round (an
-        # extra shuffle + planning): coalesce(1) writes the same
-        # one-file-per-attribute layout ~0.2–2s faster (A/B on an
-        # 11-table 5-row catalog). Unknown/huge estimates keep the
-        # rebalance (the at-scale default).
-        from crux_spark._conf import _plan_size_estimate, parse_byte_size
-
-        est = _plan_size_estimate(out)
-        max_pb = parse_byte_size(
-            self.spark.conf.get("spark.sql.files.maxPartitionBytes", None),
-            128 << 20,
-        )
-        if est is not None and est < max_pb:
-            writer = out.coalesce(1)
-        else:
-            writer = out.hint("rebalance", "a")
-        writer.write.mode("overwrite").partitionBy("a").parquet(path)
+        out.hint("rebalance", "a").write.mode("overwrite").partitionBy(
+            "a"
+        ).parquet(path)
         self._eav = self.spark.read.parquet(path)
         self._eav_path = path
         # compiled plans built on the union view are now stale

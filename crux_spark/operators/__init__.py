@@ -1,5 +1,5 @@
 """Large-scale data-pipeline operators (dedup, similarity search, text
-analysis, multimodal plumbing) built on the same snapshot abstraction as
+analysis, graph, sampling) built on the same snapshot abstraction as
 the query engine. These extend the reference's operator inventory
 (SURVEY.md §2) with the operations a 100 TB training-data pipeline needs.
 """

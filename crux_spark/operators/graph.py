@@ -36,8 +36,7 @@ def connected_components(
     Small edge sets (<= driver_limit_edges, probed with a bounded
     limit) short-circuit to a driver-side union-find: the iterative
     path costs ~3 Spark jobs per round, which dwarfs the work when the
-    similarity graph is thousands of pairs — the same bounded-driver
-    pattern as similarity's broadcast path. Pass driver_limit_edges=0
+    similarity graph is thousands of pairs. Pass driver_limit_edges=0
     to force the distributed path.
 
     ``stats``, if given, is filled with {'path': 'driver'|'distributed',

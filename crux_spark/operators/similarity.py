@@ -319,42 +319,21 @@ def cosine_threshold_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     nblocks: int = 8,
-    strategy: str = "auto",
-    broadcast_limit_rows: int = 65536,
 ) -> DataFrame:
     """Exact all-pairs cosine >= threshold. Returns (id_a, id_b, sim) with
     id_a < id_b.
 
-    strategy="auto" (default): count the corpus and take the broadcast
-    path when it is provably small (<= broadcast_limit_rows), else the
-    distributed block path — the same adaptive posture as Spark's own
-    autoBroadcastJoinThreshold. The driver collect is bounded by the
-    explicit limit (64k rows x 64 dims x 8B = 32 MB), so the 100 TB
-    failure mode of an unbounded collect cannot occur; the size probe is
-    a `limit(N+1).count()` — it short-circuits after N+1 rows instead of
-    scanning a possibly-expensive upstream plan to completion.
-
-    strategy="block": distributed block-matrix product. Rows hash
-    into `nblocks` blocks; the upper triangle of block pairs (B*(B+1)/2
-    tasks) is cogrouped and each task does ONE numpy matmul between its two
-    blocks. Nothing is collected to the driver; shuffle volume is ~B/2
-    copies of the corpus, compute is the honest O(n^2) of an exact
-    all-pairs op spread over B*(B+1)/2 independent tasks. On a real
-    cluster set nblocks ~ sqrt(2 * total_cores) so every core gets a tile.
-    (Exact all-pairs is inherently quadratic — beyond ~10^7 rows use
-    `lsh_bucket_pairs` / IVF cells for candidates and keep this as the
-    within-bucket verify.)
-
-    strategy="broadcast": single narrow pass, each Arrow batch matmuls
-    against a driver-collected broadcast corpus matrix. Only valid when the
-    corpus fits driver/executor memory — explicit opt-in for small data.
+    Distributed block-matrix product. Rows hash into `nblocks` blocks; the
+    upper triangle of block pairs (B*(B+1)/2 tasks) is cogrouped and each
+    task does ONE numpy matmul between its two blocks. Nothing is collected
+    to the driver and no size probe runs, so the same plan works at every
+    corpus size; shuffle volume is ~B/2 copies of the corpus, compute is
+    the honest O(n^2) of an exact all-pairs op spread over B*(B+1)/2
+    independent tasks. On a real cluster set nblocks ~ sqrt(2 * total_cores)
+    so every core gets a tile. (Exact all-pairs is inherently quadratic —
+    beyond ~10^7 rows use `lsh_bucket_pairs` / IVF cells for candidates and
+    keep this as the within-bucket verify.)
     """
-    if strategy == "auto":
-        probe = corpus.limit(broadcast_limit_rows + 1).count()
-        strategy = "broadcast" if probe <= broadcast_limit_rows else "block"
-    if strategy == "broadcast":
-        return _cosine_pairs_broadcast(corpus, threshold, id_col, vec_col)
-
     spark = corpus.sparkSession
     base = corpus.select(
         F.col(id_col).alias("id"),
@@ -405,42 +384,6 @@ def cosine_threshold_pairs(
         left.groupBy("bi", "bj")
         .cogroup(right.groupBy("bi", "bj"))
         .applyInPandas(tile_matmul, "id_a long, id_b long, sim double")
-    )
-
-
-def _cosine_pairs_broadcast(
-    corpus: DataFrame, threshold: float, id_col: str, vec_col: str
-) -> DataFrame:
-    """Small-corpus exact pairs: broadcast the full normalized matrix, one
-    matmul per Arrow batch. Driver-collects the corpus — opt-in only."""
-    spark = corpus.sparkSession
-    rows = corpus.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    M = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-    Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_m = spark.sparkContext.broadcast(Mn)
-
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            A = np.stack(pdf[vec_col].map(np.asarray).to_numpy()).astype(np.float64)
-            An = A / np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-12)
-            sims = An @ b_m.value.T
-            aid = pdf[id_col].to_numpy()
-            mask = (sims >= threshold) & (aid[:, None] < b_ids.value[None, :])
-            ii, jj = np.nonzero(mask)
-            yield pd.DataFrame(
-                {
-                    "id_a": aid[ii],
-                    "id_b": b_ids.value[jj],
-                    "sim": np.round(sims[ii, jj], 6),
-                }
-            )
-
-    return corpus.select(id_col, vec_col).mapInPandas(
-        run, "id_a long, id_b long, sim double"
     )
 
 
@@ -573,10 +516,10 @@ def lsh_near_dup_pairs(
 
     This is the 100 TB default for near-dup detection: the self-join is
     on (band, bucket) keys — shuffle volume is b copies of (id, sig),
-    candidate verify touches only colliding pairs, and nothing ever
-    collects or broadcasts the corpus (contrast cosine_threshold_pairs,
-    whose exact all-pairs cost this op avoids). Deterministic seeded
-    planes, so results are reproducible run to run."""
+    candidate verify touches only colliding pairs (contrast
+    cosine_threshold_pairs, whose block product scores all n^2 pairs),
+    and nothing ever collects or broadcasts the corpus. Deterministic
+    seeded planes, so results are reproducible run to run."""
     if planes_per_band is None:
         planes_per_band, auto_bands = _lsh_params(
             corpus.count(), threshold, miss_prob

@@ -900,12 +900,11 @@ def agg_stats(spark, sf_dir):
 
 
 # ===========================================================================
-# LLM-pipeline operators (dedup / similarity / text analysis / multimodal)
+# LLM-pipeline operators (dedup / similarity / text analysis)
 # ===========================================================================
 
 from crux_spark.operators import dedup as _dedup
 from crux_spark.operators import graph as _graph
-from crux_spark.operators import multimodal as _mm
 from crux_spark.operators import sampling as _samp
 from crux_spark.operators import similarity as _sim
 from crux_spark.operators import textops as _text
@@ -1212,68 +1211,22 @@ def ann_pq(spark, sf_dir):
 )
 def embedding_threshold_pairs(spark, sf_dir):
     """Embedding-cosine near-dup pairs, exact (SURVEY 'embedding-cosine
-    near-dup'): all-pairs cosine >= threshold, block-matrix mapInPandas
-    (one numpy matmul per Arrow batch — no per-pair expression eval). At
-    100 TB the LSH bucket join generates candidates and this runs as the
-    within-bucket verify."""
+    near-dup'): all-pairs cosine >= threshold, distributed block-matrix
+    product (one numpy matmul per cogrouped tile — no per-pair expression
+    eval). At 100 TB the LSH bucket join generates candidates and this
+    runs as the within-bucket verify."""
     cat = catalog_for(spark, sf_dir)
     emb = cat.table("embeddings")
     return _sim.cosine_threshold_pairs(emb, threshold=0.45)
 
 
-@register(
-    "multimodal_features",
-    """
-    SELECT doc_id AS media_id, CAST(octet_length(encode(text)) AS BIGINT) AS byte_len
-    FROM documents
-    """,
-)
-def multimodal_features(spark, sf_dir):
-    """Binary-column pipeline: encode text as blobs, Arrow-batched feature
-    extraction via mapInPandas (decode step stubbed — container has no
-    codecs; plumbing is real). Oracle checks the byte-length column; the
-    stub features are asserted deterministic in pytest."""
-    cat = catalog_for(spark, sf_dir)
-    media = _mm.documents_as_media(cat.table("documents"))
-    return _mm.extract_features(media).select("media_id", "byte_len")
-
-
 # ===========================================================================
-# Batch 3: as-of join, or-join, windows, top-N aggs, sessionization, JSON,
+# Batch 3: or-join, windows, top-N aggs, sessionization, JSON,
 # SQL surface, text search
 # ===========================================================================
 
 from crux_spark.functions.text_search import build_text_index as _bti
 from crux_spark.functions.text_search import text_search as _ts
-from crux_spark.operators.asof_join import asof_join as _asof
-
-
-@register(
-    "asof_join_events",
-    """
-    SELECT p.event_id, p.user_id, round(p.value, 2) AS purchase_value,
-           c.ts AS asof_time
-    FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-    ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-      ON p.user_id = c.user_id AND c.ts <= p.ts
-    """,
-)
-def asof_join_events(spark, sf_dir):
-    """As-of join (window carry-forward, single shuffle): each purchase
-    paired with the user's latest prior click."""
-    cat = catalog_for(spark, sf_dir)
-    ev = cat.table("events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select("user_id", "ts")
-    out = _asof(purchases, clicks, "user_id", "ts", "ts", value_cols=[])
-    return out.select(
-        "event_id",
-        "user_id",
-        F.round("value", 2).alias("purchase_value"),
-        "asof_time",
-    )
 
 
 @register(
@@ -3776,56 +3729,6 @@ def streaming_dedup_oracle(spark, sf_dir):
 
 
 @register(
-    "multimodal_decode",
-    r"""
-    SELECT doc_id,
-           CAST(3 + doc_id % 13 AS BIGINT) AS width,
-           CAST(2 + doc_id % 7 AS BIGINT) AS height,
-           CAST((2 + doc_id % 13) + (1 + doc_id % 7) AS BIGINT) AS mean2_r,
-           CAST(2 * (2 + doc_id % 13) + (1 + doc_id % 7) AS BIGINT) AS mean2_g,
-           CAST(510 - (2 + doc_id % 13) - (1 + doc_id % 7) AS BIGINT) AS mean2_b,
-           CAST(8000 AS BIGINT) AS sample_rate,
-           round(sqrt((60.0 * (1 + doc_id % 5)
-                       * (1000 + 500 * (doc_id % 4))
-                       * (1000 + 500 * (doc_id % 4)) / 1073741824.0)
-                      / (9.0 * (1 + doc_id % 5))), 6) AS rms,
-           round(4 * (1000 + 500 * (doc_id % 4)) / 32768.0, 6) AS peak
-    FROM documents
-    """,
-)
-def multimodal_decode(spark, sf_dir):
-    """VALUE-CHECKED multimodal decode (r9 verdict #3: the
-    multimodal_features gate oracles byte_len only): deterministic PPM +
-    PCM-WAV blobs synthesized per doc_id, pushed through the REAL codec
-    paths — media_metadata (P6 header parse -> width/height; RIFF chunk
-    walk -> sample_rate) and extract_features (pixel decode -> channel
-    means; 16-bit PCM decode -> rms/peak) — while DuckDB computes every
-    decoded value closed-form from doc_id alone. Channel means compare
-    as exact integers (mean*510 is integral by construction); rms/peak
-    compare at the codecs' round-6 (both engines evaluate the identical
-    exact-dyadic expression — see synthetic_verification_media). Four
-    map-only Arrow passes + doc_id equi-joins; verification-harness
-    shape, not a hot path."""
-    cat = catalog_for(spark, sf_dir)
-    docs = cat.table("documents")
-    # r16 (guide §4): the four-pass + three-join form re-synthesized the
-    # blobs in every pass and crossed the Python boundary eight times;
-    # decode_verification_media runs the SAME per-blob codec functions
-    # (hoisted _meta_one/_features_one) once per doc in ONE Arrow pass,
-    # and the identical rounding expressions below keep every output
-    # value byte-equal (oracle-verified).
-    fused = _mm.decode_verification_media(docs)
-    return fused.select(
-        F.col("media_id").alias("doc_id"),
-        "width", "height",
-        F.round(F.col("f0") * 510, 0).cast("long").alias("mean2_r"),
-        F.round(F.col("f1") * 510, 0).cast("long").alias("mean2_g"),
-        F.round(F.col("f2") * 510, 0).cast("long").alias("mean2_b"),
-        "sample_rate", "rms", "peak",
-    )
-
-
-@register(
     "datalog_mixed_type_order",
     r"""
     WITH ks AS (SELECT r_regionkey AS k FROM region),
@@ -3923,9 +3826,9 @@ def datalog_mixed_type_order(spark, sf_dir):
     [(< ?v 1000...0N)] bigints only, [(< ?v #time 12:00)] localtimes
     only. Values derive from the 5-row region table so both engines see
     identical data at every SF. Scale: the EAV union is 11 five-row
-    scans (auto-materialized past 8 tables to ONE attribute-partitioned
-    scan); order-by rides the __typed_ord struct column — a columnar
-    sort key, no UDFs."""
+    scans (the lazy union of every table; nothing is written);
+    order-by rides the __typed_ord struct column — a columnar sort key,
+    no UDFs."""
     import datetime as _dt
     from decimal import Decimal as _Dec
 

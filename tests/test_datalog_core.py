@@ -520,14 +520,15 @@ def test_materialize_eav_single_scan(catalog, tmp_path):
     ).count()
 
 
-def test_eav_auto_materializes_past_table_threshold(spark):
-    """A catalog past EAV_AUTO_MATERIALIZE_TABLES tables materializes its
-    EAV view on first use WITHOUT an explicit materialize_eav() call —
-    the default N-way union is a silent N-fold scan per var-attr clause
-    on a wide catalog (r10 verdict #5). Opt-out per instance keeps the
-    lazy union."""
+def test_wide_catalog_eav_union_writes_nothing(spark, tmp_path):
+    """A var-attr query on a 10-table catalog scans the lazy union of
+    the tables' triples views: it writes no parquet and leaves no
+    directory behind. An explicit materialize_eav() on a twin catalog
+    answers identically."""
+    import os
+    import tempfile
+
     from crux_spark.catalog import Catalog
-    from crux_spark.datalog import q
 
     def build(n):
         cat = Catalog(spark)
@@ -542,35 +543,29 @@ def test_eav_auto_materializes_past_table_threshold(spark):
             )
         return cat
 
+    def auto_dirs():
+        return {
+            d for d in os.listdir(tempfile.gettempdir())
+            if d.startswith("crux_eav_auto_")
+        }
+
     query = {
         "find": ["?e", "?v"],
         "keys": ["e", "v"],
         "where": [["?e", "?a", "?v"], [["=", "?a", ":score"]]],
     }
 
+    before = auto_dirs()
     cat = build(10)
-    df = q(cat, query)
-    assert cat._eav_path is not None  # auto-materialized, no explicit call
-    final = (
-        df._jdf.queryExecution().executedPlan().toString()
-        .split("== Initial Plan ==")[0]
-    )
-    assert final.count("FileScan parquet") == 1, final
-    assert df.count() == 30
+    got = {tuple(r) for r in q(cat, query).collect()}
+    assert cat._eav_path is None
+    assert auto_dirs() - before == set()
+    assert len(got) == 30
 
-    # opt-out: the union path stays and answers identically
-    cat2 = build(10)
-    cat2.EAV_AUTO_MATERIALIZE_TABLES = None
-    df2 = q(cat2, query)
-    assert cat2._eav_path is None
-    assert {tuple(r) for r in df2.collect()} == {
-        tuple(r) for r in df.collect()
-    }
-
-    # at-or-under the threshold: no materialization write happens
-    small = build(8)
-    q(small, query).count()
-    assert small._eav_path is None
+    twin = build(10)
+    path = str(tmp_path / "eav")
+    assert twin.materialize_eav(path) == path
+    assert {tuple(r) for r in q(twin, query).collect()} == got
 
 
 def test_or_branch_literal_merge(catalog):
@@ -1199,50 +1194,3 @@ def test_eav_full_spectrum_order_property(spark):
         want = [e for _, _, e in sorted(
             expected, key=lambda t: (t[0], t[1]))]
         assert got == want, f"seed {seed}"
-
-
-def test_auto_eav_deletion_is_deferred(spark):
-    """r12 advice: lazy DataFrames returned to callers may still
-    reference a superseded auto-EAV dir — registering a new table must
-    NOT delete it out from under them. The dir is retired to a deferred
-    queue (reclaimed one materialization cycle later, or explicitly via
-    reclaim_stale_eav)."""
-    import os
-
-    from crux_spark.catalog import Catalog
-    from crux_spark.datalog import q
-
-    cat = Catalog(spark)
-    for i in range(10):
-        cat.add_documents(
-            f"t{i}",
-            spark.range(3).select(
-                F.concat(F.lit(f"e{i}_"), F.col("id")).alias("id"),
-                (F.col("id") + i * 10).alias("score"),
-            ),
-            id_col="id",
-        )
-    query = {
-        "find": ["?e", "?v"],
-        "keys": ["e", "v"],
-        "where": [["?e", "?a", "?v"], [["=", "?a", ":score"]]],
-    }
-    df_old = q(cat, query)  # triggers auto-materialization
-    old_dir = cat._eav_auto_dir
-    assert old_dir and os.path.exists(old_dir)
-
-    # registering a new table retires the dir but must not delete it
-    cat.add_documents(
-        "t_extra",
-        spark.range(2).select(
-            F.concat(F.lit("x"), F.col("id")).alias("id"),
-            F.col("id").alias("score"),
-        ),
-        id_col="id",
-    )
-    assert os.path.exists(old_dir)
-    assert df_old.count() == 30  # the lazy frame still collects
-
-    # explicit reclaim removes it
-    cat.reclaim_stale_eav()
-    assert not os.path.exists(old_dir)

@@ -2,7 +2,9 @@
 
 - no ``CRUX_SPARK_*`` environment switch changes library behaviour; the
   only name read is the deployment path ``CRUX_SPARK_BLOB_DIR``;
-- Catalyst's size estimate is read in one place, ``_conf.py``.
+- Catalyst's size estimate is read in one place, ``_conf.py``;
+- no operator picks its algorithm by a row-count probe or by a
+  threshold an instance can override.
 """
 
 import pathlib
@@ -11,6 +13,14 @@ import re
 PKG = pathlib.Path(__file__).resolve().parent.parent / "crux_spark"
 ALLOWED_ENV = {"CRUX_SPARK_BLOB_DIR"}
 SIZE_IDIOM = "optimizedPlan().stats().sizeInBytes()"
+# `.limit(<expr> + 1).count()`: a count job that only asks "more than N?"
+COUNT_PROBE = re.compile(
+    r"\.limit\(\s*(?:[^()]|\([^()]*\))*?\+\s*1\s*\)\s*\.count\(\s*\)"
+)
+# `getattr(self, "THRESHOLD"`: a class constant an instance may override
+OVERRIDABLE_THRESHOLD = re.compile(
+    r"getattr\(\s*self\s*,\s*[\"'][A-Z][A-Z0-9_]*[\"']"
+)
 
 
 def _sources():
@@ -33,3 +43,14 @@ def test_size_estimate_read_only_in_conf():
         if SIZE_IDIOM in path.read_text()
     ]
     assert users == ["_conf.py"]
+
+
+def test_no_size_probes():
+    found = []
+    for path in _sources():
+        text = path.read_text()
+        for pattern in (COUNT_PROBE, OVERRIDABLE_THRESHOLD):
+            for m in pattern.finditer(text):
+                line = text.count("\n", 0, m.start()) + 1
+                found.append(f"{path.relative_to(PKG).as_posix()}:{line}")
+    assert not found, f"size-gated forks in the library: {sorted(found)}"

@@ -287,41 +287,6 @@ def test_bulk_ingest_empty_store_probe_skip_routing(spark):
     assert not st2._versions_empty
 
 
-def test_decode_verification_media_matches_operator_composition(spark):
-    """The fused (and spread) verification decode must equal the
-    four-pass composition it replaced: synthesize blobs, run the REAL
-    media_metadata + extract_features operators on each, join on
-    media_id. Pins both the §9 fusion and the §19 parallelism spread
-    (the spread's repartition must not change any row)."""
-    from crux_spark.operators import multimodal as mm
-
-    docs = spark.range(0, 97).withColumnRenamed("id", "doc_id")
-
-    fused = {
-        r["media_id"]: r.asDict()
-        for r in mm.decode_verification_media(docs).collect()
-    }
-
-    images, wavs = mm.synthetic_verification_media(docs)
-    meta_img = {r["media_id"]: r for r in mm.media_metadata(images).collect()}
-    meta_wav = {r["media_id"]: r for r in mm.media_metadata(wavs).collect()}
-    feat_img = {r["media_id"]: r for r in mm.extract_features(images).collect()}
-    feat_wav = {r["media_id"]: r for r in mm.extract_features(wavs).collect()}
-
-    assert set(fused) == set(range(97))
-    for d in range(97):
-        f = fused[d]
-        assert f["width"] == meta_img[d]["width"]
-        assert f["height"] == meta_img[d]["height"]
-        assert f["sample_rate"] == meta_wav[d]["sample_rate"]
-        # doubles must be BIT-identical: same functions, same inputs
-        assert f["f0"] == feat_img[d]["features"][0]
-        assert f["f1"] == feat_img[d]["features"][1]
-        assert f["f2"] == feat_img[d]["features"][2]
-        assert f["rms"] == feat_wav[d]["features"][1]
-        assert f["peak"] == feat_wav[d]["features"][3]
-
-
 def test_ngram_pairgen_size_aware_pin(spark, tmp_path):
     """ngram_jaccard_pairs pins its per-doc base with a lazy
     localCheckpoint for every input, with or without a size estimate,
