@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from crux_spark._localframe import local_frame
+
 
 def _tokenize(col):
     return F.split(F.regexp_replace(F.lower(col), r"[^a-z0-9\s]", " "), r"\s+")
@@ -52,7 +54,7 @@ def text_search(
         for t in query.lower().replace(",", " ").split()
         if t
     ]
-    qdf = spark.createDataFrame([(t,) for t in set(terms)], ["term"])
+    qdf = local_frame(spark, {"term": sorted(set(terms))}, "term string")
     scored = (
         postings.join(F.broadcast(qdf), "term")
         .join(F.broadcast(doc_freq), "term")
@@ -79,7 +81,7 @@ def bm25_search(
     state is needed."""
     spark = postings.sparkSession
     terms = [t for t in query.lower().replace(",", " ").split() if t]
-    qdf = spark.createDataFrame([(t,) for t in set(terms)], ["term"])
+    qdf = local_frame(spark, {"term": sorted(set(terms))}, "term string")
     dl = postings.groupBy("eid").agg(F.sum("tf").alias("dl"))
     avgdl = dl.agg(F.avg("dl").alias("avgdl"))
     idf = F.log(
@@ -282,7 +284,7 @@ def search_av(
     wild = sorted({t for t in terms if "*" in t or "?" in t})
     parts: list[DataFrame] = []
     if plain:
-        qdf = spark.createDataFrame([(t,) for t in plain], ["term"])
+        qdf = local_frame(spark, {"term": plain}, "term string")
         parts.append(
             postings.join(F.broadcast(qdf), "term")
             .join(F.broadcast(doc_freq), "term")

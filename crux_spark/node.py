@@ -26,6 +26,7 @@ from typing import Any, Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from crux_spark._localframe import local_frame
 from crux_spark.bitemporal.store import TxStore
 from crux_spark.catalog import Catalog
 from crux_spark.datalog import compile_query
@@ -180,7 +181,7 @@ class Db:
             )
             rows = pull_flat(cat, self.node.collection, spec).collect()
         else:
-            base = self.node.spark.createDataFrame([(e,) for e in ids], ["e"])
+            base = local_frame(self.node.spark, {"e": ids}, "e string")
             rows = _pull(
                 self.catalog(), base, "e", self.node.collection, spec,
                 joins=joins,

@@ -9,8 +9,10 @@ pairs; AQE's skew-join handling splits hot buckets.
 - exact:        groupBy(md5(normalized text))
 - ngram-jaccard: shingle explode -> shared-shingle candidate pairs ->
                  |intersection| / |union| (exact Jaccard, MinHash oracle)
-- minhash-lsh:  k portable hash fns over shingles -> min per fn ->
-                 band buckets -> bucket join (approx Jaccard at scale)
+- minhash-lsh:  shingle hashes built inside the window transform ->
+                 k affine permutations, min per fn (one groupBy id) ->
+                 band buckets -> bucket join, each pair kept only in its
+                 first colliding band (approx Jaccard at scale)
 - simhash:      per-token 64-bit hashes -> bitwise majority -> hamming
                  bucket join
 """
@@ -76,67 +78,27 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     )
 
 
-def shingles(text, n: int = 3):
-    """Word n-gram shingles of normalized text (array column).
-
-    NOTE: when `text` is a raw expression (not a bound column), the
-    transform lambda re-evaluates the whole normalize+split tree per
-    element — prefer `exploded_shingles` below on DataFrames, which
-    materializes the token array once per row first (measured ~5x on
-    the dedup bench)."""
-    toks = F.split(_norm_text(text), " ")
-    k = F.size(toks) - (n - 1)
-    return F.when(k <= 0, F.array(F.concat_ws(" ", toks))).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), k - 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-        )
-    )
-
-
-def exploded_shingles(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3
+def _shingle_hash_rows(
+    df: DataFrame, id_col: str, text_col: str, n: int, hash_window
 ) -> DataFrame:
-    """(id, s) rows: DISTINCT word n-gram shingles per document, with
-    the token array materialized as a column before the window slide so
-    the per-element lambda only does array access."""
+    """(id, h) rows: the DISTINCT hashes of each document's word n-gram
+    shingles. ``hash_window`` maps a shingle's token columns to its
+    64-bit hash, so each shingle is hashed inside the window
+    ``transform`` and no per-document array of shingle strings is
+    built; ``array_distinct`` and the explode run over longs. The token
+    array is bound as a column first, so the lambda only does array
+    access (an inline split would be re-evaluated per window). A text
+    of fewer than ``n`` tokens is one shingle: its whole normalized
+    text, passed to ``hash_window`` as one column."""
     toks = F.split(_norm_text(F.col(text_col)), " ")
     t = _spread(df).select(F.col(id_col).alias("id"), toks.alias("__toks"))
-    k = F.size("__toks") - (n - 1)
-    arr = F.when(k <= 0, F.array(F.concat_ws(" ", F.col("__toks")))).otherwise(
+    ws = F.col("__toks")
+    k = F.size(ws) - (n - 1)
+    harr = F.when(k <= 0, F.array(hash_window([F.concat_ws(" ", ws)]))).otherwise(
         F.transform(
             F.sequence(F.lit(0), k - 1),
-            lambda i: F.concat_ws(" ", F.slice(F.col("__toks"), i + 1, n)),
-        )
-    )
-    return t.select("id", F.explode(F.array_distinct(arr)).alias("s"))
-
-
-def _exploded_shingle_hashes(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3
-) -> DataFrame:
-    """(id, h) rows: DISTINCT 64-bit hashes of word n-gram shingles,
-    hashing each token window DIRECTLY with multi-arg xxhash64 — no
-    per-position slice+concat string allocation and long (not string)
-    array_distinct/explode. Measured 2x the string form (sf0.1, warm
-    0.52 -> 0.27s noop). ONLY for consumers whose results are provably
-    hash-independent (ngram_jaccard_pairs: prefix filtering is exact
-    under ANY global order and candidates are exact-verified); MinHash
-    paths keep hashing the shingle STRING (shingle_hashes) because
-    signature values — and the oracle-pinned banding-recall property —
-    depend on them. Tokens carry no spaces (split on ' '), so
-    string-concat identity and token-tuple identity coincide; collision
-    odds are the same 64-bit ~1e-10 class as the string form."""
-    toks = F.split(_norm_text(F.col(text_col)), " ")
-    t = _spread(df).select(F.col(id_col).alias("id"), toks.alias("__toks"))
-    k = F.size("__toks") - (n - 1)
-    harr = F.when(
-        k <= 0, F.array(F.xxhash64(F.concat_ws(" ", F.col("__toks"))))
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), k - 1),
-            lambda i: F.xxhash64(
-                *[F.element_at(F.col("__toks"), i + j + 1) for j in range(n)]
+            lambda i: hash_window(
+                [F.element_at(ws, i + j + 1) for j in range(n)]
             ),
         )
     )
@@ -167,8 +129,13 @@ def ngram_jaccard_pairs(
     # shingles are carried as 64-bit xxhash values from here on: set
     # operations on long arrays are far cheaper than on strings, and at
     # ~2^32 distinct shingles the collision probability is still ~1e-10.
-    # r16: hash the token windows directly (_exploded_shingle_hashes) —
-    # same sets, no transient shingle strings.
+    # r16: hash the token windows directly with multi-arg xxhash64 —
+    # same sets, no shingle strings at all. Only consumers whose results
+    # are hash-independent may do this (prefix filtering is exact under
+    # ANY global order and candidates are exact-verified); MinHash keeps
+    # hashing the shingle STRING (shingle_hashes), because signature
+    # values depend on it. Tokens carry no spaces, so string identity and
+    # token-tuple identity coincide.
     # r16: document frequency as count() OVER (PARTITION BY h) instead
     # of groupBy(h)+join-back — (id, h) rows are distinct per doc
     # (array_distinct upstream), so the window count equals the groupBy
@@ -178,7 +145,9 @@ def ngram_jaccard_pairs(
     # the frequency directly into each row. Same-session interleaved
     # A/B at sf0.1: 3.53/4.18/3.36 -> 3.22/3.20/2.85s e2e, identical
     # 256 pairs; one fewer synchronous checkpoint planning pass.
-    ex = _exploded_shingle_hashes(df, id_col, text_col, n)
+    ex = _shingle_hash_rows(
+        df, id_col, text_col, n, lambda ws: F.xxhash64(*ws)
+    )
     dfc = F.count("*").over(Window.partitionBy("h"))
     base = (
         ex.select("id", F.struct(dfc.alias("c"), F.col("h")).alias("__st"))
@@ -240,19 +209,24 @@ def shingle_hashes(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3,
     hash_fn=None,
 ) -> DataFrame:
-    """Flat (id, h) rows: distinct 64-bit xxhash shingle values per doc —
-    the shared input of MinHash signatures AND exact set verification.
+    """Flat (id, h) rows: distinct 64-bit shingle hashes per doc — the
+    shared input of MinHash signatures AND exact set verification.
     h stays full-width 64-bit (collision odds ~1e-10 at test scale); the
     signature step reduces mod p itself.
+
+    A shingle is the string concat_ws(" ", n consecutive tokens), hashed
+    where the window is built. Deduplicating the hashes rather than the
+    strings merges only shingles whose hashes collide, which changes no
+    per-doc min (signatures) and no per-doc set (verification).
 
     ``hash_fn`` (Column -> integer Column) overrides the shingle hash;
     the default is xxhash64 (fast, JVM-native). Oracle-gated tests pass
     an external-engine-reproducible hash (e.g. an md5-prefix integer)
     so a SQL system with no xxhash64 can recompute identical
     signatures."""
-    h = (hash_fn or F.xxhash64)(F.col("s"))
-    return exploded_shingles(df, id_col, text_col, n).select(
-        "id", h.alias("h")
+    hash_fn = hash_fn or F.xxhash64
+    return _shingle_hash_rows(
+        df, id_col, text_col, n, lambda ws: hash_fn(F.concat_ws(" ", *ws))
     )
 
 
@@ -276,9 +250,9 @@ def minhash_signatures(
     exploded: DataFrame | None = None,
     checkpoint: bool = True,
 ) -> DataFrame:
-    """MinHash signature per document: sig[i] = min over shingles of
-    h_i(xxhash64(shingle)). All JVM-side array ops — one projection, no
-    shuffle.
+    """MinHash signature per document: sig[i] = min over the doc's
+    shingle hashes h of h_i(h). One hash aggregate over the flat (id, h)
+    rows, so one shuffle on id.
 
     ``checkpoint=False`` skips the trailing localCheckpoint: callers
     whose FIRST consumer is itself checkpointed (banded_signatures in
@@ -341,21 +315,51 @@ def banded_signatures(
     """Explode (id, sig) into (id, sig, band, bucket) LSH band rows —
     the persistable incremental LSH index (each row is one posting in a
     band's bucket)."""
-    rows = num_hashes // bands
     bb = _expr_cached("lsh_bands", (num_hashes, bands), lambda: F.explode(
         F.array(
             *[
-                F.struct(
-                    F.lit(bi).alias("band"),
-                    F.hash(F.slice("sig", bi * rows + 1, rows)).alias("bucket"),
+                F.struct(F.lit(bi).alias("band"), bucket.alias("bucket"))
+                for bi, bucket in enumerate(
+                    _band_buckets(F.col("sig"), num_hashes, bands)
                 )
-                for bi in range(bands)
             ]
         )
     ).alias("bb"))
     return sigs.select("id", "sig", bb).select(
         "id", "sig", "bb.band", "bb.bucket"
     )
+
+
+def _band_buckets(sig, num_hashes: int, bands: int) -> list:
+    """Each LSH band's bucket of signature column ``sig``: the hash of
+    its slice of num_hashes // bands minima."""
+    rows = num_hashes // bands
+    return [F.hash(F.slice(sig, bi * rows + 1, rows)) for bi in range(bands)]
+
+
+def _first_band(a: str, b: str, num_hashes: int, bands: int):
+    """Keep-condition for a row of a (band, bucket) self-join of postings
+    aliased ``a`` and ``b``: its band is the LOWEST band whose buckets
+    the two signatures share. Postings hold one signature per id, so a
+    pair that collides in several bands keeps exactly one joined row,
+    and the join needs no dedup shuffle on (id_a, id_b).
+
+    The row's own band collides by the join, so the condition is "no
+    earlier band collides": one (band <= j OR buckets differ) term per
+    band j, which recomputes only the buckets below the row's band and
+    stays plain codegen-able expressions (no lambda), so the join keeps
+    whole-stage codegen."""
+
+    def build():
+        band = F.col(f"{a}.band")
+        ba = _band_buckets(F.col(f"{a}.sig"), num_hashes, bands)
+        bb = _band_buckets(F.col(f"{b}.sig"), num_hashes, bands)
+        keep = F.lit(True)
+        for j in range(bands - 1):
+            keep = keep & ((band <= j) | (ba[j] != bb[j]))
+        return keep
+
+    return _expr_cached("lsh_first_band", (a, b, num_hashes, bands), build)
 
 
 def minhash_lsh_pairs(
@@ -381,7 +385,8 @@ def minhash_lsh_pairs(
 
     Scale path: band-bucket equi-join means candidate generation is a
     single shuffle on (band, bucket-hash); only banded collisions are
-    compared.
+    compared, and each pair only in its first colliding band
+    (_first_band), so no shuffle deduplicates the pairs.
     """
     # one shingling pass feeds BOTH the signatures and (in exact mode)
     # the verification sets — in exact mode fused into a single per-doc
@@ -406,13 +411,11 @@ def minhash_lsh_pairs(
         (F.col("a.band") == F.col("b.band"))
         & (F.col("a.bucket") == F.col("b.bucket"))
         & (F.col("a.id") < F.col("b.id")),
-    )
+    ).filter(_first_band("a", "b", num_hashes, bands))
     if verify == "exact":
-        # dedup candidates BEFORE the shingle-set join: the exact check
-        # is the expensive step here, so it must see each pair once
         cand = joined.select(
             F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
-        ).dropDuplicates(["id_a", "id_b"])
+        )
         sets = per_doc.select("id", "sh")
         sa = sets.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
         sb = sets.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
@@ -435,9 +438,6 @@ def minhash_lsh_pairs(
             lambda eq: eq,
         )
     )
-    # verify (cheap map-side zip) BEFORE dedup: within-bucket pair counts
-    # are quadratic in bucket size, so the dedup shuffle must only see the
-    # surviving pairs, not the raw candidate explosion
     return (
         joined.select(
             F.col("a.id").alias("id_a"),
@@ -447,7 +447,6 @@ def minhash_lsh_pairs(
         )
         .withColumn("est_jaccard", F.round(agree / F.lit(num_hashes), 6))
         .filter(F.col("est_jaccard") >= threshold)
-        .dropDuplicates(["id_a", "id_b"])
         .select("id_a", "id_b", "est_jaccard")
     )
 
@@ -1045,14 +1044,17 @@ class IncrementalMinHashIndex:
         # candidate generation: new x (existing + new). Half-open on the
         # NEW side only — cross pairs take both orders in the raw join,
         # so normalize to (min, max); in-batch pairs use a.id < b.id
-        # directly like the batch operator.
+        # directly like the batch operator. Both sides keep a pair only
+        # in its first colliding band: every id has one signature on
+        # each side and new ids are anti-joined out of the old postings,
+        # so each candidate pair is emitted exactly once.
         a = new_banded.alias("a")
         inb = a.join(
             new_banded.alias("b"),
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bucket") == F.col("b.bucket"))
             & (F.col("a.id") < F.col("b.id")),
-        ).select(
+        ).filter(_first_band("a", "b", self.num_hashes, self.bands)).select(
             F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
             F.col("a.sig").alias("sig_a"), F.col("b.sig").alias("sig_b"),
         )
@@ -1062,6 +1064,8 @@ class IncrementalMinHashIndex:
                 old,
                 (F.col("a.band") == F.col("o.band"))
                 & (F.col("a.bucket") == F.col("o.bucket")),
+            ).filter(
+                _first_band("a", "o", self.num_hashes, self.bands)
             ).select(
                 F.least(F.col("a.id"), F.col("o.id")).alias("id_a"),
                 F.greatest(F.col("a.id"), F.col("o.id")).alias("id_b"),
@@ -1075,9 +1079,7 @@ class IncrementalMinHashIndex:
             cands = inb
 
         if self.verify == "exact":
-            pairs = cands.select("id_a", "id_b").dropDuplicates(
-                ["id_a", "id_b"]
-            )
+            pairs = cands.select("id_a", "id_b")
             new_sets = per_doc.select("id", "sh")
             # one checkpoint serves BOTH the verify join (which reads
             # all_sets twice) and the accumulated state — previously the
@@ -1117,7 +1119,6 @@ class IncrementalMinHashIndex:
                     "est_jaccard", F.round(agree / F.lit(self.num_hashes), 6)
                 )
                 .filter(F.col("est_jaccard") >= self.threshold)
-                .dropDuplicates(["id_a", "id_b"])
                 .select("id_a", "id_b", "est_jaccard")
             )
 

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from crux_spark._localframe import local_frame
+
 
 def connected_components(
     pairs: DataFrame,
@@ -37,7 +39,8 @@ def connected_components(
     limit) short-circuit to a driver-side union-find: the iterative
     path costs ~3 Spark jobs per round, which dwarfs the work when the
     similarity graph is thousands of pairs. Pass driver_limit_edges=0
-    to force the distributed path.
+    to force the distributed path. The driver path returns its (long)
+    labels as an Arrow-backed local frame, which collects with no job.
 
     ``stats``, if given, is filled with {'path': 'driver'|'distributed',
     'rounds': n} — diagnostic only (tools/scale_smoke.py asserts the
@@ -61,11 +64,12 @@ def connected_components(
             a, b = find(r[id_a]), find(r[id_b])
             if a != b:
                 parent[max(a, b)] = min(a, b)
-        rows = sorted({(v, find(v)) for r in probe for v in (r[id_a], r[id_b])})
-        spark = pairs.sparkSession
-        if not rows:
-            return spark.createDataFrame([], "id long, component long")
-        return spark.createDataFrame(rows, ["id", "component"])
+        ids = sorted({v for r in probe for v in (r[id_a], r[id_b])})
+        return local_frame(
+            pairs.sparkSession,
+            {"id": ids, "component": [find(v) for v in ids]},
+            "id long, component long",
+        )
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(

@@ -15,12 +15,15 @@
 
 from __future__ import annotations
 
+import math
 import warnings
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from crux_spark._localframe import local_frame
 
 
 def _dot(a, b):
@@ -318,7 +321,7 @@ def cosine_threshold_pairs(
     threshold: float = 0.45,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    nblocks: int = 8,
+    nblocks: int | None = None,
 ) -> DataFrame:
     """Exact all-pairs cosine >= threshold. Returns (id_a, id_b, sim) with
     id_a < id_b.
@@ -329,23 +332,28 @@ def cosine_threshold_pairs(
     to the driver and no size probe runs, so the same plan works at every
     corpus size; shuffle volume is ~B/2 copies of the corpus, compute is
     the honest O(n^2) of an exact all-pairs op spread over B*(B+1)/2
-    independent tasks. On a real cluster set nblocks ~ sqrt(2 * total_cores)
-    so every core gets a tile. (Exact all-pairs is inherently quadratic —
-    beyond ~10^7 rows use `lsh_bucket_pairs` / IVF cells for candidates and
-    keep this as the within-bucket verify.)
+    independent tasks. ``nblocks`` defaults to ceil(sqrt(2 * cores)), cores
+    being the session's default parallelism, so every core gets a tile.
+    (Exact all-pairs is inherently quadratic — beyond ~10^7 rows use
+    `lsh_bucket_pairs` / IVF cells for candidates and keep this as the
+    within-bucket verify.)
     """
     spark = corpus.sparkSession
+    if nblocks is None:
+        nblocks = math.ceil(math.sqrt(2 * spark.sparkContext.defaultParallelism))
     base = corpus.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
         F.pmod(F.hash(F.col(id_col)), F.lit(nblocks)).alias("blk"),
     )
-    tile_rows = [(i, j) for i in range(nblocks) for j in range(i, nblocks)]
+    bi, bj = zip(*[(i, j) for i in range(nblocks) for j in range(i, nblocks)])
+    tiles = {"bi": list(bi), "bj": list(bj)}
     # Each block's rows are replicated to every tile it participates in via
-    # a broadcast join against the (tiny) tile list, then cogrouped by tile.
-    # Two distinct tile DataFrames sidestep self-join column ambiguity.
-    tiles_l = spark.createDataFrame(tile_rows, "bi int, bj int")
-    tiles_r = spark.createDataFrame(tile_rows, "bi int, bj int")
+    # a broadcast join against the (tiny, local) tile list, then cogrouped
+    # by tile. Two distinct tile DataFrames sidestep self-join column
+    # ambiguity.
+    tiles_l = local_frame(spark, tiles, "bi int, bj int")
+    tiles_r = local_frame(spark, tiles, "bi int, bj int")
     left = base.join(F.broadcast(tiles_l), base.blk == tiles_l.bi).select(
         "bi", "bj", F.col("id").alias("id_a"), F.col("v").alias("va")
     )

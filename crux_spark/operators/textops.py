@@ -115,7 +115,7 @@ def _word_ngrams(text: Column, n: int) -> Column:
     re-evaluates the whole lower+split tree once PER GRAM POSITION —
     O(tokens²) per document. Hot paths must materialize the token array
     as a column first and use `_ngrams_of(F.col(...), n)` (the same
-    rule as dedup.exploded_shingles, measured ~100x)."""
+    rule dedup's shingle hashing follows, measured ~100x)."""
     return _ngrams_of(tokens(F.lower(text)), n)
 
 
@@ -203,7 +203,7 @@ def repetition_metrics(df: DataFrame, doc_id_col: str = "doc_id",
     )
     # token array bound as a column BEFORE the window-slide lambdas — an
     # inline expression would be re-evaluated per gram position,
-    # O(tokens²) per document (the exploded_shingles rule)
+    # O(tokens²) per document (the rule dedup's shingle hashing follows)
     src = df.select(
         F.col(doc_id_col),
         F.length(text_col).alias("__chars"),

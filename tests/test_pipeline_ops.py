@@ -96,11 +96,12 @@ def test_brute_force_topk_matches_numpy(emb, spark):
         assert got_q == expect
 
 
-@pytest.mark.parametrize("nblocks", [1, 3, 16])
+@pytest.mark.parametrize("nblocks", [1, 3, 16, None])
 def test_cosine_threshold_pairs_matches_numpy_all_pairs(spark, nblocks):
     """The block-matrix product returns exactly the brute-force pair set
     at any block count: one block (a single diagonal tile), a few, and
-    more blocks than some of them have rows. Ten rows repeat another
+    more blocks than some of them have rows, and the default derived
+    from the session's parallelism (None). Ten rows repeat another
     row's vector, so sim-1.0 pairs cross blocks; ids are shuffled so
     tiles see both id orders."""
     rng = np.random.RandomState(11)
