@@ -60,8 +60,9 @@ def content_hash(doc: dict | None) -> str | None:
     """sha1 of the canonical doc serialization (docjson.doc_dumps —
     typed-encode then sorted-keys dump). encode_doc is idempotent, so
     hashing the original typed doc and hashing json.loads(doc_json)
-    give the same bytes — the invariant the bulk-path norm UDF
-    (store.py _bulk_put_versions) relies on."""
+    give the same bytes — the invariant the closed form's norm UDF
+    (store.py _bulk_put_versions) and apply_ops_df's cogroup rely on
+    when they hash the docs of a frame with no content_hash column."""
     if doc is None:
         return None
     from crux_spark.bitemporal.docjson import doc_dumps

@@ -10,15 +10,19 @@ which is all the splice algebra needs. Where the ops live decides how:
     pending ops ───────────────────────────┴─ splice.py, tx by tx ─ new histories
     versions ── eid NOT IN (touched) ∪ new histories ─ coalesce ─ localCheckpoint
 
-    apply_ops_df() — a distributed op frame (streaming micro-batches):
-    ops frame               ──┐
-    versions table (by eid) ──┴─ cogroup on eid ─ applyInPandas(splice) ─ new versions
+    apply_ops_df() — a distributed op frame (bulk_ingest, streaming micro-batches):
+    ops frame ── one probe job: max tx, any match, any existing eid, put order
+      no match, fresh eids with ordered unranged puts ─ closed form ──────┐
+      every other op ──┐                                                  ├─ new versions
+      versions (by eid) ┴─ cogroup on eid ─ applyInPandas(splice) ─────────┘
 
 A commit's cost follows the entities it touches: one job collects their
 histories, the driver applies the batch tx by tx (a tx whose match fails
 is dropped whole — serial abort semantics by construction), and one job
 writes the untouched rows back with the new histories, holding the
 table's partition count so reads do not slow down as commits pile up.
+The first commit into an empty store of ordered unranged puts takes the
+closed form (_bulk_put_versions) instead, checked on the driver.
 
 Reads of single entities go through an entity-history cache on the
 driver (the reference's 32K-entry entity LRU, query.clj:1546-1552):
@@ -33,14 +37,16 @@ new ones back (untouched entries stay valid), so a read of a just-
 written entity always hits. Any other assignment of ``versions`` clears
 the cache.
 
-The cogroup path is for op frames that never reach the driver. Per-entity
+apply_ops_df is for op frames that never reach the driver. Per-entity
 histories are small; entities shard across executors. At 100 TB the
 versions table is partitioned/bucketed by eid so the cogroup is a single
 co-located shuffle. Match/CAS atomicity across entities is two-phase
 there: a distributed evaluation pass computes per-tx match verdicts (only
 tx_ids come back to the driver), aborted txs are excluded, then the apply
 pass runs. Iterated to fixpoint because an abort can change a later tx's
-match input (rare; capped).
+match input; each round finalises the earliest failing tx of every
+independent entity group, so a match-carrying batch holds its distinct
+(tx, eid) pairs on the driver.
 
 Transaction functions (tx.clj:178-227) run on the driver at submit time via
 a registered deterministic Python fn that returns ops — the analogue of the
@@ -54,7 +60,6 @@ import datetime as dt
 import functools
 import hashlib
 import json
-import logging
 import os
 import threading
 from typing import Any, Callable, Iterable
@@ -241,9 +246,10 @@ def _bucketed_cogroup(
 
 def _bulk_put_versions(ops: DataFrame) -> DataFrame:
     """Closed-form version rows for a fresh-entity, strictly-ordered,
-    unranged put stream (bulk_ingest's fast path). Per entity with puts
-    at v_1 < ... < v_n (tx t_1 < ... < t_n), the per-op splice yields
-    exactly:
+    unranged put stream (apply_ops_df's fresh eids, commit()'s first
+    batch). A null valid_from is the put's tx_time, as the splice
+    stores it. Per entity with puts at v_1 < ... < v_n (tx
+    t_1 < ... < t_n), the per-op splice yields exactly:
 
       i < n:  ([v_i, inf)  tx [t_i, t_{i+1})  asserted)     — closed
               ([v_i, v_{i+1})  tx [t_{i+1}, inf)  unasserted) — remainder
@@ -276,6 +282,7 @@ def _bulk_put_versions(ops: DataFrame) -> DataFrame:
     # canonical at ingest (bulk_ingest builds doc_json itself), so the
     # computed hash IS the submit-time hash: legacy_hash=False.
     has_hash_col = "content_hash" in ops.columns
+    ops = ops.withColumn("valid_from", F.coalesce("valid_from", "tx_time"))
     w = Window.partitionBy("eid").orderBy("tx_id", "seq")
     base = ops.select(
         "eid", "tx_id", "tx_time", "valid_from",
@@ -340,11 +347,18 @@ def _apply_ops(history: list[Version], op_rows: list, aborted: set[int]):
         vf = None if pd.isna(r.valid_from) else int(r.valid_from)
         vt = None if pd.isna(r.valid_to) else int(r.valid_to)
         if op == "put":
-            stored_hash = getattr(r, "content_hash", None)
-            if not isinstance(stored_hash, str):
-                stored_hash = None  # legacy rows / NaN from pandas
+            doc = json.loads(r.doc_json)
+            if hasattr(r, "content_hash"):
+                stored_hash = r.content_hash
+                if not isinstance(stored_hash, str):
+                    stored_hash = None  # legacy rows / NaN from pandas
+            else:
+                # no content_hash column: the frame's docs were built at
+                # ingest (bulk_ingest), so the computed hash IS the
+                # submit-time hash — _bulk_put_versions' rule
+                stored_hash = splice.content_hash(doc)
             history = splice.put(
-                history, json.loads(r.doc_json), int(r.tx_id), int(r.tx_time),
+                history, doc, int(r.tx_id), int(r.tx_time),
                 vf, vt, chash=stored_hash,
             )
         elif op == "delete":
@@ -381,11 +395,6 @@ def _apply_ops(history: list[Version], op_rows: list, aborted: set[int]):
 # byte cap is on the summed doc_json length of the cached histories.
 ENTITY_CACHE_MAX_ENTRIES = 32_768
 ENTITY_CACHE_MAX_BYTES = 64 << 20
-
-# Bound on the driver-side tx→eid map used to parallelize match-abort
-# finalization across independent entity groups (collected once per
-# match-carrying batch; ~50 B/pair → a few MB at the cap).
-_MAX_TX_EID_PAIRS = 200_000
 
 
 def _is_evict_tombstone(doc_json: str) -> bool:
@@ -813,17 +822,14 @@ class TxStore:
         if self._versions_empty and self._commit_fast_path_ok():
             # Into an empty store, a batch of unranged puts with strictly
             # increasing per-entity (tx, effective valid-from) has the
-            # same closed form as bulk_ingest's initial load (guide
+            # same closed form as apply_ops_df's fresh eids (guide
             # §1.2): two lead() windows and the norm UDF instead of the
             # per-op Python splice, row-identical to it
             # (test_commit_fast_path_equivalence). The batch shape is
             # checked driver-side from _pending, so no probe job runs.
-            # The splice stores vf=None puts at valid_from=tx_time; the
-            # coalesce feeds the closed form that same effective value.
-            ops_eff = self._ops_frame(self._pending).withColumn(
-                "valid_from", F.coalesce("valid_from", "tx_time")
-            )
-            self.versions = _bulk_put_versions(ops_eff).localCheckpoint()
+            self.versions = _bulk_put_versions(
+                self._ops_frame(self._pending)
+            ).localCheckpoint()
             aborted: set[int] = set()
         else:
             aborted = self._splice_touched(self._pending)
@@ -965,7 +971,7 @@ class TxStore:
         form first-commit splice: every row an unranged put (no match /
         delete / evict / valid_to / expected), and per entity the
         (tx_id, effective valid_from) sequence strictly increasing in
-        (tx_id, seq) order — the exact precondition bulk_ingest's probe
+        (tx_id, seq) order — the exact precondition apply_ops_df's probe
         verifies distributively, checkable here for free because
         _pending is already driver-resident."""
         last: dict[str, tuple[int, int]] = {}
@@ -996,18 +1002,152 @@ class TxStore:
             last[r["eid"]] = (int(r["tx_id"]), vf)
         return True
 
-    def apply_ops_df(self, ops_df: DataFrame, has_match: bool | None = None) -> set[int]:
-        """Apply a whole ops DataFrame (OPS_SCHEMA) through the cogrouped
-        splice — the write path for op frames that are not on the driver.
-        Nothing but per-tx match verdicts (tx_ids) ever reaches the
-        driver, so a 10^8-op batch is fine; this is what the streaming
-        ingester feeds micro-batches into (tx.clj:424-479's serial
-        ingest, distributed across entities). commit(), whose ops are
-        already driver-side, splices only the touched histories instead
-        (_splice_touched)."""
-        if has_match is None:
-            has_match = bool(ops_df.filter(F.col("op") == "match").head(1))
+    def apply_ops_df(self, ops_df: DataFrame) -> set[int]:
+        """Apply an op frame (OPS_SCHEMA; bulk_ingest's frame omits the
+        hash columns) and return the match-aborted tx ids — the write
+        path for ops that are not on the driver (bulk_ingest, streaming
+        micro-batches; tx.clj:424-479's serial ingest, distributed
+        across entities). commit(), whose ops are already driver-side,
+        splices only the touched histories instead (_splice_touched).
+
+        One probe job answers the routing: the max tx id (advances the
+        tx counter), whether a match is present, whether any op targets
+        an eid with history (no join into a provably empty store) and
+        whether every op on a fresh eid is an unranged put with strictly
+        increasing (tx, effective valid-from). With no match and an
+        ordered fresh side, fresh eids take the closed form
+        (_bulk_put_versions, row-identical to the per-op splice, which
+        is O(n^2) in an entity's history) and the rest the cogroup;
+        otherwise the whole frame runs the cogroup. Only the probe row,
+        match verdicts (tx ids) and — for a match-carrying batch — its
+        distinct (tx, eid) pairs reach the driver."""
+        return self._apply_frame(ops_df)[0]
+
+    def _apply_frame(self, ops_df: DataFrame) -> tuple[set[int], int | None]:
+        """apply_ops_df, also returning the frame's max tx id (None for
+        an empty frame, which changes nothing) for the streaming
+        ingester's listeners."""
+        existing = (
+            None if self._versions_empty
+            else self.versions.select("eid").distinct()
+        )
+        stats = self._probe_ops(ops_df, existing)
+        if stats["max_tx"] is None:
+            return set(), None
         aborted: set[int] = set()
+        if stats["n_match"] or stats["n_bad"]:
+            if stats["n_match"]:
+                aborted = self._match_aborts(ops_df)
+            new = self._cogroup_apply(ops_df, aborted)
+        elif existing is None:
+            new = _bulk_put_versions(ops_df)
+        elif not stats["n_existing"]:
+            new = self.versions.unionByName(_bulk_put_versions(ops_df))
+        else:
+            new = _bulk_put_versions(
+                ops_df.join(existing, "eid", "left_anti")
+            ).unionByName(self._cogroup_apply(
+                ops_df.join(existing, "eid", "left_semi"), aborted
+            ))
+        self.versions = new.localCheckpoint()
+        self.aborted_txs |= aborted
+        max_tx = int(stats["max_tx"])
+        # new rows carry only the frame's tx ids; an unseeded counter
+        # still takes max(tx_from) over the table on first read
+        self._tx_id_v = max(self._tx_id_v, max_tx)
+        # a distributed ops frame may carry registry docs this driver
+        # never saw — invalidate the side-set; schema_doc_eids() re-seeds
+        # on demand
+        self._schema_eids = None
+        return aborted, max_tx
+
+    @staticmethod
+    def _probe_ops(ops_df: DataFrame, existing: DataFrame | None):
+        """The one probe row of apply_ops_df: max_tx, n_match,
+        n_existing (ops on eids in ``existing``) and n_bad (ops on fresh
+        eids that break the closed form's precondition). A left join
+        keeps every op row, so the per-eid lag window sees a fresh
+        eid's whole stream."""
+        if existing is None:
+            probe = ops_df.withColumn("__ex", F.lit(None).cast("int"))
+        else:
+            probe = ops_df.join(
+                existing.withColumn("__ex", F.lit(1)), "eid", "left"
+            )
+        # one small code per op (0 unranged put, 1 match, 2 other), so
+        # the window shuffles few columns
+        kind = (
+            F.when((F.col("op") == "put") & F.col("valid_to").isNull(), 0)
+            .when(F.col("op") == "match", 1)
+            .otherwise(2)
+        )
+        w = Window.partitionBy("eid").orderBy("tx_id", "seq")
+        probe = probe.select(
+            "eid", "tx_id", "seq", "__ex", kind.alias("__k"),
+            F.coalesce("valid_from", "tx_time").alias("__vf"),
+        ).select(
+            "tx_id", "__ex", "__k", "__vf",
+            F.lag("tx_id").over(w).alias("__pt"),
+            F.lag("__vf").over(w).alias("__pv"),
+        )
+        out_of_order = F.col("__pt").isNotNull() & (
+            (F.col("tx_id") <= F.col("__pt")) | (F.col("__vf") <= F.col("__pv"))
+        )
+        return probe.agg(
+            F.max("tx_id").alias("max_tx"),
+            F.count(F.when(F.col("__k") == 1, 1)).alias("n_match"),
+            F.count("__ex").alias("n_existing"),
+            F.count(F.when(
+                F.col("__ex").isNull() & ((F.col("__k") != 0) | out_of_order), 1
+            )).alias("n_bad"),
+        ).first()
+
+    def _cogroup_apply(self, ops_df: DataFrame, aborted: set[int]) -> DataFrame:
+        """The versions table with ``ops_df`` spliced in per entity,
+        skipping the ops of ``aborted`` txs."""
+        final = frozenset(aborted)
+
+        def apply_fn(eid, hist, op_rows):
+            hist, _ = _apply_ops(list(hist), op_rows, set(final))
+            return _history_cols(eid, hist)
+
+        return _bucketed_cogroup(
+            self.versions, ops_df, apply_fn, VERSIONS_SCHEMA, self._nbuckets()
+        )
+
+    def _match_aborts(self, ops_df: DataFrame) -> set[int]:
+        """The txs of a match-carrying frame that abort under SERIAL
+        semantics (the reference ingests tx-by-tx, tx.clj:424-479): a
+        tx's verdict must be computed with the abort set of all EARLIER
+        txs final. Abort influence flows strictly forward — skipping an
+        aborted tx's ops can only flip verdicts of LATER txs — so each
+        round the earliest not-yet-finalized failing tx is definitively
+        aborted, while later failures are provisional and recomputed
+        next round. This makes batch composition semantically
+        invisible: commit(A;B) == commit(A);commit(B).
+
+        Abort influence travels only through SHARED entities, so txs in
+        disjoint connected entity groups cannot affect each other: each
+        round finalises the earliest failing tx of EVERY group, and
+        rounds = (aborts in the largest dependent group) + 1. The groups
+        come from the frame's distinct (tx, eid) pairs, held on the
+        driver."""
+        parent: dict = {}
+
+        def find(x):
+            parent.setdefault(x, x)
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        pairs = ops_df.select("tx_id", "eid").distinct().collect()
+        for r in pairs:
+            rt, re_ = find(("t", int(r.tx_id))), find(("e", r.eid))
+            if rt != re_:
+                parent[rt] = re_
+        group = {int(r.tx_id): find(("t", int(r.tx_id))) for r in pairs}
+
         def make_eval_fn(ab: frozenset):
             def eval_fn(eid, hist, op_rows):
                 _, verdicts = _apply_ops(list(hist), op_rows, set(ab))
@@ -1016,105 +1156,21 @@ class TxStore:
 
             return eval_fn
 
-        if has_match:
-            # SERIAL abort semantics (the reference ingests tx-by-tx,
-            # tx.clj:424-479): a tx's verdict must be computed with the
-            # abort set of all EARLIER txs final. Abort influence flows
-            # strictly forward — skipping an aborted tx's ops can only
-            # flip verdicts of LATER txs — so each round the EARLIEST
-            # not-yet-finalized failing tx is definitively aborted, while
-            # later failures are provisional (they may pass once the
-            # earlier abort's ops are skipped) and are recomputed next
-            # round. This makes batch composition semantically invisible:
-            # commit(A;B) == commit(A);commit(B) — the former monotone
-            # "once aborted, stays aborted" accumulation wrongly kept a
-            # provisional abort whose cause was itself aborted (found by
-            # test_durability_op_soup: live-vs-replay batching diverged).
-            # Abort influence travels only through SHARED entities: a tx's
-            # match verdict depends solely on ops against the eids it
-            # touches, so txs in disjoint connected entity groups cannot
-            # affect each other (even transitively). The earliest
-            # unresolved failing tx of EACH group is therefore definitive
-            # every round — rounds = (aborts in the largest dependent
-            # group) + 1 instead of (total aborts) + 1, which matters for
-            # WAL replays with many independent aborts. The tx→eid map is
-            # one bounded distinct-collect; past the bound we fall back to
-            # the strictly-serial single-finalize (still correct).
-            comp_of: dict[int, object] | None = None
-            pairs = (
-                ops_df.select("tx_id", "eid")
-                .distinct()
-                .limit(_MAX_TX_EID_PAIRS + 1)
-                .collect()
-            )
-            if len(pairs) > _MAX_TX_EID_PAIRS:
-                # the fallback is CORRECT but strictly serial: one
-                # finalized abort per fixpoint round instead of one per
-                # independent entity group — surface it instead of
-                # silently degrading (N aborts -> N+1 rounds)
-                logging.getLogger(__name__).warning(
-                    "match finalization: > %d distinct (tx, eid) pairs in "
-                    "batch; falling back to serial per-round abort "
-                    "finalization (correct, but one round per abort — "
-                    "split the batch or raise _MAX_TX_EID_PAIRS)",
-                    _MAX_TX_EID_PAIRS,
-                )
-            else:
-                parent: dict = {}
-
-                def find(x):
-                    parent.setdefault(x, x)
-                    while parent[x] != x:
-                        parent[x] = parent[parent[x]]
-                        x = parent[x]
-                    return x
-
-                for r in pairs:
-                    rt, re_ = find(("t", int(r.tx_id))), find(("e", r.eid))
-                    if rt != re_:
-                        parent[rt] = re_
-                comp_of = {
-                    int(r.tx_id): find(("t", int(r.tx_id))) for r in pairs
-                }
-            for _ in range(100_000):
-                bad_rows = _bucketed_cogroup(
-                    self.versions,
-                    ops_df,
-                    make_eval_fn(frozenset(aborted)),
-                    MATCH_SCHEMA,
-                    self._nbuckets(),
-                ).collect()
-                new = sorted({r.tx_id for r in bad_rows} - aborted)
-                if not new:
-                    break
-                if comp_of is None:
-                    aborted.add(new[0])
-                else:
-                    # ascending order → first hit per group is its earliest
-                    seen_groups: set = set()
-                    for t in new:
-                        g = comp_of.get(t)
-                        if g not in seen_groups:
-                            seen_groups.add(g)
-                            aborted.add(t)
-            else:
-                raise RuntimeError("match-abort fixpoint did not converge")
-
-        final_aborted = frozenset(aborted)
-
-        def apply_fn(eid, hist, op_rows):
-            hist, _ = _apply_ops(list(hist), op_rows, set(final_aborted))
-            return _history_cols(eid, hist)
-
-        self.versions = _bucketed_cogroup(
-            self.versions, ops_df, apply_fn, VERSIONS_SCHEMA, self._nbuckets()
-        ).localCheckpoint()
-        self.aborted_txs |= aborted
-        # a distributed ops frame may carry registry docs this driver
-        # never saw — invalidate the side-set; schema_doc_eids() re-seeds
-        # on demand
-        self._schema_eids = None
-        return aborted
+        aborted: set[int] = set()
+        while True:
+            bad_rows = _bucketed_cogroup(
+                self.versions, ops_df, make_eval_fn(frozenset(aborted)),
+                MATCH_SCHEMA, self._nbuckets(),
+            ).collect()
+            new = sorted({r.tx_id for r in bad_rows} - aborted)
+            if not new:
+                return aborted
+            # ascending order → the first hit per group is its earliest
+            seen: set = set()
+            for t in new:
+                if group[t] not in seen:
+                    seen.add(group[t])
+                    aborted.add(t)
 
     def _nbuckets(self) -> int:
         try:
@@ -1132,18 +1188,13 @@ class TxStore:
     ) -> None:
         """Distributed bulk put-ingest: every input row becomes a put op,
         built entirely as DataFrame expressions (no driver collect — the
-        100 TB path). ``tx_id_expr`` must be monotone with event order per
-        entity (defaults to the valid-from micros, which is exactly the
-        'valid-time = tx-time' ingestion of the reference's ts-weather
-        bench, ts_weather.clj:23).
-
-        Routing: ops for entities with no existing history and strictly
-        increasing (tx, valid-from) take the closed-form fast path
-        (_bulk_put_versions, no per-op splice); the rest run the splice
-        cogroup. The routing probe is a distinct+anti/semi join against
-        the current versions' eids — O(store) per call, irrelevant for
-        the initial-load case it accelerates (versions empty) and minor
-        against the cogroup it replaces otherwise."""
+        100 TB path) and applied by apply_ops_df. ``tx_id_expr`` must be
+        monotone with event order per entity (defaults to the valid-from
+        micros, which is exactly the 'valid-time = tx-time' ingestion of
+        the reference's ts-weather bench, ts_weather.clj:23). The frame
+        carries no content_hash column: its docs are built here, so both
+        routes of apply_ops_df stamp their computed hashes as submit-time
+        hashes (legacy_hash=False)."""
         vf_type = df.schema[valid_from_col].dataType.typeName()
         if vf_type.startswith("timestamp"):
             # ANSI (Spark 4 default) forbids timestamp→numeric casts, and a
@@ -1201,108 +1252,7 @@ class TxStore:
             vf_us.alias("valid_from"),
             F.lit(None).cast("long").alias("valid_to"),
         )
-
-        # FAST PATH — the actual 100 TB initial-load shape. For an
-        # entity with NO existing history receiving unranged puts whose
-        # tx order equals a strictly increasing valid_from order, the
-        # splice result has a CLOSED FORM (each put i closes the open
-        # assertion at tx_{i+1} and re-asserts its [v_i, v_{i+1})
-        # remainder unasserted): two window functions produce the exact
-        # rows the per-op Python splice would — which is O(n^2) per
-        # entity (every put rebuilds the history list), measured as the
-        # dominant cost of dense-history ingest. Entities with existing
-        # history, and any out-of-order/duplicate valid times, fall back
-        # to the splice cogroup; the two paths are row-identical
-        # (test_bulk_ingest_fast_path_equivalence).
-        # ONE probe job (r15 optimization): the ordering check, the
-        # slow-side emptiness check and the ops-side max tx (which
-        # advances the tx counter below) previously ran as three
-        # separate jobs plus a post-merge max aggregate over the whole
-        # store. All three are computable in a single pass over the ops
-        # left-joined against the existing-eid set: a left join keeps
-        # every ops row, so the per-eid lag window sees exactly the rows
-        # the old anti-join probe saw for fresh entities (existing is
-        # keyed by eid — anti-join removed whole entities, never
-        # individual rows).
-        # r16: a provably-empty store (the _versions_empty flag the
-        # commit fast path maintains) has NO existing eids — every op is
-        # fresh by construction, so the probe drops the join against the
-        # (empty) eid set and the fresh/slow splits below are closed-form.
-        # This removes the empty-side distinct+broadcast from the FIRST
-        # ingest of every store (the initial-load shape).
-        w = Window.partitionBy("eid").orderBy("tx_id", "seq")
-        if self._versions_empty:
-            existing = None
-            probe = ops_df.select(
-                "tx_id", "valid_from", F.lit(None).cast("int").alias("__ex"),
-                F.lag("tx_id").over(w).alias("__pt"),
-                F.lag("valid_from").over(w).alias("__pv"),
-            )
-        else:
-            existing = self.versions.select("eid").distinct()
-            probe = ops_df.join(
-                existing.withColumn("__ex", F.lit(1)), "eid", "left"
-            ).select(
-                "tx_id", "valid_from", "__ex",
-                F.lag("tx_id").over(w).alias("__pt"),
-                F.lag("valid_from").over(w).alias("__pv"),
-            )
-        stats = probe.agg(
-            F.count(
-                F.when(
-                    F.col("__ex").isNull()
-                    & F.col("__pt").isNotNull()
-                    & (
-                        (F.col("tx_id") <= F.col("__pt"))
-                        | (F.col("valid_from") <= F.col("__pv"))
-                    ),
-                    1,
-                )
-            ).alias("bad"),
-            F.count("__ex").alias("n_slow"),
-            F.max("tx_id").alias("max_tx"),
-        ).first()
-        bad = int(stats["bad"] or 0)
-        slow_has_rows = int(stats["n_slow"] or 0) > 0
-        ops_max_tx = int(stats["max_tx"] or 0)
-        if existing is None:
-            fresh, slow = ops_df, None
-        else:
-            fresh = ops_df.join(existing, "eid", "left_anti")
-            slow = ops_df.join(existing, "eid", "left_semi")
-        if bad:
-            slow, fresh, slow_has_rows = ops_df, None, True
-
-        parts = []
-        if fresh is not None:
-            parts.append(_bulk_put_versions(fresh))
-        if slow_has_rows:
-
-            def apply_fn(eid, hist, op_rows):
-                hist, _ = _apply_ops(list(hist), op_rows, set())
-                return _history_cols(eid, hist)
-
-            parts.append(
-                _bucketed_cogroup(
-                    self.versions, slow, apply_fn, VERSIONS_SCHEMA,
-                    self._nbuckets(),
-                )
-            )
-        elif fresh is not None and not self._versions_empty:
-            # no slow ops: existing entities pass through untouched
-            parts.append(self.versions)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        self.versions = out.localCheckpoint()
-        # post-merge max(tx_from) == max(existing max, ops max): new
-        # version rows only carry tx ids from the ops stream, and every
-        # construction/load/restore path seeds _tx_id to >= the existing
-        # store's max — so the probe job's ops-side max advances the
-        # counter without a second aggregate over the full store.
-        self._tx_id = max(self._tx_id, ops_max_tx)
-        # bulk rows never pass the driver; re-seed lazily on first use
-        self._schema_eids = None
+        self.apply_ops_df(ops_df)
 
     # -------------------------------------------------------------- read API
 

@@ -17,6 +17,7 @@ attributes are array columns and explode at pattern-resolution time
 from __future__ import annotations
 
 import os
+import weakref
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -59,29 +60,30 @@ _RUNTIME_CONFS = {
     # dimension tables (region/nation/supplier/...) should broadcast in
     # star joins even on a session the engine didn't build
     "spark.sql.autoBroadcastJoinThreshold": "64MB",
+    # a vanilla session's 200-partition default is far too many locally
+    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
 }
+
+# sessions ensure_runtime_confs has already run on
+_CONFIGURED: weakref.WeakSet = weakref.WeakSet()
 
 
 def ensure_runtime_confs(spark: SparkSession) -> None:
-    """Best-effort apply engine-required runtime confs to any session."""
+    """Best-effort apply engine-required runtime confs to a session, once
+    per session, and only to keys the session has not set: a value from
+    the session builder or the user (get_spark's 16MB broadcast
+    threshold) is kept."""
+    if spark in _CONFIGURED:
+        return
     for k, v in _RUNTIME_CONFS.items():
         try:
-            if spark.conf.get(k, None) != v:
+            if spark.conf.get(k, None) is None:
                 spark.conf.set(k, v)
         except Exception:
             # locked-down session (spark.sql.conf.isModifiable=false for this
             # key) — proceed; the builder path (session.py) sets it statically.
             pass
-    try:
-        # Don't leave a vanilla session at the 200-partition default for
-        # local runs, but never override an explicit user choice.
-        if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
-            )
-    except Exception:
-        pass
+    _CONFIGURED.add(spark)
 
 
 def _nanos_ts_columns(path: str) -> list[str]:

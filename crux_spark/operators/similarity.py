@@ -334,9 +334,9 @@ def cosine_threshold_pairs(
     the honest O(n^2) of an exact all-pairs op spread over B*(B+1)/2
     independent tasks. ``nblocks`` defaults to ceil(sqrt(2 * cores)), cores
     being the session's default parallelism, so every core gets a tile.
-    (Exact all-pairs is inherently quadratic — beyond ~10^7 rows use
-    `lsh_bucket_pairs` / IVF cells for candidates and keep this as the
-    within-bucket verify.)
+    (Exact all-pairs is inherently quadratic — beyond ~10^7 rows take
+    candidates from `lsh_near_dup_pairs` or IVF cells and keep this as
+    the within-bucket verify.)
     """
     spark = corpus.sparkSession
     if nblocks is None:
@@ -392,52 +392,6 @@ def cosine_threshold_pairs(
         left.groupBy("bi", "bj")
         .cogroup(right.groupBy("bi", "bj"))
         .applyInPandas(tile_matmul, "id_a long, id_b long, sim double")
-    )
-
-
-def lsh_bucket_pairs(
-    corpus: DataFrame,
-    num_planes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Random-hyperplane LSH near-neighbor pairs: sign-bit signature ->
-    exact-signature bucket join -> verify cosine. Deterministic planes
-    (seeded numpy). Returns (id_a, id_b, sim)."""
-    rng = np.random.RandomState(42)
-    planes = rng.randn(num_planes, dim)
-    sig = None
-    vec = F.col(vec_col).cast("array<double>")
-    for i, p in enumerate(planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(float(x)) for x in p]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bit = F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0)).cast("long")
-        sig = bit if sig is None else sig.bitwiseOR(F.shiftleft(bit, i))
-    base = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"), sig.alias("sig"))
-    a, b = base.alias("a"), base.alias("b")
-    return (
-        a.join(b, (F.col("a.sig") == F.col("b.sig")) & (F.col("a.id") < F.col("b.id")))
-        .withColumn(
-            "sim",
-            cosine(
-                F.col("a.v").cast("array<double>"), F.col("b.v").cast("array<double>")
-            ),
-        )
-        .filter(F.col("sim") >= threshold)
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.round("sim", 6).alias("sim"),
-        )
     )
 
 

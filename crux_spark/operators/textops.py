@@ -107,64 +107,12 @@ def dup_line_char_fraction(text: Column) -> Column:
     )
 
 
-def _word_ngrams(text: Column, n: int) -> Column:
-    """Word n-grams (space-joined) of whitespace-tokenized text — the
-    same construction as the dedup shingles, kept as an array column.
-
-    NOTE: when `text` is a raw expression, the transform lambda
-    re-evaluates the whole lower+split tree once PER GRAM POSITION —
-    O(tokens²) per document. Hot paths must materialize the token array
-    as a column first and use `_ngrams_of(F.col(...), n)` (the same
-    rule dedup's shingle hashing follows, measured ~100x)."""
-    return _ngrams_of(tokens(F.lower(text)), n)
-
-
 def _ngrams_of(ws: Column, n: int) -> Column:
     """Word n-grams over an ALREADY-BOUND token array column: the lambda
     only does array access per element."""
     return F.transform(
         F.sequence(F.lit(0), F.greatest(F.size(ws) - n, F.lit(0))),
         lambda i: F.array_join(F.slice(ws, i + 1, n), " "),
-    )
-
-
-def dup_ngram_char_fraction(text: Column, n: int = 5) -> Column:
-    """Char-weighted duplicate n-gram mass: (chars over all n-gram
-    occurrences - chars over the distinct n-gram set) / document chars.
-    Occurrence overlaps are counted per occurrence (documented
-    divergence from implementations that merge overlapping spans — this
-    form stays a pure per-row Catalyst expression, no shuffle)."""
-    grams = _word_ngrams(text, n)
-    return (_sum_lengths(grams) - _sum_lengths(F.array_distinct(grams))) / (
-        F.greatest(F.length(text), F.lit(1))
-    )
-
-
-def top_ngram_char_coverage(df: DataFrame, doc_id_col: str = "doc_id",
-                            text_col: str = "text", n: int = 2) -> DataFrame:
-    """Per-document coverage of the single most covering word n-gram:
-    max over grams of count(g) * len(g), divided by document chars
-    (frequency-only ranking would need a tie-break; count*len is a
-    deterministic scalar). Needs a per-(doc, gram) count, so this one IS
-    a shuffle — keyed by (doc_id, gram), partial-agg map-side, the same
-    100 TB-safe shape as the shingle relation in dedup."""
-    grams = df.select(
-        F.col(doc_id_col),
-        F.length(text_col).alias("__chars"),
-        tokens(F.lower(F.col(text_col))).alias("__ws"),
-    ).select(
-        doc_id_col,
-        "__chars",
-        F.explode(_ngrams_of(F.col("__ws"), n)).alias("__g"),
-    )
-    per_gram = grams.groupBy(doc_id_col, "__chars", "__g").agg(
-        F.count("*").alias("__cnt")
-    )
-    return per_gram.groupBy(doc_id_col).agg(
-        (
-            F.max(F.col("__cnt") * F.length("__g"))
-            / F.greatest(F.first("__chars"), F.lit(1))
-        ).alias("top_ngram_char_frac")
     )
 
 

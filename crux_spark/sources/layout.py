@@ -38,10 +38,6 @@ def save_optimized(
     )
 
 
-def read_optimized(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def save_bucketed_table(
     df: DataFrame,
     name: str,

@@ -164,11 +164,12 @@ class TxLogStream:
         self.listeners.append(fn)
 
     def _apply_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        """Feed the micro-batch straight into the cogrouped splice apply —
-        no driver round-trip, so a batch far larger than driver memory is
-        fine. Per-entity op ordering happens inside the splice (sorted by
-        tx_id, seq within each entity group); only max(tx_id) and match
-        verdicts come back to the driver."""
+        """Feed the micro-batch straight into apply_ops_df — no driver
+        round-trip, so a batch far larger than driver memory is fine.
+        Per-entity op ordering happens inside the splice (sorted by
+        tx_id, seq within each entity group); its one probe job also
+        yields the batch's max tx id, which is handed to every
+        watermark-keeping listener so none re-aggregates the batch."""
         # Listener state chains LAZY localCheckpoints (cadenced eager) —
         # a deferred plan must stay recomputable PAST this micro-batch's
         # lifetime, which a streaming batch frame cannot promise (log
@@ -176,27 +177,15 @@ class TxLogStream:
         # re-fetchable at all). Pin the batch to executor blocks ONCE,
         # eagerly, before anything keeps a reference: every listener's
         # lazy chain then roots at checkpointed RDD blocks, and the
-        # stats probe + splice below read those same blocks instead of
+        # probe + splice below read those same blocks instead of
         # re-scanning the source (r15 advice, re-readability contract).
         if self.listeners:
             batch_df = batch_df.localCheckpoint()
-        # ONE probe pass per micro-batch: max tx id AND match-op presence
-        # (apply_ops_df would otherwise re-scan the batch for its own
-        # has_match head(1) probe), and the max is handed to every
-        # watermark-keeping listener so none re-aggregates the batch.
-        stats = batch_df.agg(
-            F.max("tx_id").alias("m"),
-            F.max(F.when(F.col("op") == "match", 1)).alias("has_match"),
-        ).first()
-        mx = stats.m
+        _, mx = self.store._apply_frame(batch_df)
         if mx is None:  # empty batch
             return
-        self.store.apply_ops_df(
-            batch_df, has_match=stats.has_match is not None
-        )
-        self.store._tx_id = max(self.store._tx_id, int(mx))
         for fn in self.listeners:
-            _call_listener(fn, epoch_id, batch_df, int(mx))
+            _call_listener(fn, epoch_id, batch_df, mx)
 
     def start(self, checkpoint_dir: str):
         stream = self._build_stream()

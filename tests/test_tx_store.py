@@ -1270,37 +1270,6 @@ def test_dependent_match_aborts_stay_serial(spark):
     assert store.entity("e", valid_time=t(4))["v"] == 3
 
 
-@pytest.mark.parametrize("cap,expect_warn", [(4, True), (5, False)])
-def test_match_finalization_cap_boundary(spark, caplog, monkeypatch,
-                                         cap, expect_warn):
-    """At cap+1 distinct (tx, eid) pairs the entity-group-parallel
-    finalization falls back to strictly-serial rounds — the fallback
-    must WARN (it silently degrades N independent aborts to N rounds)
-    and must produce identical verdicts/state either way."""
-    import logging
-
-    from crux_spark.bitemporal import store as store_mod
-
-    monkeypatch.setattr(store_mod, "_MAX_TX_EID_PAIRS", cap)
-    store = TxStore(spark)
-    ops = _ops_frame(spark, [
-        ([("put", {"id": "a", "v": 1}), ("put", {"id": "b", "v": 1}),
-          ("put", {"id": "c", "v": 1})], t(1)),  # 3 pairs
-        ([("match", "a", {"id": "a", "v": 999}),
-          ("put", {"id": "a", "v": 2})], t(2)),  # +1 pair, fails
-        ([("match", "b", {"id": "b", "v": 1}),
-          ("put", {"id": "b", "v": 2})], t(3)),
-    ], after_tx=0)  # +1 pair, passes -> 5 distinct (tx, eid) pairs total
-    with caplog.at_level(logging.WARNING,
-                         logger="crux_spark.bitemporal.store"):
-        aborted = store.apply_ops_df(ops)
-    assert aborted == {2}
-    assert store.entity("a", valid_time=t(4))["v"] == 1
-    assert store.entity("b", valid_time=t(4))["v"] == 2
-    warned = any("serial per-round abort" in r.message for r in caplog.records)
-    assert warned is expect_warn
-
-
 def test_bulk_ingest_fast_path_equivalence(spark):
     """r9 bulk-load fast path: for fresh entities with strictly
     increasing (tx, valid-from) put streams, the closed-form window
@@ -1397,6 +1366,95 @@ def test_bulk_ingest_fast_path_equivalence(spark):
     st.bulk_ingest(df2, id_expr="dev", doc_cols=["v"], valid_from_col="ts")
     assert st.entity("d1")["v"] == 4.0
     assert [h["doc"]["v"] for h in st.entity_history("d1")] == [1.0, 2.0, 3.0, 4.0]
+
+
+def test_bulk_ingest_stamps_one_legacy_hash_rule(spark):
+    """bulk_ingest builds its docs itself, so the hash computed from
+    them is the submit-time hash: legacy_hash is False both for fresh
+    eids (the closed form) and for an eid with history (the cogroup).
+    Op rows whose content_hash cell is null (a pre-typed WAL or stream
+    row) stay back-computed, True, on both routes."""
+    def rows(data):
+        return spark.createDataFrame(data, "eid string, v long, vf timestamp")
+
+    store = TxStore(spark)
+    store.bulk_ingest(rows([("a", 1, t(1)), ("b", 1, t(1))]),
+                      id_expr="eid", doc_cols=["v"], valid_from_col="vf")
+    store.bulk_ingest(rows([("a", 2, t(2))]),
+                      id_expr="eid", doc_cols=["v"], valid_from_col="vf")
+    assert store.entity("a")["v"] == 2
+    flags = {(r.eid, r.origin_tx, r.legacy_hash)
+             for r in store.versions.collect()}
+    assert {f[2] for f in flags} == {False}, flags
+
+    tx = store._tx_id + 1
+    ops = _ops_frame(spark, [([("put", {"id": "a", "v": 3}),
+                               ("put", {"id": "c", "v": 1})], t(3))],
+                     after_tx=tx - 1)
+    store.apply_ops_df(
+        ops.withColumn("content_hash", F.lit(None).cast("string")))
+    new = {r.eid: r.legacy_hash
+           for r in store.versions.filter(F.col("origin_tx") == tx).collect()}
+    assert new == {"a": True, "c": True}
+
+
+def test_apply_ops_df_fresh_ordered_puts_take_the_closed_form(spark, monkeypatch):
+    """An op frame of unranged puts on fresh eids, strictly ordered per
+    eid and with null valid_from (tx-time-valid, as submit_tx writes
+    them), takes the closed form: no cogroup runs, the rows equal the
+    cogroup's, and the existing entity's rows pass through."""
+    import crux_spark.bitemporal.store as st
+    from crux_spark.bitemporal.store import (
+        VERSIONS_SCHEMA, _apply_ops, _history_cols,
+    )
+
+    store = TxStore(spark)
+    store.submit_tx([("put", {"id": "z", "v": 0})], tx_time=t(1))
+    store.commit()
+    cols = [f.name for f in VERSIONS_SCHEMA.fields]
+    before = [tuple(r) for r in store.versions.select(*cols).collect()]
+    ops = _ops_frame(spark, [
+        ([("put", {"id": f"e{j}", "v": 10 * d + j}) for j in range(3)], t(2 + d))
+        for d in range(4)
+    ], after_tx=1)
+    assert ops.filter(F.col("valid_from").isNotNull()).count() == 0
+    calls = []
+    cogroup = st._bucketed_cogroup
+    monkeypatch.setattr(
+        st, "_bucketed_cogroup",
+        lambda *a, **k: calls.append(1) or cogroup(*a, **k),
+    )
+    assert store.apply_ops_df(ops) == set()
+    assert calls == []
+    assert store._tx_id == 5
+
+    def apply_fn(eid, hist, op_rows):
+        hist, _ = _apply_ops(list(hist), op_rows, set())
+        return _history_cols(eid, hist)
+
+    empty = spark.createDataFrame([], VERSIONS_SCHEMA)
+    want = sorted(tuple(r) for r in cogroup(
+        empty, ops, apply_fn, VERSIONS_SCHEMA, 4).select(*cols).collect())
+    got = sorted(tuple(r) for r in store.versions.select(*cols).collect())
+    assert got == sorted(want + before)
+    assert [h["doc"]["v"] for h in store.entity_history("e1")] == [1, 11, 21, 31]
+
+
+def test_bulk_ingest_into_an_empty_store_job_count(spark):
+    """A 25k-row bulk load into an empty store runs at most 5 Spark
+    jobs: the one probe and the checkpointed closed form."""
+    rows = spark.range(25_000).select(
+        F.concat(F.lit("e"), F.col("id") % 5_000).alias("eid"),
+        F.col("id").alias("v"),
+        F.timestamp_seconds(F.col("id") + 1_000).alias("vf"),
+    )
+    store = TxStore(spark)
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = int(sched.nextJobId())
+    store.bulk_ingest(rows, id_expr="eid", doc_cols=["v"], valid_from_col="vf")
+    jobs = int(sched.nextJobId()) - j0
+    assert jobs <= 5, jobs
+    assert store.versions.count() == 25_000 + 20_000
 
 
 # flat pull specs (no join, no recursion) for the cache-vs-scan parity

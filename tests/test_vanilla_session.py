@@ -67,3 +67,40 @@ def test_gates_run_on_vanilla_session():
     assert counts["events_asof"] > 0
     assert counts["bitemporal_store_asof"] > 0
     assert counts["entry"] >= 0
+
+
+BROADCAST = "spark.sql.autoBroadcastJoinThreshold"
+
+
+def test_get_spark_session_keeps_its_broadcast_threshold(spark):
+    """A Datalog query on a get_spark() session leaves the builder's
+    16MB broadcast threshold in place (session.py records the A/B that
+    chose it); the catalog's runtime confs only fill unset keys."""
+    from crux_spark.node import Node
+
+    s = spark.newSession()  # the builder's confs, isolated from other tests
+    assert s.conf.get(BROADCAST) == "16MB"
+    node = Node(s, schema="id string, v bigint")
+    node.submit_tx([("put", {"id": "a", "v": 1})])
+    node.await_tx()
+    query = {"find": ["?e"], "where": [["?e", ":v", 1]]}
+    assert [r[0] for r in node.db().q(query).collect()] == ["a"]
+    assert s.conf.get(BROADCAST) == "16MB"
+
+
+def test_runtime_confs_fill_unset_keys_once_per_session(spark):
+    """Catalog sets an engine conf only where the session has none, and
+    only for the first catalog built on that session."""
+    from crux_spark import Catalog
+
+    policy = "spark.sql.mapKeyDedupPolicy"
+    s = spark.newSession()
+    s.conf.set(BROADCAST, "3MB")
+    s.conf.unset(policy)
+    assert s.conf.get(policy, None) is None
+    Catalog(s)
+    assert s.conf.get(BROADCAST) == "3MB"
+    assert s.conf.get(policy) == "LAST_WIN"
+    s.conf.unset(policy)
+    Catalog(s)
+    assert s.conf.get(policy, None) is None
