@@ -28,7 +28,7 @@ entries::
 - ``encode_doc`` is idempotent (an already-encoded dict returns as-is),
   so ``content_hash(original_doc) == content_hash(json.loads(doc_json))``
   — the invariant the closed-form splice relies on (store.py
-  _bulk_put_versions, which apply_ops_df uses for fresh eids and
+  _bulk_put_versions, which apply_ops_df uses for all-fresh frames and
   commit() for a first batch: stored doc_json is the sorted-keys
   re-dump and content_hash its sha1, byte-identical to
   splice.content_hash's input).

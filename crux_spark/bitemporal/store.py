@@ -12,9 +12,12 @@ which is all the splice algebra needs. Where the ops live decides how:
 
     apply_ops_df() — a distributed op frame (bulk_ingest, streaming micro-batches):
     ops frame ── one probe job: max tx, any match, any existing eid, put order
-      no match, fresh eids with ordered unranged puts ─ closed form ──────┐
-      every other op ──┐                                                  ├─ new versions
-      versions (by eid) ┴─ cogroup on eid ─ applyInPandas(splice) ─────────┘
+      only ordered unranged puts, all on fresh eids:
+        versions ∪ closed form ──────────────────────────────── coalesce ─ localCheckpoint
+      any other frame:
+        versions ── eid IN (frame) ─┬─ cogroup on eid ─ applyInPandas(splice) ─┐
+        ops frame ──────────────────┘                                          │
+        versions ── eid NOT IN (frame) ∪ new histories ────────── coalesce ─ localCheckpoint
 
 A commit's cost follows the entities it touches: one job collects their
 histories, the driver applies the batch tx by tx (a tx whose match fails
@@ -37,7 +40,10 @@ new ones back (untouched entries stay valid), so a read of a just-
 written entity always hits. Any other assignment of ``versions`` clears
 the cache.
 
-apply_ops_df is for op frames that never reach the driver. Per-entity
+apply_ops_df is for op frames that never reach the driver. Its cost
+follows the frame too: the closed form only adds rows, and the cogroup
+runs the splice over the histories of the eids the frame names, while
+the other rows pass through in the JVM. Per-entity
 histories are small; entities shard across executors. At 100 TB the
 versions table is partitioned/bucketed by eid so the cogroup is a single
 co-located shuffle. Match/CAS atomicity across entities is two-phase
@@ -246,7 +252,7 @@ def _bucketed_cogroup(
 
 def _bulk_put_versions(ops: DataFrame) -> DataFrame:
     """Closed-form version rows for a fresh-entity, strictly-ordered,
-    unranged put stream (apply_ops_df's fresh eids, commit()'s first
+    unranged put stream (apply_ops_df's all-fresh frames, commit()'s first
     batch). A null valid_from is the put's tx_time, as the splice
     stores it. Per entity with puts at v_1 < ... < v_n (tx
     t_1 < ... < t_n), the per-op splice yields exactly:
@@ -822,7 +828,7 @@ class TxStore:
         if self._versions_empty and self._commit_fast_path_ok():
             # Into an empty store, a batch of unranged puts with strictly
             # increasing per-entity (tx, effective valid-from) has the
-            # same closed form as apply_ops_df's fresh eids (guide
+            # same closed form as apply_ops_df's all-fresh frames (guide
             # §1.2): two lead() windows and the norm UDF instead of the
             # per-op Python splice, row-identical to it
             # (test_commit_fast_path_equivalence). The batch shape is
@@ -1013,13 +1019,13 @@ class TxStore:
         One probe job answers the routing: the max tx id (advances the
         tx counter), whether a match is present, whether any op targets
         an eid with history (no join into a provably empty store) and
-        whether every op on a fresh eid is an unranged put with strictly
-        increasing (tx, effective valid-from). With no match and an
-        ordered fresh side, fresh eids take the closed form
-        (_bulk_put_versions, row-identical to the per-op splice, which
-        is O(n^2) in an entity's history) and the rest the cogroup;
-        otherwise the whole frame runs the cogroup. Only the probe row,
-        match verdicts (tx ids) and — for a match-carrying batch — its
+        whether every op is an unranged put with strictly increasing
+        (tx, effective valid-from) per eid. A frame of such puts on
+        fresh eids only takes the closed form (_bulk_put_versions,
+        row-identical to the per-op splice, which is O(n^2) in an
+        entity's history); any other frame runs the cogroup over the
+        histories of the eids it names. Only the probe row, match
+        verdicts (tx ids) and — for a match-carrying batch — its
         distinct (tx, eid) pairs reach the driver."""
         return self._apply_frame(ops_df)[0]
 
@@ -1027,29 +1033,28 @@ class TxStore:
         """apply_ops_df, also returning the frame's max tx id (None for
         an empty frame, which changes nothing) for the streaming
         ingester's listeners."""
-        existing = (
-            None if self._versions_empty
-            else self.versions.select("eid").distinct()
+        stats = self._probe_ops(
+            ops_df, None if self._versions_empty else self.versions
         )
-        stats = self._probe_ops(ops_df, existing)
         if stats["max_tx"] is None:
             return set(), None
         aborted: set[int] = set()
-        if stats["n_match"] or stats["n_bad"]:
+        if stats["n_match"] or stats["n_bad"] or stats["n_existing"]:
+            # the cogroup splices only the frame's eids; every other
+            # entity's rows pass through untouched
+            eids = ops_df.select("eid")
+            hist = self.versions.join(eids, "eid", "left_semi")
             if stats["n_match"]:
-                aborted = self._match_aborts(ops_df)
-            new = self._cogroup_apply(ops_df, aborted)
-        elif existing is None:
-            new = _bulk_put_versions(ops_df)
-        elif not stats["n_existing"]:
-            new = self.versions.unionByName(_bulk_put_versions(ops_df))
+                aborted = self._match_aborts(hist, ops_df)
+            new = self.versions.join(eids, "eid", "left_anti").unionByName(
+                self._cogroup_apply(hist, ops_df, aborted)
+            )
         else:
-            new = _bulk_put_versions(
-                ops_df.join(existing, "eid", "left_anti")
-            ).unionByName(self._cogroup_apply(
-                ops_df.join(existing, "eid", "left_semi"), aborted
-            ))
-        self.versions = new.localCheckpoint()
+            new = self.versions.unionByName(_bulk_put_versions(ops_df))
+        # a union has the partitions of both sides; without the coalesce
+        # every frame would grow the table, and each read pays per partition
+        n_parts = max(self.versions.rdd.getNumPartitions(), self._nbuckets())
+        self.versions = new.coalesce(n_parts).localCheckpoint()
         self.aborted_txs |= aborted
         max_tx = int(stats["max_tx"])
         # new rows carry only the frame's tx ids; an unseeded counter
@@ -1062,17 +1067,16 @@ class TxStore:
         return aborted, max_tx
 
     @staticmethod
-    def _probe_ops(ops_df: DataFrame, existing: DataFrame | None):
+    def _probe_ops(ops_df: DataFrame, versions: DataFrame | None):
         """The one probe row of apply_ops_df: max_tx, n_match,
-        n_existing (ops on eids in ``existing``) and n_bad (ops on fresh
-        eids that break the closed form's precondition). A left join
-        keeps every op row, so the per-eid lag window sees a fresh
-        eid's whole stream."""
-        if existing is None:
+        n_existing (ops on eids with rows in ``versions``) and n_bad
+        (ops that break the closed form's precondition)."""
+        if versions is None:
             probe = ops_df.withColumn("__ex", F.lit(None).cast("int"))
         else:
             probe = ops_df.join(
-                existing.withColumn("__ex", F.lit(1)), "eid", "left"
+                versions.select("eid").distinct().withColumn("__ex", F.lit(1)),
+                "eid", "left",
             )
         # one small code per op (0 unranged put, 1 match, 2 other), so
         # the window shuffles few columns
@@ -1097,14 +1101,14 @@ class TxStore:
             F.max("tx_id").alias("max_tx"),
             F.count(F.when(F.col("__k") == 1, 1)).alias("n_match"),
             F.count("__ex").alias("n_existing"),
-            F.count(F.when(
-                F.col("__ex").isNull() & ((F.col("__k") != 0) | out_of_order), 1
-            )).alias("n_bad"),
+            F.count(F.when((F.col("__k") != 0) | out_of_order, 1)).alias("n_bad"),
         ).first()
 
-    def _cogroup_apply(self, ops_df: DataFrame, aborted: set[int]) -> DataFrame:
-        """The versions table with ``ops_df`` spliced in per entity,
-        skipping the ops of ``aborted`` txs."""
+    def _cogroup_apply(
+        self, hist: DataFrame, ops_df: DataFrame, aborted: set[int]
+    ) -> DataFrame:
+        """The version rows of ``hist`` with ``ops_df`` spliced in per
+        entity, skipping the ops of ``aborted`` txs."""
         final = frozenset(aborted)
 
         def apply_fn(eid, hist, op_rows):
@@ -1112,10 +1116,10 @@ class TxStore:
             return _history_cols(eid, hist)
 
         return _bucketed_cogroup(
-            self.versions, ops_df, apply_fn, VERSIONS_SCHEMA, self._nbuckets()
+            hist, ops_df, apply_fn, VERSIONS_SCHEMA, self._nbuckets()
         )
 
-    def _match_aborts(self, ops_df: DataFrame) -> set[int]:
+    def _match_aborts(self, hist: DataFrame, ops_df: DataFrame) -> set[int]:
         """The txs of a match-carrying frame that abort under SERIAL
         semantics (the reference ingests tx-by-tx, tx.clj:424-479): a
         tx's verdict must be computed with the abort set of all EARLIER
@@ -1131,7 +1135,7 @@ class TxStore:
         round finalises the earliest failing tx of EVERY group, and
         rounds = (aborts in the largest dependent group) + 1. The groups
         come from the frame's distinct (tx, eid) pairs, held on the
-        driver."""
+        driver. ``hist`` holds the version rows of the frame's eids."""
         parent: dict = {}
 
         def find(x):
@@ -1159,7 +1163,7 @@ class TxStore:
         aborted: set[int] = set()
         while True:
             bad_rows = _bucketed_cogroup(
-                self.versions, ops_df, make_eval_fn(frozenset(aborted)),
+                hist, ops_df, make_eval_fn(frozenset(aborted)),
                 MATCH_SCHEMA, self._nbuckets(),
             ).collect()
             new = sorted({r.tx_id for r in bad_rows} - aborted)

@@ -45,18 +45,26 @@ ID_COL = "_id"
 
 # Confs the engine needs that are RUNTIME-settable, so a Catalog works even
 # on a SparkSession it did not build (e.g. the correctness driver's vanilla
-# session). `nanosAsLong` is the critical one: without it a vanilla session
-# cannot even *schema-infer* events.parquet (TIMESTAMP(NANOS)) and every
-# query dies in Catalog.__init__ — see session.py:45 for the builder-side
-# counterpart. timeZone=UTC keeps timestamp results hash-identical to a
-# UTC-naive DuckDB oracle regardless of host tz.
-_RUNTIME_CONFS = {
+# session). Query results depend on these, so every Catalog sets them over
+# whatever the session holds. `nanosAsLong` is the critical one: without it
+# a vanilla session cannot even *schema-infer* events.parquet
+# (TIMESTAMP(NANOS)) and every query dies in Catalog.__init__ — see
+# session.py:45 for the builder-side counterpart. timeZone=UTC keeps
+# timestamp results hash-identical to a UTC-naive DuckDB oracle regardless
+# of host tz.
+_SEMANTIC_CONFS = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.session.timeZone": "UTC",
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.adaptive.enabled": "true",
     # clojure merge/assoc are right-wins on duplicate map keys
     "spark.sql.mapKeyDedupPolicy": "LAST_WIN",
+}
+
+# Tuning defaults: set once per session, and only where the session has no
+# value, so a builder's or user's choice (get_spark's 16MB broadcast
+# threshold, which session.py measured) is kept.
+_TUNING_CONFS = {
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.adaptive.enabled": "true",
     # dimension tables (region/nation/supplier/...) should broadcast in
     # star joins even on a session the engine didn't build
     "spark.sql.autoBroadcastJoinThreshold": "64MB",
@@ -64,26 +72,27 @@ _RUNTIME_CONFS = {
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
 }
 
-# sessions ensure_runtime_confs has already run on
-_CONFIGURED: weakref.WeakSet = weakref.WeakSet()
+# sessions the tuning defaults have been applied to
+_TUNED: weakref.WeakSet = weakref.WeakSet()
 
 
 def ensure_runtime_confs(spark: SparkSession) -> None:
-    """Best-effort apply engine-required runtime confs to a session, once
-    per session, and only to keys the session has not set: a value from
-    the session builder or the user (get_spark's 16MB broadcast
-    threshold) is kept."""
-    if spark in _CONFIGURED:
-        return
-    for k, v in _RUNTIME_CONFS.items():
+    """Best-effort apply the engine's runtime confs to a session: the
+    semantic ones on every call, the tuning defaults once per session
+    and only to unset keys."""
+    confs = [(k, v, True) for k, v in _SEMANTIC_CONFS.items()]
+    if spark not in _TUNED:
+        confs += [(k, v, False) for k, v in _TUNING_CONFS.items()]
+    for k, v, force in confs:
         try:
-            if spark.conf.get(k, None) is None:
+            cur = spark.conf.get(k, None)
+            if cur != v and (force or cur is None):
                 spark.conf.set(k, v)
         except Exception:
             # locked-down session (spark.sql.conf.isModifiable=false for this
             # key) — proceed; the builder path (session.py) sets it statically.
             pass
-    _CONFIGURED.add(spark)
+    _TUNED.add(spark)
 
 
 def _nanos_ts_columns(path: str) -> list[str]:

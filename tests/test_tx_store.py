@@ -1440,6 +1440,29 @@ def test_apply_ops_df_fresh_ordered_puts_take_the_closed_form(spark, monkeypatch
     assert [h["doc"]["v"] for h in store.entity_history("e1")] == [1, 11, 21, 31]
 
 
+def test_apply_ops_df_keeps_the_partition_count_bounded(spark):
+    """Each apply_ops_df unions rows into the table, on the closed form
+    (fresh puts) and on the cogroup (puts on an eid with history) alike.
+    The partition count stays within max(start, shuffle partitions)
+    however many frames arrive, so reads do not pay per frame."""
+    store = TxStore(spark)
+    store.submit_tx([("put", {"id": "z", "v": 0})], tx_time=t(1))
+    store.commit()
+    bound = max(store.versions.rdd.getNumPartitions(), store._nbuckets())
+    n_fresh = bound + 2
+    counts = []
+    for k in range(n_fresh + 2):
+        eid = f"f{k}" if k < n_fresh else "z"
+        store.apply_ops_df(_ops_frame(
+            spark, [([("put", {"id": eid, "v": k})], t(2 + k))],
+            after_tx=store._tx_id,
+        ))
+        counts.append(store.versions.rdd.getNumPartitions())
+    assert max(counts) <= bound, counts
+    assert store.entity("z")["v"] == n_fresh + 1
+    assert store.versions.select("eid").distinct().count() == 1 + n_fresh
+
+
 def test_bulk_ingest_into_an_empty_store_job_count(spark):
     """A 25k-row bulk load into an empty store runs at most 5 Spark
     jobs: the one probe and the checkpointed closed form."""

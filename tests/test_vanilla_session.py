@@ -89,18 +89,39 @@ def test_get_spark_session_keeps_its_broadcast_threshold(spark):
 
 
 def test_runtime_confs_fill_unset_keys_once_per_session(spark):
-    """Catalog sets an engine conf only where the session has none, and
+    """Catalog sets a tuning conf only where the session has none, and
     only for the first catalog built on that session."""
     from crux_spark import Catalog
 
-    policy = "spark.sql.mapKeyDedupPolicy"
+    arrow = "spark.sql.execution.arrow.pyspark.enabled"
     s = spark.newSession()
     s.conf.set(BROADCAST, "3MB")
-    s.conf.unset(policy)
-    assert s.conf.get(policy, None) is None
+    s.conf.unset(arrow)
+    assert s.conf.get(arrow, None) is None
     Catalog(s)
     assert s.conf.get(BROADCAST) == "3MB"
-    assert s.conf.get(policy) == "LAST_WIN"
-    s.conf.unset(policy)
+    assert s.conf.get(arrow) == "true"
+    s.conf.unset(arrow)
     Catalog(s)
-    assert s.conf.get(policy, None) is None
+    assert s.conf.get(arrow, None) is None
+
+
+def test_catalog_forces_the_confs_results_depend_on(spark):
+    """The session time zone, map-key dedup policy and parquet nanos
+    handling decide what queries return, so every Catalog sets them,
+    over a value the session already has."""
+    from crux_spark import Catalog
+
+    s = spark.newSession()
+    Catalog(s)
+    s.conf.set("spark.sql.session.timeZone", "America/New_York")
+    s.conf.set("spark.sql.mapKeyDedupPolicy", "EXCEPTION")
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    cat = Catalog(s)
+    assert s.conf.get("spark.sql.session.timeZone") == "UTC"
+    assert s.conf.get("spark.sql.mapKeyDedupPolicy") == "LAST_WIN"
+    assert s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    ts = cat.spark.sql(
+        "SELECT CAST(timestamp_seconds(0) AS STRING) AS t"
+    ).first().t
+    assert ts == "1970-01-01 00:00:00"
