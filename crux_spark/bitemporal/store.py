@@ -1049,6 +1049,10 @@ class TxStore:
             new = self.versions.join(eids, "eid", "left_anti").unionByName(
                 self._cogroup_apply(hist, ops_df, aborted)
             )
+        elif self._versions_empty:
+            # the closed form is the whole table: a union with the empty
+            # relation would only add its partitions
+            new = _bulk_put_versions(ops_df)
         else:
             new = self.versions.unionByName(_bulk_put_versions(ops_df))
         # a union has the partitions of both sides; without the coalesce
