@@ -12,7 +12,7 @@ which is all the splice algebra needs. Where the ops live decides how:
 
     apply_ops_df() — a distributed op frame (bulk_ingest, streaming micro-batches):
     ops frame ── one probe job: max tx, any match, any existing eid, put order
-      only ordered unranged puts, all on fresh eids:
+      only ordered unranged puts, all on fresh eids (no union into an empty store):
         versions ∪ closed form ──────────────────────────────── coalesce ─ localCheckpoint
       any other frame:
         versions ── eid IN (frame) ─┬─ cogroup on eid ─ applyInPandas(splice) ─┐
