@@ -11,10 +11,16 @@ pairs; AQE's skew-join handling splits hot buckets.
                  |intersection| / |union| (exact Jaccard, MinHash oracle)
 - minhash-lsh:  shingle hashes built inside the window transform ->
                  k affine permutations, min per fn (one groupBy id) ->
-                 band buckets -> bucket join, each pair kept only in its
-                 first colliding band (approx Jaccard at scale)
-- simhash:      per-token 64-bit hashes -> bitwise majority -> hamming
-                 bucket join
+                 band buckets -> band join (approx Jaccard at scale).
+                 IncrementalMinHashIndex keeps the band postings across
+                 batches; minhash_lsh_pairs is its first batch
+- simhash:      per-token 64-bit hashes -> bitwise majority -> bit-slice
+                 band join -> hamming filter
+
+Every LSH pair finder here and in similarity.py (hyperplane LSH) goes
+through one band join, _band_join: an equi-join of (band, bucket)
+postings that keeps each pair only in its first colliding band, so no
+shuffle deduplicates the pairs.
 """
 
 from __future__ import annotations
@@ -337,29 +343,57 @@ def _band_buckets(sig, num_hashes: int, bands: int) -> list:
     return [F.hash(F.slice(sig, bi * rows + 1, rows)) for bi in range(bands)]
 
 
-def _first_band(a: str, b: str, num_hashes: int, bands: int):
-    """Keep-condition for a row of a (band, bucket) self-join of postings
-    aliased ``a`` and ``b``: its band is the LOWEST band whose buckets
-    the two signatures share. Postings hold one signature per id, so a
-    pair that collides in several bands keeps exactly one joined row,
-    and the join needs no dedup shuffle on (id_a, id_b).
+def _band_join(postings: DataFrame, carry: str, buckets, key: tuple,
+               other: DataFrame | None = None) -> DataFrame:
+    """The LSH band join every pair finder shares: equi-join
+    (id, <carry>, band, bucket) postings on (band, bucket), keeping each
+    pair only in its LOWEST colliding band. Returns
+    (id_a, id_b, <carry>_a, <carry>_b) with id_a < id_b.
 
-    The row's own band collides by the join, so the condition is "no
-    earlier band collides": one (band <= j OR buckets differ) term per
-    band j, which recomputes only the buckets below the row's band and
-    stays plain codegen-able expressions (no lambda), so the join keeps
-    whole-stage codegen."""
+    ``buckets`` maps a posting's carried column to the list of its band
+    buckets: the MinHash signature's band hashes, the SimHash value's
+    bit slices, or a carried bucket array itself. ``key`` names that
+    mapping for the expression cache. A joined row's own band collides
+    by the join, so the rule is "no earlier band collides": one
+    (band <= j OR buckets differ) term per lower band, which recomputes
+    only the buckets below the row's band and stays plain codegen-able
+    expressions (no lambda), so the join keeps whole-stage codegen. A
+    posting table carries one value per id, so a pair that collides in
+    several bands keeps exactly one joined row, and no shuffle on
+    (id_a, id_b) deduplicates the pairs.
+
+    ``other=None`` self-joins ``postings`` on a.id < b.id. Otherwise
+    ``postings`` join ``other``, whose ids must be disjoint from theirs,
+    and each row is oriented by least/greatest id."""
+    a = postings.alias("a")
+    b = (postings if other is None else other).alias("b")
 
     def build():
-        band = F.col(f"{a}.band")
-        ba = _band_buckets(F.col(f"{a}.sig"), num_hashes, bands)
-        bb = _band_buckets(F.col(f"{b}.sig"), num_hashes, bands)
+        band = F.col("a.band")
+        ba = buckets(F.col(f"a.{carry}"))
+        bb = buckets(F.col(f"b.{carry}"))
         keep = F.lit(True)
-        for j in range(bands - 1):
+        for j in range(len(ba) - 1):
             keep = keep & ((band <= j) | (ba[j] != bb[j]))
         return keep
 
-    return _expr_cached("lsh_first_band", (a, b, num_hashes, bands), build)
+    on = (F.col("a.band") == F.col("b.band")) & (
+        F.col("a.bucket") == F.col("b.bucket")
+    )
+    ca, cb = F.col(f"a.{carry}"), F.col(f"b.{carry}")
+    if other is None:
+        on = on & (F.col("a.id") < F.col("b.id"))
+        cols = [F.col("a.id"), F.col("b.id"), ca, cb]
+    else:
+        swap = F.col("a.id") > F.col("b.id")
+        cols = [
+            F.least("a.id", "b.id"), F.greatest("a.id", "b.id"),
+            F.when(swap, cb).otherwise(ca), F.when(swap, ca).otherwise(cb),
+        ]
+    names = ["id_a", "id_b", f"{carry}_a", f"{carry}_b"]
+    return a.join(b, on).filter(
+        _expr_cached("band_join_keep", (key, carry), build)
+    ).select(*[c.alias(nm) for c, nm in zip(cols, names)])
 
 
 def minhash_lsh_pairs(
@@ -372,7 +406,11 @@ def minhash_lsh_pairs(
     threshold: float = 0.4,
     verify: str = "est",
 ) -> DataFrame:
-    """MinHash + LSH banding near-dup candidates.
+    """MinHash + LSH banding near-dup pairs: the pairs
+    :class:`IncrementalMinHashIndex` finds when ``df`` is its first
+    batch. A batch answer is the incremental answer from an empty
+    index, so both share one band join, one signature pass and one
+    verification.
 
     verify="est": candidates verified with estimated Jaccard (signature
     agreement rate) — cheapest, fully map-side. Returns
@@ -386,69 +424,11 @@ def minhash_lsh_pairs(
     Scale path: band-bucket equi-join means candidate generation is a
     single shuffle on (band, bucket-hash); only banded collisions are
     compared, and each pair only in its first colliding band
-    (_first_band), so no shuffle deduplicates the pairs.
+    (_band_join), so no shuffle deduplicates the pairs.
     """
-    # one shingling pass feeds BOTH the signatures and (in exact mode)
-    # the verification sets — in exact mode fused into a single per-doc
-    # aggregation (_per_doc_sig_sets): one shuffle, one checkpoint
-    ex = shingle_hashes(df, id_col, text_col, n)
-    per_doc = None
-    if verify == "exact":
-        per_doc = _per_doc_sig_sets(ex, num_hashes).localCheckpoint(
-            eager=False
-        )
-        sigs = per_doc.select("id", "sig")
-    else:
-        sigs = minhash_signatures(
-            df, id_col, text_col, n, num_hashes, exploded=ex,
-            checkpoint=False,  # banded is checkpointed right below
-        )
-    banded = banded_signatures(sigs, num_hashes, bands).localCheckpoint(eager=False)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    joined = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.id") < F.col("b.id")),
-    ).filter(_first_band("a", "b", num_hashes, bands))
-    if verify == "exact":
-        cand = joined.select(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
-        )
-        sets = per_doc.select("id", "sh")
-        sa = sets.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-        sb = sets.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-        n_inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        return (
-            cand.join(sa, "id_a")
-            .join(sb, "id_b")
-            .withColumn(
-                "jaccard",
-                F.round(
-                    n_inter / (F.size("sh_a") + F.size("sh_b") - n_inter), 6
-                ),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
-    agree = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    )
-    return (
-        joined.select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
-        .withColumn("est_jaccard", F.round(agree / F.lit(num_hashes), 6))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
-    )
+    return IncrementalMinHashIndex(
+        df.sparkSession, n, num_hashes, bands, threshold, verify
+    ).add_batch(df, id_col, text_col)
 
 
 def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -491,52 +471,39 @@ def simhash_near_pairs(
 ) -> DataFrame:
     """SimHash near-dup pairs via banded bucket join (pigeonhole: a pair
     within hamming distance d must agree on >=1 of d+1 disjoint bands;
-    4x16-bit bands cover d<=3 exactly, larger d approximately)."""
-    sh = simhash(df, id_col, text_col)
+    4x16-bit bands cover d<=3 exactly, larger d approximately). Each
+    pair comes from its lowest colliding band (_band_join), so no
+    shuffle deduplicates the pairs."""
     nbands = 64 // band_bits
     mask = (1 << band_bits) - 1
-    banded = sh.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.shiftright("simhash", bi * band_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("bucket"),
-                    )
-                    for bi in range(nbands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "simhash", "bb.band", "bb.bucket").localCheckpoint(eager=False)
+
+    def slices(c):
+        return [
+            F.shiftright(c, bi * band_bits).bitwiseAND(F.lit(mask))
+            for bi in range(nbands)
+        ]
+
+    bb = F.explode(F.array(*[
+        F.struct(F.lit(bi).alias("band"), bucket.alias("bucket"))
+        for bi, bucket in enumerate(slices(F.col("simhash")))
+    ])).alias("bb")
+    banded = simhash(df, id_col, text_col).select("id", "simhash", bb).select(
+        "id", "simhash", "bb.band", "bb.bucket"
+    ).localCheckpoint(eager=False)
     # shuffled sort-merge self-join on (band, bucket): hot buckets generate
     # quadratic pair counts, and AQE's skew-join splitting only parallelizes
     # shuffle joins — a broadcast join would compute every pair in however
     # few partitions the probe side has
-    a, b = banded.hint("merge").alias("a"), banded.alias("b")
-    # hamming filter runs map-side on the raw (quadratic-in-bucket) pair
-    # stream; only survivors reach the dedup shuffle
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
-        .select("id_a", "id_b", "hamming")
+    pairs = _band_join(
+        banded.hint("merge"), "simhash", slices, ("simhash", band_bits)
     )
+    return pairs.select(
+        "id_a",
+        "id_b",
+        F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).alias(
+            "hamming"
+        ),
+    ).filter(F.col("hamming") <= max_hamming)
 
 
 def window_hashes(
@@ -914,8 +881,8 @@ def trim_duplicate_lines(
 
 class IncrementalMinHashIndex:
     """MinHash-LSH near-dup index maintained incrementally from document
-    batches — the STREAMING sibling of :func:`minhash_lsh_pairs`, and
-    the near-dup counterpart of the exact streaming dedup (the reference
+    batches — :func:`minhash_lsh_pairs` is its first batch — and the
+    near-dup counterpart of the exact streaming dedup (the reference
     has only tx-time exact match; this is part of the pipeline-operator
     extension family, like IncrementalVectorIndex / IncrementalTextIndex
     which follow the reference's register-index! replay seam,
@@ -930,9 +897,9 @@ class IncrementalMinHashIndex:
       1. shingles + signs the NEW docs only (one projection, no
          full-corpus pass);
       2. joins new postings against new+existing postings on
-         (band, bucket) — candidate generation stays a bucket equi-join
-         at any corpus size, the same shuffle shape as the batch
-         operator;
+         (band, bucket) through _band_join — candidate generation stays
+         a bucket equi-join at any corpus size, each pair from its
+         first colliding band;
       3. verifies candidates (exact shingle-set Jaccard, or signature
          agreement in ``verify="est"`` mode) and RETURNS the pairs that
          involve at least one new doc;
@@ -1041,42 +1008,21 @@ class IncrementalMinHashIndex:
         touched = (per_doc.select("id") if per_doc is not None
                    else new_banded.select("id").distinct())
 
-        # candidate generation: new x (existing + new). Half-open on the
-        # NEW side only — cross pairs take both orders in the raw join,
-        # so normalize to (min, max); in-batch pairs use a.id < b.id
-        # directly like the batch operator. Both sides keep a pair only
-        # in its first colliding band: every id has one signature on
-        # each side and new ids are anti-joined out of the old postings,
-        # so each candidate pair is emitted exactly once.
-        a = new_banded.alias("a")
-        inb = a.join(
-            new_banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        ).filter(_first_band("a", "b", self.num_hashes, self.bands)).select(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-            F.col("a.sig").alias("sig_a"), F.col("b.sig").alias("sig_b"),
-        )
+        # candidate generation: new x (existing + new), each pair only in
+        # its first colliding band. In-batch pairs self-join the new
+        # postings on a.id < b.id; cross pairs join them against the old
+        # postings, with the new ids anti-joined out, so each candidate
+        # pair is emitted exactly once.
+        def sig_bands(c):
+            return _band_buckets(c, self.num_hashes, self.bands)
+
+        key = ("minhash", self.num_hashes, self.bands)
+        cands = _band_join(new_banded, "sig", sig_bands, key)
         if self.postings is not None:
-            old = self.postings.join(touched, "id", "left_anti").alias("o")
-            cross = a.join(
-                old,
-                (F.col("a.band") == F.col("o.band"))
-                & (F.col("a.bucket") == F.col("o.bucket")),
-            ).filter(
-                _first_band("a", "o", self.num_hashes, self.bands)
-            ).select(
-                F.least(F.col("a.id"), F.col("o.id")).alias("id_a"),
-                F.greatest(F.col("a.id"), F.col("o.id")).alias("id_b"),
-                F.when(F.col("a.id") < F.col("o.id"), F.col("a.sig"))
-                .otherwise(F.col("o.sig")).alias("sig_a"),
-                F.when(F.col("a.id") < F.col("o.id"), F.col("o.sig"))
-                .otherwise(F.col("a.sig")).alias("sig_b"),
+            old = self.postings.join(touched, "id", "left_anti")
+            cands = cands.unionByName(
+                _band_join(new_banded, "sig", sig_bands, key, other=old)
             )
-            cands = inb.unionByName(cross)
-        else:
-            cands = inb
 
         if self.verify == "exact":
             pairs = cands.select("id_a", "id_b")

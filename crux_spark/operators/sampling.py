@@ -10,11 +10,17 @@ is the same as sampling at 0.1% directly when the bucket spaces nest).
 
 Scale: the predicate is a single JVM-side hash + compare per row —
 whole-stage-codegen'd, zero shuffle, works identically at 100 TB.
+
+Benchmark decontamination has one form, contaminated_docs (hashed
+shingles against the benchmark's distinct hashes, broadcast), and its
+graded sibling contamination_scores. A Bloom-prefiltered variant
+returned the same rows in about twice the time, on a 500-doc corpus and
+at 10x it, because its Python UDF costs more than the broadcast join it
+screens for.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -233,85 +239,6 @@ def contamination_scores(
             F.count("__hit").alias("n_shared"),
             F.round(F.count("__hit") / F.count("*"), 6).alias("contam_frac"),
         )
-    )
-
-
-def bloom_decontaminate(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    n: int = 13,
-    bits_log2: int = 23,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Bloom-prefiltered exact decontamination: same rows as
-    contaminated_docs (the Bloom filter only PRE-screens; every
-    candidate is exactly verified against the benchmark shingle set),
-    but the corpus-side negatives never reach a join. At 100 TB this is
-    the shape that matters: the benchmark's shingle hashes compress
-    into a 2^bits_log2-bit bitset (1 MiB at the default), broadcast
-    once; each corpus shingle is tested with two derived probes in a
-    vectorized Arrow batch — a map-only scan for the ~100% of shingles
-    that miss — and only Bloom hits (true positives + ~n/2^bits false
-    positives per probe pair) pay the exact broadcast join.
-
-    The bitset is built driver-side from the benchmark's DISTINCT
-    shingle hashes — benchmarks are small by definition (the same
-    bounded-collect pattern as IVF centroid training); a corpus-sized
-    'benchmark' belongs in contaminated_docs' join instead."""
-    import numpy as np
-
-    spark = docs.sparkSession
-    m = np.uint64(1 << bits_log2)
-    b_sh = (
-        _shingle_relation(benchmark, [], text_col, n)
-        .select(F.xxhash64("sh").alias("sh"))
-        .distinct()
-    )
-    hashes = np.array([r[0] for r in b_sh.collect()], dtype=np.int64).view(
-        np.uint64
-    )
-    words = np.zeros(int(m) >> 6, dtype=np.uint64)
-    GOLD = np.uint64(0x9E3779B97F4A7C15)
-    # probe 1 reads the LOW bits_log2 bits of h; probe 2 must come from
-    # INDEPENDENT bits — the HIGH bits of the multiplicative hash. With
-    # m a power of two, (h * GOLD) % m depends only on h's low bits, so
-    # it is a fixed bijection of probe 1 (every probe-1 collision is a
-    # probe-2 collision too, collapsing the pair to one effective probe)
-    shift = np.uint64(64 - bits_log2)
-    with np.errstate(over="ignore"):
-        for idx in (hashes % m, (hashes * GOLD) >> shift):
-            np.bitwise_or.at(
-                words, (idx >> np.uint64(6)).astype(np.int64),
-                np.uint64(1) << (idx & np.uint64(63)),
-            )
-    bc = spark.sparkContext.broadcast(words)
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("boolean")
-    def bloom_maybe(s: pd.Series) -> pd.Series:
-        import numpy as _np
-
-        bs = bc.value
-        h = s.to_numpy().astype(_np.int64).view(_np.uint64)
-        with _np.errstate(over="ignore"):
-            i1 = h % m
-            i2 = (h * GOLD) >> _np.uint64(64 - int(bits_log2))
-        t1 = (bs[(i1 >> _np.uint64(6)).astype(_np.int64)] >> (i1 & _np.uint64(63))) & _np.uint64(1)
-        t2 = (bs[(i2 >> _np.uint64(6)).astype(_np.int64)] >> (i2 & _np.uint64(63))) & _np.uint64(1)
-        return pd.Series((t1 & t2).astype(bool))
-
-    d_sh = _shingle_relation(docs, [F.col(id_col)], text_col, n).select(
-        F.col(id_col), F.xxhash64("sh").alias("sh")
-    )
-    cand = d_sh.filter(bloom_maybe(F.col("sh")))
-    # exact verification strips Bloom false positives — output is
-    # bit-identical to the full exact join
-    return (
-        cand.join(F.broadcast(b_sh), "sh")
-        .groupBy(id_col)
-        .agg(F.count_distinct("sh").alias("n_shared"))
     )
 
 

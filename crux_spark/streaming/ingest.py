@@ -24,6 +24,11 @@ The sandbox has no broker, so tests cover ``reader_config()`` and the
 parsing plan; the parquet-dir source is the default and carries the same
 single-partition-total-order caveat the reference documents (kafka.clj
 topic config: 1 partition for the tx topic).
+
+StreamingNearDupDetector follows a document stream with an
+IncrementalMinHashIndex. Its pair table holds the pairs of each id's
+latest text: a batch's ids drop their stored pairs before the index's
+fresh pairs for them are added, so no shuffle deduplicates the table.
 """
 
 from __future__ import annotations
@@ -379,10 +384,18 @@ class StreamingNearDupDetector:
         return self._idx.postings
 
     def _apply_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+        # the index replaces the postings of every id in the batch and
+        # returns all of their pairs afresh, so every stored pair that
+        # names one of those ids goes first; the union then holds each
+        # pair once
         found = self._idx.add_batch(batch_df, self.id_col, self.text_col)
-        self.pairs = self.pairs.unionByName(found).dropDuplicates(
-            ["id_a", "id_b"]
-        ).localCheckpoint()
+        ids = batch_df.select(self.id_col)
+        kept = self.pairs
+        for side in ("id_a", "id_b"):
+            kept = kept.join(
+                ids, kept[side] == ids[self.id_col], "left_anti"
+            )
+        self.pairs = kept.unionByName(found).localCheckpoint()
 
     def start(self, checkpoint_dir: str):
         # default micro-batch trigger (not availableNow): the detector is a

@@ -3158,42 +3158,6 @@ def text_clf_score(spark, sf_dir):
     return _text.hashed_classifier_score(cat.table("documents"))
 
 
-@register(
-    "bloom_decontaminate",
-    r"""
-    WITH dw AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                         x -> x <> '') AS ws
-      FROM documents),
-    bsh AS (
-      SELECT DISTINCT array_to_string(ws[i:i+4], ' ') AS sh
-      FROM dw, UNNEST(range(1, greatest(len(ws)-4, 0)+1)) AS t(i)
-      WHERE doc_id % 89 = 0),
-    dsh AS (
-      SELECT doc_id, array_to_string(ws[i:i+4], ' ') AS sh
-      FROM dw, UNNEST(range(1, greatest(len(ws)-4, 0)+1)) AS t(i)
-      WHERE doc_id % 89 <> 0)
-    SELECT doc_id, CAST(count(DISTINCT dsh.sh) AS BIGINT) AS n_shared
-    FROM dsh JOIN bsh USING (sh)
-    GROUP BY doc_id
-    """,
-)
-def bloom_decontaminate(spark, sf_dir):
-    """Bloom-prefiltered exact decontamination (sampling.py
-    bloom_decontaminate): the benchmark's shingle hashes compress into a
-    broadcast bitset tested per corpus shingle in vectorized Arrow
-    batches — negatives are a map-only scan, only Bloom hits pay the
-    exact join. The oracle is the PLAIN exact decontamination: a
-    hash-match proves the prefilter+verify pipeline loses nothing and
-    admits nothing (false positives stripped by the verify join)."""
-    cat = catalog_for(spark, sf_dir)
-    docs = cat.table("documents")
-    bench = docs.filter(F.col("doc_id") % 89 == 0)
-    train = docs.filter(F.col("doc_id") % 89 != 0)
-    return _samp.bloom_decontaminate(train, bench, n=5)
-
-
 def _kmeans_ctes(k: int = 8, iterations: int = 3, quant: int = 6) -> str:
     """Unrolled Lloyd's iterations as DuckDB CTEs (shared by the kmeans
     and semdedup oracles): assignment = row_number over (quantized

@@ -1,15 +1,21 @@
 """MinHash shingle hashing, the LSH first-band rule and Arrow-backed
-local frames (operators/dedup.py, operators/graph.py, _localframe.py).
+local frames (operators/dedup.py, operators/similarity.py,
+operators/graph.py, _localframe.py).
 
 - shingle hashes and signatures equal a pure-Python reference;
 - every LSH pair is emitted once, and the output equals the formulation
-  that deduplicates the band-join rows with a shuffle;
+  that deduplicates the band-join rows with a shuffle (MinHash), a
+  pure-Python band collision (SimHash) or the exact cosine join
+  (embedding LSH);
+- the pair finders run no more Spark jobs per call than they did before
+  they shared one band join;
 - driver-built frames collect without a Spark job.
 """
 
 import hashlib
 import re
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -200,6 +206,75 @@ def test_incremental_batches_emit_each_pair_once(spark, verify):
         got += out
     assert len(got) == len(set(got))
     assert {(a, a + 1000) for a in range(0, 120, 10)} <= set(got)
+
+
+def test_simhash_pairs_emit_each_pair_once_from_its_first_band(spark):
+    """SimHash pairs equal a pure-Python band collision over the
+    signatures, one row per pair, though most pairs share several of
+    the four 16-bit bands."""
+    docs = _near_dup_corpus(spark)
+    sh = {r.id: r.simhash for r in dedup.simhash(docs).collect()}
+    ids = sorted(sh)
+
+    def bands(h):
+        return [(h >> (16 * j)) & 0xFFFF for j in range(4)]
+
+    want, multi = set(), 0
+    for i, a in enumerate(ids):
+        for b in ids[i + 1:]:
+            shared = sum(x == y for x, y in zip(bands(sh[a]), bands(sh[b])))
+            ham = bin((sh[a] ^ sh[b]) & (2**64 - 1)).count("1")
+            if shared and ham <= 8:
+                want.add((a, b, ham))
+                multi += shared > 1
+    assert multi > 0  # the fixture exercises the rule
+    got = [tuple(r) for r in dedup.simhash_near_pairs(docs).collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == want
+
+
+def test_embedding_lsh_pairs_emit_each_pair_once(spark):
+    """Planted near-copies collide in most of the bands; each pair is
+    still one output row, and the output equals the exact cosine
+    threshold join."""
+    from crux_spark.operators.similarity import lsh_near_dup_pairs
+
+    rng = np.random.RandomState(5)
+    base = rng.randn(60, 8)
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(base)]
+    rows += [(100 + i, [float(x) + 0.001 for x in base[i]])
+             for i in range(0, 60, 6)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = [(r.id_a, r.id_b) for r in lsh_near_dup_pairs(
+        df, threshold=0.99, bands=12, planes_per_band=4, dim=8
+    ).collect()]
+    vecs = {i: np.array(v) for i, v in rows}
+    want = {
+        (a, b) for a in vecs for b in vecs if a < b
+        and vecs[a] @ vecs[b]
+        / (np.linalg.norm(vecs[a]) * np.linalg.norm(vecs[b])) >= 0.99
+    }
+    assert {(i, 100 + i) for i in range(0, 60, 6)} <= want
+    assert len(got) == len(set(got))
+    assert set(got) == want
+
+
+def test_pair_finders_job_counts(spark):
+    """Spark jobs per call plus collect, on the near-dup fixture. Before
+    the finders shared one band join, the counts were: est 4, exact 5,
+    SimHash 5 (its pairs deduplicated by a shuffle), and 5 for an empty
+    index at its own defaults (exact, 16 bands)."""
+    docs = _near_dup_corpus(spark)
+    calls = {
+        "est": (4, lambda: dedup.minhash_lsh_pairs(docs)),
+        "exact": (5, lambda: dedup.minhash_lsh_pairs(docs, verify="exact")),
+        "simhash": (4, lambda: dedup.simhash_near_pairs(docs)),
+        "index": (5, lambda: dedup.IncrementalMinHashIndex(spark).add_batch(docs)),
+    }
+    for name, (most, call) in calls.items():
+        jobs = _jobs(spark)
+        assert call().collect(), name
+        assert jobs() <= most, (name, jobs())
 
 
 def test_connected_components_driver_path_runs_no_job(spark):

@@ -454,6 +454,37 @@ def test_streaming_near_dup_detector(spark, tmp_path):
     assert all(p == ("d1", "d3") for p in got)
 
 
+def test_streaming_near_dup_detector_drops_pairs_of_a_reput_id(spark):
+    """A re-sent id replaces its postings in the index, so its old pairs
+    leave the detector's pair table: the table holds what the index
+    holds now, not every pair some batch once found."""
+    from crux_spark.streaming.ingest import StreamingNearDupDetector
+
+    schema = "doc_id string, text string"
+    text = ("the quick brown fox jumps over the lazy dog and then runs far "
+            "away into the deep dark forest tonight")
+    det = StreamingNearDupDetector(spark, "unused", schema)
+    det._apply_batch(
+        spark.createDataFrame([("a", text), ("b", text + " again")], schema), 0
+    )
+    assert [(r.id_a, r.id_b) for r in det.pairs.collect()] == [("a", "b")]
+    det._apply_batch(spark.createDataFrame([(
+        "b", "completely different words entirely unrelated content nothing "
+             "shared with any earlier document at all here",
+    )], schema), 1)
+    assert det.pairs.collect() == []
+    # a third doc near the new b pairs with it, and the table keeps it
+    # when an unrelated batch arrives
+    det._apply_batch(spark.createDataFrame([(
+        "c", "completely different words entirely unrelated content nothing "
+             "shared with any earlier document at all there",
+    )], schema), 2)
+    det._apply_batch(
+        spark.createDataFrame([("d", "zebra yak xylophone walrus")], schema), 3
+    )
+    assert [(r.id_a, r.id_b) for r in det.pairs.collect()] == [("b", "c")]
+
+
 def test_streaming_tx_ingest_large_batch(spark, tmp_path):
     """A micro-batch far beyond driver-collect comfort must flow through the
     cogrouped splice without a driver round-trip (round-1 finding: the old

@@ -275,42 +275,6 @@ def test_select_token_budget_boundary_and_ties(spark):
     assert got == {2: (3, 0), 1: (4, 3), 3: (5, 7)}
 
 
-def test_bloom_decontaminate_equals_exact(spark):
-    """The Bloom prefilter + exact verify must return EXACTLY the plain
-    exact join's rows — even with a deliberately tiny bitset (2^8 bits
-    over dozens of shingles ≈ guaranteed false positives), because the
-    verify join strips every false positive."""
-    from crux_spark.operators.sampling import (
-        bloom_decontaminate,
-        contaminated_docs,
-    )
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog tonight"),
-        (2, "pack my box with five dozen liquor jugs right now"),
-        (3, "the quick brown fox jumps over a sleeping cat today"),
-        (4, "completely unrelated text about parquet shuffles and joins"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    bench = spark.createDataFrame(
-        [(100, "the quick brown fox jumps over the moon")],
-        "doc_id long, text string",
-    )
-    exact = {
-        (r.doc_id, r.n_shared)
-        for r in contaminated_docs(docs, bench, n=5).collect()
-    }
-    for bits in (8, 20):  # tiny (false positives certain) and realistic
-        got = {
-            (r.doc_id, r.n_shared)
-            for r in bloom_decontaminate(
-                docs, bench, n=5, bits_log2=bits
-            ).collect()
-        }
-        assert got == exact, f"bits_log2={bits}"
-    assert exact  # the fixture genuinely shares 5-gram shingles
-
-
 def test_temperature_mix_rates(spark):
     """Alpha-sampling semantics (Conneau et al. 2020): alpha=1 keeps
     natural proportions (rate 1.0 per source at budget 1.0); alpha=0
