@@ -17,10 +17,12 @@ pairs; AQE's skew-join handling splits hot buckets.
 - simhash:      per-token 64-bit hashes -> bitwise majority -> bit-slice
                  band join -> hamming filter
 
-Every LSH pair finder here and in similarity.py (hyperplane LSH) goes
-through one band join, _band_join: an equi-join of (band, bucket)
-postings that keeps each pair only in its first colliding band, so no
-shuffle deduplicates the pairs.
+Both LSH pair finders here go through one band join, _band_join: an
+equi-join of (band, bucket) postings that keeps each pair only in its
+first colliding band, so no shuffle deduplicates the pairs. Hyperplane
+LSH (similarity.lsh_near_dup_pairs) does not: it sizes its bands up to
+512, and a posting that carried every band's bucket would ship b^2
+longs per vector, so it deduplicates bare id pairs instead.
 """
 
 from __future__ import annotations
@@ -345,19 +347,19 @@ def _band_buckets(sig, num_hashes: int, bands: int) -> list:
 
 def _band_join(postings: DataFrame, carry: str, buckets, key: tuple,
                other: DataFrame | None = None) -> DataFrame:
-    """The LSH band join every pair finder shares: equi-join
+    """The band join the MinHash and SimHash pair finders share: equi-join
     (id, <carry>, band, bucket) postings on (band, bucket), keeping each
     pair only in its LOWEST colliding band. Returns
     (id_a, id_b, <carry>_a, <carry>_b) with id_a < id_b.
 
     ``buckets`` maps a posting's carried column to the list of its band
-    buckets: the MinHash signature's band hashes, the SimHash value's
-    bit slices, or a carried bucket array itself. ``key`` names that
-    mapping for the expression cache. A joined row's own band collides
-    by the join, so the rule is "no earlier band collides": one
-    (band <= j OR buckets differ) term per lower band, which recomputes
-    only the buckets below the row's band and stays plain codegen-able
-    expressions (no lambda), so the join keeps whole-stage codegen. A
+    buckets: the MinHash signature's band hashes or the SimHash value's
+    bit slices. ``key`` names that mapping for the expression cache. A
+    joined row's own band collides by the join, so the rule is "no
+    earlier band collides": one (band <= j OR buckets differ) term per
+    lower band, which recomputes only the buckets below the row's band
+    and stays plain codegen-able expressions (no lambda), so the join
+    keeps whole-stage codegen. A
     posting table carries one value per id, so a pair that collides in
     several bands keeps exactly one joined row, and no shuffle on
     (id_a, id_b) deduplicates the pairs.

@@ -11,12 +11,8 @@ is the same as sampling at 0.1% directly when the bucket spaces nest).
 Scale: the predicate is a single JVM-side hash + compare per row —
 whole-stage-codegen'd, zero shuffle, works identically at 100 TB.
 
-Benchmark decontamination has one form, contaminated_docs (hashed
-shingles against the benchmark's distinct hashes, broadcast), and its
-graded sibling contamination_scores. A Bloom-prefiltered variant
-returned the same rows in about twice the time, on a 500-doc corpus and
-at 10x it, because its Python UDF costs more than the broadcast join it
-screens for.
+contaminated_docs has no Bloom prefilter: a Python-UDF filter costs
+more than the broadcast join it would screen for.
 """
 
 from __future__ import annotations

@@ -9,10 +9,8 @@
   nprobe/nlist of the corpus. Centroids here come from a deterministic
   sample + one Lloyd iteration in numpy on the driver (k-means over a
   bounded sample — the standard IVF training shortcut).
-- LSH (random hyperplane) bucketed cosine: sign-bit band buckets ->
-  the (band, bucket) join shared with the MinHash and SimHash finders
-  (dedup._band_join, each pair from its lowest colliding band) ->
-  exact cosine verify.
+- LSH (random hyperplane) bucketed cosine: sign-bit signatures ->
+  bucket join, approximate but fully shuffle-local.
 """
 
 from __future__ import annotations
@@ -26,7 +24,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from crux_spark._localframe import local_frame
-from crux_spark.operators.dedup import _band_join
 
 
 def _dot(a, b):
@@ -474,11 +471,10 @@ def lsh_near_dup_pairs(
     pairs are found with even higher probability) — the standard
     (r, b) trade of the LSH literature. Sizing costs one count().
 
-    The band join keeps each candidate pair only in its lowest colliding
-    band (dedup._band_join), as BARE ID PAIRS, before the vectors are
-    fetched back by id — a pair colliding in k bands yields one 16-byte
-    row, never k copies of two dim-double payloads (the other half of
-    the sf1.0 regression), and no shuffle deduplicates the pairs.
+    The candidate pairs are deduped as BARE ID PAIRS before the vectors
+    are fetched back by id — a pair colliding in k bands shuffles k
+    16-byte rows, not k copies of two dim-double payloads (the other
+    half of the sf1.0 regression).
 
     This is the 100 TB default for near-dup detection: the self-join is
     on (band, bucket) keys — shuffle volume is b copies of (id, sig),
@@ -506,23 +502,36 @@ def lsh_near_dup_pairs(
 
     from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("array<long>")
+    @pandas_udf("array<string>")
     def band_buckets(v: pd.Series) -> pd.Series:
         M = np.stack(v.to_numpy()).astype(np.float64)  # (n, dim)
         bits = (M @ P >= 0).reshape(len(M), bands, planes_per_band)
-        return pd.Series(list((bits * weights).sum(axis=2)))  # (n, bands)
+        sigs = (bits * weights).sum(axis=2)  # (n, bands)
+        return pd.Series(
+            [
+                [f"{bi}_{s}" for bi, s in enumerate(row)]
+                for row in sigs
+            ]
+        )
 
     vec = F.col(vec_col).cast("array<double>")
     vecs = corpus.select(F.col(id_col).alias("id"), vec.alias("v"))
-    # each posting carries its doc's whole bucket array, from which the
-    # band join recomputes the lower bands' buckets
     base = corpus.select(
-        F.col(id_col).alias("id"), band_buckets(vec).alias("bks")
-    ).select("id", "bks", F.posexplode("bks").alias("band", "bucket"))
-    pairs = _band_join(
-        base, "bks", lambda c: [c[j] for j in range(bands)],
-        ("hyperplane", bands),
-    ).select("id_a", "id_b")
+        F.col(id_col).alias("id"),
+        F.explode(band_buckets(vec)).alias("bucket"),
+    )
+    a, b = base.alias("a"), base.alias("b")
+    pairs = (
+        a.join(b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id")))
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+        )
+        # a pair colliding in k bands appears k times; dedup the BARE id
+        # pairs (16 bytes each) before fetching vectors, so the exchange
+        # never carries duplicated dim-double payloads
+        .dropDuplicates(["id_a", "id_b"])
+    )
     va = vecs.select(F.col("id").alias("__ia"), F.col("v").alias("va"))
     vb = vecs.select(F.col("id").alias("__ib"), F.col("v").alias("vb"))
     cands = (

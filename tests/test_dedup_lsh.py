@@ -1,12 +1,10 @@
 """MinHash shingle hashing, the LSH first-band rule and Arrow-backed
-local frames (operators/dedup.py, operators/similarity.py,
-operators/graph.py, _localframe.py).
+local frames (operators/dedup.py, operators/graph.py, _localframe.py).
 
 - shingle hashes and signatures equal a pure-Python reference;
 - every LSH pair is emitted once, and the output equals the formulation
-  that deduplicates the band-join rows with a shuffle (MinHash), a
-  pure-Python band collision (SimHash) or the exact cosine join
-  (embedding LSH);
+  that deduplicates the band-join rows with a shuffle (MinHash) or a
+  pure-Python band collision (SimHash);
 - the pair finders run no more Spark jobs per call than they did before
   they shared one band join;
 - driver-built frames collect without a Spark job.
@@ -15,7 +13,6 @@ operators/graph.py, _localframe.py).
 import hashlib
 import re
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -229,32 +226,6 @@ def test_simhash_pairs_emit_each_pair_once_from_its_first_band(spark):
                 multi += shared > 1
     assert multi > 0  # the fixture exercises the rule
     got = [tuple(r) for r in dedup.simhash_near_pairs(docs).collect()]
-    assert len(got) == len(set(got))
-    assert set(got) == want
-
-
-def test_embedding_lsh_pairs_emit_each_pair_once(spark):
-    """Planted near-copies collide in most of the bands; each pair is
-    still one output row, and the output equals the exact cosine
-    threshold join."""
-    from crux_spark.operators.similarity import lsh_near_dup_pairs
-
-    rng = np.random.RandomState(5)
-    base = rng.randn(60, 8)
-    rows = [(i, [float(x) for x in v]) for i, v in enumerate(base)]
-    rows += [(100 + i, [float(x) + 0.001 for x in base[i]])
-             for i in range(0, 60, 6)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = [(r.id_a, r.id_b) for r in lsh_near_dup_pairs(
-        df, threshold=0.99, bands=12, planes_per_band=4, dim=8
-    ).collect()]
-    vecs = {i: np.array(v) for i, v in rows}
-    want = {
-        (a, b) for a in vecs for b in vecs if a < b
-        and vecs[a] @ vecs[b]
-        / (np.linalg.norm(vecs[a]) * np.linalg.norm(vecs[b])) >= 0.99
-    }
-    assert {(i, 100 + i) for i in range(0, 60, 6)} <= want
     assert len(got) == len(set(got))
     assert set(got) == want
 

@@ -14,8 +14,12 @@ and prints:
     still count up to their last sample;
   - HotSpot compilation time per op, from the CompilationMXBean.
 
-It reads ``/proc`` only for its own process and its descendants. The
-sampler's own CPU is reported apart and taken out of the Python figure.
+CPU is read from ``/proc`` for this process, the JVM, the JVM's
+threads and the JVM's descendants only. To find the descendants it reads
+the parent-pid field of every ``/proc/<pid>/stat`` it can see, since
+``/proc/<pid>/task/<tid>/children`` needs a kernel built with
+CONFIG_PROC_CHILDREN. The sampler's own CPU is reported apart and taken
+out of the Python figure.
 
 Usage (from the repo root, so Python workers import this checkout):
     python tools/cpu_breakdown.py --workload serve|dedup_pipeline
@@ -121,6 +125,8 @@ class ThreadSampler(threading.Thread):
 
 
 def descendants(pid: int) -> set[int]:
+    """Every live descendant of ``pid``, from the parent pid of each
+    visible process."""
     kids: dict[int, list[int]] = collections.defaultdict(list)
     for d in os.listdir("/proc"):
         if d.isdigit():
