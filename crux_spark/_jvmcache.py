@@ -1,9 +1,10 @@
-"""Gateway-lifetime token for caches holding py4j expression handles.
+"""Gateway-lifetime memo for py4j expression handles.
 
 Several modules memoize constant Column trees (unresolved py4j
 JavaObject handles) per JVM gateway so repeated operator builds skip
-hundreds of py4j round trips. Those caches must be invalidated when the
-JVM/gateway restarts — but keying on ``id(gateway)`` is unsound: after
+hundreds of py4j round trips. ``memo(key, build)`` is that one cache:
+its entries are dropped when the JVM/gateway restarts. Keying on
+``id(gateway)`` would be unsound: after
 the old gateway object is garbage-collected, CPython can reuse its id
 for the NEW gateway, silently serving dead handles (r15 advice).
 
@@ -22,6 +23,8 @@ import weakref
 _LOCK = threading.Lock()
 _GW_REF: "weakref.ref | None" = None
 _GW_TOKEN = 0
+_MEMO: dict = {}
+_MEMO_TOKEN: "int | None" = None
 
 
 def gateway_token() -> int:
@@ -40,3 +43,18 @@ def gateway_token() -> int:
             _GW_TOKEN += 1
             _GW_REF = weakref.ref(gw) if gw is not None else None
         return _GW_TOKEN
+
+
+def memo(key, build):
+    """``build()``'s value, built once per ``key`` for the current
+    gateway. ``key`` names what ``build`` makes and its parameters; callers
+    namespace it with their own tag."""
+    global _MEMO_TOKEN
+    tok = gateway_token()
+    if tok != _MEMO_TOKEN:
+        _MEMO.clear()  # fresh JVM: old handles are dead
+        _MEMO_TOKEN = tok
+    hit = _MEMO.get(key)
+    if hit is None:
+        hit = _MEMO[key] = build()
+    return hit

@@ -203,10 +203,9 @@ class Catalog:
         self._dfs[name] = df
         # a new table invalidates any cached/materialized EAV view — the
         # union no longer covers the catalog (re-materialize to opt back
-        # into the single-scan path) — and the compiled-plan cache.
+        # into the single-scan path).
         self._eav = None
         self._eav_path = None
-        self._plan_cache = {}
         self._table_attrs[name] = []
         for field in df.schema.fields:
             if field.name == ID_COL:
@@ -475,8 +474,6 @@ class Catalog:
         ).parquet(path)
         self._eav = self.spark.read.parquet(path)
         self._eav_path = path
-        # compiled plans built on the union view are now stale
-        self._plan_cache = {}
         return path
 
     def register_views(self) -> None:

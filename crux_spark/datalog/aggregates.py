@@ -59,11 +59,8 @@ SAMPLE_SEED: int | None = None
 
 
 def set_sample_seed(seed: int | None) -> None:
-    from . import epoch
-
     global SAMPLE_SEED
     SAMPLE_SEED = seed
-    epoch.bump()  # the seed is baked into compiled sample/rand exprs
 
 
 def _seed() -> int:
@@ -101,19 +98,7 @@ def _rand_n(c: str, n: int) -> Column:
 
 
 def register_aggregate(name: str, fn) -> None:
-    from . import epoch
-
     _CUSTOM[name] = fn
-    epoch.bump()
-
-
-def has_aggregate(name: str) -> bool:
-    """True iff ``name`` is already a registered custom aggregate.
-    Callers that register idempotently (e.g. SPARQL GROUP_CONCAT per
-    separator) should check this first: register_aggregate bumps the
-    plan-cache epoch, and a redundant re-register would needlessly
-    invalidate every cached plan."""
-    return name in _CUSTOM
 
 
 def is_agg_form(el: Any) -> bool:

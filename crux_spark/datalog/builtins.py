@@ -77,17 +77,11 @@ _USER_FNS: dict[str, tuple] = {}
 def register_query_fn(
     name: str, fn, returns: str = "boolean", columnar: bool = False
 ) -> None:
-    from . import epoch
-
     _USER_FNS[name] = (fn, returns, columnar)
-    epoch.bump()  # compiled plans bake the allowlist — invalidate
 
 
 def unregister_query_fn(name: str) -> None:
-    from . import epoch
-
-    if _USER_FNS.pop(name, None) is not None:
-        epoch.bump()
+    _USER_FNS.pop(name, None)
 
 
 def _callable_predicate_udf(f):

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as _T
 
+from crux_spark._jvmcache import memo
 from crux_spark.catalog import ID_COL, Catalog
 from crux_spark.datalog import aggregates as agg
 from crux_spark.datalog.builtins import (
@@ -47,13 +48,6 @@ _SPECIAL = {"not", "not-join", "or", "or-join", "and"}
 
 # fixpoint safety valve for runaway recursive rules
 MAX_FIXPOINT_ITERATIONS = 200
-
-# Per-process round counters for the fixpoint drivers, read by
-# tools/scale_smoke.py to assert log-bounded convergence (TC squaring:
-# ceil(log2 diameter) rounds; semi-naive: diameter-bounded). Reset before
-# a query, read after; purely diagnostic.
-FIXPOINT_STATS = {"tc_rounds": 0, "fixpoint_rounds": 0, "tc_seeded_rounds": 0}
-
 
 # open pred-constraint registry — the reference's extensible
 # `q/pred-constraint` multimethod (query.clj:269-273; the crux-lucene
@@ -117,25 +111,18 @@ def _dedup_map_safe(df: DataFrame) -> DataFrame:
     )
 
 
-# Memoized typed-projection columns for var-attr scans (r15
-# optimization): the stringified value, __typed_num, __typed_ts and
-# __typed_ord columns scan_var_attr projects for a value var are pure
-# unresolved expression trees over the EAV schema — they depend only on
-# the OUTPUT column name. Building them costs ~1,900 py4j round trips
-# (~0.3s) per scan; a query like the 11-window mixed-type gate paid that
-# 11 times per compile. Cache per (JVM gateway, var column name).
-_VAR_ATTR_COLS_CACHE: dict[tuple[int, str], list] = {}
-
-
+# Typed-projection columns for var-attr scans: the stringified value,
+# __typed_num, __typed_ts and __typed_ord columns scan_var_attr projects
+# for a value var are pure unresolved expression trees over the EAV
+# schema — they depend only on the OUTPUT column name. Building them
+# costs ~1,900 py4j round trips (~0.3s) per scan; a query like the
+# 11-window mixed-type gate paid that 11 times per compile, so they go
+# through the gateway-lifetime memo, keyed by the var column name.
 def _var_attr_typed_cols(vc: str) -> list:
-    from crux_spark._jvmcache import gateway_token
+    return memo(("var_attr_cols", vc), lambda: _build_var_attr_typed_cols(vc))
 
-    key = (gateway_token(), vc)
-    cached = _VAR_ATTR_COLS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    if any(k[0] != key[0] for k in _VAR_ATTR_COLS_CACHE):
-        _VAR_ATTR_COLS_CACHE.clear()  # fresh JVM: old handles are dead
+
+def _build_var_attr_typed_cols(vc: str) -> list:
     sel = []
     # LocalTime (nano-of-day long) stringifies in the SQL TIME
     # literal shape: HH:MM:SS, with .micros only when non-zero
@@ -234,7 +221,6 @@ def _var_attr_typed_cols(vc: str) -> list:
             F.col("v_dur").alias("du"),
         ).alias(f"{vc}__typed_ord")
     )
-    _VAR_ATTR_COLS_CACHE[key] = sel
     return sel
 
 
@@ -1534,12 +1520,9 @@ class Compiler:
         E = self._tc_edge_relation(name)
         if E is None:
             return None
-        from crux_spark.metrics import record_loop
-
         S = E.localCheckpoint()
         n = S.count()
-        for _it in range(64):  # 2^64 diameter bound
-            FIXPOINT_STATS["tc_rounds"] += 1
+        for _ in range(64):  # 2^64 diameter bound
             # the squaring self-join must NEVER broadcast: S doubles every
             # round and its post-checkpoint size estimate lures AQE into a
             # driver-OOM broadcast once the closure passes a few million
@@ -1552,11 +1535,6 @@ class Compiler:
                     F.col("a.__r1") == F.col("b.__r0"),
                 )
                 .select(F.col("a.__r0"), F.col("b.__r1"))
-            )
-            record_loop(
-                "tc_squaring",
-                rounds=_it + 1,
-                round_df=comp if _it == 0 else None,
             )
             S2 = S.unionByName(comp).distinct().localCheckpoint()
             n2 = S2.count()
@@ -1757,12 +1735,7 @@ class Compiler:
             except Exception:
                 return None
 
-        from crux_spark.metrics import record_loop
-
-        _rounds = 0
         for _ in range(100_000):
-            FIXPOINT_STATS["tc_seeded_rounds"] += 1
-            _rounds += 1
             if not cnt:
                 break
             cond = F.col("__n") == E[b_col]
@@ -1789,17 +1762,7 @@ class Compiler:
                 or (fb is not None and fb * (reached_rows / max(cnt, 1)) <= bcast_byte_cap)
             )
             anti_rhs = F.broadcast(reached) if r_small else reached
-            pre = step.join(anti_rhs, lcols + ["__n"], "left_anti")
-            record_loop(
-                "tc_seeded",
-                rounds=_rounds,
-                round_df=pre if _rounds == 1 else None,
-                frontier_broadcast=bool(small),
-                reached_broadcast=bool(r_small),
-                frontier_rows=int(cnt),
-                frontier_bytes=fb,
-            )
-            frontier = pre.localCheckpoint()
+            frontier = step.join(anti_rhs, lcols + ["__n"], "left_anti").localCheckpoint()
             cnt = frontier.count()
             reached_rows += cnt
             frontiers.append(frontier)
@@ -1820,7 +1783,6 @@ class Compiler:
                 _gc.collect()
         else:
             raise RuntimeError(f"seeded closure for {name!r} did not converge")
-        record_loop("tc_seeded", rounds=_rounds)
         out = []
         for i in range(k):
             if i == bound_idx:
@@ -1941,12 +1903,8 @@ class Compiler:
         # shapes) and bootstrap rounds fall back to totals, which stays
         # correct (monotone) just less incremental. Convergence = a round
         # where no member produced new tuples.
-        from crux_spark.metrics import record_loop
-
         prev_delta: dict[str, DataFrame | None] = {m: None for m in group}
         for it in range(MAX_FIXPOINT_ITERATIONS):
-            FIXPOINT_STATS["fixpoint_rounds"] += 1
-            record_loop("semi_naive_fixpoint", rounds=it + 1)
             grew = False
             new_delta: dict[str, DataFrame | None] = {m: None for m in group}
             for m in group:
@@ -2551,95 +2509,11 @@ def compile_query(catalog: Catalog, query: dict, *args: Any) -> DataFrame:
     return df
 
 
-_PLAN_CACHE_CAP = 256  # the reference's query plan cache (query.clj:1993-2001)
-
-
-def _plan_cache_key(query: dict) -> "str | None":
-    """Canonical cache key for an argument-free query dict; None when
-    the query isn't safely cacheable (callable members, sampling
-    aggregates — an unseeded `rand`/`sample` bakes a fresh draw seed
-    into each compile, so serving a cached plan would freeze the
-    draw). Keys carry the compile-environment epoch (user fns, custom
-    aggregates, sample seed), so registry mutations invalidate by
-    construction."""
-    import json as _json
-
-    from . import epoch
-
-    def has_sampling(o) -> bool:
-        if isinstance(o, (list, tuple)):
-            if o and o[0] in ("rand", "sample"):
-                return True
-            return any(has_sampling(x) for x in o)
-        return False
-
-    if has_sampling(query.get("find", [])):
-        return None
-
-    def enc(o):
-        if isinstance(o, (set, frozenset)):
-            return ["__set__"] + sorted(map(repr, o))
-        if callable(o):
-            raise TypeError("callable")
-        return repr(o)
-
-    def norm(o):
-        # str/int subclasses (valuetypes.Char/BigInt/...) serialize
-        # identically to their base under json — but they are DISTINCT
-        # codec classes ([?e ?a Char("m")] != [?e ?a "m"]), so tag the
-        # subclass name into the key
-        if isinstance(o, dict):
-            return {k: norm(v) for k, v in o.items()}
-        if isinstance(o, (list, tuple)):
-            return [norm(x) for x in o]
-        if (
-            isinstance(o, (str, int, float))
-            and type(o) not in (str, int, float, bool)
-        ):
-            return f"__{type(o).__name__}__{o!r}"
-        return o
-
-    try:
-        body = _json.dumps(norm(query), sort_keys=True, default=enc)
-    except TypeError:
-        return None
-    return f"{epoch.current()}|{body}"
-
-
-def q(catalog: Catalog, query: dict, *args: Any) -> DataFrame:
-    """Run a Datalog query; returns the (lazy) result DataFrame.
-
-    Repeated argument-free queries hit a per-catalog compiled-plan LRU
-    (the reference's query plan cache, query.clj:1993-2001): compilation
-    is driver-side Python + JVM round trips, pure per (catalog, query),
-    and dominates latency for repeated point lookups. Queries with
-    ``:in`` args bake bindings into the plan and skip the cache; any
-    catalog registration invalidates it (same lifecycle as the EAV
-    view).
-
-    The eager set-vs-vector collection of the reference (query.clj:1781-1803)
-    is left to the caller: `.collect()` the returned frame (or `q_eager`
-    below for the reference's timeout-interrupted eager collection).
-    """
-    if args or not isinstance(query, dict):
-        return compile_query(catalog, query, *args)
-    key = _plan_cache_key(query)
-    if key is None:
-        return compile_query(catalog, query)
-    cache = getattr(catalog, "_plan_cache", None)
-    if cache is not None and key in cache:
-        return cache[key]
-    df = compile_query(catalog, query)
-    # re-fetch AFTER compiling: compilation lazily materializes tables,
-    # and registration resets the cache (correctly — the catalog
-    # changed); writing to the pre-compile dict would orphan the entry
-    cache = getattr(catalog, "_plan_cache", None)
-    if cache is None:
-        cache = catalog._plan_cache = {}
-    if len(cache) >= _PLAN_CACHE_CAP:
-        cache.pop(next(iter(cache)))  # FIFO eviction is enough here
-    cache[key] = df
-    return df
+# The Datalog surface's one entry point. The eager set-vs-vector
+# collection of the reference (query.clj:1781-1803) is left to the
+# caller: `.collect()` the returned frame, or `q_eager` below for the
+# reference's timeout-interrupted eager collection.
+q = compile_query
 
 
 DEFAULT_QUERY_TIMEOUT_MS = 30_000  # query.clj:2005-2007
@@ -2649,26 +2523,29 @@ class QueryTimeoutError(TimeoutError):
     pass
 
 
-def q_eager(catalog: Catalog, query: dict, *args: Any) -> list:
-    """Eager collection with the reference's timeout-interrupt semantics
-    (query.clj:1786-1794, default 30s): the running Spark jobs are
-    cancelled via their job group when `:timeout` (ms) elapses. Returns
-    collected Rows; raises QueryTimeoutError on expiry."""
+def run_cancellable(sc, query, fn, label: str):
+    """``fn()`` on a runner thread under its own Spark job group, with the
+    reference's timeout-interrupt semantics (query.clj:1786-1794): when the
+    query's ``:timeout`` (ms, default 30s) elapses, the group's running
+    jobs are cancelled and QueryTimeoutError is raised. Returns what
+    ``fn`` returns and re-raises what it raises."""
     import threading
     import uuid
 
-    timeout_ms = query.get("timeout", DEFAULT_QUERY_TIMEOUT_MS)
-    df = compile_query(catalog, query, *args)
-    sc = catalog.spark.sparkContext
+    timeout_ms = (
+        query.get("timeout", DEFAULT_QUERY_TIMEOUT_MS)
+        if isinstance(query, dict)
+        else DEFAULT_QUERY_TIMEOUT_MS
+    )
     group = f"crux-q-{uuid.uuid4().hex[:12]}"
     out: dict[str, Any] = {}
 
     def run():
         # job group is thread-local: set it in the runner so the cancel
         # below targets exactly this query's jobs
-        sc.setJobGroup(group, "crux_spark datalog query", interruptOnCancel=True)
+        sc.setJobGroup(group, label, interruptOnCancel=True)
         try:
-            out["rows"] = df.collect()
+            out["rows"] = fn()
         except Exception as e:  # surfaced by the caller below
             out["err"] = e
         finally:
@@ -2683,3 +2560,13 @@ def q_eager(catalog: Catalog, query: dict, *args: Any) -> list:
     if "err" in out:
         raise out["err"]
     return out["rows"]
+
+
+def q_eager(catalog: Catalog, query: dict, *args: Any) -> list:
+    """Eager collection of a Datalog query, cancelled on ``:timeout``
+    (see run_cancellable). Returns collected Rows; raises
+    QueryTimeoutError on expiry."""
+    df = compile_query(catalog, query, *args)
+    return run_cancellable(
+        catalog.spark.sparkContext, query, df.collect, "crux_spark datalog query"
+    )

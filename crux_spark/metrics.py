@@ -33,64 +33,6 @@ def _name(parts) -> str:
     return ".".join(parts) if isinstance(parts, (list, tuple)) else str(parts)
 
 
-# ------------------------------------------------------------- loop stats
-#
-# Iterative operators (connected components, semi-naive/TC closures) run
-# their shuffles inside per-round Spark jobs, so a fingerprint of the
-# FINAL frame shows "shuffles: 0" — exactly the gates whose shuffle
-# behavior matters most at scale become invisible (the r7 verdict's
-# plan-fingerprint blind spot). Each loop reports its round count and a
-# static plan-fact sample of ONE round's frame here; bench.py snapshots
-# the registry per gate and attaches it to the plan fingerprint.
-
-LOOP_STATS: dict[str, dict] = {}
-
-
-def plan_facts(df) -> dict | None:
-    """Shuffle/broadcast/join counts from a DataFrame's physical plan.
-    Reading executedPlan on an unexecuted frame triggers planning only
-    (no job); counts are then the static (pre-AQE-finalized) plan's —
-    fine for round-shape evidence."""
-    import re as _re
-    from collections import Counter as _Counter
-
-    try:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    except Exception:
-        return None
-    joins = _re.findall(
-        r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin"
-        r"|BroadcastNestedLoopJoin|CartesianProduct)",
-        plan,
-    )
-    return {
-        "shuffles": len(_re.findall(r"Exchange (?:hash|range|Single)", plan)),
-        "broadcasts": plan.count("BroadcastExchange"),
-        "joins": dict(_Counter(joins)),
-    }
-
-
-def record_loop(op: str, rounds: int, round_df=None, **extra) -> None:
-    """Record (or update) an iterative operator's loop facts. Pass the
-    FIRST round's un-checkpointed frame as round_df once; later calls
-    with round_df=None keep the captured round plan and bump rounds."""
-    entry = LOOP_STATS.setdefault(op, {})
-    entry["rounds"] = rounds
-    if round_df is not None and "round_plan" not in entry:
-        entry["round_plan"] = plan_facts(round_df)
-    entry.update(extra)
-
-
-def reset_loops() -> None:
-    LOOP_STATS.clear()
-
-
-def loops_snapshot() -> dict[str, dict]:
-    import copy
-
-    return copy.deepcopy(LOOP_STATS)
-
-
 class Meter:
     """Monotone event counter (dropwizard meter minus the moving rates —
     rates are a reporter-side derivative of (count, wallclock))."""

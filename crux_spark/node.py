@@ -272,14 +272,10 @@ class Db:
         of resumable pagination over re-execution (the reference avoids
         it by streaming ONE execution through a server-held cursor)."""
         import itertools
-        import threading
         import time
         import uuid
 
-        from crux_spark.datalog.compile import (
-            DEFAULT_QUERY_TIMEOUT_MS,
-            QueryTimeoutError,
-        )
+        from crux_spark.datalog.compile import normalize_query, run_cancellable
 
         qid = uuid.uuid4().hex[:12]
         state = {
@@ -291,47 +287,21 @@ class Db:
             "error": None,
         }
         self.node._record_submitted_query(state)
-        timeout_ms = (
-            query.get("timeout", DEFAULT_QUERY_TIMEOUT_MS)
-            if isinstance(query, dict)
-            else DEFAULT_QUERY_TIMEOUT_MS
-        )
-        sc = self.node.spark.sparkContext
-        group = f"crux-q-{qid}"
-        out: dict = {}
 
         def run():
-            # job group is thread-local: set inside the consumer thread
-            # so the cancel targets exactly this query's lazy jobs
-            sc.setJobGroup(group, "crux_spark streamed query", interruptOnCancel=True)
-            try:
-                from crux_spark.datalog.compile import normalize_query
-
-                df = self.q(query, *args)
-                nq = normalize_query(query)
-                if stable and not (nq.get("order-by") or nq.get("order_by")):
-                    df = _canonical_order(df)
-                it = df.toLocalIterator()
-                stop = None if limit is None else offset + limit
-                out["rows"] = list(itertools.islice(it, offset, stop))
-            except Exception as e:
-                out["err"] = e
-            finally:
-                sc.setJobGroup("", "")
+            df = self.q(query, *args)
+            nq = normalize_query(query)
+            if stable and not (nq.get("order-by") or nq.get("order_by")):
+                df = _canonical_order(df)
+            stop = None if limit is None else offset + limit
+            return list(itertools.islice(df.toLocalIterator(), offset, stop))
 
         try:
-            th = threading.Thread(target=run, daemon=True)
-            th.start()
-            th.join(timeout_ms / 1000.0)
-            if th.is_alive():
-                sc.cancelJobGroup(group)
-                raise QueryTimeoutError(
-                    f"query exceeded timeout of {timeout_ms} ms"
-                )
-            if "err" in out:
-                raise out["err"]
+            rows = run_cancellable(
+                self.node.spark.sparkContext, query, run, "crux_spark streamed query"
+            )
             state["status"] = "completed"
-            return out["rows"]
+            return rows
         except Exception as e:
             state["status"] = "failed"
             state["error"] = repr(e)

@@ -31,36 +31,19 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from crux_spark._conf import _spread
+from crux_spark._jvmcache import memo
 
 # deterministic affine hash parameters for MinHash (public textbook
 # construction: h_i(x) = (a_i * x + b_i) mod p). p = 2^31-1 keeps
 # a*h + b inside int64 under ANSI arithmetic.
 MERSENNE_P = (1 << 31) - 1
 
-# Memoized constant Column lists (r15 optimization): the MinHash
-# permutation aggregates, LSH band structs and SimHash bit
+# The MinHash permutation aggregates, LSH band structs and SimHash bit
 # aggregates/packing are pure unresolved expression trees that depend
 # only on their integer parameters — building them costs hundreds of
 # py4j round trips per call (the 64-bit SimHash pack alone is ~400),
-# which dominated these operators' driver-side build time. Cached per
-# (JVM gateway, params); a fresh JVM invalidates the cache.
-_EXPR_CACHE: dict[tuple, object] = {}
-
-
-def _gateway_key() -> int:
-    from crux_spark._jvmcache import gateway_token
-
-    return gateway_token()
-
-
-def _expr_cached(tag: str, params: tuple, build):
-    key = (_gateway_key(), tag, params)
-    hit = _EXPR_CACHE.get(key)
-    if hit is None:
-        if any(k[0] != key[0] for k in _EXPR_CACHE):
-            _EXPR_CACHE.clear()  # fresh JVM: old handles are dead
-        hit = _EXPR_CACHE[key] = build()
-    return hit
+# which dominated these operators' driver-side build time. They go
+# through the gateway-lifetime memo, keyed by (tag, params).
 
 
 def _norm_text(col):
@@ -273,13 +256,13 @@ def minhash_signatures(
     if exploded is None:
         exploded = shingle_hashes(df, id_col, text_col, n)
     hp = (F.abs(F.col("h")) % MERSENNE_P).alias("h")
-    aggs = _expr_cached("minhash_aggs", (num_hashes,), lambda: [
+    aggs = memo(("minhash_aggs", num_hashes), lambda: [
         F.min((F.col("h") * F.lit(2 * i + 1) + F.lit(7 * i + 3)) % MERSENNE_P).alias(
             f"m{i}"
         )
         for i in range(num_hashes)
     ])
-    sig_arr = _expr_cached("minhash_sig_arr", (num_hashes,), lambda: F.array(
+    sig_arr = memo(("minhash_sig_arr", num_hashes), lambda: F.array(
         *[F.col(f"m{i}") for i in range(num_hashes)]
     ).alias("sig"))
     sigs = exploded.select("id", hp).groupBy("id").agg(*aggs)
@@ -302,14 +285,14 @@ def _per_doc_sig_sets(ex: DataFrame, num_hashes: int) -> DataFrame:
     per-doc rows. The min-agg arithmetic inlines the abs(h) % p
     projection unchanged (p = 2^31-1, so h' * 63 + c fits a long) —
     signature values are byte-identical to minhash_signatures'."""
-    aggs = _expr_cached("minhash_aggs_raw", (num_hashes,), lambda: [
+    aggs = memo(("minhash_aggs_raw", num_hashes), lambda: [
         F.min(
             ((F.abs(F.col("h")) % MERSENNE_P) * F.lit(2 * i + 1)
              + F.lit(7 * i + 3)) % MERSENNE_P
         ).alias(f"m{i}")
         for i in range(num_hashes)
     ])
-    sig_arr = _expr_cached("minhash_sig_arr", (num_hashes,), lambda: F.array(
+    sig_arr = memo(("minhash_sig_arr", num_hashes), lambda: F.array(
         *[F.col(f"m{i}") for i in range(num_hashes)]
     ).alias("sig"))
     return ex.groupBy("id").agg(
@@ -323,7 +306,7 @@ def banded_signatures(
     """Explode (id, sig) into (id, sig, band, bucket) LSH band rows —
     the persistable incremental LSH index (each row is one posting in a
     band's bucket)."""
-    bb = _expr_cached("lsh_bands", (num_hashes, bands), lambda: F.explode(
+    bb = memo(("lsh_bands", num_hashes, bands), lambda: F.explode(
         F.array(
             *[
                 F.struct(F.lit(bi).alias("band"), bucket.alias("bucket"))
@@ -394,7 +377,7 @@ def _band_join(postings: DataFrame, carry: str, buckets, key: tuple,
         ]
     names = ["id_a", "id_b", f"{carry}_a", f"{carry}_b"]
     return a.join(b, on).filter(
-        _expr_cached("band_join_keep", (key, carry), build)
+        memo(("band_join_keep", key, carry), build)
     ).select(*[c.alias(nm) for c, nm in zip(cols, names)])
 
 
@@ -443,7 +426,7 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     exploded = _spread(df).select(
         F.col(id_col).alias("id"), F.explode(toks).alias("t")
     ).select("id", F.xxhash64("t").alias("h"))
-    aggs = _expr_cached("simhash_aggs", (), lambda: [
+    aggs = memo(("simhash_aggs",), lambda: [
         F.count("*").alias("n")
     ] + [
         F.sum(F.shiftright("h", b).bitwiseAND(F.lit(1))).alias(f"b{b}")
@@ -461,7 +444,7 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
         return packed.alias("simhash")
 
     counts = exploded.groupBy("id").agg(*aggs)
-    return counts.select("id", _expr_cached("simhash_pack", (), _build_packed))
+    return counts.select("id", memo(("simhash_pack",), _build_packed))
 
 
 def simhash_near_pairs(

@@ -15,13 +15,15 @@ from pyspark.sql import functions as F
 
 from crux_spark._localframe import local_frame
 
+# Edge sets up to this size resolve on the driver (see connected_components).
+DRIVER_LIMIT_EDGES = 100_000
+
 
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 50,
-    driver_limit_edges: int = 100_000,
     stats: dict | None = None,
 ) -> DataFrame:
     """(id, component) for every vertex in `pairs`, component = the
@@ -35,23 +37,21 @@ def connected_components(
     near-dup graph has million-node chains. Each round is two shuffles
     (edge join + jump join) over (id, lbl) pairs only.
 
-    Small edge sets (<= driver_limit_edges, probed with a bounded
+    Small edge sets (<= DRIVER_LIMIT_EDGES, probed with a bounded
     limit) short-circuit to a driver-side union-find: the iterative
     path costs ~3 Spark jobs per round, which dwarfs the work when the
-    similarity graph is thousands of pairs. Pass driver_limit_edges=0
-    to force the distributed path. The driver path returns its (long)
-    labels as an Arrow-backed local frame, which collects with no job.
+    similarity graph is thousands of pairs. Tests force the distributed
+    path by setting the module constant to 0. The driver path returns
+    its (long) labels as an Arrow-backed local frame, which collects
+    with no job.
 
     ``stats``, if given, is filled with {'path': 'driver'|'distributed',
     'rounds': n} — diagnostic only (tools/scale_smoke.py asserts the
     round count stays log-bounded as the graph scales)."""
-    from crux_spark.metrics import record_loop
-
-    probe = pairs.limit(driver_limit_edges + 1).collect() if driver_limit_edges else None
-    if probe is not None and len(probe) <= driver_limit_edges:
+    probe = pairs.limit(DRIVER_LIMIT_EDGES + 1).collect()
+    if len(probe) <= DRIVER_LIMIT_EDGES:
         if stats is not None:
             stats.update(path="driver", rounds=0)
-        record_loop("connected_components", rounds=0, path="driver")
         parent: dict = {}
 
         def find(x):
@@ -107,15 +107,6 @@ def connected_components(
         pre = merged.join(jump, merged["lbl"] == jump["jid"], "left").select(
             "id",
             F.least(F.col("lbl"), F.coalesce("jlbl", "lbl")).alias("lbl"),
-        )
-        # loop-aware fingerprint: every round runs this same shape — record
-        # round 1's static plan facts (the final frame's fingerprint shows
-        # none of the per-round shuffles)
-        record_loop(
-            "connected_components",
-            rounds=it + 1,
-            round_df=pre if it == 0 else None,
-            path="distributed",
         )
         new_labels = pre.localCheckpoint()
         changed = (

@@ -125,23 +125,6 @@ def stratified_hash_sample(
     raise ValueError(f"unknown method {method!r}")
 
 
-def _word_shingles(text_col, n: int):
-    """n-word shingles of normalized text as an array column — pure
-    Catalyst exprs (no UDF): lowercase, strip non-alphanumerics, split,
-    then slide a window with transform(sequence(...))."""
-    ws = F.filter(
-        F.split(F.regexp_replace(F.lower(text_col), r"[^a-z0-9]+", " "), " "),
-        lambda w: w != "",
-    )
-    n_sh = F.size(ws) - (n - 1)
-    # sequence(1, 0) DESCENDS in Spark — guard the too-short case to an
-    # empty array instead
-    idx = F.when(n_sh >= 1, F.sequence(F.lit(1), n_sh)).otherwise(
-        F.array().cast("array<int>")
-    )
-    return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(ws, i, n)))
-
-
 def _shingle_relation(df: DataFrame, keep_cols: list, text_col: str, n: int):
     """(keep_cols..., sh) with one row per n-word shingle. The word
     array is MATERIALIZED as a column before the window slide: inlining

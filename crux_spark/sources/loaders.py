@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from crux_spark._jvmcache import memo
+
 # <subj>|_:bnode <pred> "literal"^^<type> .  |  ... <obj>|_:bnode .
 _NT_REGEX = r"^(<[^>]+>|_:\S+)\s+<([^>]+)>\s+(.+?)\s*\.\s*$"
 
@@ -285,57 +287,25 @@ _EAV_SLOTS: dict[str, tuple[str, str]] = {
     "duration": ("v_dur", "interval day to second"),
 }
 
-# Memoized aliased NULL slot columns (r15 optimization): Column objects
-# are immutable unresolved expression trees, so the 12 typed-null
-# columns every _typed_row piece carries can be built once per JVM
-# gateway instead of per piece — a catalog-wide triples_view used to
-# spend ~45 py4j round trips per (table, attribute) piece on these
-# constants alone, which dominated EAV view construction time on wide
-# catalogs. Keyed by gateway id so a fresh JVM rebuilds them.
-_NULL_SLOT_CACHE: dict[int, dict[str, object]] = {}
-
-
-def _null_slot_cols() -> dict[str, object]:
-    from crux_spark._jvmcache import gateway_token
-
-    key = gateway_token()
-    cols = _NULL_SLOT_CACHE.get(key)
-    if cols is None:
-        cols = {
-            s: F.lit(None).cast(t).alias(name)
-            for s, (name, t) in _EAV_SLOTS.items()
-        }
-        _NULL_SLOT_CACHE.clear()
-        _NULL_SLOT_CACHE[key] = cols
-    return cols
-
-
-# Memoized per-(attribute, type) EAV projection lists (r16, guide §4):
-# the 17-column select every triples_view piece runs is a pure function
-# of (field name, value type, crux_type marker, array-ness) — all of it
-# constant unresolved Column trees — yet it was rebuilt per piece per
-# call, ~80 py4j round trips each. On EAV-materializing gates the view
+# The 12 aliased typed-null columns every _typed_row piece carries, and
+# the 17-column select each triples_view piece runs, are constant
+# unresolved Column trees: the select is a pure function of (field name,
+# value type, crux_type marker, array-ness). Rebuilding them per piece
+# cost ~45 and ~80 py4j round trips; on EAV-materializing gates view
 # construction was half the warm materialization cost (0.92s of 2.0s at
-# sf0.1 on an 11-table catalog). Same lifetime rule as the other
-# expression memos: keyed by gateway token, cleared when the JVM turns.
-_TYPED_ROW_CACHE: dict[object, list] = {}
+# sf0.1 on an 11-table catalog). Both go through the gateway-lifetime
+# memo.
+def _null_slot_cols() -> dict[str, object]:
+    return memo(("null_slots",), lambda: {
+        s: F.lit(None).cast(t).alias(name) for s, (name, t) in _EAV_SLOTS.items()
+    })
 
 
 def _typed_row_cols(
     attr: str, dtype, meta=None, array: bool = False, id_col: str | None = None
 ) -> list:
-    from crux_spark._jvmcache import gateway_token
-
-    tok = gateway_token()
-    if _TYPED_ROW_CACHE.get("__tok") != tok:
-        _TYPED_ROW_CACHE.clear()
-        _TYPED_ROW_CACHE["__tok"] = tok
-    key = (attr, dtype.json(), (meta or {}).get("crux_type"), array, id_col)
-    cols = _TYPED_ROW_CACHE.get(key)
-    if cols is None:
-        cols = _build_typed_row_cols(attr, dtype, meta, array, id_col)
-        _TYPED_ROW_CACHE[key] = cols
-    return cols
+    key = ("typed_row", attr, dtype.json(), (meta or {}).get("crux_type"), array, id_col)
+    return memo(key, lambda: _build_typed_row_cols(attr, dtype, meta, array, id_col))
 
 
 def _build_typed_row_cols(

@@ -87,25 +87,22 @@ _AGG_FNS = {
 
 
 def _group_concat_agg(sep: str) -> str:
-    """Register (idempotently) a Datalog aggregate for GROUP_CONCAT with
-    this separator and return its registry name. Values sort before
-    concatenation — the spec leaves order undefined; sorted is the
-    deterministic choice (oracle- and test-stable). Registration is
-    skipped when the separator's aggregate already exists: the register
-    bumps the global plan-cache epoch, and re-parsing the same query
-    must not invalidate cached plans."""
+    """Register a Datalog aggregate for GROUP_CONCAT with this separator
+    and return its registry name. Values sort before concatenation — the
+    spec leaves order undefined; sorted is the deterministic choice
+    (oracle- and test-stable). Re-registering a separator replaces its
+    aggregate with an identical one."""
     from pyspark.sql import functions as F
 
-    from crux_spark.datalog.aggregates import has_aggregate, register_aggregate
+    from crux_spark.datalog.aggregates import register_aggregate
 
     name = "group-concat-" + sep.encode().hex()
-    if not has_aggregate(name):
-        register_aggregate(
-            name,
-            lambda c, _s=sep: F.concat_ws(
-                _s, F.sort_array(F.collect_list(c.cast("string")))
-            ),
-        )
+    register_aggregate(
+        name,
+        lambda c, _s=sep: F.concat_ws(
+            _s, F.sort_array(F.collect_list(c.cast("string")))
+        ),
+    )
     return name
 
 

@@ -72,10 +72,3 @@ def time_to_nanos(t: _dt.time) -> int:
         (t.hour * 3600 + t.minute * 60 + t.second) * NANOS_PER_SECOND
         + t.microsecond * 1000
     )
-
-
-def nanos_to_time(n: int) -> _dt.time:
-    secs, frac = divmod(int(n), NANOS_PER_SECOND)
-    h, rem = divmod(secs, 3600)
-    m, s = divmod(rem, 60)
-    return _dt.time(h, m, s, frac // 1000)

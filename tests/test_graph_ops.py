@@ -14,10 +14,12 @@ def cc(spark, edges):
     }
     # the distributed label-propagation path must agree with the
     # driver-side union-find fast path
-    dist = {
-        r.id: r.component
-        for r in graph.connected_components(df, driver_limit_edges=0).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(graph, "DRIVER_LIMIT_EDGES", 0)
+        dist = {
+            r.id: r.component
+            for r in graph.connected_components(df).collect()
+        }
     assert fast == dist
     return fast
 

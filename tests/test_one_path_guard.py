@@ -4,7 +4,13 @@
   only name read is the deployment path ``CRUX_SPARK_BLOB_DIR``;
 - Catalyst's size estimate is read in one place, ``_conf.py``;
 - no operator picks its algorithm by a row-count probe or by a
-  threshold an instance can override.
+  threshold an instance can override, with one named exception:
+  ``connected_components`` resolves edge sets up to
+  ``graph.DRIVER_LIMIT_EDGES`` with a driver union-find and larger ones
+  with distributed label-propagation rounds. The driver path is the one
+  ``dedup_pipeline`` runs; ``tools/scale_smoke.py`` and
+  ``tests/test_graph_ops.py`` cover the distributed rounds by setting
+  the constant to 0.
 """
 
 import pathlib
@@ -13,10 +19,20 @@ import re
 PKG = pathlib.Path(__file__).resolve().parent.parent / "crux_spark"
 ALLOWED_ENV = {"CRUX_SPARK_BLOB_DIR"}
 SIZE_IDIOM = "optimizedPlan().stats().sizeInBytes()"
-# `.limit(<expr> + 1).count()`: a count job that only asks "more than N?"
+# `.limit(<expr> + 1).count()` or `.collect()`: a bounded job that asks
+# "more than N?"
 COUNT_PROBE = re.compile(
-    r"\.limit\(\s*(?:[^()]|\([^()]*\))*?\+\s*1\s*\)\s*\.count\(\s*\)"
+    r"\.limit\(\s*(?:[^()]|\([^()]*\))*?\+\s*1\s*\)\s*\.(?:count|collect)\(\s*\)"
 )
+# Probes the library keeps, per file. graph.py's is the size-selected path
+# named in the module docstring. The others select no algorithm: the two
+# quantized top-k scorers raise past `max_queries`, and the tx-log page
+# reads one row ahead to know whether a next page exists.
+KEPT_PROBES = {
+    "http.py": 1,
+    "operators/graph.py": 1,
+    "operators/similarity.py": 2,
+}
 # `getattr(self, "THRESHOLD"`: a class constant an instance may override
 OVERRIDABLE_THRESHOLD = re.compile(
     r"getattr\(\s*self\s*,\s*[\"'][A-Z][A-Z0-9_]*[\"']"
@@ -46,11 +62,13 @@ def test_size_estimate_read_only_in_conf():
 
 
 def test_no_size_probes():
-    found = []
+    found, probes = [], {}
     for path in _sources():
-        text = path.read_text()
-        for pattern in (COUNT_PROBE, OVERRIDABLE_THRESHOLD):
-            for m in pattern.finditer(text):
-                line = text.count("\n", 0, m.start()) + 1
-                found.append(f"{path.relative_to(PKG).as_posix()}:{line}")
+        rel, text = path.relative_to(PKG).as_posix(), path.read_text()
+        for m in OVERRIDABLE_THRESHOLD.finditer(text):
+            found.append(f"{rel}:{text.count(chr(10), 0, m.start()) + 1}")
+        n = len(COUNT_PROBE.findall(text))
+        if n:
+            probes[rel] = n
     assert not found, f"size-gated forks in the library: {sorted(found)}"
+    assert probes == KEPT_PROBES, f"bounded probes in the library: {probes}"

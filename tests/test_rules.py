@@ -488,13 +488,31 @@ def people_only_catalog(spark):
     return cat
 
 
-def test_seeded_closure_bound_endpoint(people_only_catalog):
+def _spy_tc_seeded(monkeypatch) -> list:
+    """Record each Compiler._tc_seeded call that took the seeded path
+    (returned a relation rather than None)."""
+    from crux_spark.datalog.compile import Compiler
+
+    taken = []
+    real = Compiler._tc_seeded
+
+    def spy(self, *args, **kwargs):
+        rel = real(self, *args, **kwargs)
+        if rel is not None:
+            taken.append(args)
+        return rel
+
+    monkeypatch.setattr(Compiler, "_tc_seeded", spy)
+    return taken
+
+
+def test_seeded_closure_bound_endpoint(people_only_catalog, monkeypatch):
     """A TC-shaped rule invoked with a BOUND endpoint takes the seeded
     BFS path (demand-driven — the full closure of a dense graph is
     TH(V^2) rows and squaring composes TH(V^3) pairs; found by the
     WatDiv 10x smoke), and its answers must equal the full-closure
     path's, both directions."""
-    from crux_spark.datalog.compile import FIXPOINT_STATS
+    taken = _spy_tc_seeded(monkeypatch)
 
     # full closure (unbound call -> squaring) as the oracle
     full = rows(
@@ -505,7 +523,7 @@ def test_seeded_closure_bound_endpoint(people_only_catalog):
              "rules": REACH_RULES},
         )
     )
-    before = FIXPOINT_STATS["tc_seeded_rounds"]
+    assert not taken  # the unbound call squares
     fwd = rows(
         q(
             people_only_catalog,
@@ -516,7 +534,7 @@ def test_seeded_closure_bound_endpoint(people_only_catalog):
     )
     assert fwd == sorted({(y,) for x, y in full if x == "a"})
     assert fwd == [("b",), ("c",), ("d",)]
-    assert FIXPOINT_STATS["tc_seeded_rounds"] > before  # path engaged
+    assert taken  # path engaged
 
     back = rows(
         q(
@@ -554,12 +572,12 @@ def test_seeded_closure_bound_endpoint(people_only_catalog):
     assert only_f == [("f",)]
 
 
-def test_labeled_seeded_closure(people_only_catalog):
+def test_labeled_seeded_closure(people_only_catalog, monkeypatch):
     """Generalized (labeled) TC seeding: a 3-ary closure rule carrying
     a label param (the SPARQL variable-predicate closure shape) invoked
     with a bound transit endpoint walks per-label graphs from the seed;
     answers must equal the full bottom-up fixpoint's."""
-    from crux_spark.datalog.compile import FIXPOINT_STATS
+    taken = _spy_tc_seeded(monkeypatch)
 
     rules = [
         [["lreach", "?a", "?x", "?y"], ["?x", "?a", "?y"]],
@@ -574,7 +592,7 @@ def test_labeled_seeded_closure(people_only_catalog):
              "rules": rules},
         )
     )
-    before = FIXPOINT_STATS["tc_seeded_rounds"]
+    assert not taken
     seeded = rows(
         q(
             people_only_catalog,
@@ -583,7 +601,7 @@ def test_labeled_seeded_closure(people_only_catalog):
              "rules": rules},
         )
     )
-    assert FIXPOINT_STATS["tc_seeded_rounds"] > before
+    assert taken
     assert seeded == sorted({(a, y) for a, x, y in full if x == "a"})
     # per-label closure: follows-chains from a, and a's scalar attrs
     assert (":follows", "d") in seeded       # 3-hop follows chain
@@ -591,22 +609,32 @@ def test_labeled_seeded_closure(people_only_catalog):
     assert (":follows", "f") not in seeded   # e's chain never leaks
 
 
-def test_seeded_closure_rounds_broadcast(spark):
+def test_seeded_closure_rounds_broadcast(spark, monkeypatch):
     """Regression guard: every seeded-closure round must broadcast BOTH
     the frontier probe and the reached anti-join side when they are
     small — the r7 hint silently stopped firing when a byte guard
     trusted optimizer sizeInBytes (origin-plan default stats), and every
-    round paid two sort-merge shuffles of E. The loop fingerprint makes
-    the plan visible; this pins it."""
-    from crux_spark import Catalog, metrics
+    round paid two sort-merge shuffles of E. The final frame's plan shows
+    none of the rounds, so this reads each round frame's pre-AQE plan as
+    the loop checkpoints it."""
+    from crux_spark import Catalog
     from crux_spark.datalog import q
+    from crux_spark.plans import physical_plan
 
     cat = Catalog(spark)
     edges = [(f"m{i}", f"m{i+1}") for i in range(12)]
     cat.add_documents(
         "g2", spark.createDataFrame(edges, "_id string, nxt string")
     )
-    metrics.reset_loops()
+    plans = []
+    frame_cls = type(spark.range(0))
+    real = frame_cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(physical_plan(self, executed=False))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
     n = q(
         cat,
         {
@@ -623,9 +651,8 @@ def test_seeded_closure_rounds_broadcast(spark):
         },
     ).count()
     assert n == 12
-    ls = metrics.loops_snapshot()["tc_seeded"]
-    assert ls["frontier_broadcast"] is True
-    assert ls["reached_broadcast"] is True
-    rp = ls["round_plan"]
-    assert rp["joins"].get("BroadcastHashJoin") == 2, rp
-    assert "SortMergeJoin" not in rp["joins"], rp
+    rounds = [p for p in plans if "LeftAnti" in p]
+    assert rounds, plans
+    first = rounds[0]
+    assert first.count("BroadcastHashJoin") == 2, first
+    assert "SortMergeJoin" not in first, first

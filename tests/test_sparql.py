@@ -767,25 +767,6 @@ def test_group_concat_non_ascii_separator(vcard_cat):
     }
 
 
-def test_group_concat_reparse_keeps_plan_epoch(vcard_cat):
-    """Re-parsing a GROUP_CONCAT query with an already-registered
-    separator must NOT bump the plan-cache epoch (a redundant
-    register_aggregate would invalidate every cached plan)."""
-    from crux_spark.datalog import epoch
-    from crux_spark.sources.sparql import sparql_to_datalog as _std
-
-    sparql = """
-        PREFIX vcard: <http://www.w3.org/2001/vcard-rdf/3.0#>
-        SELECT ?family (GROUP_CONCAT(?g; SEPARATOR="|") AS ?members)
-        WHERE { ?b vcard:Family ?family . ?b vcard:Given ?g }
-        GROUP BY ?family
-    """
-    _std(sparql)  # first parse may register the "|" aggregate
-    before = epoch.current()
-    _std(sparql)
-    assert epoch.current() == before
-
-
 # ---------------------------------------------------------------------------
 # 1:1 sweep of the reference's OWN conformance surface (r14, VERDICT
 # item 4): crux-test/test/crux/sparql_test.clj (8 result-level asserts

@@ -5,9 +5,9 @@ return binding, as the reference's query builder emits), executed many
 times CONCURRENTLY from a thread pool against a single node.
 
 What it stresses here: (1) the 16-attribute pattern group must compile
-to ONE pruned scan of lineitem, not 16 self-joins; (2) the compiler +
-plan cache must be safe under concurrent query submission on one
-SparkSession (the reference runs its stress through a thread pool —
+to ONE pruned scan of lineitem, not 16 self-joins; (2) the compiler
+and its gateway-lifetime expression memo must be safe under concurrent
+query submission on one SparkSession (the reference runs its stress through a thread pool —
 bench/with-thread-pool)."""
 
 from concurrent.futures import ThreadPoolExecutor
@@ -63,8 +63,7 @@ def test_stress_concurrent_queries(catalog):
     """query-stress: the wide query through a thread pool (the
     reference's with-thread-pool protocol, 50 queries; 12 here for CI
     wall) — every run returns the identical count, and varying
-    field_count across threads exercises the plan cache under
-    concurrent compilation."""
+    field_count across threads exercises concurrent compilation."""
     expected = _n_entities(catalog)
 
     def run(idx: int) -> int:

@@ -3,7 +3,7 @@ the WatDiv bench (crux-bench/src/crux/bench/watdiv_crux.clj:22-27 —
 load the generated e-commerce graph, run the stress-query workload,
 compare results across engines). Here the same shape, in-sandbox:
 
-- a deterministic WatDiv-like corpus (crux_spark/sources/watdiv.py,
+- a deterministic WatDiv-like corpus (tests/watdiv.py,
   regenerated from the paper's public schema — no vendored files);
 - 60+ query instances across the paper's template families — linear
   (L), star (S), snowflake (F), complex (C), property paths (P),
@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from crux_spark import Catalog
 from crux_spark.datalog import q
 from crux_spark.sources.loaders import pivot_triples
-from crux_spark.sources.watdiv import WSDBM, watdiv_df
+from watdiv import WSDBM, watdiv_df
 
 N_USERS = 300
 

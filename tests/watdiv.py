@@ -19,11 +19,9 @@ values come from seeded PRNGs so every run of a given scale is
 byte-identical.
 
 Generation is organized as independent (family, index-block) units,
-each seeded by crc32(seed:family:block) — so the SAME corpus comes out
-whether the blocks run sequentially on the driver (small fixtures) or
-fan out across executors (watdiv_df distributes automatically past
-~1M triples; reference scale, 10M+, generates cluster-side instead of
-serializing one giant driver list).
+each seeded by crc32(seed:family:block) and run as one Spark task, so
+the corpus is the same bytes at every scale and no scale serializes a
+driver-side triple list.
 
 Output is an (e, a, v, v_type) triple DataFrame — the same shape
 read_ntriples produces — so it feeds pivot_triples + Catalog +
@@ -33,9 +31,15 @@ sparql_to_datalog unchanged.
 from __future__ import annotations
 
 import random
+import sys
 import zlib
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
+
+# Python workers do not have tests/ on their path, so the generation
+# tasks ship this module's functions by value.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 WSDBM = "http://db.uwaterloo.ca/~galuc/wsdbm/"
 SORG = "http://schema.org/"
@@ -193,34 +197,13 @@ def _blocks(n_users: int) -> list[tuple[str, int, int]]:
     return tasks
 
 
-def watdiv_triples(n_users: int = 300, seed: int = 7) -> list[tuple]:
-    """Deterministic triple list (e, a, v, v_type) at a user-count scale
-    knob — the sequential path (small fixtures). Identical output to the
-    distributed path at any scale (same per-block PRNGs)."""
-    c = _counts(n_users)
-    out: list[tuple] = []
-    for fam, lo, hi in _blocks(n_users):
-        out.extend(_gen_block(fam, lo, hi, c, seed))
-    return out
-
-
-def watdiv_df(spark: SparkSession, n_users: int = 300,
-              seed: int = 7, distributed: bool | None = None) -> DataFrame:
+def watdiv_df(spark: SparkSession, n_users: int = 300, seed: int = 7) -> DataFrame:
     """The generated corpus as an (e, a, v, v_type) DataFrame ready for
-    pivot_triples. Small corpora generate driver-side; past ~30k users
-    (≈1M triples) generation fans out one task per (family, block) so
-    reference-scale corpora (10M+ triples) are built cluster-side
-    instead of serializing one giant driver list — same bytes either
-    way (per-block crc32-seeded PRNGs)."""
-    schema = "e string, a string, v string, v_type string"
-    if distributed is None:
-        distributed = n_users > 30_000
-    if not distributed:
-        return spark.createDataFrame(watdiv_triples(n_users, seed), schema)
+    pivot_triples, one task per (family, block)."""
     c = _counts(n_users)
     tasks = _blocks(n_users)
     rdd = (
         spark.sparkContext.parallelize(tasks, len(tasks))
         .flatMap(lambda t: _gen_block(t[0], t[1], t[2], c, seed))
     )
-    return spark.createDataFrame(rdd, schema)
+    return spark.createDataFrame(rdd, "e string, a string, v string, v_type string")

@@ -8,6 +8,10 @@ diameter, and assert
     graph size) — the property that matters at 100 TB, where per-round
     job latency is the one cost Spark cannot amortize.
 
+The graph ops count their own rounds: connected_components through its
+``stats`` dict, the recursive reach by counting the closure's per-round
+checkpoints.
+
 Usage: python tools/scale_smoke.py   (prints a table + PASS/FAIL)
 """
 
@@ -17,7 +21,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [ROOT, os.path.join(ROOT, "tests")]
 
 from pyspark.sql import functions as F
 
@@ -41,16 +46,18 @@ def chain_edges(spark, n_chains: int, length: int, offset: int = 0):
 
 
 def run_cc(spark, n_chains: int, length: int):
-    from crux_spark.operators.graph import connected_components
+    from crux_spark.operators import graph
 
     edges = chain_edges(spark, n_chains, length)
     stats: dict = {}
-    t0 = time.monotonic()
-    out = connected_components(
-        edges, driver_limit_edges=0, stats=stats
-    )  # force the distributed path
-    n = out.count()
-    dt = time.monotonic() - t0
+    limit, graph.DRIVER_LIMIT_EDGES = graph.DRIVER_LIMIT_EDGES, 0
+    try:  # force the distributed path
+        t0 = time.monotonic()
+        out = graph.connected_components(edges, stats=stats)
+        n = out.count()
+        dt = time.monotonic() - t0
+    finally:
+        graph.DRIVER_LIMIT_EDGES = limit
     # every chain collapses to one component labeled by its min vertex
     n_comp = out.select("component").distinct().count()
     assert n_comp == n_chains, (n_comp, n_chains)
@@ -60,9 +67,10 @@ def run_cc(spark, n_chains: int, length: int):
 
 def run_reach(spark, n_chains: int, length: int):
     """Transitive closure of the chain graph through the Datalog
-    recursive-rule path (TC squaring)."""
+    recursive-rule path (TC squaring). Rounds are counted as the
+    closure's localCheckpoint calls after the first, which checkpoints
+    the edge relation: each squaring round checkpoints its union once."""
     from crux_spark.catalog import Catalog
-    from crux_spark.datalog import compile as dcompile
     from crux_spark.datalog import q
 
     edges = chain_edges(spark, n_chains, length).select(
@@ -72,33 +80,41 @@ def run_reach(spark, n_chains: int, length: int):
     cat.add_documents(
         "edges", edges.withColumn("_id", F.concat_ws("_", "src", "dst"))
     )
-    dcompile.FIXPOINT_STATS["tc_rounds"] = 0
-    dcompile.FIXPOINT_STATS["fixpoint_rounds"] = 0
-    t0 = time.monotonic()
-    out = q(
-        cat,
-        {
-            "find": ["?x", "?y"],
-            "where": [["reach", "?x", "?y"]],
-            "rules": [
-                [["reach", "?x", "?y"], ["?e", ":src", "?x"], ["?e", ":dst", "?y"]],
-                [
-                    ["reach", "?x", "?y"],
-                    ["?e", ":src", "?x"],
-                    ["?e", ":dst", "?z"],
-                    ["reach", "?z", "?y"],
+    checkpoints = 0
+    frame_cls = type(edges)
+    real_checkpoint = frame_cls.localCheckpoint
+
+    def counting_checkpoint(self, *args, **kwargs):
+        nonlocal checkpoints
+        checkpoints += 1
+        return real_checkpoint(self, *args, **kwargs)
+
+    frame_cls.localCheckpoint = counting_checkpoint
+    try:
+        t0 = time.monotonic()
+        out = q(
+            cat,
+            {
+                "find": ["?x", "?y"],
+                "where": [["reach", "?x", "?y"]],
+                "rules": [
+                    [["reach", "?x", "?y"], ["?e", ":src", "?x"], ["?e", ":dst", "?y"]],
+                    [
+                        ["reach", "?x", "?y"],
+                        ["?e", ":src", "?x"],
+                        ["?e", ":dst", "?z"],
+                        ["reach", "?z", "?y"],
+                    ],
                 ],
-            ],
-        },
-    )
+            },
+        )
+    finally:
+        frame_cls.localCheckpoint = real_checkpoint
     n = out.count()
     dt = time.monotonic() - t0
     # closure of one chain of L edges = L*(L+1)/2 pairs
     assert n == n_chains * length * (length + 1) // 2, n
-    rounds = (
-        dcompile.FIXPOINT_STATS["tc_rounds"]
-        or dcompile.FIXPOINT_STATS["fixpoint_rounds"]
-    )
+    rounds = checkpoints - 1
     return dt, rounds, n
 
 
@@ -223,7 +239,7 @@ def run_watdiv(spark, n_users: int, _length: int):
     from crux_spark.datalog import q
     from crux_spark.sources.loaders import pivot_triples
     from crux_spark.sources.sparql import sparql_to_datalog
-    from crux_spark.sources.watdiv import watdiv_df
+    from watdiv import watdiv_df
 
     wide = pivot_triples(watdiv_df(spark, n_users)).localCheckpoint()
     cat = Catalog(spark)

@@ -39,13 +39,13 @@ def main() -> None:
     mode = sys.argv[2] if len(sys.argv) > 2 else "rows"
 
     from test_watdiv import _IDS, PREFIXES, TEMPLATES  # noqa: E402
+    from watdiv import watdiv_df  # noqa: E402
 
     from crux_spark import Catalog, get_spark
     from crux_spark.datalog import q
     from crux_spark.plans import plan_facts
     from crux_spark.sources.loaders import pivot_triples
     from crux_spark.sources.sparql import sparql_to_datalog
-    from crux_spark.sources.watdiv import watdiv_df
 
     spark = get_spark("watdiv-scale")
     t0 = time.perf_counter()
