@@ -37,27 +37,3 @@ def latest_as_of(
     w = Window.partitionBy(entity_col).orderBy(*order)
     return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
-
-def history(
-    df: DataFrame,
-    entity_col: str,
-    time_col: str,
-    ascending: bool = True,
-    with_corrections: bool = True,
-    tx_col: str | None = None,
-) -> DataFrame:
-    """Version history per entity (index_store.clj:524-554).
-
-    ``with_corrections=False`` collapses multiple tx-time versions of the
-    same valid-time to the latest (Window per (entity, valid-time) +
-    row_number, replacing index_store.clj:537-554's partition-by/map-last).
-    """
-    if not with_corrections and tx_col:
-        w = Window.partitionBy(entity_col, time_col).orderBy(F.col(tx_col).desc())
-        df = (
-            df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-    order = F.col(time_col).asc() if ascending else F.col(time_col).desc()
-    return df.orderBy(F.col(entity_col).asc(), order)

@@ -1466,10 +1466,13 @@ class Compiler:
     def rule_relation(self, name: str) -> DataFrame:
         """Relation DF for a rule over canonical columns __r0..__rN.
 
-        Recursive rules run a naive-with-dedup fixpoint on the driver —
-        the Spark recast of the reference's tabled recursion
-        (query.clj:1079-1144); localCheckpoint truncates lineage so the
-        plan doesn't grow unboundedly across iterations.
+        Recursive rules are the Spark recast of the reference's tabled
+        recursion (query.clj:1079-1144): a transitive-closure-shaped rule
+        evaluates by relation squaring (_tc_doubling), or by seeded BFS
+        from the constant when a call site binds an endpoint
+        (_tc_seeded); every other recursion group runs the driver-side
+        semi-naive fixpoint (_fixpoint_group). localCheckpoint truncates
+        lineage so the plan doesn't grow across iterations.
         """
         return self._rule_relation_specialized(name, None)
 
@@ -1815,8 +1818,9 @@ class Compiler:
         return group if group else set()
 
     def _fixpoint_group(self, group: list[str]) -> None:
-        """Joint naive fixpoint over a (possibly mutually) recursive rule
-        group: recompute every member from the current totals until no
+        """Joint semi-naive fixpoint over a (possibly mutually) recursive
+        rule group: each round joins single-reference branches against the
+        previous round's delta (others against the totals) until no
         member grows. Handles mutual recursion, which the reference
         supports via tabled or-join recursion (query.clj:1079-1144)."""
         # stratification guard: negation over a rule in the SAME recursion

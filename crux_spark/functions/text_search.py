@@ -17,10 +17,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from crux_spark._localframe import local_frame
+from crux_spark.bitemporal.replay import ReplayIndex
 
 
 def _tokenize(col):
     return F.split(F.regexp_replace(F.lower(col), r"[^a-z0-9\s]", " "), r"\s+")
+
+
+def _postings(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(term, eid, tf) for every token of every document."""
+    toks = df.select(
+        F.col(id_col).alias("eid"), F.explode(_tokenize(F.col(text_col))).alias("term")
+    ).filter(F.length("term") > 0)
+    return toks.groupBy("term", "eid").agg(F.count("*").alias("tf"))
 
 
 def build_text_index(
@@ -29,10 +38,7 @@ def build_text_index(
     """Returns (postings, doc_freq, n_docs): postings (term, eid, tf);
     doc_freq (term, df). Persist both as parquet partitioned/bucketed by
     term at scale."""
-    toks = df.select(
-        F.col(id_col).alias("eid"), F.explode(_tokenize(F.col(text_col))).alias("term")
-    ).filter(F.length("term") > 0)
-    postings = toks.groupBy("term", "eid").agg(F.count("*").alias("tf"))
+    postings = _postings(df, id_col, text_col)
     doc_freq = postings.groupBy("term").agg(F.count_distinct("eid").alias("df"))
     n_docs = df.count()
     return postings, doc_freq, n_docs
@@ -101,131 +107,30 @@ def bm25_search(
     return scored.limit(limit) if limit else scored
 
 
-class IncrementalTextIndex:
+class IncrementalTextIndex(ReplayIndex):
     """Inverted index maintained incrementally from tx batches — the
     secondary-index registration pattern of the reference
     (`register-index!` crux-core/src/crux/tx.clj:400-410: external indexes
     replay the log and stay current per indexed tx). Attach
-    :meth:`listener` to a TxLogStream; each batch's puts merge into the
-    postings (delete = drop the entity's postings)."""
+    :meth:`listener` to a TxLogStream; each batch's final puts replace
+    their entities' postings, and every other touched entity's postings
+    drop (the replay seam, bitemporal/replay.py). A checkpoint is the
+    postings parquet plus the text field and watermark."""
 
-    def __init__(self, spark, text_field: str = "text",
-                 checkpoint_every: int = 8):
-        self.spark = spark
+    STATE = {"postings": None}
+    PARAMS = ("text_field",)
+
+    def __init__(self, spark, text_field: str = "text"):
+        super().__init__(spark)
         self.text_field = text_field
-        self.postings: DataFrame | None = None
-        # highest tx id folded into the postings — the index's own
-        # watermark, so a checkpoint-restored index replays only the WAL
-        # tail past it (the reference checkpoints its Lucene dir beside
-        # the KV index and tails the log from the indexed-tx watermark,
-        # crux-lucene + crux-core/src/crux/checkpoint.clj)
-        self.last_tx_id: int = -1
-        # Lineage bound, same contract as IncrementalMinHashIndex:
-        # per-batch merges chain LAZY localCheckpoints (plan truncation
-        # without a synchronous job per batch); every
-        # `checkpoint_every`-th batch materializes eagerly, resetting
-        # lazy-chain depth to O(1). <=0 disables the cadence.
-        self.checkpoint_every = checkpoint_every
-        self._batches_since_eager = 0
 
     def listener(self, epoch_id: int, ops_batch: DataFrame,
                  max_tx: int | None = None) -> None:
-        # CONTRACT: state merges chain LAZY localCheckpoints, so
-        # `ops_batch` must stay recomputable until `checkpoint_every`
-        # batches later (TxLogStream pins each batch to executor blocks
-        # before dispatch; direct callers must pass a re-readable frame
-        # or set checkpoint_every=1).
-        # a micro-batch can carry several txs touching the SAME entity
-        # (availableNow batches everything pending): only each entity's
-        # FINAL effective op (by tx order) may index, or a put+put batch
-        # double-counts tf and a put-then-delete batch resurrects the put
-        eff = ops_batch.filter(F.col("op").isin("put", "delete", "evict"))
-        last = eff.groupBy("eid").agg(
-            F.max_by(
-                F.struct("op", "doc_json"), F.struct("tx_id", "seq")
-            ).alias("last")
-        )
-        puts = (
-            last.filter(F.col("last.op") == "put")
-            .select(
-                "eid",
-                F.get_json_object(
-                    "last.doc_json", f"$.{self.text_field}"
-                ).alias("body"),
-            )
-            .filter(F.col("body").isNotNull())
-        )
-        # postings construction inlined from build_text_index WITHOUT its
-        # n_docs count(): the listener never uses doc_freq/n_docs, and the
-        # count was an eager full-batch scan per micro-batch
-        toks = puts.select(
-            "eid", F.explode(_tokenize(F.col("body"))).alias("term")
-        ).filter(F.length("term") > 0)
-        new_postings = toks.groupBy("term", "eid").agg(
-            F.count("*").alias("tf")
-        )
-        # every touched eid drops its old postings — including a put whose
-        # new doc version no longer carries the text field
-        touched = last.select("eid")
-        if self.postings is None:
-            merged = new_postings
-        else:
-            kept = self.postings.join(touched, "eid", "left_anti")
-            merged = kept.unionByName(new_postings)
-        self._batches_since_eager += 1
-        eager = (self.checkpoint_every > 0
-                 and self._batches_since_eager >= self.checkpoint_every)
-        if eager:
-            self._batches_since_eager = 0
-        self.postings = merged.localCheckpoint(eager=eager)
-        # `max_tx` lets the commit/ingest path hand down the batch max it
-        # already knows; without it the watermark costs an extra pass.
-        if max_tx is None:
-            mx = ops_batch.agg(F.max("tx_id")).first()[0]
-            max_tx = int(mx) if mx is not None else None
-        if max_tx is not None:
-            self.last_tx_id = max(self.last_tx_id, int(max_tx))
+        self._replay(ops_batch, self.text_field, max_tx)
 
-    # -- checkpoint persistence (crux-lucene checkpoints its index dir
-    # through crux.checkpoint alongside the KV index; here the postings
-    # table IS the index, so a checkpoint = postings parquet + watermark) --
-    def save(self, path: str) -> None:
-        """Persist the index under `path`: postings as parquet plus a
-        meta sidecar carrying the text field and indexed-tx watermark."""
-        import json
-        import os
-
-        os.makedirs(path, exist_ok=True)
-        if self.postings is not None:
-            self.postings.write.mode("overwrite").parquet(
-                os.path.join(path, "postings")
-            )
-        with open(os.path.join(path, "index.json"), "w") as f:
-            json.dump(
-                {"text_field": self.text_field, "last_tx_id": self.last_tx_id},
-                f,
-            )
-
-    @classmethod
-    def load(cls, spark, path: str) -> "IncrementalTextIndex":
-        """Restore an index saved with :meth:`save`; the caller (usually
-        CheckpointStore.restore_latest) replays the WAL tail past
-        `last_tx_id` through :meth:`listener`."""
-        import json
-        import os
-
-        with open(os.path.join(path, "index.json")) as f:
-            meta = json.load(f)
-        idx = cls(spark, text_field=meta.get("text_field", "text"))
-        idx.last_tx_id = int(meta.get("last_tx_id", -1))
-        postings_dir = os.path.join(path, "postings")
-        if os.path.isdir(postings_dir):
-            # localCheckpoint to decouple from the checkpoint dir (same
-            # as TxStore.load): retention pruning / cleanup() may delete
-            # `path` while this index is live, and a lazily-bound scan
-            # would then fail every search with FileNotFoundException.
-            idx.postings = spark.read.parquet(postings_dir).localCheckpoint()
-        return idx
+    def _apply(self, touched: DataFrame, puts: DataFrame) -> None:
+        self._merge("postings", touched, _postings(puts, "eid", "value"),
+                    self._eager())
 
     def search(self, query: str, limit: int | None = None) -> DataFrame:
         if self.postings is None:

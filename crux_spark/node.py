@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
-from typing import Any, Iterable
+from typing import Any, Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -222,14 +222,20 @@ class Db:
         node.clj:240-260 records submitted/completed/failed events). The
         lazy `q` surface is untracked by design — a DataFrame has no
         single completion event."""
+        from crux_spark.datalog.compile import q_eager
+
+        return self._monitored(
+            query, lambda: q_eager(self.catalog(), query, *args)
+        )
+
+    def _monitored(self, query: dict, run: Callable[[], list]) -> list:
+        """Run `run()` as one monitored query: recorded as submitted,
+        then as completed, or as failed with ``repr`` of the error."""
         import time
         import uuid
 
-        from crux_spark.datalog.compile import q_eager
-
-        qid = uuid.uuid4().hex[:12]
         state = {
-            "query_id": qid,
+            "query_id": uuid.uuid4().hex[:12],
             "query": query,
             "started_at": time.time(),
             "finished_at": None,
@@ -238,7 +244,7 @@ class Db:
         }
         self.node._record_submitted_query(state)
         try:
-            rows = q_eager(self.catalog(), query, *args)
+            rows = run()
             state["status"] = "completed"
             return rows
         except Exception as e:
@@ -272,21 +278,8 @@ class Db:
         of resumable pagination over re-execution (the reference avoids
         it by streaming ONE execution through a server-held cursor)."""
         import itertools
-        import time
-        import uuid
 
         from crux_spark.datalog.compile import normalize_query, run_cancellable
-
-        qid = uuid.uuid4().hex[:12]
-        state = {
-            "query_id": qid,
-            "query": query,
-            "started_at": time.time(),
-            "finished_at": None,
-            "status": "in-progress",
-            "error": None,
-        }
-        self.node._record_submitted_query(state)
 
         def run():
             df = self.q(query, *args)
@@ -296,19 +289,9 @@ class Db:
             stop = None if limit is None else offset + limit
             return list(itertools.islice(df.toLocalIterator(), offset, stop))
 
-        try:
-            rows = run_cancellable(
-                self.node.spark.sparkContext, query, run, "crux_spark streamed query"
-            )
-            state["status"] = "completed"
-            return rows
-        except Exception as e:
-            state["status"] = "failed"
-            state["error"] = repr(e)
-            raise
-        finally:
-            state["finished_at"] = time.time()
-            self.node._record_finished_query(state)
+        return self._monitored(query, lambda: run_cancellable(
+            self.node.spark.sparkContext, query, run, "crux_spark streamed query"
+        ))
 
 
 class Node:
@@ -452,8 +435,10 @@ class Node:
 
     def register_index(self, name: str, index) -> "callable":
         """Attach a secondary index (IncrementalTextIndex /
-        IncrementalVectorIndex / anything with the ``listener(epoch,
-        ops_batch)`` contract) to this node's commit path — the
+        IncrementalVectorIndex / IncrementalMinHashIndex, which share
+        the replay seam of bitemporal/replay.py, or anything with the
+        ``listener(epoch, ops_batch)`` contract) to this node's commit
+        path — the
         reference's register-index! (crux-core/src/crux/tx.clj:400-410:
         external indexes replay the log and stay current per indexed
         tx). The index receives ONE committed-rows batch per await_tx;

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from crux_spark._conf import _spread
 from crux_spark._jvmcache import memo
+from crux_spark.bitemporal.replay import ReplayIndex
 
 # deterministic affine hash parameters for MinHash (public textbook
 # construction: h_i(x) = (a_i * x + b_i) mod p). p = 2^31-1 keeps
@@ -864,7 +865,7 @@ def trim_duplicate_lines(
     )
 
 
-class IncrementalMinHashIndex:
+class IncrementalMinHashIndex(ReplayIndex):
     """MinHash-LSH near-dup index maintained incrementally from document
     batches — :func:`minhash_lsh_pairs` is its first batch — and the
     near-dup counterpart of the exact streaming dedup (the reference
@@ -889,7 +890,7 @@ class IncrementalMinHashIndex:
          agreement in ``verify="est"`` mode) and RETURNS the pairs that
          involve at least one new doc;
       4. merges the new postings/sets in by id (left-anti + union, the
-         tx-batch merge shape of IncrementalVectorIndex).
+         merge of bitemporal/replay.py).
 
     Invariant (pytest-pinned): the union of add_batch outputs over any
     partition of a corpus equals the batch ``minhash_lsh_pairs`` output
@@ -906,55 +907,58 @@ class IncrementalMinHashIndex:
 
     Checkpointable through CheckpointStore's ``indexes=`` seam like the
     other incremental indexes: save() writes postings (partitioned by
-    band) + sets + params; load() localCheckpoints so restores survive
-    deletion of the source checkpoint dir.
+    band) + sets + params.
     """
+
+    STATE = {"postings": "band", "sets": None}
+    ID = "id"
+    PARAMS = ("n", "num_hashes", "bands", "threshold", "verify")
 
     def __init__(self, spark, n: int = 3, num_hashes: int = 32,
                  bands: int = 16, threshold: float = 0.5,
-                 verify: str = "exact", hash_fn=None,
-                 checkpoint_every: int = 8):
+                 verify: str = "exact", hash_fn=None):
         if num_hashes % bands:
             raise ValueError("num_hashes must be divisible by bands")
         if verify not in ("exact", "est"):
             raise ValueError(f"unknown verify mode {verify!r}")
-        self.spark = spark
+        super().__init__(spark)
         self.hash_fn = hash_fn  # None = xxhash64; see shingle_hashes
         self.n = n
         self.num_hashes = num_hashes
         self.bands = bands
         self.threshold = threshold
         self.verify = verify
-        self.postings: DataFrame | None = None  # id, sig, band, bucket
-        self.sets: DataFrame | None = None      # id, sh (exact mode)
-        self.last_tx_id: int = -1
-        # Lineage bound (r13 verdict watch item): the per-batch state
-        # merge chains LAZY localCheckpoints — cheap, but over a long
-        # listener stream the unmaterialized plan between eager points
-        # grows linearly with batch count. Every `checkpoint_every`-th
-        # batch the merge materializes EAGERLY, resetting lineage depth
-        # to O(1); <=0 disables the cadence (every merge stays lazy).
-        self.checkpoint_every = checkpoint_every
-        self._batches_since_eager = 0
 
     def add_batch(self, docs: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text") -> DataFrame:
         """Index a batch of documents; return the near-dup pairs this
         batch creates: (id_a, id_b, jaccard|est_jaccard) with every pair
         involving >=1 doc from this batch, ordered id_a < id_b."""
-        self._batches_since_eager += 1
-        eager_merge = (self.checkpoint_every > 0
-                       and self._batches_since_eager >= self.checkpoint_every)
-        if eager_merge:
-            self._batches_since_eager = 0
+        return self._add(docs, id_col, text_col, None)
+
+    def listener(self, epoch_id: int, ops_batch: DataFrame,
+                 text_field: str = "text",
+                 max_tx: int | None = None) -> DataFrame:
+        """tx-log form (register-index! seam): index each entity's final
+        put doc text and return the pairs it creates. Every other touched
+        entity — deleted, evicted, or re-put without the text field —
+        drops its postings, so later docs stop pairing against it."""
+        return self._replay(ops_batch, text_field, max_tx)
+
+    def _apply(self, touched: DataFrame, puts: DataFrame) -> DataFrame:
+        return self._add(puts, "eid", "value",
+                         touched.withColumnRenamed("eid", "id"))
+
+    def _add(self, docs: DataFrame, id_col: str, text_col: str,
+             touched: DataFrame | None) -> DataFrame:
+        """add_batch, with `touched` the ids whose old state goes (None:
+        the batch's own ids)."""
+        eager = self._eager()
         ex = shingle_hashes(docs, id_col, text_col, self.n,
                             hash_fn=self.hash_fn)
         # exact mode: ONE fused per-doc aggregation yields signature +
-        # shingle set — replaces three checkpointed frames (exploded,
-        # sigs, new_sets) with one, cutting the per-batch synchronous
-        # Catalyst planning cost (the dominant add_batch cost at bench
-        # scale: ~6 planning passes x 0.2-0.6s) in half while keeping
-        # the same single-computation guarantees.
+        # shingle set, lazily checkpointed so the candidate join, the
+        # verification and the state merge share one computation
         per_doc = None
         if self.verify == "exact":
             per_doc = _per_doc_sig_sets(
@@ -966,38 +970,25 @@ class IncrementalMinHashIndex:
                 docs, id_col, text_col, self.n, self.num_hashes,
                 exploded=ex, checkpoint=False,  # new_banded ckpt'd below
             )
-        # lazy checkpoint (r15 optimization): the batch's banded postings
-        # feed the candidate join AND the state merge, so the checkpoint
-        # guarantees one computation — but materializing EAGERLY here ran
-        # a synchronous job per batch before any consumer needed it.
-        # Lazy keeps the single-computation guarantee (first consumer
-        # materializes, later ones read the cached blocks) while letting
-        # the whole batch pipeline run as one job. Lineage stays bounded:
-        # the checkpoint truncates the logical plan either way, and the
-        # state-merge cadence (checkpoint_every) still forces eager
-        # materialization of the ACCUMULATED state.
-        # r16: in EXACT mode the banding explode is a narrow map over
-        # the checkpointed per_doc frame, so checkpointing it again only
-        # paid another synchronous physical-planning pass per batch
-        # (measured ~0.5-1s each, the dominant add_batch cost at bench
-        # scale); consumers re-run the cheap explode from per_doc's
-        # cached blocks instead. Est mode keeps the checkpoint — there
-        # new_banded is the batch's ONLY plan-truncation point.
+        # the batch's banded postings feed the candidate join AND the
+        # state merge. In exact mode the banding explode is a narrow map
+        # over the checkpointed per_doc frame, which consumers re-run;
+        # in est mode new_banded is the batch's only plan-truncation
+        # point, checkpointed lazily so the whole batch runs as one job
         new_banded = banded_signatures(sigs, self.num_hashes, self.bands)
         if per_doc is None:
             new_banded = new_banded.localCheckpoint(eager=False)
-        # exact mode: per_doc is already one checkpointed row per doc —
-        # its id column IS the touched set, no distinct shuffle needed
-        # in the consuming left-anti merges (est mode keeps the distinct
-        # over the checkpointed postings)
-        touched = (per_doc.select("id") if per_doc is not None
-                   else new_banded.select("id").distinct())
+        if touched is None:
+            # exact mode: per_doc is one row per doc, so its ids need no
+            # distinct shuffle
+            touched = (per_doc.select("id") if per_doc is not None
+                       else new_banded.select("id").distinct())
 
         # candidate generation: new x (existing + new), each pair only in
         # its first colliding band. In-batch pairs self-join the new
         # postings on a.id < b.id; cross pairs join them against the old
-        # postings, with the new ids anti-joined out, so each candidate
-        # pair is emitted exactly once.
+        # postings, with the touched ids anti-joined out, so each
+        # candidate pair is emitted exactly once.
         def sig_bands(c):
             return _band_buckets(c, self.num_hashes, self.bands)
 
@@ -1011,17 +1002,11 @@ class IncrementalMinHashIndex:
 
         if self.verify == "exact":
             pairs = cands.select("id_a", "id_b")
-            new_sets = per_doc.select("id", "sh")
-            # one checkpoint serves BOTH the verify join (which reads
-            # all_sets twice) and the accumulated state — previously the
-            # verify read the unmaterialized merge (left-anti computed
-            # twice at exec) and the state checkpointed it again.
-            if self.sets is not None:
-                all_sets = self.sets.join(
-                    touched, "id", "left_anti"
-                ).unionByName(new_sets).localCheckpoint(eager=eager_merge)
-            else:
-                all_sets = new_sets
+            # the merged sets serve both the verify join (which reads
+            # them twice) and the accumulated state
+            all_sets = self._merge(
+                "sets", touched, per_doc.select("id", "sh"), eager
+            )
             sa = all_sets.select(F.col("id").alias("id_a"),
                                  F.col("sh").alias("sh_a"))
             sb = all_sets.select(F.col("id").alias("id_b"),
@@ -1039,7 +1024,6 @@ class IncrementalMinHashIndex:
                 .filter(F.col("jaccard") >= self.threshold)
                 .select("id_a", "id_b", "jaccard")
             )
-            self.sets = all_sets
         else:
             agree = F.size(F.filter(
                 F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
@@ -1053,105 +1037,5 @@ class IncrementalMinHashIndex:
                 .select("id_a", "id_b", "est_jaccard")
             )
 
-        if self.postings is None:
-            self.postings = new_banded
-        else:
-            self.postings = (
-                self.postings.join(touched, "id", "left_anti")
-                .unionByName(new_banded)
-                .localCheckpoint(eager=eager_merge)
-            )
+        self._merge("postings", touched, new_banded, eager)
         return out
-
-    def listener(self, epoch_id: int, ops_batch: DataFrame,
-                 text_field: str = "text",
-                 max_tx: int | None = None) -> DataFrame:
-        """tx-log form (register-index! seam): extract each entity's
-        final put doc text from the batch and index it. Deletes/evicts
-        drop the entity's postings (its pairs stop being emitted against
-        future docs).
-
-        CONTRACT: state merges chain LAZY localCheckpoints, so
-        ``ops_batch`` must stay recomputable until ``checkpoint_every``
-        batches later (TxLogStream pins each batch to executor blocks
-        before dispatch; direct callers must pass a re-readable frame or
-        set checkpoint_every=1)."""
-        eff = ops_batch.filter(F.col("op").isin("put", "delete", "evict"))
-        last = eff.groupBy("eid").agg(
-            F.max_by(
-                F.struct("op", "doc_json"), F.struct("tx_id", "seq")
-            ).alias("last")
-        )
-        puts = (
-            last.filter(F.col("last.op") == "put")
-            .select(
-                F.col("eid").alias("doc_id"),
-                F.get_json_object(
-                    "last.doc_json", f"$.{text_field}"
-                ).alias("text"),
-            )
-            .filter(F.col("text").isNotNull())
-        )
-        gone = last.filter(F.col("last.op") != "put").select(
-            F.col("eid").alias("id")
-        )
-        if self.postings is not None:
-            self.postings = self.postings.join(
-                gone, "id", "left_anti"
-            ).localCheckpoint(eager=False)
-        if self.sets is not None:
-            self.sets = self.sets.join(
-                gone, "id", "left_anti"
-            ).localCheckpoint(eager=False)
-        out = self.add_batch(puts)
-        # `max_tx` lets the commit/ingest path hand down the batch max it
-        # already knows; without it the watermark costs an extra pass.
-        if max_tx is None:
-            mx = ops_batch.agg(F.max("tx_id")).first()[0]
-            max_tx = int(mx) if mx is not None else None
-        if max_tx is not None:
-            self.last_tx_id = max(self.last_tx_id, int(max_tx))
-        return out
-
-    # -- checkpoint persistence (same contract as the other indexes) --
-    def save(self, path: str) -> None:
-        import json as _json
-        import os as _os
-
-        _os.makedirs(path, exist_ok=True)
-        if self.postings is not None:
-            self.postings.write.mode("overwrite").partitionBy(
-                "band"
-            ).parquet(_os.path.join(path, "postings"))
-        if self.sets is not None:
-            self.sets.write.mode("overwrite").parquet(
-                _os.path.join(path, "sets")
-            )
-        with open(_os.path.join(path, "index.json"), "w") as f:
-            _json.dump(
-                {"n": self.n, "num_hashes": self.num_hashes,
-                 "bands": self.bands, "threshold": self.threshold,
-                 "verify": self.verify, "last_tx_id": self.last_tx_id},
-                f,
-            )
-
-    @classmethod
-    def load(cls, spark, path: str) -> "IncrementalMinHashIndex":
-        import json as _json
-        import os as _os
-
-        with open(_os.path.join(path, "index.json")) as f:
-            meta = _json.load(f)
-        idx = cls(spark, n=meta["n"], num_hashes=meta["num_hashes"],
-                  bands=meta["bands"], threshold=meta["threshold"],
-                  verify=meta["verify"])
-        idx.last_tx_id = int(meta.get("last_tx_id", -1))
-        pd_dir = _os.path.join(path, "postings")
-        if _os.path.isdir(pd_dir):
-            # localCheckpoint: restores must survive deletion of the
-            # source checkpoint dir (r12 advice)
-            idx.postings = spark.read.parquet(pd_dir).localCheckpoint()
-        sd = _os.path.join(path, "sets")
-        if _os.path.isdir(sd):
-            idx.sets = spark.read.parquet(sd).localCheckpoint()
-        return idx

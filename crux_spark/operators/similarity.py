@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from crux_spark._localframe import local_frame
+from crux_spark.bitemporal.replay import ReplayIndex
 
 
 def _dot(a, b):
@@ -1026,7 +1027,7 @@ def semantic_dedup(
     return vecs.groupBy(*group_cols).applyInPandas(cluster_dedup, out_schema)
 
 
-class IncrementalVectorIndex:
+class IncrementalVectorIndex(ReplayIndex):
     """IVF vector index maintained incrementally from tx batches — the
     similarity-search sibling of IncrementalTextIndex (the reference's
     secondary-index replay seam, crux-lucene via crux-core/src/crux/tx.clj
@@ -1035,11 +1036,12 @@ class IncrementalVectorIndex:
 
     State is ONE DataFrame (eid, vec, cell_id): each put's embedding is
     assigned to its nearest centroid cell map-side (Arrow pandas UDF) and
-    merged by entity like the text index (only each entity's final
-    effective op per batch lands). Search probes the query's `nprobe`
-    nearest cells only — with the index saved partitioned by cell_id,
-    a probe is a partition-pruned scan at any corpus size; probing ALL
-    cells makes results exactly equal to brute force (the test oracle).
+    merged by entity under the replay rule of bitemporal/replay.py (only
+    each entity's final effective op per batch lands). Search probes the
+    query's `nprobe` nearest cells only — with the index saved
+    partitioned by cell_id, a probe is a partition-pruned scan at any
+    corpus size; probing ALL cells makes results exactly equal to brute
+    force (the test oracle).
 
     Checkpointable through CheckpointStore's `indexes=` seam: `save()`
     writes cells parquet (partitioned by cell_id) + centroids + the
@@ -1047,70 +1049,27 @@ class IncrementalVectorIndex:
     past its watermark.
     """
 
-    def __init__(self, spark, centroids: np.ndarray, vec_field: str = "embedding",
-                 checkpoint_every: int = 8):
-        self.spark = spark
+    STATE = {"cells": "cell_id"}
+    PARAMS = ("vec_field", "centroids")
+
+    def __init__(self, spark, centroids: np.ndarray, vec_field: str = "embedding"):
+        super().__init__(spark)
         self.centroids = np.asarray(centroids, dtype=np.float64)
         self.vec_field = vec_field
-        self.cells: DataFrame | None = None
-        self.last_tx_id: int = -1
-        # Lineage bound, same contract as IncrementalMinHashIndex: the
-        # per-batch state merge chains LAZY localCheckpoints (plan
-        # truncation without a synchronous job per batch — the first
-        # consumer materializes); every `checkpoint_every`-th batch the
-        # merge materializes EAGERLY, resetting lineage/lazy-chain depth
-        # to O(1). <=0 disables the cadence.
-        self.checkpoint_every = checkpoint_every
-        self._batches_since_eager = 0
 
     def listener(self, epoch_id: int, ops_batch: DataFrame,
                  max_tx: int | None = None) -> None:
-        # CONTRACT: state merges chain LAZY localCheckpoints, so
-        # `ops_batch` must stay recomputable until `checkpoint_every`
-        # batches later (TxLogStream pins each batch to executor blocks
-        # before dispatch; direct callers must pass a re-readable frame
-        # or set checkpoint_every=1).
-        eff = ops_batch.filter(F.col("op").isin("put", "delete", "evict"))
-        last = eff.groupBy("eid").agg(
-            F.max_by(F.struct("op", "doc_json"), F.struct("tx_id", "seq")).alias("last")
-        )
-        puts = (
-            last.filter(F.col("last.op") == "put")
-            .select(
-                "eid",
-                F.from_json(
-                    F.get_json_object("last.doc_json", f"$.{self.vec_field}"),
-                    "array<double>",
-                ).alias("vec"),
-            )
-            .filter(F.col("vec").isNotNull())
-        )
+        self._replay(ops_batch, self.vec_field, max_tx)
+
+    def _apply(self, touched: DataFrame, puts: DataFrame) -> None:
+        vecs = puts.select(
+            "eid", F.from_json("value", "array<double>").alias("vec")
+        ).filter(F.col("vec").isNotNull())
         assign1 = _cell_assign_udf(self.centroids, 1)
-        new_cells = puts.select(
+        new_cells = vecs.select(
             "eid", "vec", F.element_at(assign1(F.col("vec")), 1).alias("cell_id")
         )
-        touched = last.select("eid")
-        if self.cells is None:
-            merged = new_cells
-        else:
-            merged = self.cells.join(touched, "eid", "left_anti").unionByName(
-                new_cells
-            )
-        self._batches_since_eager += 1
-        eager = (self.checkpoint_every > 0
-                 and self._batches_since_eager >= self.checkpoint_every)
-        if eager:
-            self._batches_since_eager = 0
-        self.cells = merged.localCheckpoint(eager=eager)
-        # `max_tx` lets the commit/ingest path hand down the batch's max
-        # tx id it already knows (driver-side in TxStore.commit, one
-        # aggregate shared across every listener in TxIngest) — without
-        # it the watermark costs a full extra pass over the batch here.
-        if max_tx is None:
-            mx = ops_batch.agg(F.max("tx_id")).first()[0]
-            max_tx = int(mx) if mx is not None else None
-        if max_tx is not None:
-            self.last_tx_id = max(self.last_tx_id, int(max_tx))
+        self._merge("cells", touched, new_cells, self._eager())
 
     def search(self, query_vec, k: int = 5, nprobe: int = 4) -> DataFrame:
         """Top-k nearest entities by cosine. The single query vector is
@@ -1142,44 +1101,3 @@ class IncrementalVectorIndex:
     @property
     def n_cells(self) -> int:
         return int(self.centroids.shape[0])
-
-    # -- checkpoint persistence (same contract as IncrementalTextIndex) --
-    def save(self, path: str) -> None:
-        import json as _json
-        import os as _os
-
-        _os.makedirs(path, exist_ok=True)
-        if self.cells is not None:
-            self.cells.write.mode("overwrite").partitionBy("cell_id").parquet(
-                _os.path.join(path, "cells")
-            )
-        with open(_os.path.join(path, "index.json"), "w") as f:
-            _json.dump(
-                {
-                    "vec_field": self.vec_field,
-                    "last_tx_id": self.last_tx_id,
-                    "centroids": self.centroids.tolist(),
-                },
-                f,
-            )
-
-    @classmethod
-    def load(cls, spark, path: str) -> "IncrementalVectorIndex":
-        import json as _json
-        import os as _os
-
-        with open(_os.path.join(path, "index.json")) as f:
-            meta = _json.load(f)
-        idx = cls(
-            spark,
-            np.asarray(meta["centroids"], dtype=np.float64),
-            vec_field=meta.get("vec_field", "embedding"),
-        )
-        idx.last_tx_id = int(meta.get("last_tx_id", -1))
-        cells_dir = _os.path.join(path, "cells")
-        if _os.path.isdir(cells_dir):
-            # localCheckpoint (like TxStore.load): checkpoint retention
-            # may delete `path` while the index is live; a lazy scan
-            # would fail later searches with FileNotFoundException.
-            idx.cells = spark.read.parquet(cells_dir).localCheckpoint()
-        return idx

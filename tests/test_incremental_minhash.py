@@ -110,6 +110,46 @@ def test_listener_tx_form_and_delete(spark):
     assert {(r.id_a, r.id_b) for r in out2.collect()} == {("a", "c")}
 
 
+@pytest.mark.parametrize("kind", ["minhash", "text", "vector"])
+def test_listener_reput_without_field_drops_entity(spark, kind):
+    """Every entity a batch touches loses its old index state: after
+    `a` is re-put without the indexed field, a later `b` carrying `a`'s
+    old text or vector finds nothing under `a`."""
+    import json
+
+    import numpy as np
+
+    from crux_spark.functions.text_search import IncrementalTextIndex
+    from crux_spark.operators.similarity import IncrementalVectorIndex
+
+    t = ("shared sentence of many tokens that makes these documents "
+         "near duplicates for the minhash index to catch easily")
+    field, value, idx = {
+        "minhash": ("text", t, IncrementalMinHashIndex(
+            spark, num_hashes=32, bands=16, threshold=0.5)),
+        "text": ("text", t, IncrementalTextIndex(spark)),
+        "vector": ("embedding", [1.0, 0.0], IncrementalVectorIndex(
+            spark, np.asarray([[1.0, 0.0], [0.0, 1.0]]))),
+    }[kind]
+
+    def put(eid, tx, doc):
+        return spark.createDataFrame(
+            [(eid, tx, 0, "put", json.dumps({"id": eid, **doc}))],
+            "eid string, tx_id long, seq long, op string, doc_json string",
+        )
+
+    idx.listener(0, put("a", 1, {field: value}))
+    idx.listener(1, put("a", 2, {"title": "no indexed field"}))
+    out = idx.listener(2, put("b", 3, {field: value}))
+    assert idx.last_tx_id == 3
+    if kind == "minhash":
+        assert [tuple(r) for r in out.collect()] == []
+        return
+    hits = (idx.search(t) if kind == "text"
+            else idx.search(value, k=5, nprobe=2))
+    assert [r.eid for r in hits.collect()] == ["b"]
+
+
 def test_checkpoint_roundtrip_survives_dir_deletion(spark, tmp_path):
     import shutil
 
@@ -190,16 +230,18 @@ def test_est_mode_md5_hash_fn_matches_xxhash_relation_shape(spark):
 
 
 @pytest.mark.full
-def test_long_stream_lineage_stays_bounded(spark):
+def test_long_stream_lineage_stays_bounded(spark, monkeypatch):
     """50-batch listener-length stream (r13 verdict item 5): with the
-    checkpoint_every cadence (default 8), the state's unmaterialized
+    replay.CHECKPOINT_EVERY cadence (8), the state's unmaterialized
     lineage resets at every eager point, so the analyzed-plan size at
     batch 50 is the size of a ~cadence-deep chain, NOT a 50-deep one —
     and the union-of-outputs == batch-operator invariant still holds."""
+    from crux_spark.bitemporal import replay
+
     docs = _corpus(spark, n=100)
+    monkeypatch.setattr(replay, "CHECKPOINT_EVERY", 8)
     idx = IncrementalMinHashIndex(
         spark, num_hashes=32, bands=16, threshold=0.5, verify="exact",
-        checkpoint_every=8,
     )
     got = set()
     plan_lens = []

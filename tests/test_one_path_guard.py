@@ -3,6 +3,9 @@
 - no ``CRUX_SPARK_*`` environment switch changes library behaviour; the
   only name read is the deployment path ``CRUX_SPARK_BLOB_DIR``;
 - Catalyst's size estimate is read in one place, ``_conf.py``;
+- the incremental indexes' final-op rule lives in one place,
+  ``bitemporal/replay.py``, and their lineage cadence is its module
+  constant ``CHECKPOINT_EVERY``, not a per-index parameter;
 - no operator picks its algorithm by a row-count probe or by a
   threshold an instance can override, with one named exception:
   ``connected_components`` resolves edge sets up to
@@ -19,6 +22,8 @@ import re
 PKG = pathlib.Path(__file__).resolve().parent.parent / "crux_spark"
 ALLOWED_ENV = {"CRUX_SPARK_BLOB_DIR"}
 SIZE_IDIOM = "optimizedPlan().stats().sizeInBytes()"
+# each entity's last op in an ops batch (bitemporal/replay.final_ops)
+FINAL_OP_IDIOM = 'F.struct("op", "doc_json")'
 # `.limit(<expr> + 1).count()` or `.collect()`: a bounded job that asks
 # "more than N?"
 COUNT_PROBE = re.compile(
@@ -59,6 +64,21 @@ def test_size_estimate_read_only_in_conf():
         if SIZE_IDIOM in path.read_text()
     ]
     assert users == ["_conf.py"]
+
+
+def test_one_replay_seam():
+    users = [
+        path.relative_to(PKG).as_posix()
+        for path in _sources()
+        if FINAL_OP_IDIOM in path.read_text()
+    ]
+    assert users == ["bitemporal/replay.py"]
+    knobs = [
+        path.relative_to(PKG).as_posix()
+        for path in _sources()
+        if "checkpoint_every" in path.read_text()
+    ]
+    assert not knobs, f"per-index cadence parameters: {knobs}"
 
 
 def test_no_size_probes():

@@ -64,9 +64,10 @@ def _ops_batch(spark, rows):
     )
 
 
-def test_vector_index_cadence_and_max_tx_identical_results(spark):
+def test_vector_index_cadence_and_max_tx_identical_results(spark, monkeypatch):
     import numpy as np
 
+    from crux_spark.bitemporal import replay
     from crux_spark.operators.similarity import IncrementalVectorIndex
 
     cents = np.asarray([[1.0, 0.0], [0.0, 1.0]])
@@ -78,11 +79,13 @@ def test_vector_index_cadence_and_max_tx_identical_results(spark):
         [("b", 5, "delete", None)],
     ]
     # eager-every-batch (the old behavior), watermark self-aggregated
-    ref = IncrementalVectorIndex(spark, cents, checkpoint_every=1)
+    monkeypatch.setattr(replay, "CHECKPOINT_EVERY", 1)
+    ref = IncrementalVectorIndex(spark, cents)
     for i, rows in enumerate(batches):
         ref.listener(i, _ops_batch(spark, rows))
     # lazy with cadence, watermark handed down
-    idx = IncrementalVectorIndex(spark, cents, checkpoint_every=8)
+    monkeypatch.setattr(replay, "CHECKPOINT_EVERY", 8)
+    idx = IncrementalVectorIndex(spark, cents)
     for i, rows in enumerate(batches):
         idx.listener(i, _ops_batch(spark, rows),
                      max_tx=max(t for _, t, _, _ in rows))
@@ -94,7 +97,8 @@ def test_vector_index_cadence_and_max_tx_identical_results(spark):
         == sorted(map(tuple, ref.cells.select("eid", "cell_id").collect()))
 
 
-def test_text_index_cadence_and_max_tx_identical_results(spark):
+def test_text_index_cadence_and_max_tx_identical_results(spark, monkeypatch):
+    from crux_spark.bitemporal import replay
     from crux_spark.functions.text_search import IncrementalTextIndex
 
     batches = [
@@ -104,10 +108,12 @@ def test_text_index_cadence_and_max_tx_identical_results(spark):
          ("d3", 4, "put", '{"text": "red red red"}')],
         [("d2", 5, "delete", None)],
     ]
-    ref = IncrementalTextIndex(spark, checkpoint_every=1)
+    monkeypatch.setattr(replay, "CHECKPOINT_EVERY", 1)
+    ref = IncrementalTextIndex(spark)
     for i, rows in enumerate(batches):
         ref.listener(i, _ops_batch(spark, rows))
-    idx = IncrementalTextIndex(spark, checkpoint_every=8)
+    monkeypatch.setattr(replay, "CHECKPOINT_EVERY", 8)
+    idx = IncrementalTextIndex(spark)
     for i, rows in enumerate(batches):
         idx.listener(i, _ops_batch(spark, rows),
                      max_tx=max(t for _, t, _, _ in rows))

@@ -115,7 +115,7 @@ def test_txstore_constructor_seeds_tx_id_lazily(spark):
     assert st._tx_id >= tx_id
 
 
-def test_txlog_listener_state_survives_log_pruning(spark, tmp_path):
+def test_txlog_listener_state_survives_log_pruning(spark, tmp_path, monkeypatch):
     """r15 advice (re-readability): listener state chains lazy
     localCheckpoints, so TxLogStream must pin each micro-batch to
     executor blocks BEFORE dispatch — deleting the tx-log files after
@@ -127,6 +127,7 @@ def test_txlog_listener_state_survives_log_pruning(spark, tmp_path):
     import datetime as dt
     import shutil
 
+    from crux_spark.bitemporal import replay
     from crux_spark.functions.text_search import IncrementalTextIndex
     from crux_spark.streaming.ingest import TxLogStream, write_tx_log
 
@@ -142,7 +143,8 @@ def test_txlog_listener_state_survives_log_pruning(spark, tmp_path):
         ],
     )
     # large cadence -> every per-batch merge stays LAZY
-    idx = IncrementalTextIndex(spark, checkpoint_every=1000)
+    monkeypatch.setattr(replay, "CHECKPOINT_EVERY", 1000)
+    idx = IncrementalTextIndex(spark)
     stream = TxLogStream(spark, log_dir)
     stream.listen(idx.listener)
     stream.start(ckpt).awaitTermination(120)

@@ -424,15 +424,27 @@ def test_rules_false_arguments(spark):
 
 
 @pytest.mark.full
-def test_deep_chain_transitive_closure_doubling(spark):
-    """A 300-deep chain exceeds any linear fixpoint's iteration budget;
-    the TC-shape specialization evaluates it by relation squaring in
-    ~log2(300) rounds (both right- and left-linear forms)."""
+def test_deep_chain_transitive_closure_doubling(spark, monkeypatch):
+    """A 300-deep chain exceeds any linear fixpoint's iteration budget.
+    Unbound, the TC-shape specialization evaluates the whole closure by
+    relation squaring in ~log2(300) rounds (_tc_doubling); with the
+    start bound through :in, the call site walks a seeded BFS from it
+    (_tc_seeded). Both right- and left-linear forms take both paths."""
     from pyspark.sql import types as T
 
     from crux_spark import Catalog
     from crux_spark.datalog import q
+    from crux_spark.datalog.compile import Compiler
 
+    squared = []
+    tc_doubling = Compiler._tc_doubling
+
+    def spy(self, name):
+        rel = tc_doubling(self, name)
+        squared.append(rel is not None)
+        return rel
+
+    monkeypatch.setattr(Compiler, "_tc_doubling", spy)
     cat = Catalog(spark)
     schema = T.StructType(
         [T.StructField("id", T.StringType()), T.StructField("next", T.StringType())]
@@ -448,9 +460,15 @@ def test_deep_chain_transitive_closure_doubling(spark):
         [[["r", "?x", "?y"], ["?x", ":next", "?y"]],
          [["r", "?x", "?y"], ["r", "?x", "?z"], ["?z", ":next", "?y"]]],
     ):
+        squared.clear()
         res = q(cat, {"find": ["?y"], "in": ["?s"], "rules": rules,
                       "where": [["r", "?s", "?y"]]}, "n0")
         assert res.count() == 300
+        assert squared == []
+        res = q(cat, {"find": ["?x", "?y"], "rules": rules,
+                      "where": [["r", "?x", "?y"]]})
+        assert res.count() == 300 * 301 // 2
+        assert squared == [True]
 
 
 REACH_RULES = [
