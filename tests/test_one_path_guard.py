@@ -24,6 +24,9 @@ ALLOWED_ENV = {"CRUX_SPARK_BLOB_DIR"}
 SIZE_IDIOM = "optimizedPlan().stats().sizeInBytes()"
 # each entity's last op in an ops batch (bitemporal/replay.final_ops)
 FINAL_OP_IDIOM = 'F.struct("op", "doc_json")'
+# the per-index cadence parameter replay.CHECKPOINT_EVERY replaced
+# (a regex, so that this file holds no literal match of its own)
+CADENCE_KNOB = re.compile(r"checkpoint_ever[y]")
 # `.limit(<expr> + 1).count()` or `.collect()`: a bounded job that asks
 # "more than N?"
 COUNT_PROBE = re.compile(
@@ -76,7 +79,7 @@ def test_one_replay_seam():
     knobs = [
         path.relative_to(PKG).as_posix()
         for path in _sources()
-        if "checkpoint_every" in path.read_text()
+        if CADENCE_KNOB.search(path.read_text())
     ]
     assert not knobs, f"per-index cadence parameters: {knobs}"
 
